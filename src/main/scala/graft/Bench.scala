@@ -63,6 +63,19 @@ object Bench {
     s"""{"unit":"ms","sf":"$sfName","passes":2,"queries":$qs}"""
   }
 
+  /** Where the per-query map is written. An explicit
+    * `SPARK_GRAFT_BENCH_FULL` path is always written, alone. Otherwise a
+    * full sweep writes `BENCH_QUERIES.json` plus a core-suffixed copy
+    * (when benching at two core counts, the second run overwrites the
+    * first's default file), and a focused run (`SPARK_GRAFT_ONLY` set)
+    * writes nothing, so its partial map never clobbers the committed
+    * full-sweep artifacts. */
+  private[graft] def artifactPaths(explicit: Option[String],
+      focused: Boolean, cpus: String): Seq[String] =
+    explicit.map(Seq(_)).getOrElse(
+      if (focused) Nil
+      else Seq("BENCH_QUERIES.json", s"BENCH_QUERIES_c$cpus.json"))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -133,19 +146,8 @@ object Bench {
     val results = passes.map { case (name, ps) => name -> minOfPasses(ps) }
     // basename only ("sf0.1"), not the full path
     val sfName = sfDir.split('/').filter(_.nonEmpty).lastOption.getOrElse(sfDir)
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL",
-      "BENCH_QUERIES.json")
-    // The default artifact ALSO lands in a core-count-suffixed file
-    // (r22): the driver benches at two core counts and the second run
-    // overwrites BENCH_QUERIES.json, so the 32-core per-query map never
-    // survived a round and the driver's per-query/scaling comparisons
-    // came up empty (PERF_r21 n_common: 0). Purely an additional output
-    // — the stdout line, the timing methodology, and the default file
-    // are byte-identical to before.
-    val outPaths = outPath +:
-      (if (outPath == "BENCH_QUERIES.json")
-        Seq(s"BENCH_QUERIES_c$cpus.json") else Nil)
-    outPaths.foreach { path =>
+    artifactPaths(sys.env.get("SPARK_GRAFT_BENCH_FULL"), only.isDefined,
+        cpus).foreach { path =>
       try {
         java.nio.file.Files.write(java.nio.file.Paths.get(path),
           (fullMapJson(passes, sfName) + "\n")

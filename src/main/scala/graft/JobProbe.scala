@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Scheduling-overhead profiler: runs selected queries with a
   * SparkListener attached and prints, per query, wall-clock beside the
@@ -31,15 +30,8 @@ object JobProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Graft.session("graft-jobprobe", s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val c = new Counts
     val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, Long]()

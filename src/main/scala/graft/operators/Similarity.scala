@@ -19,6 +19,16 @@ import graft.operators.Anchor.AnchorOps
   *
   * Cosine is computed in double precision with a fixed left-to-right fold
   * ([[Dedup.dotExpr]]) so results match the DuckDB oracle bitwise.
+  *
+  * Two seams carry the serve and eval surface:
+  *  - [[adcTopK]], the ADC scorer: candidate PQ code rows ⋈ broadcast
+  *    LUT → Σ pdot_fp → bounded top-k. Every PQ serve (s11, s12, s15,
+  *    s18, s19, s27, s30, s32, s36, s37) and PQ eval (s13, s16, s17,
+  *    s31, s33, s38, s39) differs only in the candidate frame it hands
+  *    this scorer and its group keys, so a fused probe→ADC→top-k
+  *    operator plugs in here once.
+  *  - [[recallAt]], the recall evaluator: exact ⟕ approx → hits per
+  *    (keys, query) → recall@k. Every recall curve is one call to it.
   */
 object Similarity {
 
@@ -33,6 +43,73 @@ object Similarity {
 
   private def qnormed(df: DataFrame): DataFrame =
     df.withColumn("qnorm2", Dedup.dotExpr("query_emb", "query_emb"))
+
+  /** Fixed-fold cosine of a [[normed]] corpus row against a [[qnormed]]
+    * query row. */
+  private def flatCosine: Column =
+    Dedup.dotExpr("embedding", "query_emb") /
+      (sqrt(col("norm2")) * sqrt(col("qnorm2")))
+
+  /** `(vec_id, emb, vnorm2)` — the corpus side every trained-quantizer
+    * assign reads. `norm` is the squared-norm fold: the native
+    * [[graft.functions.VectorOps.dot]] by default, [[Dedup.dotExpr]]
+    * where the graph tier's oracle folds it that way. */
+  private def vectorFrame(embeddings: DataFrame,
+      norm: Column = graft.functions.VectorOps.dot(col("emb"), col("emb")))
+      : DataFrame =
+    embeddings.select(col("vec_id"), col("embedding").as("emb"))
+      .withColumn("vnorm2", norm)
+
+  /** The probe-side query batch of a [[vectorFrame]]-shaped frame:
+    * `(query_id, query_emb, qnorm2)` for the first `nQueries` ids. */
+  private def probeQueries(vectors: DataFrame, nQueries: Int): DataFrame =
+    vectors.filter(col("vec_id") < nQueries)
+      .select(col("vec_id").as("query_id"), col("emb").as("query_emb"),
+        col("vnorm2").as("qnorm2"))
+
+  /** `(query_id, neighbor_id)` of the s01 exact top-k — the truth side of
+    * every recall curve. */
+  private def exactPairs(embeddings: DataFrame, nQueries: Int,
+      k: Int): DataFrame =
+    bruteForceTopK(embeddings, nQueries, k)
+      .select(col("query_id"), col("neighbor_id"))
+
+  /** The recall evaluator: per-(keys, query) recall@k of `approx
+    * (keys.., query_id, neighbor_id)` against `exact` with the same
+    * columns (already crossed with its config/tier frame). The LEFT join
+    * keeps every exact row, so a query or a config with no approximate
+    * hit reads `n_hits = 0, recall = 0.0` instead of vanishing. Output is
+    * `keys ++ (query_id, n_hits, recall)`, ordered by `keys ++ query_id`. */
+  private[operators] def recallAt(exact: DataFrame, approx: DataFrame,
+      k: Int, keys: Seq[String] = Nil): DataFrame = {
+    val by = (keys :+ "query_id").map(col)
+    exact.join(approx.withColumn("hit", lit(1L)),
+        keys ++ Seq("query_id", "neighbor_id"), "left")
+      .groupBy(by: _*)
+      .agg(count(col("hit")).as("n_hits"))
+      .select(by ++ Seq(col("n_hits"),
+        (col("n_hits").cast("double") / lit(k).cast("double"))
+          .as("recall")): _*)
+      .orderBy(by: _*)
+  }
+
+  /** [[recallAt]] over named tiers: each `(tier, serve)` contributes its
+    * `(query_id, neighbor_id)` rows under its tier label, against the s01
+    * truth crossed with the tier names (sorted, so tiers order
+    * lexically). */
+  private def tierRecall(embeddings: DataFrame, nQueries: Int, k: Int,
+      tiers: (String, DataFrame)*): DataFrame = {
+    val names = tiers.map(_._1).sorted
+    val tierFrame = embeddings.sparkSession.range(0, names.size)
+      .select(element_at(array(names.map(lit): _*),
+        col("id").cast("int") + 1).as("tier"))
+    val approx = tiers.map { case (tier, serve) =>
+      serve.select(lit(tier).as("tier"), col("query_id"),
+        col("neighbor_id"))
+    }.reduce(_ unionByName _)
+    recallAt(exactPairs(embeddings, nQueries, k)
+      .join(broadcast(tierFrame)), approx, k, Seq("tier"))
+  }
 
   /** Per-query bounded top-k over scored candidate rows via the
     * mergeable [[graft.functions.TopKByScore]] aggregate — each input
@@ -67,15 +144,20 @@ object Similarity {
       k: Int = 10): DataFrame = {
     val corpus = normed(embeddings)
     val queries = qnormed(queryVectors(embeddings, nQueries))
-    val scored = corpus.join(broadcast(queries),
-        col("vec_id") =!= col("query_id"))
-      .withColumn("cosine",
-        Dedup.dotExpr("embedding", "query_emb") /
-          (sqrt(col("norm2")) * sqrt(col("qnorm2"))))
-    topKByQuery(scored, "cosine", k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
-      .orderBy(col("query_id"), col("rank"))
+    cosineRows(topKByQuery(flatScored(corpus, queries), "cosine", k))
   }
+
+  /** broadcast(queries) × corpus scan → [[flatCosine]], self-matches
+    * dropped — the s01 exact scoring pass. */
+  private def flatScored(corpus: DataFrame, queries: DataFrame): DataFrame =
+    corpus.join(broadcast(queries), col("vec_id") =!= col("query_id"))
+      .withColumn("cosine", flatCosine)
+
+  /** A cosine top-k's published rows, ordered by (query, rank). */
+  private def cosineRows(top: DataFrame): DataFrame =
+    top.select(col("query_id"), col("neighbor_id"), col("cosine"),
+        col("rank"))
+      .orderBy(col("query_id"), col("rank"))
 
   /** s41: exact MAX-INNER-PRODUCT top-k (MIPS) — the retrieval
     * objective recommender scorers and un-normalized dual-encoder
@@ -159,32 +241,17 @@ object Similarity {
           array(sqrt(greatest(col("m2") - col("norm2"), lit(0.0)))
             .cast("float"))).as("embedding"))
     val centroids = Clustering.cachedCentroids(aug)
-    val vectors = aug.select(col("vec_id"), col("embedding").as("emb"))
-      .withColumn("vnorm2",
-        graft.functions.VectorOps.dot(col("emb"), col("emb")))
-    val assigned = Clustering.assign(vectors, centroids)
+    val assigned = Clustering.assign(vectorFrame(aug), centroids)
     val queries = withNorm.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"),
         concat(col("embedding"), array(lit(0.0f))).as("query_emb"))
       .withColumn("qnorm2", Dedup.dotExpr("query_emb", "query_emb"))
     val probes = probeCells(queries, centroids, nProbe)
-    val scored = assigned
-      .join(broadcast(probes), col("cluster_id") === col("cell"))
-      .join(broadcast(queries), "query_id")
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine",
-        graft.functions.VectorOps.dot(col("emb"), col("query_emb")) /
-          (sqrt(col("vnorm2")) * sqrt(col("qnorm2"))))
-    val approx = topKByQuery(scored, "cosine", k)
-      .select(col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
-    mipsCoreTopK(embeddings, nQueries, k)
+    val approx = topKByQuery(probedCosine(assigned, probes, queries),
+        "cosine", k)
       .select(col("query_id"), col("neighbor_id"))
-      .join(approx, Seq("query_id", "neighbor_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(col("hit")).as("n_hits"))
-      .select(col("query_id"), col("n_hits"),
-        (col("n_hits").cast("double") / lit(k.toDouble)).as("recall"))
-      .orderBy(col("query_id"))
+    recallAt(mipsCoreTopK(embeddings, nQueries, k)
+      .select(col("query_id"), col("neighbor_id")), approx, k)
   }
 
   /** IVF-style top-k: each query probes only its own coarse cell (label).
@@ -198,9 +265,7 @@ object Similarity {
     val scored = corpus.join(broadcast(queries),
         col("label") === col("query_label") &&
           col("vec_id") =!= col("query_id"))
-      .withColumn("cosine",
-        Dedup.dotExpr("embedding", "query_emb") /
-          (sqrt(col("norm2")) * sqrt(col("qnorm2"))))
+      .withColumn("cosine", flatCosine)
     // the neighbor's cell label equals the probing query's label by the
     // join condition, so it re-attaches from the tiny broadcast query set
     topKByQuery(scored, "cosine", k)
@@ -235,6 +300,38 @@ object Similarity {
         col("cell_rank"))
   }
 
+  /** The n_probe = 1..maxProbe configs and the probe schedule of every
+    * config, `(n_probe, query_id, cell)` with cell_rank ≤ n_probe — one
+    * probe sweep at maxProbe serves the whole curve. */
+  private def probeSweep(queries: DataFrame, centroids: DataFrame,
+      maxProbe: Int): (DataFrame, DataFrame) = {
+    val configs = queries.sparkSession.range(1, maxProbe + 1)
+      .select(col("id").as("n_probe"))
+    val probes = probeCells(queries, centroids, maxProbe)
+      .join(broadcast(configs), col("cell_rank") <= col("n_probe"))
+      .select(col("n_probe"), col("query_id"), col("cell"))
+    (configs, probes)
+  }
+
+  /** Exact cosine over the probed cells: the `assigned` corpus rows
+    * inside each query's probe schedule, self-matches dropped. Probed
+    * cells are disjoint (each corpus vector lives in ONE cell), so a
+    * (query, neighbor) candidate appears at most once per schedule. */
+  private def probedCosine(assigned: DataFrame, probes: DataFrame,
+      queries: DataFrame): DataFrame =
+    assigned.join(broadcast(probes), col("cluster_id") === col("cell"))
+      .join(broadcast(queries), "query_id")
+      .filter(col("vec_id") =!= col("query_id"))
+      .withColumn("cosine",
+        graft.functions.VectorOps.dot(col("emb"), col("query_emb")) /
+          (sqrt(col("vnorm2")) * sqrt(col("qnorm2"))))
+
+  /** Re-attach the query's OWN (rank-1) cell to a top-k, keeping the
+    * schema stable as nProbe moves. */
+  private def withOwnCell(top: DataFrame, probes: DataFrame): DataFrame =
+    top.join(broadcast(probes.filter(col("cell_rank") === 1)
+      .select(col("query_id"), col("cell"))), "query_id")
+
   /** s08: IVF probe over TRAINED cells — the composition that closes
     * the production-ANN loop: [[Clustering.kmediansAssignFull]] is the
     * trained quantizer (k01's exact pipeline, vectors retained), each
@@ -254,27 +351,11 @@ object Similarity {
     // sides then assign against the literal centroids instead of each
     // re-running the training lineage (2x the median pipeline)
     val centroids = Clustering.cachedCentroids(embeddings)
-    val vectors = embeddings
-      .select(col("vec_id"), col("embedding").as("emb"))
-      .withColumn("vnorm2",
-        graft.functions.VectorOps.dot(col("emb"), col("emb")))
-    val assigned = Clustering.assign(vectors, centroids)
-    val queries = assigned.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"),
-        col("emb").as("query_emb"), col("vnorm2").as("qnorm2"))
+    val assigned = Clustering.assign(vectorFrame(embeddings), centroids)
+    val queries = probeQueries(assigned, nQueries)
     val probes = probeCells(queries, centroids, nProbe)
-    // probed cells are disjoint (each corpus vector lives in ONE cell),
-    // so a (query, neighbor) candidate appears at most once — no dedup
-    val scored = assigned.join(broadcast(probes),
-        col("cluster_id") === col("cell"))
-      .join(broadcast(queries), "query_id")
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine",
-        graft.functions.VectorOps.dot(col("emb"), col("query_emb")) /
-          (sqrt(col("vnorm2")) * sqrt(col("qnorm2"))))
-    topKByQuery(scored, "cosine", k)
-      .join(broadcast(probes.filter(col("cell_rank") === 1)
-        .select(col("query_id"), col("cell"))), "query_id")
+    withOwnCell(topKByQuery(probedCosine(assigned, probes, queries),
+        "cosine", k), probes)
       .select(col("query_id"), col("cell"), col("neighbor_id"),
         col("cosine"), col("rank"))
       .orderBy(col("query_id"), col("rank"))
@@ -292,43 +373,17 @@ object Similarity {
   def ivfNProbeRecall(embeddings: DataFrame, maxProbe: Int = 2,
       nQueries: Int = 5, k: Int = 10): DataFrame = {
     val centroids = Clustering.cachedCentroids(embeddings)
-    val vectors = embeddings
-      .select(col("vec_id"), col("embedding").as("emb"))
-      .withColumn("vnorm2",
-        graft.functions.VectorOps.dot(col("emb"), col("emb")))
-    val assigned = Clustering.assign(vectors, centroids)
-    val queries = assigned.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"),
-        col("emb").as("query_emb"), col("vnorm2").as("qnorm2"))
-    val ranked = probeCells(queries, centroids, maxProbe)
-    val configs = embeddings.sparkSession.range(1, maxProbe + 1)
-      .select(col("id").as("n_probe"))
-    val probes = ranked.join(broadcast(configs),
-        col("cell_rank") <= col("n_probe"))
-      .select(col("n_probe"), col("query_id"), col("cell"))
-    val scored = assigned.join(broadcast(probes),
-        col("cluster_id") === col("cell"))
-      .join(broadcast(queries), "query_id")
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine",
-        graft.functions.VectorOps.dot(col("emb"), col("query_emb")) /
-          (sqrt(col("vnorm2")) * sqrt(col("qnorm2"))))
+    val assigned = Clustering.assign(vectorFrame(embeddings), centroids)
+    val queries = probeQueries(assigned, nQueries)
+    val (configs, probes) = probeSweep(queries, centroids, maxProbe)
+    val scored = probedCosine(assigned, probes, queries)
       .select(col("n_probe"), col("query_id"), col("vec_id"),
         col("cosine"))
     val approx = topKByQuery(scored, "cosine", k,
         Seq("n_probe", "query_id"))
       .select(col("n_probe"), col("query_id"), col("neighbor_id"))
-      .withColumn("hit", lit(1L))
-    val exact = bruteForceTopK(embeddings, nQueries, k)
-      .select(col("query_id"), col("neighbor_id"))
-      .join(broadcast(configs))
-    exact.join(approx, Seq("n_probe", "query_id", "neighbor_id"), "left")
-      .groupBy(col("n_probe"), col("query_id"))
-      .agg(count(col("hit")).as("n_hits"))
-      .select(col("n_probe"), col("query_id"), col("n_hits"),
-        (col("n_hits").cast("double") / lit(k).cast("double"))
-          .as("recall"))
-      .orderBy(col("n_probe"), col("query_id"))
+    recallAt(exactPairs(embeddings, nQueries, k).join(broadcast(configs)),
+      approx, k, Seq("n_probe"))
   }
 
   /** Deterministic ±1 random-hyperplane matrix: s(i,j) from the parity of
@@ -385,9 +440,7 @@ object Similarity {
     val scored = withBucket.join(broadcast(queries),
         col("bucket") === col("query_bucket") &&
           col("vec_id") =!= col("query_id"))
-      .withColumn("cosine",
-        Dedup.dotExpr("embedding", "query_emb") /
-          (sqrt(col("norm2")) * sqrt(col("qnorm2"))))
+      .withColumn("cosine", flatCosine)
     // same-bucket probe ⇒ neighbor bucket = query bucket; re-attach it
     // from the broadcast query set after the bounded top-k reduction
     topKByQuery(scored, "cosine", k)
@@ -424,9 +477,7 @@ object Similarity {
     sliced.join(broadcast(queries),
         col("t") === col("qt") && col("sub") === col("qsub") &&
           col("vec_id") =!= col("query_id"))
-      .withColumn("cosine",
-        Dedup.dotExpr("embedding", "query_emb") /
-          (sqrt(col("norm2")) * sqrt(col("qnorm2"))))
+      .withColumn("cosine", flatCosine)
       .select(col("t"), col("query_id"), col("vec_id"), col("cosine"))
   }
 
@@ -444,10 +495,7 @@ object Similarity {
     val cands = lshCandidateScores(embeddings, nTables, nBits, nQueries)
       .groupBy(col("query_id"), col("vec_id"))
       .agg(min(col("cosine")).as("cosine"))
-    topKByQuery(cands, "cosine", k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"),
-        col("rank"))
-      .orderBy(col("query_id"), col("rank"))
+    cosineRows(topKByQuery(cands, "cosine", k))
   }
 
   /** s07: recall@k per table count, 1..maxTables — the tuning curve a
@@ -470,16 +518,8 @@ object Similarity {
     val approx = topKByQuery(cands, "cosine", k,
         Seq("n_tables", "query_id"))
       .select(col("n_tables"), col("query_id"), col("neighbor_id"))
-      .withColumn("hit", lit(1L))
-    val exact = bruteForceTopK(embeddings, nQueries, k)
-      .select(col("query_id"), col("neighbor_id"))
-      .join(broadcast(configs))
-    exact.join(approx, Seq("n_tables", "query_id", "neighbor_id"), "left")
-      .groupBy(col("n_tables"), col("query_id"))
-      .agg(count(col("hit")).as("n_hits"))
-      .select(col("n_tables"), col("query_id"), col("n_hits"),
-        (col("n_hits").cast("double") / lit(k).cast("double")).as("recall"))
-      .orderBy(col("n_tables"), col("query_id"))
+    recallAt(exactPairs(embeddings, nQueries, k).join(broadcast(configs)),
+      approx, k, Seq("n_tables"))
   }
 
   /** s09: recall@k of MULTI-PROBE LSH per probe radius — the OTHER
@@ -513,9 +553,7 @@ object Similarity {
     val scored = withBucket.join(broadcast(probes),
         col("bucket") === col("probe_key") &&
           col("vec_id") =!= col("query_id"))
-      .withColumn("cosine",
-        Dedup.dotExpr("embedding", "query_emb") /
-          (sqrt(col("norm2")) * sqrt(col("qnorm2"))))
+      .withColumn("cosine", flatCosine)
       .select(col("p"), col("query_id"), col("vec_id"), col("cosine"))
     val radii = embeddings.sparkSession.range(0, 2)
       .select(col("id").as("radius"))
@@ -524,16 +562,8 @@ object Similarity {
       .select(col("radius"), col("query_id"), col("vec_id"), col("cosine"))
     val approx = topKByQuery(cands, "cosine", k, Seq("radius", "query_id"))
       .select(col("radius"), col("query_id"), col("neighbor_id"))
-      .withColumn("hit", lit(1L))
-    val exact = bruteForceTopK(embeddings, nQueries, k)
-      .select(col("query_id"), col("neighbor_id"))
-      .join(broadcast(radii))
-    exact.join(approx, Seq("radius", "query_id", "neighbor_id"), "left")
-      .groupBy(col("radius"), col("query_id"))
-      .agg(count(col("hit")).as("n_hits"))
-      .select(col("radius"), col("query_id"), col("n_hits"),
-        (col("n_hits").cast("double") / lit(k).cast("double")).as("recall"))
-      .orderBy(col("radius"), col("query_id"))
+    recallAt(exactPairs(embeddings, nQueries, k).join(broadcast(radii)),
+      approx, k, Seq("radius"))
   }
 
   /** Recall@k of the LSH ANN tier against exact search — the evaluation
@@ -547,19 +577,10 @@ object Similarity {
     * nQueries × corpus — a fixed evaluation budget, not a per-query
     * production cost. */
   def annRecall(embeddings: DataFrame, nQueries: Int = 5, k: Int = 5,
-      nBits: Int = 4): DataFrame = {
-    val exact = bruteForceTopK(embeddings, nQueries, k)
-      .select(col("query_id"), col("neighbor_id"))
-    val approx = lshAnnTopK(embeddings, nBits, nQueries, k)
-      .select(col("query_id"), col("neighbor_id"))
-      .withColumn("hit", lit(1L))
-    exact.join(approx, Seq("query_id", "neighbor_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(col("hit")).as("n_hits"))
-      .select(col("query_id"), col("n_hits"),
-        (col("n_hits").cast("double") / lit(k).cast("double")).as("recall"))
-      .orderBy(col("query_id"))
-  }
+      nBits: Int = 4): DataFrame =
+    recallAt(exactPairs(embeddings, nQueries, k),
+      lshAnnTopK(embeddings, nBits, nQueries, k)
+        .select(col("query_id"), col("neighbor_id")), k)
 
   /** Scalar-quantize an `array<float>` to integer codes: `floor(64·x)`.
     * The scale is a power of two, so the multiply is EXACT in IEEE
@@ -590,13 +611,8 @@ object Similarity {
     val scored = cand
       .join(corpus, "vec_id")
       .join(broadcast(queries), "query_id")
-      .withColumn("cosine",
-        Dedup.dotExpr("embedding", "query_emb") /
-          (sqrt(col("norm2")) * sqrt(col("qnorm2"))))
-    topKByQuery(scored, "cosine", k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"),
-        col("rank"))
-      .orderBy(col("query_id"), col("rank"))
+      .withColumn("cosine", flatCosine)
+    cosineRows(topKByQuery(scored, "cosine", k))
   }
 
   /** s20: Matryoshka-style prefix-dimension retrieval (Kusupati et al.
@@ -639,12 +655,8 @@ object Similarity {
       .join(broadcast(cand), "vec_id")
       .join(broadcast(queries.select(col("query_id"), col("query_emb"),
         col("qnorm2"))), "query_id")
-      .withColumn("cosine", Dedup.dotExpr("embedding", "query_emb") /
-        (sqrt(col("norm2")) * sqrt(col("qnorm2"))))
-    topKByQuery(scored, "cosine", k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"),
-        col("rank"))
-      .orderBy(col("query_id"), col("rank"))
+      .withColumn("cosine", flatCosine)
+    cosineRows(topKByQuery(scored, "cosine", k))
   }
 
   /** s21: cell-blocked kNN GRAPH — every corpus vector's top-k cosine
@@ -668,20 +680,35 @@ object Similarity {
   def knnGraph(embeddings: DataFrame, k: Int = 5,
       nCells: Int = 32): DataFrame = {
     val centroids = Clustering.cachedCentroids(embeddings, nCells)
-    val vectors = embeddings
-      .select(col("vec_id"), col("embedding").as("emb"))
-      .withColumn("vnorm2", Dedup.dotExpr("emb", "emb"))
-    val assigned = Clustering.assignAuto(vectors, centroids, nCells)
-      .select(col("vec_id"), col("emb"), col("vnorm2"),
-        col("cluster_id").as("cell"))
-    val scored = assigned
-      .join(assigned.select(col("cell"), col("vec_id").as("nbr_id"),
+    cellGraph(Clustering.assignAuto(graphVectors(embeddings), centroids,
+      nCells), k, dedup = false)
+  }
+
+  /** [[vectorFrame]] with the graph tier's fixed-order norm fold. */
+  private def graphVectors(embeddings: DataFrame): DataFrame =
+    vectorFrame(embeddings, Dedup.dotExpr("emb", "emb"))
+
+  /** The cell-blocked kNN graph over `assigned (vec_id, emb, vnorm2,
+    * cluster_id)`: within-cell pairs scored by exact cosine, top-k per
+    * vector. `dedup` collapses a pair that shares several cells (the
+    * multi-assign build) to one candidate. */
+  private def cellGraph(assigned: DataFrame, k: Int,
+      dedup: Boolean): DataFrame = {
+    val cells = assigned.select(col("vec_id"), col("emb"), col("vnorm2"),
+      col("cluster_id").as("cell"))
+    val pairs = cells
+      .join(cells.select(col("cell"), col("vec_id").as("nbr_id"),
         col("emb").as("nemb"), col("vnorm2").as("nnorm2")), Seq("cell"))
       .filter(col("vec_id") =!= col("nbr_id"))
       .withColumn("cosine", Dedup.dotExpr("emb", "nemb") /
         (sqrt(col("vnorm2")) * sqrt(col("nnorm2"))))
       .select(col("vec_id").as("query_id"), col("nbr_id").as("vec_id"),
         col("cosine"))
+    // dedup on the JOIN KEYS, not the computed double: the cosine is
+    // functionally determined by the pair, and keying distinctness on a
+    // float invites the -0.0-normalization cross-engine hazard
+    val scored =
+      if (dedup) pairs.dropDuplicates(Seq("query_id", "vec_id")) else pairs
     topKByQuery(scored, "cosine", k)
       .select(col("query_id").as("vec_id"), col("neighbor_id"),
         col("cosine"), col("rank"))
@@ -711,30 +738,8 @@ object Similarity {
   def knnGraphMulti(embeddings: DataFrame, k: Int = 5,
       nCells: Int = 32, nAssign: Int = 2): DataFrame = {
     val centroids = Clustering.cachedCentroids(embeddings, nCells)
-    val vectors = embeddings
-      .select(col("vec_id"), col("embedding").as("emb"))
-      .withColumn("vnorm2", Dedup.dotExpr("emb", "emb"))
-    val assigned = Clustering
-      .assignTopMAuto(vectors, centroids, nCells, nAssign)
-      .select(col("vec_id"), col("emb"), col("vnorm2"),
-        col("cluster_id").as("cell"))
-    val scored = assigned
-      .join(assigned.select(col("cell"), col("vec_id").as("nbr_id"),
-        col("emb").as("nemb"), col("vnorm2").as("nnorm2")), Seq("cell"))
-      .filter(col("vec_id") =!= col("nbr_id"))
-      .withColumn("cosine", Dedup.dotExpr("emb", "nemb") /
-        (sqrt(col("vnorm2")) * sqrt(col("nnorm2"))))
-      .select(col("vec_id").as("query_id"), col("nbr_id").as("vec_id"),
-        col("cosine"))
-      // dedup on the JOIN KEYS, not the computed double: the cosine is
-      // functionally determined by the pair, and keying distinctness
-      // on a float invites the -0.0-normalization cross-engine hazard
-      // (r20 ADVICE)
-      .dropDuplicates(Seq("query_id", "vec_id"))
-    topKByQuery(scored, "cosine", k)
-      .select(col("query_id").as("vec_id"), col("neighbor_id"),
-        col("cosine"), col("rank"))
-      .orderBy(col("vec_id"), col("rank"))
+    cellGraph(Clustering.assignTopMAuto(graphVectors(embeddings), centroids,
+      nCells, nAssign), k, dedup = true)
   }
 
   // ONE materialized kNN graph per (session, corpus, k, nCells),
@@ -869,11 +874,8 @@ object Similarity {
       if (edgesOverride.isEmpty) graft.operators.Anchor.cut(symRaw)
       else symRaw
     val centroids = Clustering.cachedCentroids(embeddings, nCells)
-    val vectors = embeddings
-      .select(col("vec_id"), col("embedding").as("emb"))
-      .withColumn("vnorm2", Dedup.dotExpr("emb", "emb"))
     val assigned = graft.operators.Anchor.cut(
-      Clustering.assignAuto(vectors, centroids, nCells)
+      Clustering.assignAuto(graphVectors(embeddings), centroids, nCells)
         .select(col("vec_id"), col("emb"), col("vnorm2"),
           col("cluster_id").as("cell")))
     val queries = graft.operators.Anchor.cut(
@@ -946,24 +948,8 @@ object Similarity {
       nCells: Int = 32): DataFrame = {
     val p = beamParts(embeddings, nQueries, beam, hops, graphK, nCells,
       keepFrontiers = false)
-    beamFinal(p, p.frontiers.last, k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"),
-        col("rank"))
-      .orderBy(col("query_id"), col("rank"))
+    cosineRows(beamFinal(p, p.frontiers.last, k))
   }
-
-  /** Per-query recall@k of `approx (query_id, neighbor_id)` against
-    * `exact` — the s05-shaped eval tail shared by the graph-ANN faces. */
-  private def recallPerQuery(exact: DataFrame, approx: DataFrame,
-      k: Int): DataFrame =
-    exact.join(approx.withColumn("hit", lit(1L)),
-        Seq("query_id", "neighbor_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(col("hit")).as("n_hits"))
-      .select(col("query_id"), col("n_hits"),
-        (col("n_hits").cast("double") / lit(k).cast("double"))
-          .as("recall"))
-      .orderBy(col("query_id"))
 
   /** s43's ledger face: recall@k of the beam traversal against the s01
     * exact truth — the eval every graph-ANN deployment reads before
@@ -972,9 +958,7 @@ object Similarity {
   def beamSearchRecall(embeddings: DataFrame, nQueries: Int = 5,
       k: Int = 5, beam: Int = 8, hops: Int = 3, graphK: Int = 5,
       nCells: Int = 32): DataFrame =
-    recallPerQuery(
-      bruteForceTopK(embeddings, nQueries, k)
-        .select(col("query_id"), col("neighbor_id")),
+    recallAt(exactPairs(embeddings, nQueries, k),
       beamSearchTopK(embeddings, nQueries, k, beam, hops, graphK,
         nCells).select(col("query_id"), col("neighbor_id")), k)
 
@@ -997,18 +981,10 @@ object Similarity {
       beamFinal(p, f, k)
         .select(lit((i + 1).toLong).as("hop"), col("query_id"),
           col("neighbor_id"))
-    }.reduce(_ union _).withColumn("hit", lit(1L))
+    }.reduce(_ union _)
     val hopTable = spark.range(1, hops + 1).select(col("id").as("hop"))
-    bruteForceTopK(embeddings, nQueries, k)
-      .select(col("query_id"), col("neighbor_id"))
-      .join(broadcast(hopTable))
-      .join(perHop, Seq("hop", "query_id", "neighbor_id"), "left")
-      .groupBy(col("hop"), col("query_id"))
-      .agg(count(col("hit")).as("n_hits"))
-      .select(col("hop"), col("query_id"), col("n_hits"),
-        (col("n_hits").cast("double") / lit(k).cast("double"))
-          .as("recall"))
-      .orderBy(col("hop"), col("query_id"))
+    recallAt(exactPairs(embeddings, nQueries, k).join(broadcast(hopTable)),
+      perHop, k, Seq("hop"))
   }
 
   /** s45: the s43 serve against the AT-REST graph — edges written once
@@ -1027,18 +1003,14 @@ object Similarity {
       nCells: Int = 32): DataFrame = {
     val stored = storedBeamGraph(embeddings, graphK, nCells)
     val centroids = Clustering.cachedCentroids(embeddings, nCells)
-    val qv = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding").as("emb"))
-      .withColumn("vnorm2", Dedup.dotExpr("emb", "emb"))
+    val qv = graphVectors(embeddings.filter(col("vec_id") < nQueries))
     val qcells = Clustering.assign(qv, centroids)
       .select(col("cluster_id")).distinct()
       .collect().map(_.getLong(0)).toSeq
     val edges = stored.filter(col("cell").isin(qcells: _*))
     val p = beamParts(embeddings, nQueries, beam, hops, graphK, nCells,
       edgesOverride = Some(edges))
-    recallPerQuery(
-      bruteForceTopK(embeddings, nQueries, k)
-        .select(col("query_id"), col("neighbor_id")),
+    recallAt(exactPairs(embeddings, nQueries, k),
       beamFinal(p, p.frontiers.last, k)
         .select(col("query_id"), col("neighbor_id")), k)
   }
@@ -1086,14 +1058,10 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"))
     val corpus = normed(embeddings)
     val queries = qnormed(queryVectors(embeddings, nQueries))
-    val truth = topKByQuery(
-      corpus.filter(pred)
-        .join(broadcast(queries), col("vec_id") =!= col("query_id"))
-        .withColumn("cosine", Dedup.dotExpr("embedding", "query_emb") /
-          (sqrt(col("norm2")) * sqrt(col("qnorm2")))),
-      "cosine", k)
+    val truth = topKByQuery(flatScored(corpus.filter(pred), queries),
+        "cosine", k)
       .select(col("query_id"), col("neighbor_id"))
-    recallPerQuery(truth, approx, k)
+    recallAt(truth, approx, k)
   }
 
   /** The at-rest beam graph: [[knnGraph]] edges + the src vector's
@@ -1105,10 +1073,8 @@ object Similarity {
         s"k=$graphK,cells=$nCells", Seq("cell")) {
       val centroids = Clustering.cachedCentroids(embeddings,
         nCells)
-      val vectors = embeddings
-        .select(col("vec_id"), col("embedding").as("emb"))
-        .withColumn("vnorm2", Dedup.dotExpr("emb", "emb"))
-      val cells = Clustering.assignAuto(vectors, centroids, nCells)
+      val cells = Clustering.assignAuto(graphVectors(embeddings),
+          centroids, nCells)
         .select(col("vec_id"), col("cluster_id").as("cell"))
       knnGraph(embeddings, graphK, nCells).join(cells, Seq("vec_id"))
         .select(col("vec_id"), col("neighbor_id"), col("cosine"),
@@ -1226,17 +1192,38 @@ object Similarity {
   def pqTopK(embeddings: DataFrame, m: Int = 4, subDim: Int = 16,
       k: Int = 8, nQueries: Int = 5, topK: Int = 10): DataFrame = {
     val (codes, codebook) = pqEncode(embeddings, m, subDim, k)
-    val lut = pqLut(embeddings, codebook, m, subDim, nQueries)
-    val scored = codes
-      .join(broadcast(lut), Seq("sub", "code"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(sum(col("pdot_fp")).as("adc_fp"))
-    topKByQuery(scored, "adc_fp", topK)
-      .select(col("query_id"), col("neighbor_id"),
-        col("adc_fp").cast("long").as("adc_fp"), col("rank"))
-      .orderBy(col("query_id"), col("rank"))
+    adcRows(adcTopK(codes, pqLut(embeddings, codebook, m, subDim,
+      nQueries), topK), "query_id")
   }
+
+  /** The ADC scorer — the one seam every PQ serve and eval scores
+    * through, and where a fused probe→LUT→ADC→top-k operator plugs in.
+    * Candidate code rows `(vec_id, sub, code[, cell])` ⋈ broadcast(LUT)
+    * on (sub, code); with `probes` `(query_id, cell[, keys..])` also ⋈
+    * broadcast(probes) on (query_id, cell), so each query scores only
+    * its probed cells; self-matches dropped; Σ pdot_fp per (keys,
+    * vec_id) — an order-free exact long — then the bounded per-`keys`
+    * top-k. The candidate frame is the only thing a serve form varies:
+    * re-encoded codes pruned to the probed cells, a stored table's
+    * probed partitions, either minus a tombstone predicate. */
+  private def adcTopK(cands: DataFrame, lut: DataFrame, topK: Int,
+      keys: Seq[String] = Seq("query_id"),
+      probes: Option[DataFrame] = None): DataFrame = {
+    val joined = cands.join(broadcast(lut), Seq("sub", "code"))
+    val scored = probes
+      .fold(joined)(p => joined.join(broadcast(p), Seq("query_id", "cell")))
+      .filter(col("vec_id") =!= col("query_id"))
+      .groupBy((keys :+ "vec_id").map(col): _*)
+      .agg(sum(col("pdot_fp")).as("adc_fp"))
+    topKByQuery(scored, "adc_fp", topK, keys)
+  }
+
+  /** An ADC serve's published rows: `cols`, the neighbor, its exact-long
+    * score and rank, ordered by (query, rank). */
+  private def adcRows(top: DataFrame, cols: String*): DataFrame =
+    top.select(cols.map(col) ++ Seq(col("neighbor_id"),
+        col("adc_fp").cast("long").as("adc_fp"), col("rank")): _*)
+      .orderBy(col("query_id"), col("rank"))
 
   /** `codes ⋈ cells` restricted to the probed-cell set BEFORE the
     * per-query LUT join. Plan-order matters here and Catalyst cannot fix
@@ -1269,27 +1256,26 @@ object Similarity {
   def ivfPqTopK(embeddings: DataFrame, m: Int = 4, subDim: Int = 16,
       k: Int = 8, nQueries: Int = 5, topK: Int = 10): DataFrame = {
     val centroids = Clustering.trainedCentroidsLocal(embeddings)
-    val vectors = embeddings
-      .select(col("vec_id"), col("embedding").as("emb"))
-      .withColumn("vnorm2",
-        graft.functions.VectorOps.dot(col("emb"), col("emb")))
-    val cells = Clustering.assign(vectors, centroids)
-      .select(col("vec_id"), col("cluster_id").as("cell"))
+    val cells = cellsOf(vectorFrame(embeddings), centroids)
     val (codes, codebook) = pqEncode(embeddings, m, subDim, k)
-    val lut = pqLut(embeddings, codebook, m, subDim, nQueries)
+    ownCellTopK(codes, cells, pqLut(embeddings, codebook, m, subDim,
+      nQueries), nQueries, topK)
+  }
+
+  /** `(vec_id, cell)`: each vector's assigned coarse cell. */
+  private def cellsOf(vectors: DataFrame, centroids: DataFrame): DataFrame =
+    Clustering.assign(vectors, centroids)
+      .select(col("vec_id"), col("cluster_id").as("cell"))
+
+  /** s12's own-cell ADC serve over `codes` and their `cells`: each query
+    * probes only its OWN assigned cell, ranked per (query, cell). */
+  private def ownCellTopK(codes: DataFrame, cells: DataFrame,
+      lut: DataFrame, nQueries: Int, topK: Int): DataFrame = {
     val probes = cells.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("cell"))
-    val scored = probePrunedCodes(codes, cells, probes)
-      .join(broadcast(lut), Seq("sub", "code"))
-      .join(broadcast(probes), Seq("query_id", "cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("cell"), col("vec_id"))
-      .agg(sum(col("pdot_fp")).as("adc_fp"))
-    topKByQuery(scored, "adc_fp", topK, keys = Seq("query_id", "cell"))
-      .select(col("query_id"), col("cell"),
-        col("neighbor_id"), col("adc_fp").cast("long").as("adc_fp"),
-        col("rank"))
-      .orderBy(col("query_id"), col("rank"))
+    val keys = Seq("query_id", "cell")
+    adcRows(adcTopK(probePrunedCodes(codes, cells, probes), lut, topK,
+      keys, Some(probes)), keys: _*)
   }
 
   /** The coarse-quantizer K every serving-form query trains/loads with
@@ -1307,32 +1293,62 @@ object Similarity {
 
   /** Everything a serving-form IVF-PQ query builds before its own
     * probe/score step: the cached model artifacts (trained on
-    * `trainOn`, which is the full corpus except in the append form) and
-    * the encode/LUT/query frames over the full corpus. ONE home for the
-    * artifact loads so the cache-key construction lives in exactly one
-    * place. */
-  private case class ServeCtx(centroids: DataFrame, codebook: DataFrame,
-      vectors: DataFrame, cells: DataFrame, codes: DataFrame,
-      lut: DataFrame, queries: DataFrame)
+    * `trainOn`: the full corpus, or the frozen base split of the append
+    * and lifecycle forms) and the encode/LUT/query frames over the full
+    * corpus. ONE home for the artifact loads so the cache-key
+    * construction lives in exactly one place. */
+  private case class ServeCtx(centroids: DataFrame, vectors: DataFrame,
+      cells: DataFrame, codes: DataFrame, lut: DataFrame,
+      queries: DataFrame)
 
   private def servingContext(embeddings: DataFrame, trainOn: DataFrame,
       m: Int, subDim: Int, k: Int, nQueries: Int): ServeCtx = {
     val centroids = cachedCentroids(trainOn)
     val codebook = cachedCodebook(trainOn, m, subDim, k)
-    val vectors = embeddings
-      .select(col("vec_id"), col("embedding").as("emb"))
-      .withColumn("vnorm2",
-        graft.functions.VectorOps.dot(col("emb"), col("emb")))
-    val cells = Clustering.assign(vectors, centroids)
-      .select(col("vec_id"), col("cluster_id").as("cell"))
-    val codes = pqAssign(pqSubvectors(embeddings, m, subDim), codebook)
-      .select(col("vec_id"), col("sub"), col("code"))
-    val lut = pqLut(embeddings, codebook, m, subDim, nQueries)
-    val queries = vectors.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("emb").as("query_emb"),
-        col("vnorm2").as("qnorm2"))
-    ServeCtx(centroids, codebook, vectors, cells, codes, lut, queries)
+    val vectors = vectorFrame(embeddings)
+    ServeCtx(centroids, vectors, cellsOf(vectors, centroids),
+      pqEncodeWith(embeddings, codebook, m, subDim),
+      pqLut(embeddings, codebook, m, subDim, nQueries),
+      probeQueries(vectors, nQueries))
   }
+
+  /** The probed serve every IVF-PQ lifecycle form (s15, s18, s19, s27,
+    * s36) runs: the cached artifacts trained on `trainOn`, the query's
+    * `nProbe` nearest cells, `candidates` (given the context and that
+    * probe schedule) scored by [[adcTopK]], and the query's OWN (rank-1)
+    * cell reported at any nProbe. Probed cells are disjoint, so a
+    * (query, code-vector) candidate appears at most once. */
+  private def probedServe(embeddings: DataFrame, trainOn: DataFrame,
+      m: Int, subDim: Int, k: Int, nQueries: Int, topK: Int, nProbe: Int)(
+      candidates: (ServeCtx, DataFrame) => DataFrame): DataFrame = {
+    val ctx = servingContext(embeddings, trainOn, m, subDim, k, nQueries)
+    val probes = probeCells(ctx.queries, ctx.centroids, nProbe)
+    val top = adcTopK(candidates(ctx, probes), ctx.lut, topK,
+      probes = Some(probes.select(col("query_id"), col("cell"))))
+    adcRows(withOwnCell(top, probes), "query_id", "cell")
+  }
+
+  /** Re-encoded codes restricted to the probed cells. */
+  private def prunedCodes(ctx: ServeCtx, probes: DataFrame): DataFrame =
+    probePrunedCodes(ctx.codes, ctx.cells, probes)
+
+  /** The STORED candidate source: `(cell, vec_id, sub, code)` written
+    * once per (kind, corpus, params) as cell-partitioned parquet
+    * ([[IndexStore]]) and read through a literal IN-list of the probed
+    * cells — static partition pruning. Collecting the ≤ nQueries·nProbe
+    * cell ids is one query-batch-sized job at construction. */
+  private def storedCodes(kind: String, embeddings: DataFrame,
+      params: String, ctx: ServeCtx, probes: DataFrame): DataFrame = {
+    val stored = IndexStore.storedTable(kind, embeddings, params,
+      Seq("cell"))(ctx.cells.join(ctx.codes, "vec_id"))
+    val probedIds = probes.select(col("cell")).distinct()
+      .collect().map(_.getLong(0)).sorted.toSeq
+    stored.filter(col("cell").isin(probedIds: _*))
+  }
+
+  /** The s18 base split the frozen-model forms train on. */
+  private def baseSplit(embeddings: DataFrame): DataFrame =
+    embeddings.filter(col("vec_id") % 5 =!= 0)
 
   /** [[pqTopK]]'s serving form: the codebook enters as the session
     * model artifact ([[pqCodebookLocal]] via [[ModelArtifacts]] — which
@@ -1343,18 +1359,8 @@ object Similarity {
   def pqTopKServe(embeddings: DataFrame, m: Int = 4, subDim: Int = 16,
       k: Int = 8, nQueries: Int = 5, topK: Int = 10): DataFrame = {
     val codebook = cachedCodebook(embeddings, m, subDim, k)
-    val codes = pqAssign(pqSubvectors(embeddings, m, subDim), codebook)
-      .select(col("vec_id"), col("sub"), col("code"))
-    val lut = pqLut(embeddings, codebook, m, subDim, nQueries)
-    val scored = codes
-      .join(broadcast(lut), Seq("sub", "code"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(sum(col("pdot_fp")).as("adc_fp"))
-    topKByQuery(scored, "adc_fp", topK)
-      .select(col("query_id"), col("neighbor_id"),
-        col("adc_fp").cast("long").as("adc_fp"), col("rank"))
-      .orderBy(col("query_id"), col("rank"))
+    adcRows(adcTopK(pqEncodeWith(embeddings, codebook, m, subDim),
+      pqLut(embeddings, codebook, m, subDim, nQueries), topK), "query_id")
   }
 
   /** The trained PQ codebook MATERIALIZED as a local m·k-row DataFrame
@@ -1387,7 +1393,7 @@ object Similarity {
     * serve cost. */
   def ivfPqTopKServe(embeddings: DataFrame, m: Int = 4, subDim: Int = 16,
       k: Int = 8, nQueries: Int = 5, topK: Int = 10,
-      nProbe: Int = 1): DataFrame = {
+      nProbe: Int = 1): DataFrame =
     // the serving form LOADS its model artifacts: trained once per
     // (corpus, hyperparameters) per session via [[ModelArtifacts]], the
     // local stand-in for the artifact store a deployment reads. s12
@@ -1396,27 +1402,8 @@ object Similarity {
     // carries the serving tier's nprobe lever ([[probeCells]], default
     // 1 = own cell = s12's semantics): probed cells are disjoint, so a
     // (query, code-vector) candidate appears at most once at any nProbe.
-    val ctx = servingContext(embeddings, embeddings, m, subDim, k,
-      nQueries)
-    val probes = probeCells(ctx.queries, ctx.centroids, nProbe)
-    val scored = probePrunedCodes(ctx.codes, ctx.cells, probes)
-      .join(broadcast(ctx.lut), Seq("sub", "code"))
-      .join(broadcast(probes.select(col("query_id"), col("cell"))),
-        Seq("query_id", "cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(sum(col("pdot_fp")).as("adc_fp"))
-    // reported cell stays the query's OWN (rank-1) cell at any nProbe,
-    // keeping the schema stable as the lever moves (same contract as
-    // ivfTrainedTopK)
-    topKByQuery(scored, "adc_fp", topK)
-      .join(broadcast(probes.filter(col("cell_rank") === 1)
-        .select(col("query_id"), col("cell"))), "query_id")
-      .select(col("query_id"), col("cell"),
-        col("neighbor_id"), col("adc_fp").cast("long").as("adc_fp"),
-        col("rank"))
-      .orderBy(col("query_id"), col("rank"))
-  }
+    probedServe(embeddings, embeddings, m, subDim, k, nQueries, topK,
+      nProbe)(prunedCodes)
 
   /** s27: index DELETES without retrain — the last face of the index
     * lifecycle (create s12/s15 → append s18 → delete): vectors leave
@@ -1437,26 +1424,10 @@ object Similarity {
   def ivfPqDeleteServe(embeddings: DataFrame,
       deletePredicate: Column = col("vec_id") % 7 === 0,
       m: Int = 4, subDim: Int = 16, k: Int = 8, nQueries: Int = 5,
-      topK: Int = 10, nProbe: Int = 1): DataFrame = {
-    val ctx = servingContext(embeddings, embeddings, m, subDim, k,
-      nQueries)
-    val probes = probeCells(ctx.queries, ctx.centroids, nProbe)
-    val scored = probePrunedCodes(ctx.codes, ctx.cells, probes)
-      .filter(!deletePredicate)
-      .join(broadcast(ctx.lut), Seq("sub", "code"))
-      .join(broadcast(probes.select(col("query_id"), col("cell"))),
-        Seq("query_id", "cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(sum(col("pdot_fp")).as("adc_fp"))
-    topKByQuery(scored, "adc_fp", topK)
-      .join(broadcast(probes.filter(col("cell_rank") === 1)
-        .select(col("query_id"), col("cell"))), "query_id")
-      .select(col("query_id"), col("cell"),
-        col("neighbor_id"), col("adc_fp").cast("long").as("adc_fp"),
-        col("rank"))
-      .orderBy(col("query_id"), col("rank"))
-  }
+      topK: Int = 10, nProbe: Int = 1): DataFrame =
+    probedServe(embeddings, embeddings, m, subDim, k, nQueries, topK,
+      nProbe)((ctx, probes) => prunedCodes(ctx, probes)
+        .filter(!deletePredicate))
 
   /** s13: recall@k of the PQ serving tiers — s11 (flat ADC) and s12
     * (IVF-PQ) — against the s01 exact ground truth: what ADC
@@ -1475,31 +1446,14 @@ object Similarity {
     * recall is a rational count and oracle-checkable. */
   def pqRecall(embeddings: DataFrame, nQueries: Int = 5,
       k: Int = 10): DataFrame = {
-    val tiers = embeddings.sparkSession.range(0, 2)
-      .select(element_at(array(lit("ivfpq"), lit("pq_adc")),
-        col("id").cast("int") + 1).as("tier"))
     // both tiers evaluate through their SERVING forms — identical rows
     // to s11/s12 by construction (spec- and oracle-pinned), and the
     // cached model artifacts mean the eval pays PQ training once per
     // session instead of re-deriving it inside the recall query
-    val approx = pqTopKServe(embeddings, nQueries = nQueries, topK = k)
-      .select(lit("pq_adc").as("tier"), col("query_id"),
-        col("neighbor_id"))
-      .unionByName(ivfPqTopKServe(embeddings, nQueries = nQueries,
-          topK = k)
-        .select(lit("ivfpq").as("tier"), col("query_id"),
-          col("neighbor_id")))
-      .withColumn("hit", lit(1L))
-    val exact = bruteForceTopK(embeddings, nQueries, k)
-      .select(col("query_id"), col("neighbor_id"))
-      .join(broadcast(tiers))
-    exact.join(approx, Seq("tier", "query_id", "neighbor_id"), "left")
-      .groupBy(col("tier"), col("query_id"))
-      .agg(count(col("hit")).as("n_hits"))
-      .select(col("tier"), col("query_id"), col("n_hits"),
-        (col("n_hits").cast("double") / lit(k).cast("double"))
-          .as("recall"))
-      .orderBy(col("tier"), col("query_id"))
+    tierRecall(embeddings, nQueries, k,
+      "pq_adc" -> pqTopKServe(embeddings, nQueries = nQueries, topK = k),
+      "ivfpq" -> ivfPqTopKServe(embeddings, nQueries = nQueries,
+        topK = k))
   }
 
   /** s16: recall@k of the IVF-PQ SERVING tier per n_probe — the last
@@ -1516,34 +1470,14 @@ object Similarity {
       nQueries: Int = 5, k: Int = 10): DataFrame = {
     val ctx = servingContext(embeddings, embeddings, m = 4, subDim = 16,
       k = 8, nQueries = nQueries)
-    val ranked = probeCells(ctx.queries, ctx.centroids, maxProbe)
-    val configs = embeddings.sparkSession.range(1, maxProbe + 1)
-      .select(col("id").as("n_probe"))
-    val probes = ranked.join(broadcast(configs),
-        col("cell_rank") <= col("n_probe"))
-      .select(col("n_probe"), col("query_id"), col("cell"))
+    val (configs, probes) = probeSweep(ctx.queries, ctx.centroids, maxProbe)
     // disjoint cells: a (query, code-vector) candidate appears at most
     // once per config — no dedup before the ADC partial agg
-    val scored = probePrunedCodes(ctx.codes, ctx.cells, probes)
-      .join(broadcast(ctx.lut), Seq("sub", "code"))
-      .join(broadcast(probes), Seq("query_id", "cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("n_probe"), col("query_id"), col("vec_id"))
-      .agg(sum(col("pdot_fp")).as("adc_fp"))
-    val approx = topKByQuery(scored, "adc_fp", k,
-        Seq("n_probe", "query_id"))
+    val approx = adcTopK(prunedCodes(ctx, probes), ctx.lut, k,
+        Seq("n_probe", "query_id"), Some(probes))
       .select(col("n_probe"), col("query_id"), col("neighbor_id"))
-      .withColumn("hit", lit(1L))
-    val exact = bruteForceTopK(embeddings, nQueries, k)
-      .select(col("query_id"), col("neighbor_id"))
-      .join(broadcast(configs))
-    exact.join(approx, Seq("n_probe", "query_id", "neighbor_id"), "left")
-      .groupBy(col("n_probe"), col("query_id"))
-      .agg(count(col("hit")).as("n_hits"))
-      .select(col("n_probe"), col("query_id"), col("n_hits"),
-        (col("n_hits").cast("double") / lit(k).cast("double"))
-          .as("recall"))
-      .orderBy(col("n_probe"), col("query_id"))
+    recallAt(exactPairs(embeddings, nQueries, k).join(broadcast(configs)),
+      approx, k, Seq("n_probe"))
   }
 
   /** s17: the standard FAISS serving composition s16's measurement
@@ -1564,14 +1498,8 @@ object Similarity {
     val ctx = servingContext(embeddings, embeddings, m, subDim, k,
       nQueries)
     val probes = probeCells(ctx.queries, ctx.centroids, nProbe)
-    val scored = probePrunedCodes(ctx.codes, ctx.cells, probes)
-      .join(broadcast(ctx.lut), Seq("sub", "code"))
-      .join(broadcast(probes.select(col("query_id"), col("cell"))),
-        Seq("query_id", "cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(sum(col("pdot_fp")).as("adc_fp"))
-    val cands = topKByQuery(scored, "adc_fp", kCoarse)
+    val cands = adcTopK(prunedCodes(ctx, probes), ctx.lut, kCoarse,
+        probes = Some(probes.select(col("query_id"), col("cell"))))
       .select(col("query_id"), col("neighbor_id"))
     // exact refine on candidates only: kCoarse float rows per query.
     // cands (nQueries x kCoarse rows) is hinted as the BROADCAST build
@@ -1587,10 +1515,7 @@ object Similarity {
           (sqrt(col("vnorm2")) * sqrt(col("qnorm2"))))
       .select(col("query_id"), col("neighbor_id").as("vec_id"),
         col("cosine"))
-    topKByQuery(reranked, "cosine", topK)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"),
-        col("rank"))
-      .orderBy(col("query_id"), col("rank"))
+    cosineRows(topKByQuery(reranked, "cosine", topK))
   }
 
   /** s18: INDEX APPEND without retrain — the daily operation of a
@@ -1607,29 +1532,12 @@ object Similarity {
     * rerank (s17) → append (s18). */
   def ivfPqAppendServe(embeddings: DataFrame, m: Int = 4,
       subDim: Int = 16, k: Int = 8, nQueries: Int = 5,
-      topK: Int = 10): DataFrame = {
-    val base = embeddings.filter(col("vec_id") % 5 =!= 0)
+      topK: Int = 10): DataFrame =
     // artifacts keyed by the BASE plan: a different training set is a
     // different model, never a silent cache share with the full-corpus
     // tiers
-    val ctx = servingContext(embeddings, trainOn = base, m = m,
-      subDim = subDim, k = k, nQueries = nQueries)
-    val probes = probeCells(ctx.queries, ctx.centroids, 1)
-    val scored = probePrunedCodes(ctx.codes, ctx.cells, probes)
-      .join(broadcast(ctx.lut), Seq("sub", "code"))
-      .join(broadcast(probes.select(col("query_id"), col("cell"))),
-        Seq("query_id", "cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(sum(col("pdot_fp")).as("adc_fp"))
-    topKByQuery(scored, "adc_fp", topK)
-      .join(broadcast(probes.filter(col("cell_rank") === 1)
-        .select(col("query_id"), col("cell"))), "query_id")
-      .select(col("query_id"), col("cell"),
-        col("neighbor_id"), col("adc_fp").cast("long").as("adc_fp"),
-        col("rank"))
-      .orderBy(col("query_id"), col("rank"))
-  }
+    probedServe(embeddings, baseSplit(embeddings), m, subDim, k, nQueries,
+      topK, nProbe = 1)(prunedCodes)
 
   /** s19: the STORED-CODES serve form — the final step of the serving
     * story. s15 loads its trained model artifacts but still re-encodes
@@ -1651,32 +1559,12 @@ object Similarity {
     * three forms. */
   def ivfPqStoredServe(embeddings: DataFrame, m: Int = 4, subDim: Int = 16,
       k: Int = 8, nQueries: Int = 5, topK: Int = 10,
-      nProbe: Int = 1): DataFrame = {
-    val ctx = servingContext(embeddings, embeddings, m, subDim, k,
-      nQueries)
-    val storedCodes = IndexStore.storedTable("ivfpq-codes", embeddings,
-        s"m=$m,subDim=$subDim,k=$k,K=$CoarseK", Seq("cell")) {
-      ctx.cells.join(ctx.codes, "vec_id")
+      nProbe: Int = 1): DataFrame =
+    probedServe(embeddings, embeddings, m, subDim, k, nQueries, topK,
+        nProbe) { (ctx, probes) =>
+      storedCodes("ivfpq-codes", embeddings,
+        s"m=$m,subDim=$subDim,k=$k,K=$CoarseK", ctx, probes)
     }
-    val probes = probeCells(ctx.queries, ctx.centroids, nProbe)
-    val probedIds = probes.select(col("cell")).distinct()
-      .collect().map(_.getLong(0)).sorted.toSeq
-    val scored = storedCodes
-      .filter(col("cell").isin(probedIds: _*))
-      .join(broadcast(ctx.lut), Seq("sub", "code"))
-      .join(broadcast(probes.select(col("query_id"), col("cell"))),
-        Seq("query_id", "cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(sum(col("pdot_fp")).as("adc_fp"))
-    topKByQuery(scored, "adc_fp", topK)
-      .join(broadcast(probes.filter(col("cell_rank") === 1)
-        .select(col("query_id"), col("cell"))), "query_id")
-      .select(col("query_id"), col("cell"),
-        col("neighbor_id"), col("adc_fp").cast("long").as("adc_fp"),
-        col("rank"))
-      .orderBy(col("query_id"), col("rank"))
-  }
 
   /** s36: the FULL index lifecycle in one query — the end-to-end claim
     * a 100 TB index actually needs, composing the three separately
@@ -1707,36 +1595,15 @@ object Similarity {
   def ivfPqLifecycleServe(embeddings: DataFrame,
       deletePredicate: Column = col("vec_id") % 7 === 0,
       m: Int = 4, subDim: Int = 16, k: Int = 8, nQueries: Int = 5,
-      topK: Int = 10, nProbe: Int = 1): DataFrame = {
-    val base = embeddings.filter(col("vec_id") % 5 =!= 0)
+      topK: Int = 10, nProbe: Int = 1): DataFrame =
     // artifacts keyed by the BASE plan (the s18 rule): a model trained
     // on a different corpus is a different model, never a cache share
-    val ctx = servingContext(embeddings, trainOn = base, m = m,
-      subDim = subDim, k = k, nQueries = nQueries)
-    val storedCodes = IndexStore.storedTable("ivfpq-lifecycle", embeddings,
-        s"m=$m,subDim=$subDim,k=$k,K=$CoarseK,base=mod5", Seq("cell")) {
-      ctx.cells.join(ctx.codes, "vec_id")
+    probedServe(embeddings, baseSplit(embeddings), m, subDim, k, nQueries,
+        topK, nProbe) { (ctx, probes) =>
+      storedCodes("ivfpq-lifecycle", embeddings,
+        s"m=$m,subDim=$subDim,k=$k,K=$CoarseK,base=mod5", ctx, probes)
+        .filter(!deletePredicate)
     }
-    val probes = probeCells(ctx.queries, ctx.centroids, nProbe)
-    val probedIds = probes.select(col("cell")).distinct()
-      .collect().map(_.getLong(0)).sorted.toSeq
-    val scored = storedCodes
-      .filter(col("cell").isin(probedIds: _*))
-      .filter(!deletePredicate)
-      .join(broadcast(ctx.lut), Seq("sub", "code"))
-      .join(broadcast(probes.select(col("query_id"), col("cell"))),
-        Seq("query_id", "cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(sum(col("pdot_fp")).as("adc_fp"))
-    topKByQuery(scored, "adc_fp", topK)
-      .join(broadcast(probes.filter(col("cell_rank") === 1)
-        .select(col("query_id"), col("cell"))), "query_id")
-      .select(col("query_id"), col("cell"),
-        col("neighbor_id"), col("adc_fp").cast("long").as("adc_fp"),
-        col("rank"))
-      .orderBy(col("query_id"), col("rank"))
-  }
 
   /** The session-cached serving model artifacts (coarse centroids + PQ
     * codebook) as the pair a deployment loads from its artifact store —
@@ -1758,12 +1625,7 @@ object Similarity {
   def packedIndex(embeddings: DataFrame, m: Int = 4, subDim: Int = 16,
       k: Int = 8): DataFrame = {
     val (centroids, codebook) = servingArtifacts(embeddings, m, subDim, k)
-    val vectors = embeddings
-      .select(col("vec_id"), col("embedding").as("emb"))
-      .withColumn("vnorm2",
-        graft.functions.VectorOps.dot(col("emb"), col("emb")))
-    val cells = Clustering.assign(vectors, centroids)
-      .select(col("vec_id"), col("cluster_id").as("cell"))
+    val cells = cellsOf(vectorFrame(embeddings), centroids)
     pqAssign(pqSubvectors(embeddings, m, subDim), codebook)
       .groupBy(col("vec_id"))
       .agg(transform(
@@ -1877,21 +1739,9 @@ object Similarity {
   def rangeSearch(embeddings: DataFrame, tau: Double = 0.25,
       nQueries: Int = 5, nProbe: Int = 2): DataFrame = {
     val centroids = Clustering.cachedCentroids(embeddings)
-    val vectors = embeddings
-      .select(col("vec_id"), col("embedding").as("emb"))
-      .withColumn("vnorm2",
-        graft.functions.VectorOps.dot(col("emb"), col("emb")))
-    val assigned = Clustering.assign(vectors, centroids)
-    val queries = assigned.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"),
-        col("emb").as("query_emb"), col("vnorm2").as("qnorm2"))
-    val probes = probeCells(queries, centroids, nProbe)
-    assigned.join(broadcast(probes), col("cluster_id") === col("cell"))
-      .join(broadcast(queries), "query_id")
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine",
-        graft.functions.VectorOps.dot(col("emb"), col("query_emb")) /
-          (sqrt(col("vnorm2")) * sqrt(col("qnorm2"))))
+    val assigned = Clustering.assign(vectorFrame(embeddings), centroids)
+    val queries = probeQueries(assigned, nQueries)
+    probedCosine(assigned, probeCells(queries, centroids, nProbe), queries)
       .filter(col("cosine") >= lit(tau))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         col("cosine"))
@@ -1924,15 +1774,11 @@ object Similarity {
     val pred = col("label") % 2 === 0
     val corpusAll = normed(embeddings)
     val queries = qnormed(queryVectors(embeddings, nQueries))
-    def scoredOver(c: DataFrame) = c
-      .join(broadcast(queries), col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", Dedup.dotExpr("embedding", "query_emb") /
-        (sqrt(col("norm2")) * sqrt(col("qnorm2"))))
-    val truth = topKByQuery(scoredOver(corpusAll.filter(pred)),
+    val truth = topKByQuery(flatScored(corpusAll.filter(pred), queries),
         "cosine", k)
       .select(col("query_id"), col("neighbor_id"))
       .withColumn("hit", lit(1L))
-    val unf = topKByQuery(scoredOver(corpusAll), "cosine",
+    val unf = topKByQuery(flatScored(corpusAll, queries), "cosine",
       k * factors.max)
     val fdf = factors.toDF("factor")
     val labels = embeddings
@@ -2109,11 +1955,7 @@ object Similarity {
       k: Int = 5): DataFrame = {
     val corpus = normed(embeddings)
     val queries = qnormed(queryVectors(embeddings, nQueries))
-    val scored = corpus.join(broadcast(queries),
-        col("vec_id") =!= col("query_id"))
-      .withColumn("cosine",
-        Dedup.dotExpr("embedding", "query_emb") /
-          (sqrt(col("norm2")) * sqrt(col("qnorm2"))))
+    val scored = flatScored(corpus, queries)
       .withColumn("role",
         when(col("label") === col("query_label"), lit("positive"))
           .otherwise(lit("hard_negative")))
@@ -2218,37 +2060,28 @@ object Similarity {
   def ivfPqResidualTopK(embeddings: DataFrame, m: Int = 4,
       subDim: Int = 16, k: Int = 8, nQueries: Int = 5,
       topK: Int = 10): DataFrame = {
-    val centroids = Clustering.trainedCentroidsLocal(embeddings)
-    val vectors = embeddings
-      .select(col("vec_id"), col("embedding").as("emb"))
-      .withColumn("vnorm2",
-        graft.functions.VectorOps.dot(col("emb"), col("emb")))
-    val resid = Clustering.assign(vectors, centroids)
+    val resid = residualFrame(embeddings,
+      Clustering.trainedCentroidsLocal(embeddings))
+    val (codes, codebook) =
+      pqEncode(resid.select(col("vec_id"), col("embedding")), m, subDim, k)
+    // RAW query subvectors × residual codebook (the q·c term is
+    // cell-constant and drops out of the within-cell ranking)
+    ownCellTopK(codes, resid.select(col("vec_id"), col("cell")),
+      pqLut(embeddings, codebook, m, subDim, nQueries), nQueries, topK)
+  }
+
+  /** `(vec_id, cell, embedding)` with `embedding` the coarse RESIDUAL
+    * x − centroid(cell): one double subtract of two input floats,
+    * rounded once back to float. */
+  private def residualFrame(embeddings: DataFrame,
+      centroids: DataFrame): DataFrame =
+    Clustering.assign(vectorFrame(embeddings), centroids)
       .join(broadcast(centroids.select(col("cluster_id"), col("cemb"))),
         "cluster_id")
       .select(col("vec_id"), col("cluster_id").as("cell"),
         expr("""zip_with(emb, cemb, (x, c) ->
           CAST(CAST(x AS DOUBLE) - CAST(c AS DOUBLE) AS FLOAT))""")
           .as("embedding"))
-    val resFrame = resid.select(col("vec_id"), col("embedding"))
-    val (codes, codebook) = pqEncode(resFrame, m, subDim, k)
-    // RAW query subvectors × residual codebook (the q·c term is
-    // cell-constant and drops out of the within-cell ranking)
-    val lut = pqLut(embeddings, codebook, m, subDim, nQueries)
-    val cells = resid.select(col("vec_id"), col("cell"))
-    val probes = cells.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("cell"))
-    val scored = probePrunedCodes(codes, cells, probes)
-      .join(broadcast(lut), Seq("sub", "code"))
-      .join(broadcast(probes), Seq("query_id", "cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("cell"), col("vec_id"))
-      .agg(sum(col("pdot_fp")).as("adc_fp"))
-    topKByQuery(scored, "adc_fp", topK, keys = Seq("query_id", "cell"))
-      .select(col("query_id"), col("cell"), col("neighbor_id"),
-        col("adc_fp").cast("long").as("adc_fp"), col("rank"))
-      .orderBy(col("query_id"), col("rank"))
-  }
 
   /** [[ivfPqResidualTopK]]'s SERVING form — identical results by
     * construction (the s12→s15 contract applied to the residual
@@ -2265,106 +2098,15 @@ object Similarity {
   def ivfPqResidualServe(embeddings: DataFrame, m: Int = 4,
       subDim: Int = 16, k: Int = 8, nQueries: Int = 5,
       topK: Int = 10): DataFrame = {
-    val centroids = Clustering.cachedCentroids(embeddings)
-    val vectors = embeddings
-      .select(col("vec_id"), col("embedding").as("emb"))
-      .withColumn("vnorm2",
-        graft.functions.VectorOps.dot(col("emb"), col("emb")))
-    val resid = Clustering.assign(vectors, centroids)
-      .join(broadcast(centroids.select(col("cluster_id"), col("cemb"))),
-        "cluster_id")
-      .select(col("vec_id"), col("cluster_id").as("cell"),
-        expr("""zip_with(emb, cemb, (x, c) ->
-          CAST(CAST(x AS DOUBLE) - CAST(c AS DOUBLE) AS FLOAT))""")
-          .as("embedding"))
+    val resid = residualFrame(embeddings,
+      Clustering.cachedCentroids(embeddings))
     val resFrame = resid.select(col("vec_id"), col("embedding"))
     val codebook = ModelArtifacts.cached("residual-pq-codebook",
       embeddings, s"m=$m,subDim=$subDim,k=$k")(
       pqCodebookLocal(resFrame, m, subDim, k))
-    val codes = pqAssign(pqSubvectors(resFrame, m, subDim), codebook)
-      .select(col("vec_id"), col("sub"), col("code"))
-    val lut = pqLut(embeddings, codebook, m, subDim, nQueries)
-    val cells = resid.select(col("vec_id"), col("cell"))
-    val probes = cells.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("cell"))
-    val scored = probePrunedCodes(codes, cells, probes)
-      .join(broadcast(lut), Seq("sub", "code"))
-      .join(broadcast(probes), Seq("query_id", "cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("cell"), col("vec_id"))
-      .agg(sum(col("pdot_fp")).as("adc_fp"))
-    topKByQuery(scored, "adc_fp", topK, keys = Seq("query_id", "cell"))
-      .select(col("query_id"), col("cell"), col("neighbor_id"),
-        col("adc_fp").cast("long").as("adc_fp"), col("rank"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** The residual tier AT REST — [[ivfPqResidualServe]] with the
-    * residual codes and cell assignment as a PRECOMPUTED
-    * cell-partitioned table ([[IndexStore]], the s19 stored-codes
-    * posture extended to the residual layout, r22 per the r21
-    * verdict's measurement directive): the table is written once per
-    * (corpus, hyperparameters) per session from the SAME deterministic
-    * artifacts the in-query trainer uses, and a serve invocation is
-    * purely probe-schedule → partition-pruned code scan → broadcast
-    * LUT join → ADC partial-agg top-k. No corpus float is touched and
-    * NO ENCODE PASS runs at serve time — that is the declared
-    * semantics change vs [[ivfPqResidualServe]] (which pays the
-    * residual encode per invocation), and exactly what a deployment
-    * pays at steady state: residual codes are columns beside the
-    * index, maintained at ingest (the s18 append argument applies
-    * per-vector to residual codes unchanged — the frozen coarse
-    * quantizer fixes each vector's cell and hence its residual).
-    * Results are identical to s30/[[ivfPqResidualServe]] by
-    * construction (same artifacts, same codes — parquet round-trips
-    * the integer code rows losslessly — same ADC arithmetic;
-    * spec-pinned row equality), so the one oracle pins all three
-    * forms. The probe schedule is [[probeCells]] rank-1 = the query's
-    * own assigned cell (the s15 `nProbe = 1` identity). */
-  def ivfPqResidualStoredServe(embeddings: DataFrame, m: Int = 4,
-      subDim: Int = 16, k: Int = 8, nQueries: Int = 5,
-      topK: Int = 10): DataFrame = {
-    val centroids = Clustering.cachedCentroids(embeddings)
-    val vectors = embeddings
-      .select(col("vec_id"), col("embedding").as("emb"))
-      .withColumn("vnorm2",
-        graft.functions.VectorOps.dot(col("emb"), col("emb")))
-    val resid = Clustering.assign(vectors, centroids)
-      .join(broadcast(centroids.select(col("cluster_id"), col("cemb"))),
-        "cluster_id")
-      .select(col("vec_id"), col("cluster_id").as("cell"),
-        expr("""zip_with(emb, cemb, (x, c) ->
-          CAST(CAST(x AS DOUBLE) - CAST(c AS DOUBLE) AS FLOAT))""")
-          .as("embedding"))
-    val resFrame = resid.select(col("vec_id"), col("embedding"))
-    val codebook = ModelArtifacts.cached("residual-pq-codebook",
-      embeddings, s"m=$m,subDim=$subDim,k=$k")(
-      pqCodebookLocal(resFrame, m, subDim, k))
-    val stored = IndexStore.storedTable("residual-codes", embeddings,
-        s"m=$m,subDim=$subDim,k=$k,K=$CoarseK", Seq("cell")) {
-      resid.select(col("vec_id"), col("cell"))
-        .join(pqAssign(pqSubvectors(resFrame, m, subDim), codebook)
-          .select(col("vec_id"), col("sub"), col("code")), "vec_id")
-    }
-    val lut = pqLut(embeddings, codebook, m, subDim, nQueries)
-    val queries = vectors.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("emb").as("query_emb"),
-        col("vnorm2").as("qnorm2"))
-    val probes = probeCells(queries, centroids, 1)
-      .select(col("query_id"), col("cell"))
-    val probedIds = probes.select(col("cell")).distinct()
-      .collect().map(_.getLong(0)).sorted.toSeq
-    val scored = stored
-      .filter(col("cell").isin(probedIds: _*))
-      .join(broadcast(lut), Seq("sub", "code"))
-      .join(broadcast(probes), Seq("query_id", "cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("cell"), col("vec_id"))
-      .agg(sum(col("pdot_fp")).as("adc_fp"))
-    topKByQuery(scored, "adc_fp", topK, keys = Seq("query_id", "cell"))
-      .select(col("query_id"), col("cell"), col("neighbor_id"),
-        col("adc_fp").cast("long").as("adc_fp"), col("rank"))
-      .orderBy(col("query_id"), col("rank"))
+    ownCellTopK(pqEncodeWith(resFrame, codebook, m, subDim),
+      resid.select(col("vec_id"), col("cell")),
+      pqLut(embeddings, codebook, m, subDim, nQueries), nQueries, topK)
   }
 
   /** The OPQ-lite dimension permutation: dims ranked by corpus
@@ -2437,29 +2179,12 @@ object Similarity {
     * the balanced layout to matter. Tiers sort pq_opq < pq_raw. */
   def opqRecall(embeddings: DataFrame, nQueries: Int = 5,
       k: Int = 10): DataFrame = {
-    val tiers = embeddings.sparkSession.range(0, 2)
-      .select(element_at(array(lit("pq_opq"), lit("pq_raw")),
-        col("id").cast("int") + 1).as("tier"))
     // BOTH tiers through the CACHED serving forms (rows identical to
     // s11/s32 — the s13 rerouting precedent; spec-pinned)
-    val approx = pqTopKServe(embeddings, nQueries = nQueries, topK = k)
-      .select(lit("pq_raw").as("tier"), col("query_id"),
-        col("neighbor_id"))
-      .unionByName(pqTopKServe(opqPermutedFrame(embeddings),
-          nQueries = nQueries, topK = k)
-        .select(lit("pq_opq").as("tier"), col("query_id"),
-          col("neighbor_id")))
-      .withColumn("hit", lit(1L))
-    val exact = bruteForceTopK(embeddings, nQueries, k)
-      .select(col("query_id"), col("neighbor_id"))
-      .join(broadcast(tiers))
-    exact.join(approx, Seq("tier", "query_id", "neighbor_id"), "left")
-      .groupBy(col("tier"), col("query_id"))
-      .agg(count(col("hit")).as("n_hits"))
-      .select(col("tier"), col("query_id"), col("n_hits"),
-        (col("n_hits").cast("double") / lit(k).cast("double"))
-          .as("recall"))
-      .orderBy(col("tier"), col("query_id"))
+    tierRecall(embeddings, nQueries, k,
+      "pq_raw" -> pqTopKServe(embeddings, nQueries = nQueries, topK = k),
+      "pq_opq" -> pqTopKServe(opqPermutedFrame(embeddings),
+        nQueries = nQueries, topK = k))
   }
 
   /** The s37 STRUCTURED rotation: [[opqPermutedFrame]] followed by a
@@ -2529,32 +2254,12 @@ object Similarity {
     * pq_opq < pq_opqrot < pq_raw. */
   def rotationRecall(embeddings: DataFrame, nQueries: Int = 5,
       k: Int = 10): DataFrame = {
-    val tiers = embeddings.sparkSession.range(0, 3)
-      .select(element_at(
-        array(lit("pq_opq"), lit("pq_opqrot"), lit("pq_raw")),
-        col("id").cast("int") + 1).as("tier"))
-    val approx = pqTopKServe(embeddings, nQueries = nQueries, topK = k)
-      .select(lit("pq_raw").as("tier"), col("query_id"),
-        col("neighbor_id"))
-      .unionByName(pqTopKServe(opqPermutedFrame(embeddings),
-          nQueries = nQueries, topK = k)
-        .select(lit("pq_opq").as("tier"), col("query_id"),
-          col("neighbor_id")))
-      .unionByName(pqTopKServe(opqRotatedFrame(embeddings),
-          nQueries = nQueries, topK = k)
-        .select(lit("pq_opqrot").as("tier"), col("query_id"),
-          col("neighbor_id")))
-      .withColumn("hit", lit(1L))
-    val exact = bruteForceTopK(embeddings, nQueries, k)
-      .select(col("query_id"), col("neighbor_id"))
-      .join(broadcast(tiers))
-    exact.join(approx, Seq("tier", "query_id", "neighbor_id"), "left")
-      .groupBy(col("tier"), col("query_id"))
-      .agg(count(col("hit")).as("n_hits"))
-      .select(col("tier"), col("query_id"), col("n_hits"),
-        (col("n_hits").cast("double") / lit(k).cast("double"))
-          .as("recall"))
-      .orderBy(col("tier"), col("query_id"))
+    tierRecall(embeddings, nQueries, k,
+      "pq_raw" -> pqTopKServe(embeddings, nQueries = nQueries, topK = k),
+      "pq_opq" -> pqTopKServe(opqPermutedFrame(embeddings),
+        nQueries = nQueries, topK = k),
+      "pq_opqrot" -> pqTopKServe(opqRotatedFrame(embeddings),
+        nQueries = nQueries, topK = k))
   }
 
   /** s39's DETERMINISTIC anisotropic embedding view — the
@@ -2687,17 +2392,8 @@ object Similarity {
     val approx = topKByQuery(scored, "neg_h", k,
       keys = Seq("n_bits", "query_id"))
       .select(col("n_bits"), col("query_id"), col("neighbor_id"))
-      .withColumn("hit", lit(1L))
-    val exact = bruteForceTopK(embeddings, nQueries, k)
-      .select(col("query_id"), col("neighbor_id"))
-      .join(broadcast(configs))
-    exact.join(approx, Seq("n_bits", "query_id", "neighbor_id"), "left")
-      .groupBy(col("n_bits"), col("query_id"))
-      .agg(count(col("hit")).as("n_hits"))
-      .select(col("n_bits"), col("query_id"), col("n_hits"),
-        (col("n_hits").cast("double") / lit(k).cast("double"))
-          .as("recall"))
-      .orderBy(col("n_bits"), col("query_id"))
+    recallAt(exactPairs(embeddings, nQueries, k).join(broadcast(configs)),
+      approx, k, Seq("n_bits"))
   }
 
   /** s31: recall@k of raw-PQ vs residual-PQ IVF tiers against the s01
@@ -2711,39 +2407,14 @@ object Similarity {
     * raw < residual. */
   def residualRecall(embeddings: DataFrame, nQueries: Int = 5,
       k: Int = 10): DataFrame = {
-    val tiers = embeddings.sparkSession.range(0, 2)
-      .select(element_at(
-        array(lit("ivfpq_raw"), lit("ivfpq_residual")),
-        col("id").cast("int") + 1).as("tier"))
     // BOTH tiers through the CACHED serving forms — rows identical to
     // s12/s30 by construction (the s15 oracle/spec contract and
     // the SimilaritySpec serve-equality tests), so the eval pays
     // encode+probe, never the coarse/PQ/residual training lineages.
-    // The stored-residual-codes form ([[ivfPqResidualStoredServe]])
-    // was prototyped and measured (r22, the r21 verdict's item 6
-    // pass): bench-NEUTRAL at sf0.1 (1.14x vs an untouched-control
-    // band of 1.11-1.17x — the encode it removes is cheap beside the
-    // probe/ADC work here), so the encode-included serve stays the
-    // declared residual tier; the at-rest form remains available,
-    // spec-pinned row-equal.
-    val approx = ivfPqTopKServe(embeddings, nQueries = nQueries,
-        topK = k)
-      .select(lit("ivfpq_raw").as("tier"), col("query_id"),
-        col("neighbor_id"))
-      .unionByName(ivfPqResidualServe(embeddings, nQueries = nQueries,
-          topK = k)
-        .select(lit("ivfpq_residual").as("tier"), col("query_id"),
-          col("neighbor_id")))
-      .withColumn("hit", lit(1L))
-    val exact = bruteForceTopK(embeddings, nQueries, k)
-      .select(col("query_id"), col("neighbor_id"))
-      .join(broadcast(tiers))
-    exact.join(approx, Seq("tier", "query_id", "neighbor_id"), "left")
-      .groupBy(col("tier"), col("query_id"))
-      .agg(count(col("hit")).as("n_hits"))
-      .select(col("tier"), col("query_id"), col("n_hits"),
-        (col("n_hits").cast("double") / lit(k).cast("double"))
-          .as("recall"))
-      .orderBy(col("tier"), col("query_id"))
+    tierRecall(embeddings, nQueries, k,
+      "ivfpq_raw" -> ivfPqTopKServe(embeddings, nQueries = nQueries,
+        topK = k),
+      "ivfpq_residual" -> ivfPqResidualServe(embeddings,
+        nQueries = nQueries, topK = k))
   }
 }

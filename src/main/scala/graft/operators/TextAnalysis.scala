@@ -1494,36 +1494,60 @@ object TextAnalysis {
         .as("alpha_words"),
       count_distinct(when(col("w").isin(GopherStops: _*), col("w")))
         .as("n_required_stops"))
-    val meanWordLen =
-      col("sum_word_chars").cast("double") / col("n_words").cast("double")
-    val alphaFrac =
-      col("alpha_words").cast("double") / col("n_words").cast("double")
-    val symbolRatio = (col("hash_marks") + col("ellipsis_marks"))
-      .cast("double") / col("n_words").cast("double")
-    val bulletFrac =
-      col("bullet_lines").cast("double") / col("n_lines").cast("double")
-    val ellipsisFrac =
-      col("ellipsis_lines").cast("double") / col("n_lines").cast("double")
-    val rWordCount = col("n_words") >= 50L && col("n_words") <= 100000L
-    val rWordLen = meanWordLen >= 3.0 && meanWordLen <= 10.0
-    val rSymbol = symbolRatio <= 0.1
-    val rBullet = bulletFrac <= 0.9
-    val rEllipsis = ellipsisFrac <= 0.3
-    val rAlpha = alphaFrac >= 0.8
-    val rStop = col("n_required_stops") >= 2L
+    def named(cs: Seq[(String, Column)]) = cs.map { case (n, c) => c.as(n) }
     wordAgg.join(lineAgg, "doc_id")
-      .select(col("doc_id"), col("n_lines"), col("n_words"),
-        meanWordLen.as("mean_word_len"), alphaFrac.as("alpha_frac"),
-        symbolRatio.as("symbol_ratio"), bulletFrac.as("bullet_frac"),
-        ellipsisFrac.as("ellipsis_frac"), col("n_required_stops"),
-        rWordCount.as("r_word_count"), rWordLen.as("r_word_len"),
-        rSymbol.as("r_symbol"), rBullet.as("r_bullet"),
-        rEllipsis.as("r_ellipsis"), rAlpha.as("r_alpha"),
-        rStop.as("r_stop"),
-        (rWordCount && rWordLen && rSymbol && rBullet && rEllipsis &&
-          rAlpha && rStop).as("keep"))
+      .select(Seq(col("doc_id"), col("n_lines"), col("n_words")) ++
+        named(gopherRatios()) ++ Seq(col("n_required_stops")) ++
+        named(gopherRuleSet()) :+ gopherKeep().as("keep"): _*)
       .orderBy(col("doc_id"))
   }
+
+  /** t35's five per-doc Gopher ratios, in output order, over the
+    * per-doc counts `n_lines, n_words, sum_word_chars, alpha_words,
+    * hash_marks, ellipsis_marks, bullet_lines, ellipsis_lines` — read
+    * through `c` (columns of those names by default; the stateless
+    * [[gopherKeepExpr]] passes its array expressions). */
+  private def gopherRatios(c: String => Column = col(_))
+      : Seq[(String, Column)] = {
+    def per(num: Column, den: String) =
+      num.cast("double") / c(den).cast("double")
+    Seq("mean_word_len" -> per(c("sum_word_chars"), "n_words"),
+      "alpha_frac" -> per(c("alpha_words"), "n_words"),
+      "symbol_ratio" ->
+        per(c("hash_marks") + c("ellipsis_marks"), "n_words"),
+      "bullet_frac" -> per(c("bullet_lines"), "n_lines"),
+      "ellipsis_frac" -> per(c("ellipsis_lines"), "n_lines"))
+  }
+
+  /** Gopher's seven rules over [[gopherRatios]] (plus `n_required_stops`
+    * through `c`), in t35's order — the ONE home of the thresholds:
+    * [[gopherRules]] publishes each rule; the fused [[gateMetrics]] and
+    * [[gopherKeepExpr]] only their AND ([[gopherKeep]]). */
+  private def gopherRuleSet(c: String => Column = col(_))
+      : Seq[(String, Column)] = {
+    val r = gopherRatios(c).toMap
+    val (nWords, wordLen) = (c("n_words"), r("mean_word_len"))
+    Seq("r_word_count" -> (nWords >= 50L && nWords <= 100000L),
+      "r_word_len" -> (wordLen >= 3.0 && wordLen <= 10.0),
+      "r_symbol" -> (r("symbol_ratio") <= 0.1),
+      "r_bullet" -> (r("bullet_frac") <= 0.9),
+      "r_ellipsis" -> (r("ellipsis_frac") <= 0.3),
+      "r_alpha" -> (r("alpha_frac") >= 0.8),
+      "r_stop" -> (c("n_required_stops") >= 2L))
+  }
+
+  /** The Gopher verdict: every rule of [[gopherRuleSet]] holds. */
+  private def gopherKeep(c: String => Column = col(_)): Column =
+    gopherRuleSet(c).map(_._2).reduce(_ && _)
+
+  /** t36's C4 keep-line predicate over a rendered `line`: terminal
+    * period, ≥ 4 words, no curly brace, no "lorem ipsum" — shared by
+    * [[c4LineFilter]] and the fused [[gateMetrics]]. */
+  private def c4KeepLine: Column =
+    expr("right(line, 1)") === "." &&
+      size(split(col("line"), " ")) >= 4 &&
+      !col("line").contains("{") &&
+      !col("line").contains("lorem ipsum")
 
   /** t36: C4-style line-level cleaning (Raffel et al. 2020, §2.2) over
     * the rendered page — a line survives iff it ends in terminal
@@ -1542,12 +1566,7 @@ object TextAnalysis {
     * kept lines (bounded by doc length — the same per-doc bound every
     * d-tier op relies on). */
   def c4LineFilter(documents: DataFrame): DataFrame = {
-    val lines = syntheticLines(documents)
-    val keepL = expr("right(line, 1)") === "." &&
-      size(split(col("line"), " ")) >= 4 &&
-      !col("line").contains("{") &&
-      !col("line").contains("lorem ipsum")
-    lines.withColumn("keepl", keepL)
+    syntheticLines(documents).withColumn("keepl", c4KeepLine)
       .groupBy(col("doc_id")).agg(
         count(lit(1)).as("n_lines"),
         sum(when(col("keepl"), 1L).otherwise(0L)).as("n_kept"),
@@ -2294,16 +2313,11 @@ object TextAnalysis {
     val ellChars = aggregate(lines, lit(0L), (a, l) =>
       a + (length(l) - length(regexp_replace(l, "\\.\\.\\.", ""))))
     val ellMarks = (ellChars / 3).cast("long")
-    val meanWordLen = sumChars.cast("double") / nWords.cast("double")
-    val alphaFrac = alphaWords.cast("double") / nWords.cast("double")
-    val symbolRatio =
-      (hashMarks + ellMarks).cast("double") / nWords.cast("double")
-    val bulletFrac = bullets.cast("double") / nLines.cast("double")
-    val ellipsisFrac = ellLines.cast("double") / nLines.cast("double")
-    (nWords >= 50L && nWords <= 100000L) &&
-      (meanWordLen >= 3.0 && meanWordLen <= 10.0) &&
-      (symbolRatio <= 0.1) && (bulletFrac <= 0.9) &&
-      (ellipsisFrac <= 0.3) && (alphaFrac >= 0.8) && (nStops >= 2L)
+    gopherKeep(Map("n_lines" -> nLines, "n_words" -> nWords,
+      "sum_word_chars" -> sumChars, "alpha_words" -> alphaWords,
+      "hash_marks" -> hashMarks, "ellipsis_marks" -> ellMarks,
+      "bullet_lines" -> bullets, "ellipsis_lines" -> ellLines,
+      "n_required_stops" -> nStops))
   }
 
   /** t39: GLOBAL line-level deduplication (C4's "discard any
@@ -2486,13 +2500,9 @@ object TextAnalysis {
     * Pinned equal to the joined public frames in QualityFilterSpec. */
   private[operators] def gateMetrics(documents: DataFrame): DataFrame = {
     val stopsArr = array(GopherStops.map(lit): _*)
-    val keepL = expr("right(line, 1)") === "." &&
-      size(split(col("line"), " ")) >= 4 &&
-      !col("line").contains("{") &&
-      !col("line").contains("lorem ipsum")
     val agg = syntheticLines(documents)
       .withColumn("wn", size(split(col("line"), " ")).cast("long"))
-      .withColumn("keepl", keepL)
+      .withColumn("keepl", c4KeepLine)
       .groupBy(col("doc_id")).agg(
         count(lit(1)).as("n_lines"),
         sum(when(expr("left(line, 2)") === "- ", 1L).otherwise(0L))
@@ -2515,22 +2525,7 @@ object TextAnalysis {
         sort_array(collect_list(
           when(col("keepl"), struct(col("line_no"), col("line")))))
           .as("kept"))
-    val meanWordLen =
-      col("sum_word_chars").cast("double") / col("n_words").cast("double")
-    val symbolRatio = (col("hash_marks") + col("ellipsis_marks"))
-      .cast("double") / col("n_words").cast("double")
-    val keep =
-      (col("n_words") >= 50L && col("n_words") <= 100000L) &&
-      (meanWordLen >= 3.0 && meanWordLen <= 10.0) &&
-      symbolRatio <= 0.1 &&
-      (col("bullet_lines").cast("double") /
-        col("n_lines").cast("double")) <= 0.9 &&
-      (col("ellipsis_lines").cast("double") /
-        col("n_lines").cast("double")) <= 0.3 &&
-      (col("alpha_words").cast("double") /
-        col("n_words").cast("double")) >= 0.8 &&
-      col("n_required_stops") >= 2L
-    agg.select(col("doc_id"), keep.as("gopher_keep"), col("n_kept"),
+    agg.select(col("doc_id"), gopherKeep().as("gopher_keep"), col("n_kept"),
       length(array_join(transform(col("kept"), x => x.getField("line")),
         "\n")).cast("long").as("n_clean_chars"))
   }

@@ -55,6 +55,20 @@ class EntrySpec extends SparkSpec {
     assert(Bench.minOfPasses(Seq(-1.0, -1.0)) == -1.0)
   }
 
+  test("a focused bench run writes no default per-query artifact") {
+    // SPARK_GRAFT_ONLY runs carry a partial map: writing it to the
+    // default or core-suffixed file would clobber the committed
+    // full-sweep artifacts the round-over-round comparison reads
+    assert(Bench.artifactPaths(None, focused = true, "8").isEmpty)
+    assert(Bench.artifactPaths(None, focused = false, "8") ==
+      Seq("BENCH_QUERIES.json", "BENCH_QUERIES_c8.json"))
+    // an explicit path is the caller's choice, focused or not
+    Seq(true, false).foreach { focused =>
+      assert(Bench.artifactPaths(Some("/tmp/x.json"), focused, "8") ==
+        Seq("/tmp/x.json"))
+    }
+  }
+
   test("bench line total is locale-proof JSON") {
     // renderLine is the sole line the driver parses; under a comma-decimal
     // default locale an f"%.3f" would emit "value":1,500 — invalid JSON.

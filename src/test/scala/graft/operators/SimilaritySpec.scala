@@ -114,6 +114,45 @@ class SimilaritySpec extends SparkSpec {
     assert(out.toSeq == Seq((1L, 4096L, 1L), (2L, 4096L, 2L),
       (3L, 4096L, 3L), (4L, 0L, 4L)))
   }
+
+  /** Hand-built recallAt inputs: (n_probe, query_id, neighbor_id). */
+  private def pairFrame(rows: (Long, Long, Long)*) = {
+    import spark.implicits._
+    rows.toDF("n_probe", "query_id", "neighbor_id")
+  }
+
+  private def recallRows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getAs[Long]("n_probe"),
+      r.getAs[Long]("query_id"), r.getAs[Long]("n_hits"),
+      r.getAs[Double]("recall"))).toSeq
+
+  test("recallAt: a query with zero hits reads n_hits 0, recall 0.0") {
+    val exact = pairFrame((1L, 0L, 10L), (1L, 0L, 11L),
+      (1L, 1L, 20L), (1L, 1L, 21L))
+    val approx = pairFrame((1L, 0L, 10L), (1L, 1L, 99L))
+    val out = Similarity.recallAt(exact, approx, 2, Seq("n_probe"))
+    assert(out.columns.toSeq ==
+      Seq("n_probe", "query_id", "n_hits", "recall"))
+    assert(recallRows(out) == Seq((1L, 0L, 1L, 0.5), (1L, 1L, 0L, 0.0)))
+  }
+
+  test("recallAt: a config with no approx rows reads recall 0 per query") {
+    val exact = pairFrame((1L, 0L, 10L), (1L, 1L, 20L),
+      (2L, 0L, 10L), (2L, 1L, 20L))
+    val approx = pairFrame((1L, 0L, 10L), (1L, 1L, 20L))
+    assert(recallRows(Similarity.recallAt(exact, approx, 1,
+      Seq("n_probe"))) == Seq((1L, 0L, 1L, 1.0), (1L, 1L, 1L, 1.0),
+      (2L, 0L, 0L, 0.0), (2L, 1L, 0L, 0.0)))
+  }
+
+  test("recallAt: a pair hit under two config keys counts once in each") {
+    val exact = pairFrame((1L, 0L, 10L), (1L, 0L, 11L),
+      (2L, 0L, 10L), (2L, 0L, 11L))
+    // (0, 10) is a hit at BOTH n_probe values; (0, 11) only at 2
+    val approx = pairFrame((1L, 0L, 10L), (2L, 0L, 10L), (2L, 0L, 11L))
+    assert(recallRows(Similarity.recallAt(exact, approx, 2,
+      Seq("n_probe"))) == Seq((1L, 0L, 1L, 0.5), (2L, 0L, 2L, 1.0)))
+  }
 }
 
 /** Sign-LSH bucket properties. */
@@ -672,11 +711,6 @@ class SignLshSpec extends graft.SparkSpec {
     val served = rows(Similarity.ivfPqResidualServe(emb))
     assert(trained.nonEmpty)
     assert(served == trained)
-    // r22: the stored-residual-codes form (what s31's residual tier
-    // now rides) is row-equal to both — same artifacts, same codes
-    // through the parquet round-trip, same ADC arithmetic
-    val stored = rows(Similarity.ivfPqResidualStoredServe(emb))
-    assert(stored == trained)
   }
 
   test("OPQ/rotated serving forms equal the in-query-training forms " +
