@@ -37,18 +37,27 @@ import org.apache.spark.sql.functions.col
   * Error envelope everywhere: `{"error":{"code":…,"message":…}}`
   * (Main.java:162-169).
   *
-  * Scale note: the facade is a control-plane veneer — each request drives
-  * ONE id through the batched [[IngestService.ingest]] pipeline. Bulk
-  * ingest should call the library with the full id list (one Spark job,
-  * fan-out = task parallelism), not loop over POSTs; the facade exists
-  * for client compatibility, not throughput.
+  * Sockets run with TCP_NODELAY: the companion sets
+  * `sun.net.httpserver.nodelay=true`, when unset, before the first server
+  * is created, since the JDK reads it once per JVM. Without it every
+  * response's body waits about 40 ms for the client's delayed ACK.
+  *
+  * Scale note: the facade is a control-plane veneer — each POST drives
+  * ONE id through the batched [[IngestService.ingest]] pipeline, and
+  * concurrent POSTs run their Spark jobs in parallel (no write gate; see
+  * [[SparkLakeStorage]]'s publish protocol). Status and list answer from
+  * the parquet adapter's manifest index without a Spark job while the
+  * manifest is unchanged. Bulk ingest should still call the library with
+  * the full id list (one Spark job, fan-out = task parallelism), not loop
+  * over POSTs; the facade exists for client compatibility, not bulk
+  * throughput.
   */
 class IngestHttpServer(service: IngestService, storage: LakeStorage,
     port: Int, clock: () => LocalDateTime = () => LocalDateTime.now()) {
 
   import IngestHttpServer.{jstr, obj}
 
-  private val server = HttpServer.create(new InetSocketAddress(port), 0)
+  private val server = IngestHttpServer.bind(port)
   server.createContext("/", (ex: HttpExchange) => route(ex))
   // The reference serves requests concurrently (Javalin's pool,
   // Main.java:39); the JDK server's default executor is the dispatch
@@ -169,6 +178,18 @@ class IngestHttpServer(service: IngestService, storage: LakeStorage,
 }
 
 object IngestHttpServer {
+
+  // The JDK server writes a response's headers and body as two TCP
+  // segments; with Nagle's algorithm on, the body waits for the client's
+  // delayed ACK of the headers, about 40 ms on every response. The JDK
+  // reads `sun.net.httpserver.nodelay` once, when its ServerConfig class
+  // initializes (at the JVM's first `HttpServer.create`), so it is set
+  // here, before [[bind]] creates any server, unless already set.
+  if (System.getProperty("sun.net.httpserver.nodelay") == null)
+    System.setProperty("sun.net.httpserver.nodelay", "true")
+
+  private def bind(port: Int): HttpServer =
+    HttpServer.create(new InetSocketAddress(port), 0)
 
   /** JSON string literal with full escaping. The reference's envelope is
     * produced by Jackson (Main.java:162-169); HttpFacadeSpec holds this

@@ -1,11 +1,18 @@
 package graft.lake
 
+import java.io.{FileNotFoundException, IOException}
 import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
+import java.util.UUID
 
 import scala.collection.concurrent.TrieMap
+import scala.collection.immutable.ArraySeq
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -86,13 +93,34 @@ trait LakeStorage {
   *
   * The two-objects-per-book shape ({id}.body.txt / {id}.header.txt,
   * S3DatalakeStorage.java:149-150) becomes two ROWS per book discriminated
-  * by `kind` — columnar, splittable, and `book_id` carries parquet min/max
-  * stats so `exists` is a row-group-pruned point lookup instead of the
+  * by `kind` — columnar and splittable. `exists` never scans them: it is
+  * a binary search in the manifest index below, instead of the
   * reference's O(all keys) scan.
   *
-  * The reference's staging-dir tmp-file + ATOMIC_MOVE protocol
-  * (IngestionService.java:62-71) is subsumed by Spark's task-commit
-  * protocol — readers never observe partial task output.
+  * Publish protocol — the reference's stage-then-`ATOMIC_MOVE`
+  * (IngestionService.java:62-71) at file granularity. `saveBooks` makes
+  * two writes, each into its own `{root}/_staging/<uuid>` directory: the
+  * payload rows, then the manifest rows. After each write its part files
+  * are renamed into `datalake/pdate=d/phour=h/` and `manifest/`
+  * respectively, data before manifest, and the staging directory is
+  * deleted. Files become visible one rename at a time, as they do under
+  * FileOutputCommitter v1's job commit; a reader never sees a partial
+  * file. A `_staging/<uuid>` left behind by a crash is invisible to
+  * readers: they only read `datalake/` and `manifest/`. No two saves share
+  * a staging directory, so concurrent saves run their Spark jobs in
+  * parallel, in-process or not.
+  *
+  * Index contract — `exists` and `listBooks` answer from a driver-side
+  * snapshot of the manifest: the part files folded in so far and the
+  * sorted distinct ids they hold. Every call first lists `manifest/`
+  * (names starting with `_` or `.` skipped, as Spark's file index does)
+  * and folds in only the files the snapshot lacks, with one Spark read;
+  * if a folded file is gone (manifest loss, [[rebuildManifest]]'s
+  * overwrite) the snapshot is rebuilt from the listing. So every call sees
+  * every manifest commit made before it, from any writer, and with the
+  * manifest unchanged a call runs no Spark job. One fold or rebuild runs at
+  * a time; a reader whose listing matches the snapshot never waits for it.
+  * Memory: 8 bytes per distinct id plus one path per manifest file.
   */
 object SparkLakeStorage {
   /** Env-var names mirroring the reference's lake configuration surface
@@ -113,9 +141,27 @@ object SparkLakeStorage {
       .fold(root)(p => s"${root.stripSuffix("/")}/$p")
     new SparkLakeStorage(spark, full)
   }
+
+  private val ManifestSchema = StructType(Seq(
+    StructField("book_id", LongType),
+    StructField("date", StringType),
+    StructField("hour", StringType)))
+
+  /** The manifest index's immutable snapshot: the manifest part files
+    * folded in and the sorted distinct ids they hold. */
+  private final case class ManifestIndex(files: Set[String], ids: Array[Long])
+
+  /** Spark's file index skips these names (`_SUCCESS`, `_temporary`,
+    * checksum files). */
+  private def visible(f: FileStatus): Boolean = {
+    val name = f.getPath.getName
+    f.isFile && !name.startsWith("_") && !name.startsWith(".")
+  }
 }
 
 class SparkLakeStorage(spark: SparkSession, root: String) extends LakeStorage {
+
+  import SparkLakeStorage.{ManifestIndex, ManifestSchema, visible}
 
   private val lakeDir = s"$root/datalake"
   private val manifestDir = s"$root/manifest"
@@ -128,49 +174,66 @@ class SparkLakeStorage(spark: SparkSession, root: String) extends LakeStorage {
     StructField("date", StringType),
     StructField("hour", StringType)))
 
-  // Single-writer gate for the append section: two concurrent
-  // `mode("append")` jobs into the same path share the Hadoop
-  // committer's `_temporary/<attempt>` staging dir and clobber each
-  // other's task files (TASK_WRITE_FAILED — reproduced by the facade's
-  // concurrent-ingest spec). The reference never hits this because its
-  // writes are independent per-object S3 puts
-  // (S3DatalakeStorage.java:33-47); an engine writing a SHARED
-  // partitioned dataset serializes its commits instead. In-process
-  // writers queue here; cross-process concurrency is the snapshot
-  // store's OCC layer, not this adapter's contract. Reads are
-  // unaffected (parquet readers never look inside _temporary).
-  private val writeGate = new Object
+  private def hadoopConf = spark.sparkContext.hadoopConfiguration
+
+  @volatile private var index = ManifestIndex(Set.empty, Array.emptyLongArray)
+  private val indexLock = new Object
 
   override def saveBooks(books: DataFrame, ts: LocalDateTime): Unit = {
     val d = LakePaths.day(ts)
     val h = LakePaths.hour(ts)
-    // Persist: the data write and the manifest append both consume
+    // Persist: the data write and the manifest write both consume
     // `books`; without a barrier the caller's upstream pipeline would run
     // twice, and a non-deterministic source could make the manifest list
     // books whose payload was never written.
     val snap = books.persist()
-    try writeGate.synchronized {
-      writeLake(snap, ts, d, h)
-      snap.select(col("book_id").cast("long").as("book_id"),
-        lit(d).as("date"), lit(h).as("hour"))
-        .write.mode("append").parquet(manifestDir)
+    try {
+      publish(snap
+        .select(col("book_id").cast("long").as("book_id"),
+          explode(array(
+            struct(lit("header").as("kind"), col("header").as("text")),
+            struct(lit("body").as("kind"), col("body").as("text")))).as("kv"))
+        .select(col("book_id"), col("kv.kind").as("kind"),
+          col("kv.text").as("text"),
+          lit(java.sql.Timestamp.valueOf(ts)).as("ts"),
+          lit(d).as("date"), lit(h).as("hour")),
+        s"$lakeDir/pdate=$d/phour=$h")
+      publish(snap.select(col("book_id").cast("long").as("book_id"),
+        lit(d).as("date"), lit(h).as("hour")), manifestDir)
     } finally snap.unpersist()
   }
 
-  private def writeLake(books: DataFrame, ts: LocalDateTime, d: String,
-      h: String): Unit = {
-    books
-      .select(col("book_id").cast("long").as("book_id"),
-        explode(array(
-          struct(lit("header").as("kind"), col("header").as("text")),
-          struct(lit("body").as("kind"), col("body").as("text")))).as("kv"))
-      .select(col("book_id"), col("kv.kind").as("kind"),
-        col("kv.text").as("text"),
-        lit(java.sql.Timestamp.valueOf(ts)).as("ts"),
-        lit(d).as("date"), lit(h).as("hour"),
-        lit(d).as("pdate"), lit(h).as("phour"))
-      .write.mode("append").partitionBy("pdate", "phour").parquet(lakeDir)
+  /** Write `rows` into a fresh `{root}/_staging/<uuid>`, then rename its
+    * part files into `dest` (part-file names carry the write job's uuid,
+    * so they never collide there). Files without rows stay behind: Spark
+    * writes one schema-only file even for an empty write, and an empty
+    * save must not create a partition directory. */
+  private def publish(rows: DataFrame, dest: String): Unit = {
+    val staging = new Path(s"$root/_staging/${UUID.randomUUID()}")
+    val fs = staging.getFileSystem(hadoopConf)
+    try {
+      rows.write.parquet(staging.toString)
+      val target = new Path(dest)
+      val parts = visibleFiles(fs, staging).filter(holdsRows)
+      if (parts.nonEmpty) fs.mkdirs(target)
+      parts.foreach { f =>
+        if (!fs.rename(f.getPath, new Path(target, f.getPath.getName)))
+          throw new IOException(s"could not publish ${f.getPath} to $target")
+      }
+    } finally fs.delete(staging, true)
   }
+
+  // Reads the footer only. The options come from the session's Hadoop
+  // conf: the default ones build a fresh Configuration per file (~17 ms).
+  private def holdsRows(f: FileStatus): Boolean = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, hadoopConf),
+      HadoopReadOptions.builder(hadoopConf).build())
+    try reader.getRecordCount > 0 finally reader.close()
+  }
+
+  private def visibleFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    try fs.listStatus(dir).toSeq.filter(visible)
+    catch { case _: FileNotFoundException => Seq.empty }
 
   /** The manifest index: (book_id, date, hour), appended after each data
     * commit. The reference's exists() cannot prune (id -> date unknown,
@@ -178,8 +241,9 @@ class SparkLakeStorage(spark: SparkSession, root: String) extends LakeStorage {
     * manifest table as the layout fix. This is the Delta/Iceberg
     * transaction-log idea in miniature: point/list queries read the tiny
     * index, never the payload files. Rebuildable from the lake
-    * (rebuildManifest) since the two appends are not atomic together. */
-  def manifest: DataFrame = spark.read.parquet(manifestDir)
+    * (rebuildManifest) since the two writes are not atomic together. Read
+    * with the fixed schema: no footer-inference job. */
+  def manifest: DataFrame = spark.read.schema(ManifestSchema).parquet(manifestDir)
 
   /** Recreate the manifest from lake ground truth (crash between data and
     * manifest append, or adopting a pre-manifest lake). */
@@ -200,12 +264,42 @@ class SparkLakeStorage(spark: SparkSession, root: String) extends LakeStorage {
   private def manifestOrEmpty: DataFrame =
     if (dirExists(manifestDir)) manifest
     else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("book_id", LongType),
-        StructField("date", StringType), StructField("hour", StringType))))
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ManifestSchema)
+
+  /** The index snapshot, brought up to date with a fresh listing of the
+    * manifest (see the class doc). */
+  private def currentIndex(): ManifestIndex = {
+    val seen = index
+    if (manifestFiles() == seen.files) seen
+    else indexLock.synchronized {
+      // list again under the lock: a fold that finished while this call
+      // waited may already cover the files it listed
+      val listed = manifestFiles()
+      val cur = index
+      if (listed != cur.files) {
+        index =
+          if (cur.files.subsetOf(listed))
+            ManifestIndex(listed,
+              (cur.ids ++ readIds(listed -- cur.files)).sorted.distinct)
+          else ManifestIndex(listed, readIds(listed).sorted.distinct)
+      }
+      index
+    }
+  }
+
+  private def manifestFiles(): Set[String] = {
+    val dir = new Path(manifestDir)
+    visibleFiles(dir.getFileSystem(hadoopConf), dir)
+      .map(_.getPath.toString).toSet
+  }
+
+  private def readIds(files: Set[String]): Array[Long] =
+    if (files.isEmpty) Array.emptyLongArray
+    else spark.read.schema(ManifestSchema).parquet(files.toSeq: _*)
+      .select(col("book_id")).as(Encoders.scalaLong).collect()
 
   override def exists(bookId: Long): Boolean =
-    !manifestOrEmpty.filter(col("book_id") === bookId).limit(1).isEmpty
+    java.util.Arrays.binarySearch(currentIndex().ids, bookId) >= 0
 
   // Manifest-backed: reads the tiny manifest snapshot, never the data
   // files — a listing over a 100 TB lake stays a metadata operation.
@@ -214,7 +308,7 @@ class SparkLakeStorage(spark: SparkSession, root: String) extends LakeStorage {
       .select(col("book_id")).distinct().orderBy(col("book_id"))
 
   override def listBooks(): Seq[Long] =
-    listBooksDF.collect().map(_.getLong(0)).toSeq
+    ArraySeq.unsafeWrapArray(currentIndex().ids)
 
   override def lake: DataFrame =
     spark.read.parquet(lakeDir).drop("pdate", "phour")
@@ -229,8 +323,8 @@ class SparkLakeStorage(spark: SparkSession, root: String) extends LakeStorage {
     * object-store backend is a URI scheme + classpath concern, not a code
     * path. */
   private def dirExists(dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    val p = new Path(dir)
+    p.getFileSystem(hadoopConf).exists(p)
   }
 
   private def lakeOrEmpty: DataFrame =

@@ -274,6 +274,15 @@ class HttpFacadeSpec extends SparkSpec {
           for (i <- 1L to 12L)
             assert(get(port, s"/ingest/status/$i").body
               .contains("\"status\":\"available\""), s"$name status $i")
+          // exactly once at the payload too: one header and one body row
+          // per id, no duplicate or lost part file
+          if (name == "spark-parquet") {
+            val rows = storage.lake.select("book_id", "kind").collect()
+              .map(r => (r.getLong(0), r.getString(1)))
+            assert(rows.length == 24, s"$name lake rows: ${rows.length}")
+            assert(rows.toSet == (1L to 12L).flatMap(i =>
+              Seq((i, "header"), (i, "body"))).toSet, s"$name lake rows")
+          }
         } finally exec.shutdown()
       } finally server.stop()
     }

@@ -168,6 +168,44 @@ class LakeStorageSpec extends SparkSpec {
       s"phour predicate did not reach the scan: $scanLine")
     assert(pruned.count() == 2) // header + body of book 1 only
   }
+
+  test("an empty save publishes no file and no partition directory") {
+    val dir = Files.createTempDirectory("graft-empty-save-")
+      .toFile.getAbsolutePath
+    val storage = new SparkLakeStorage(spark, dir)
+    storage.saveBooks(books((1L, "h", "b")).filter(col("book_id") < 0), ts)
+    assert(!new java.io.File(s"$dir/datalake/pdate=20260307").exists())
+    assert(Option(new java.io.File(s"$dir/manifest").list()).toSeq.flatten
+      .forall(n => !n.endsWith(".parquet")))
+    assert(!storage.exists(1L) && storage.listBooks().isEmpty)
+  }
+
+  test("concurrent saves into one hour each land exactly once, no " +
+      "staging debris") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.DurationInt
+    val dir = Files.createTempDirectory("graft-concurrent-lake-")
+      .toFile.getAbsolutePath
+    val storage = new SparkLakeStorage(spark, dir)
+    val exec = java.util.concurrent.Executors.newFixedThreadPool(8)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(exec)
+    try {
+      // 8 writers, 3 books each, all into the same date/hour partition
+      val ids = (1L to 24L).grouped(3).toSeq
+      Await.result(Future.sequence(ids.map(group => Future(
+        storage.saveBooks(books(group.map(i => (i, s"h$i", s"b$i")): _*),
+          ts)))), 180.seconds)
+      assert(storage.listBooks() == (1L to 24L))
+      val perId = storage.lake.groupBy("book_id", "kind").count()
+        .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2))
+        .toMap
+      assert(perId == (1L to 24L).flatMap(i =>
+        Seq((i, "header") -> 1L, (i, "body") -> 1L)).toMap)
+      val debris = Option(new java.io.File(s"$dir/_staging").list())
+        .toSeq.flatten
+      assert(debris.isEmpty, s"staging debris: $debris")
+    } finally exec.shutdown()
+  }
 }
 
 /** Manifest index: metadata-only exists/list + rebuild from ground truth. */
@@ -198,6 +236,87 @@ class ManifestSpec extends graft.SparkSpec {
     assert(!storage.exists(4L)) // index gone -> degraded (documented)
     storage.rebuildManifest()
     assert(storage.exists(4L) && storage.listBooks() == Seq(2L, 4L))
+  }
+
+  private def save(storage: SparkLakeStorage, ts: LocalDateTime,
+      ids: Long*): Unit = {
+    import spark.implicits._
+    storage.saveBooks(ids.map(i => (i, s"h$i", s"b$i"))
+      .toDF("book_id", "header", "body"), ts)
+  }
+
+  test("a second storage on the same root sees the first one's saves " +
+      "at once") {
+    val root = Files.createTempDirectory("graft-manifest-two-")
+      .toFile.getAbsolutePath
+    val writer = new SparkLakeStorage(spark, root)
+    val reader = new SparkLakeStorage(spark, root)
+    val ts = LocalDateTime.of(2026, 7, 1, 11, 0)
+    assert(!reader.exists(1L) && reader.listBooks().isEmpty)
+    save(writer, ts, 1L, 3L)
+    assert(reader.exists(1L) && reader.exists(3L) && !reader.exists(2L))
+    assert(reader.listBooks() == Seq(1L, 3L))
+    // a later hour's commit, after the reader's index already holds ids
+    save(writer, ts.plusHours(1), 2L, 3L)
+    assert(reader.exists(2L))
+    assert(reader.listBooks() == Seq(1L, 2L, 3L))
+  }
+
+  test("exists/list are exact right after rebuildManifest replaces the " +
+      "manifest files") {
+    val root = Files.createTempDirectory("graft-manifest-rebuild-")
+      .toFile.getAbsolutePath
+    val storage = new SparkLakeStorage(spark, root)
+    val ts = LocalDateTime.of(2026, 7, 1, 11, 0)
+    save(storage, ts, 5L, 8L)
+    assert(storage.listBooks() == Seq(5L, 8L)) // index built
+    def manifestFiles: Set[String] =
+      new java.io.File(s"$root/manifest").list()
+        .filter(_.endsWith(".parquet")).toSet
+    val before = manifestFiles
+    storage.rebuildManifest()
+    assert(manifestFiles.intersect(before).isEmpty) // every file replaced
+    assert(storage.exists(5L) && storage.exists(8L) && !storage.exists(6L))
+    assert(storage.listBooks() == Seq(5L, 8L))
+    save(storage, ts, 6L)
+    assert(storage.exists(6L) && storage.listBooks() == Seq(5L, 6L, 8L))
+  }
+
+  test("with the manifest unchanged, exists/list run no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val root = Files.createTempDirectory("graft-manifest-jobs-")
+      .toFile.getAbsolutePath
+    val storage = new SparkLakeStorage(spark, root)
+    save(storage, LocalDateTime.of(2026, 7, 1, 11, 0), 4L, 2L)
+    assert(storage.exists(4L)) // folds the new manifest files in
+    // the listener bus is asynchronous: record every job start, then run
+    // a marked job and wait for it, so all earlier starts have arrived
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    def jobsUntilMarker(marker: String): Seq[String] = {
+      sc.setJobDescription(marker)
+      // an RDD action: exactly one job (a SQL count may run two)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      Iterator.continually(started.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(d => d != null && d != marker).toSeq
+    }
+    sc.addSparkListener(listener)
+    try {
+      jobsUntilMarker("before-probe")
+      for (_ <- 1 to 5) {
+        assert(storage.exists(4L) && !storage.exists(3L))
+        assert(storage.listBooks() == Seq(2L, 4L))
+      }
+      val jobs = jobsUntilMarker("after-probe")
+      assert(jobs.isEmpty, s"exists/list ran ${jobs.size} Spark jobs")
+    } finally sc.removeSparkListener(listener)
   }
 }
 
