@@ -66,8 +66,10 @@ class IngestService(spark: SparkSession, storage: LakeStorage,
   def ingest(ids: Seq[Long], ts: LocalDateTime): DataFrame = {
     import spark.implicits._
     val f = fetcher
-    val fetched = ids.toDS()
-      .repartition(math.min(ids.size, 32).max(1))
+    // Sliced by parallelize, not repartitioned: no exchange (AQE would run
+    // its map stage as a job of its own) and no id list in the plan.
+    val fetched = spark.createDataset(
+        spark.sparkContext.parallelize(ids, math.min(ids.size, 32).max(1)))
       .mapPartitions(_.map(id =>
         (id, if (id > 0) f.fetch(id).orNull else null)))
       .toDF("book_id", "text")

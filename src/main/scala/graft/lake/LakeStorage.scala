@@ -10,9 +10,15 @@ import scala.collection.immutable.ArraySeq
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.conf.HadoopParquetConfiguration
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
+import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.parquet.schema.MessageType
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -110,17 +116,22 @@ trait LakeStorage {
   * a staging directory, so concurrent saves run their Spark jobs in
   * parallel, in-process or not.
   *
+  * Each save publishes one manifest part file: its rows are three narrow
+  * columns, written by a single task.
+  *
   * Index contract — `exists` and `listBooks` answer from a driver-side
   * snapshot of the manifest: the part files folded in so far and the
   * sorted distinct ids they hold. Every call first lists `manifest/`
   * (names starting with `_` or `.` skipped, as Spark's file index does)
-  * and folds in only the files the snapshot lacks, with one Spark read;
-  * if a folded file is gone (manifest loss, [[rebuildManifest]]'s
-  * overwrite) the snapshot is rebuilt from the listing. So every call sees
-  * every manifest commit made before it, from any writer, and with the
-  * manifest unchanged a call runs no Spark job. One fold or rebuild runs at
-  * a time; a reader whose listing matches the snapshot never waits for it.
-  * Memory: 8 bytes per distinct id plus one path per manifest file.
+  * and folds in only the files the snapshot lacks, reading their
+  * `book_id` column on the driver with parquet-hadoop, as Iceberg's
+  * planner reads its manifests: no Spark job. If a folded file is gone
+  * (manifest loss, [[rebuildManifest]]'s overwrite) the snapshot is
+  * rebuilt from the listing the same way. So every call sees every
+  * manifest commit made before it, from any writer, and no call runs a
+  * Spark job. One fold or rebuild runs at a time; a reader whose listing
+  * matches the snapshot never waits for it. Memory: 8 bytes per distinct
+  * id plus one path per manifest file.
   */
 object SparkLakeStorage {
   /** Env-var names mirroring the reference's lake configuration surface
@@ -151,6 +162,17 @@ object SparkLakeStorage {
     * folded in and the sorted distinct ids they hold. */
   private final case class ManifestIndex(files: Set[String], ids: Array[Long])
 
+  /** Reads only `book_id`, projected from each file's own schema, so the
+    * files of both writers read: `saveBooks` writes the column `required`,
+    * `rebuildManifest` writes it `optional`. */
+  private object BookIdReadSupport extends GroupReadSupport {
+    override def init(ctx: InitContext): ReadSupport.ReadContext = {
+      val file = ctx.getFileSchema
+      new ReadSupport.ReadContext(new MessageType(file.getName,
+        file.getType(file.getFieldIndex("book_id"))))
+    }
+  }
+
   /** Spark's file index skips these names (`_SUCCESS`, `_temporary`,
     * checksum files). */
   private def visible(f: FileStatus): Boolean = {
@@ -161,7 +183,8 @@ object SparkLakeStorage {
 
 class SparkLakeStorage(spark: SparkSession, root: String) extends LakeStorage {
 
-  import SparkLakeStorage.{ManifestIndex, ManifestSchema, visible}
+  import SparkLakeStorage.{BookIdReadSupport, ManifestIndex, ManifestSchema,
+    visible}
 
   private val lakeDir = s"$root/datalake"
   private val manifestDir = s"$root/manifest"
@@ -188,18 +211,25 @@ class SparkLakeStorage(spark: SparkSession, root: String) extends LakeStorage {
     // books whose payload was never written.
     val snap = books.persist()
     try {
-      publish(snap
-        .select(col("book_id").cast("long").as("book_id"),
-          explode(array(
-            struct(lit("header").as("kind"), col("header").as("text")),
-            struct(lit("body").as("kind"), col("body").as("text")))).as("kv"))
-        .select(col("book_id"), col("kv.kind").as("kind"),
-          col("kv.text").as("text"),
-          lit(java.sql.Timestamp.valueOf(ts)).as("ts"),
-          lit(d).as("date"), lit(h).as("hour")),
+      val src = snap.select(col("book_id").cast("long").as("book_id"),
+        col("header"), col("body"))
+      // A typed flatMap, not a projection over `lit(ts)`: Spark inlines
+      // timestamp literals into generated code, so every new `ts` would
+      // compile the write afresh. The file schema stays the one that
+      // projection wrote: only `book_id` and `text` may be null. The
+      // encoder is lenient so that it takes a java.sql.Timestamp also
+      // under spark.sql.datetime.java8API.enabled.
+      val nullable = Map("book_id" -> src.schema("book_id").nullable,
+        "text" -> Seq("header", "body").exists(src.schema(_).nullable))
+      val rows = RowEncoder.encoderFor(StructType(lakeSchema.map(f =>
+        f.copy(nullable = nullable.getOrElse(f.name, false)))), lenient = true)
+      val at = java.sql.Timestamp.valueOf(ts)
+      publish(src.flatMap(r => Seq(
+          Row(r.get(0), "header", r.get(1), at, d, h),
+          Row(r.get(0), "body", r.get(2), at, d, h)))(rows),
         s"$lakeDir/pdate=$d/phour=$h")
-      publish(snap.select(col("book_id").cast("long").as("book_id"),
-        lit(d).as("date"), lit(h).as("hour")), manifestDir)
+      publish(src.select(col("book_id"), lit(d).as("date"), lit(h).as("hour"))
+        .coalesce(1), manifestDir)
     } finally snap.unpersist()
   }
 
@@ -293,10 +323,22 @@ class SparkLakeStorage(spark: SparkSession, root: String) extends LakeStorage {
       .map(_.getPath.toString).toSet
   }
 
-  private def readIds(files: Set[String]): Array[Long] =
-    if (files.isEmpty) Array.emptyLongArray
-    else spark.read.schema(ManifestSchema).parquet(files.toSeq: _*)
-      .select(col("book_id")).as(Encoders.scalaLong).collect()
+  /** The `book_id`s of `files`, read on the driver. */
+  private def readIds(files: Set[String]): Array[Long] = {
+    val ids = Array.newBuilder[Long]
+    val conf = new HadoopParquetConfiguration(hadoopConf)
+    files.foreach { f =>
+      val reader = new ParquetReader.Builder[Group](
+          HadoopInputFile.fromPath(new Path(f), hadoopConf), conf) {
+        override def getReadSupport: ReadSupport[Group] = BookIdReadSupport
+      }.build()
+      try Iterator.continually(reader.read()).takeWhile(_ != null)
+        .filter(_.getFieldRepetitionCount(0) > 0)
+        .foreach(g => ids += g.getLong(0, 0))
+      finally reader.close()
+    }
+    ids.result()
+  }
 
   override def exists(bookId: Long): Boolean =
     java.util.Arrays.binarySearch(currentIndex().ids, bookId) >= 0

@@ -219,17 +219,9 @@ class HttpFacadeSpec extends SparkSpec {
     import scala.concurrent.duration.DurationInt
     // FixtureFetcher only serves ids 1-2; contention needs 12 distinct
     // landable books
-    val wide = new DocumentFetcher {
-      private val The = MarkerSplit.StartMarkers(0)
-      private val EndThe = MarkerSplit.EndMarkers(0)
-      override def fetch(id: Long): Option[String] =
-        if (id > 0) Some(
-          s"Title $id\n$The ***\nbody $id\n$EndThe ***\nfin")
-        else None
-    }
     for ((name, mk) <- adapters) {
       val storage = mk()
-      val service = new IngestService(spark, storage, wide)
+      val service = new IngestService(spark, storage, NumberedFetcher)
       val server = new IngestHttpServer(service, storage, 0, () => ts)
       server.start()
       try {
@@ -286,6 +278,32 @@ class HttpFacadeSpec extends SparkSpec {
         } finally exec.shutdown()
       } finally server.stop()
     }
+  }
+
+  test("once warm, a one-book POST compiles no code, whatever its id " +
+      "and time") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val storage = new SparkLakeStorage(spark, "file:" +
+      java.nio.file.Files.createTempDirectory("graft-http-codegen").toString)
+    val service = new IngestService(spark, storage, NumberedFetcher)
+    val now = new java.util.concurrent.atomic.AtomicReference(ts)
+    val server = new IngestHttpServer(service, storage, 0, () => now.get)
+    server.start()
+    try {
+      val port = server.boundPort
+      service.ingest(Seq(100L), ts.minusDays(1)).collect()
+      assert(post(port, "/ingest/101").code == 200)
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      for ((id, i) <- Seq(102L, 103L, 104L).zipWithIndex) {
+        now.set(ts.plusHours(i + 1L).plusMinutes(7L * i).plusSeconds(i + 1L))
+        val r = post(port, s"/ingest/$id")
+        assert(r.code == 200 && r.body.contains("\"status\":\"downloaded\""),
+          s"ingest $id: $r")
+      }
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      assert(compiles == 0, s"3 warm POSTs compiled $compiles classes")
+      assert(storage.listBooks() == Seq(100L, 101L, 102L, 103L, 104L))
+    } finally server.stop()
   }
 
   test("PORT env semantics match the reference (Main.java:33,176-184)") {

@@ -20,6 +20,26 @@ object FixtureFetcher extends DocumentFetcher {
   }
 }
 
+/** Serves every positive id with a well-formed book. */
+object NumberedFetcher extends DocumentFetcher {
+  private val The = MarkerSplit.StartMarkers(0)
+  private val EndThe = MarkerSplit.EndMarkers(0)
+  override def fetch(id: Long): Option[String] =
+    if (id > 0) Some(s"Title $id\n$The ***\nbody $id\n$EndThe ***\nfin")
+    else None
+}
+
+/** [[FixtureFetcher]] that records the partition of every fetch task
+  * (local mode: the tasks share this JVM's object). */
+object TaskRecordingFetcher extends DocumentFetcher {
+  val partitions: java.util.Set[Integer] =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]()
+  override def fetch(id: Long): Option[String] = {
+    partitions.add(org.apache.spark.TaskContext.getPartitionId())
+    FixtureFetcher.fetch(id)
+  }
+}
+
 class IngestServiceSpec extends SparkSpec {
 
   private val ts = LocalDateTime.of(2026, 5, 1, 12, 0, 0)
@@ -71,12 +91,49 @@ class IngestServiceSpec extends SparkSpec {
     "(Main.java:100-123) and is computed without a driver collect") {
     val service =
       new IngestService(spark, new InMemoryLakeStorage(spark), FixtureFetcher)
-    val report = service.ingest(Seq(-5L, 1L, 3L, 42L), ts)
+    val report = service.ingest(Seq(42L, 3L, -5L, 1L), ts)
     // still a DataFrame: usable as a distributed input downstream
     assert(report.columns.toSeq == Seq("book_id", "status"))
+    // ordered by book_id
+    assert(report.collect().map(_.getLong(0)).toSeq == Seq(-5L, 1L, 3L, 42L))
     val statuses = report.select("status").distinct()
       .collect().map(_.getString(0)).toSet
     assert(statuses == Set("invalid_book_id", "downloaded",
       "marker_split_failed", "download_failed"))
+  }
+
+  test("a fetch of n ids runs min(n, 32) fetch tasks and no shuffle") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // every exchange of a plan, inside cached relations and AQE stages too
+    def shuffles(p: SparkPlan): Seq[SparkPlan] = p match {
+      case s: ShuffleExchangeExec => s +: shuffles(s.child)
+      case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
+      case q: QueryStageExec => shuffles(q.plan)
+      case m: InMemoryTableScanExec => shuffles(m.relation.cachedPlan)
+      case other => other.children.flatMap(shuffles)
+    }
+    for (n <- Seq(5, 40)) {
+      var saved: Option[SparkPlan] = None
+      // `books` is a projection of the persisted split
+      val storage = new InMemoryLakeStorage(spark) {
+        override def saveBooks(books: org.apache.spark.sql.DataFrame,
+            at: LocalDateTime): Unit = {
+          saved = Some(books.queryExecution.executedPlan)
+          super.saveBooks(books, at)
+        }
+      }
+      TaskRecordingFetcher.partitions.clear()
+      new IngestService(spark, storage, TaskRecordingFetcher)
+        .ingest((1L to n.toLong).reverse, ts).collect()
+      assert(TaskRecordingFetcher.partitions.size == math.min(n, 32),
+        s"n=$n fetch tasks: ${TaskRecordingFetcher.partitions}")
+      val plan = saved.getOrElse(fail("saveBooks was not called"))
+      assert(plan.collectFirst { case _: InMemoryTableScanExec => () }
+        .nonEmpty, s"no persisted split in the plan:\n$plan")
+      assert(shuffles(plan).isEmpty, s"n=$n split plan shuffles:\n$plan")
+    }
   }
 }

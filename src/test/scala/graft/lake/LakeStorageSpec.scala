@@ -141,8 +141,37 @@ class LakeStorageSpec extends SparkSpec {
     // authoritative string partition labels survive the round-trip
     assert(lake.select("date", "hour").distinct().collect().head.toSeq ==
       Seq("20260307", "09"))
+    import org.apache.spark.sql.types._
+    assert(lake.schema.map(f => f.name -> f.dataType) == Seq(
+      "book_id" -> LongType, "kind" -> StringType, "text" -> StringType,
+      "ts" -> TimestampType, "date" -> StringType, "hour" -> StringType))
+    // both rows carry the save's timestamp
+    assert(lake.select("ts").collect().map(_.getTimestamp(0)).toSeq ==
+      Seq.fill(2)(java.sql.Timestamp.valueOf(ts)))
     // physical layout is hive-partitioned for pruning
-    assert(new java.io.File(s"$dir/datalake/pdate=20260307/phour=09").exists())
+    val partition = new java.io.File(s"$dir/datalake/pdate=20260307/phour=09")
+    assert(partition.exists())
+    // the file schema: only `text` may be null for this input
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.schema.Type.Repetition.{OPTIONAL, REQUIRED}
+    val part = partition.listFiles().filter(_.getName.endsWith(".parquet"))
+    assert(part.length == 1)
+    assert(ParquetFooter.schema(spark, part.head.getPath).getFields.asScala
+      .map(f => f.getName -> f.getRepetition).toSeq == Seq(
+        "book_id" -> REQUIRED, "kind" -> REQUIRED, "text" -> OPTIONAL,
+        "ts" -> REQUIRED, "date" -> REQUIRED, "hour" -> REQUIRED))
+  }
+
+  test("a save under the java8 datetime API stores the same timestamp") {
+    val key = "spark.sql.datetime.java8API.enabled"
+    val dir = Files.createTempDirectory("graft-java8-lake-")
+      .toFile.getAbsolutePath
+    val storage = new SparkLakeStorage(spark, dir)
+    spark.conf.set(key, "true")
+    try storage.saveBooks(books((12L, "h", "b")), ts)
+    finally spark.conf.unset(key)
+    assert(storage.lake.select("ts").collect().map(_.getTimestamp(0)).toSeq ==
+      Seq.fill(2)(java.sql.Timestamp.valueOf(ts)))
   }
 
   test("a date/hour predicate prunes partitions at the scan, not a filter") {
@@ -167,6 +196,21 @@ class LakeStorageSpec extends SparkSpec {
     assert(scanLine.contains("phour"),
       s"phour predicate did not reach the scan: $scanLine")
     assert(pruned.count() == 2) // header + body of book 1 only
+  }
+
+  test("a save of a multi-partition frame publishes one manifest file") {
+    val dir = Files.createTempDirectory("graft-one-manifest-")
+      .toFile.getAbsolutePath
+    val storage = new SparkLakeStorage(spark, dir)
+    val ids = 1L to 40L
+    val frame = books(ids.map(i => (i, s"h$i", s"b$i")): _*).repartition(8)
+    assert(frame.rdd.getNumPartitions == 8)
+    storage.saveBooks(frame, ts)
+    val manifestParts = new java.io.File(s"$dir/manifest").list()
+      .filter(_.endsWith(".parquet"))
+    assert(manifestParts.length == 1, manifestParts.mkString(", "))
+    assert(ids.forall(storage.exists) && !storage.exists(41L))
+    assert(storage.listBooks() == ids)
   }
 
   test("an empty save publishes no file and no partition directory") {
@@ -280,6 +324,16 @@ class ManifestSpec extends graft.SparkSpec {
     assert(storage.listBooks() == Seq(5L, 8L))
     save(storage, ts, 6L)
     assert(storage.exists(6L) && storage.listBooks() == Seq(5L, 6L, 8L))
+    // the fold just read files of both writers: the rebuild's `book_id` is
+    // optional, a save's is required
+    import org.apache.parquet.schema.Type.Repetition
+    val repetitions = manifestFiles.map { name =>
+      val schema = ParquetFooter.schema(spark, s"$root/manifest/$name")
+      schema.getType(schema.getFieldIndex("book_id")).getRepetition
+    }
+    assert(repetitions == Set(Repetition.OPTIONAL, Repetition.REQUIRED))
+    // and a fresh storage's first fold reads both kinds at once
+    assert(new SparkLakeStorage(spark, root).listBooks() == Seq(5L, 6L, 8L))
   }
 
   test("with the manifest unchanged, exists/list run no Spark job") {
@@ -316,7 +370,29 @@ class ManifestSpec extends graft.SparkSpec {
       }
       val jobs = jobsUntilMarker("after-probe")
       assert(jobs.isEmpty, s"exists/list ran ${jobs.size} Spark jobs")
+      // a manifest change by a second storage on the same root: the fold
+      // reads the new file on the driver
+      save(new SparkLakeStorage(spark, root),
+        LocalDateTime.of(2026, 7, 1, 12, 0), 3L, 9L)
+      jobsUntilMarker("after-save")
+      assert(storage.exists(3L) && storage.exists(9L) && !storage.exists(5L))
+      assert(storage.listBooks() == Seq(2L, 3L, 4L, 9L))
+      val foldJobs = jobsUntilMarker("after-fold")
+      assert(foldJobs.isEmpty,
+        s"exists/list after a save ran ${foldJobs.size} Spark jobs")
     } finally sc.removeSparkListener(listener)
+  }
+}
+
+/** The schema stored in a parquet file's footer. */
+object ParquetFooter {
+  def schema(spark: org.apache.spark.sql.SparkSession,
+      path: String): org.apache.parquet.schema.MessageType = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(path),
+        spark.sparkContext.hadoopConfiguration))
+    try reader.getFooter.getFileMetaData.getSchema finally reader.close()
   }
 }
 
