@@ -8,9 +8,10 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = Graft.session("graft-verify", s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("WARN")
-    // Reliable-anchor posture, matching Bench: Anchor.cut takes the
-    // checkpoint() path a cluster deployment runs (tmpfs-backed when
-    // available — see Bench).
+    // Reliable-anchor posture, unlike Bench (which sets no checkpoint dir
+    // so its timings price plans, not the checkpoint store): Anchor.cut
+    // takes the checkpoint() path a cluster deployment runs, tmpfs-backed
+    // when available.
     val ckptBase = java.nio.file.Paths.get("/dev/shm")
     val ckptDir =
       if (java.nio.file.Files.isDirectory(ckptBase) &&

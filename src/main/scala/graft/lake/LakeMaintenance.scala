@@ -2,7 +2,6 @@ package graft.lake
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Lake maintenance: partition compaction.
   *
@@ -10,52 +9,22 @@ import org.apache.spark.sql.types._
   * a few files per trigger; at 100 TB the resulting small-files problem
   * dominates scan cost (file-listing latency, per-file open overhead,
   * under-filled row groups that defeat min/max pruning). Compaction
-  * rewrites one time-partition into `numFiles` right-sized files using
-  * dynamic partition overwrite — other partitions are untouched, and
-  * readers never see a partial partition (the overwrite commits
-  * atomically per partition via the commit protocol).
+  * rewrites one time-partition into `numFiles` right-sized files through
+  * the storage's publish protocol ([[SparkLakeStorage]]): it lists the
+  * partition's files, reads exactly those, stages the rewrite, renames it
+  * in, then deletes the files it read. Other partitions, and saves that
+  * land in the partition during the rewrite, are untouched. Between the
+  * rename and the deletes, readers see the compacted rows twice, never
+  * missing. One compaction per partition at a time.
   */
 object LakeMaintenance {
-
-  // Explicit schema pins pdate/phour to STRING: inference would type
-  // phour=06 as int 6, and the rewrite would land in a NEW phour=6
-  // directory instead of overwriting phour=06 (duplicating the data).
-  private val fullSchema = StructType(Seq(
-    StructField("book_id", LongType), StructField("kind", StringType),
-    StructField("text", StringType), StructField("ts", TimestampType),
-    StructField("date", StringType), StructField("hour", StringType),
-    StructField("pdate", StringType), StructField("phour", StringType)))
 
   /** Rewrite partition (date, hour) of the lake at `root` into
     * `numFiles` files. Returns the number of rows compacted. */
   def compactPartition(spark: SparkSession, root: String, date: String,
       hour: String, numFiles: Int = 1): Long = {
     require(numFiles > 0, "numFiles must be positive")
-    val lakeDir = s"$root/datalake"
-    val part = spark.read.schema(fullSchema).parquet(lakeDir)
-      .filter(col("pdate") === date && col("phour") === hour)
-    // Materialize BEFORE overwriting the location being read. Anchor.cut
-    // (not a bare localCheckpoint): this snapshot guards DURABILITY, not
-    // just lineage — on a real cluster an executor loss mid-overwrite
-    // would lose both the local snapshot blocks and the already-deleted
-    // source files, so a configured checkpoint dir must make it reliable.
-    val snapshot = graft.operators.Anchor.cut(part)
-    val rows = snapshot.count()
-    snapshot
-      .coalesce(numFiles)
-      .write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("pdate", "phour")
-      .parquet(lakeDir)
-    // The committed overwrite was the snapshot's LAST reader: release
-    // the anchor (reliable-checkpoint files would otherwise accumulate
-    // one full partition copy per maintenance run — cleanCheckpoints is
-    // off by default, so nothing else ever reclaims them). Deliberately
-    // NOT in a finally: if the overwrite fails midway, the snapshot may
-    // be the only durable copy of the partition — keep it for recovery.
-    graft.operators.Anchor.release(snapshot)
-    rows
+    new SparkLakeStorage(spark, root).compactPartition(date, hour, numFiles)
   }
 
   /** Plan-driven whole-lake compaction: [[Compaction.planBins]] over the
@@ -87,13 +56,14 @@ object LakeMaintenance {
   def compactByPlan(spark: SparkSession, root: String,
       targetRows: Long): Map[(String, String), Int] = {
     val lakeDir = s"$root/datalake"
-    val inventory = spark.read.schema(fullSchema).parquet(lakeDir)
-      .groupBy(col("pdate"), col("phour"),
-        input_file_name().as("file_id"))
+    // a file's `date`/`hour` columns equal its pdate/phour labels
+    val inventory = spark.read.schema(SparkLakeStorage.LakeSchema)
+      .parquet(lakeDir)
+      .groupBy(col("date"), col("hour"), input_file_name().as("file_id"))
       .agg(count(lit(1)).as("n_rows"))
-      // ' ' cannot occur in pdate/phour (digit strings), so the
+      // ' ' cannot occur in date/hour (digit strings), so the
       // composite key is collision-free
-      .withColumn("pkey", concat_ws(" ", col("pdate"), col("phour")))
+      .withColumn("pkey", concat_ws(" ", col("date"), col("hour")))
     val plan = Compaction.planBins(inventory, "pkey", targetRows)
       .groupBy(col("pkey"))
       .agg((max(col("bin_id")) + 1).cast("int").as("n_bins"),

@@ -8,7 +8,7 @@ import java.util.UUID
 import scala.collection.concurrent.TrieMap
 import scala.collection.immutable.ArraySeq
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.conf.HadoopParquetConfiguration
 import org.apache.parquet.example.data.Group
@@ -104,17 +104,32 @@ trait LakeStorage {
   * reference's O(all keys) scan.
   *
   * Publish protocol — the reference's stage-then-`ATOMIC_MOVE`
-  * (IngestionService.java:62-71) at file granularity. `saveBooks` makes
-  * two writes, each into its own `{root}/_staging/<uuid>` directory: the
-  * payload rows, then the manifest rows. After each write its part files
-  * are renamed into `datalake/pdate=d/phour=h/` and `manifest/`
-  * respectively, data before manifest, and the staging directory is
-  * deleted. Files become visible one rename at a time, as they do under
-  * FileOutputCommitter v1's job commit; a reader never sees a partial
-  * file. A `_staging/<uuid>` left behind by a crash is invisible to
-  * readers: they only read `datalake/` and `manifest/`. No two saves share
-  * a staging directory, so concurrent saves run their Spark jobs in
+  * (IngestionService.java:62-71) at file granularity, and the only way a
+  * lake file is written or rewritten: saves, [[rebuildManifest]] and hour
+  * compaction ([[LakeMaintenance]]) all go through one `replace`. It
+  * writes its rows into a fresh `{root}/_staging/<uuid>`, renames the
+  * part files that hold rows into the destination directory, then
+  * deletes exactly the files it folded: the ones its caller listed before
+  * reading. A save folds nothing and makes two replaces, the payload rows
+  * into `datalake/pdate=d/phour=h/`, then the manifest rows into
+  * `manifest/`: data before manifest. A rebuild folds the `manifest/`
+  * files it listed, a compaction the hour's files it listed; a file a
+  * save renames in after that listing is never touched. Files become
+  * visible one rename at a time, as they do under FileOutputCommitter
+  * v1's job commit; a reader never sees a partial file. No two writes
+  * share a staging directory, so concurrent saves run their Spark jobs in
   * parallel, in-process or not.
+  *
+  * Crash semantics: a crash before the renames leaves a
+  * `_staging/<uuid>` that readers never read (they only read `datalake/`
+  * and `manifest/`). A crash between the renames and the deletes leaves
+  * the folded rows twice, never lost: harmless in `manifest/`, since the
+  * index and [[listBooksDF]] take distinct ids; in an hour partition,
+  * `lake` then holds those rows twice. Concurrent readers see the same
+  * doubling in that window, and a Spark read that listed a folded file
+  * before its delete fails with a missing file. Rewrites of one directory
+  * are single-writer, as OPTIMIZE jobs are: two at once could both fold
+  * the same files.
   *
   * Each save publishes one manifest part file: its rows are three narrow
   * columns, written by a single task.
@@ -126,10 +141,12 @@ trait LakeStorage {
   * and folds in only the files the snapshot lacks, reading their
   * `book_id` column on the driver with parquet-hadoop, as Iceberg's
   * planner reads its manifests: no Spark job. If a folded file is gone
-  * (manifest loss, [[rebuildManifest]]'s overwrite) the snapshot is
-  * rebuilt from the listing the same way. So every call sees every
-  * manifest commit made before it, from any writer, and no call runs a
-  * Spark job. One fold or rebuild runs at a time; a reader whose listing
+  * (manifest loss, a replace that folded it) the snapshot is rebuilt
+  * from the listing the same way. So every call sees every manifest
+  * commit made before it, from any writer, and no call runs a Spark job.
+  * A listed file deleted before it is read (by a replace that already
+  * renamed in the files holding its rows) sends the fold back to a fresh
+  * listing. One fold or rebuild runs at a time; a reader whose listing
   * matches the snapshot never waits for it. Memory: 8 bytes per distinct
   * id plus one path per manifest file.
   */
@@ -158,6 +175,16 @@ object SparkLakeStorage {
     StructField("date", StringType),
     StructField("hour", StringType)))
 
+  /** The columns of every data file. `date`/`hour` equal the file's
+    * `pdate`/`phour` directory labels. */
+  private[lake] val LakeSchema = StructType(Seq(
+    StructField("book_id", LongType),
+    StructField("kind", StringType),
+    StructField("text", StringType),
+    StructField("ts", TimestampType),
+    StructField("date", StringType),
+    StructField("hour", StringType)))
+
   /** The manifest index's immutable snapshot: the manifest part files
     * folded in and the sorted distinct ids they hold. */
   private final case class ManifestIndex(files: Set[String], ids: Array[Long])
@@ -183,19 +210,11 @@ object SparkLakeStorage {
 
 class SparkLakeStorage(spark: SparkSession, root: String) extends LakeStorage {
 
-  import SparkLakeStorage.{BookIdReadSupport, ManifestIndex, ManifestSchema,
-    visible}
+  import SparkLakeStorage.{BookIdReadSupport, LakeSchema, ManifestIndex,
+    ManifestSchema, visible}
 
   private val lakeDir = s"$root/datalake"
   private val manifestDir = s"$root/manifest"
-
-  private val lakeSchema = StructType(Seq(
-    StructField("book_id", LongType),
-    StructField("kind", StringType),
-    StructField("text", StringType),
-    StructField("ts", TimestampType),
-    StructField("date", StringType),
-    StructField("hour", StringType)))
 
   private def hadoopConf = spark.sparkContext.hadoopConfiguration
 
@@ -221,48 +240,56 @@ class SparkLakeStorage(spark: SparkSession, root: String) extends LakeStorage {
       // under spark.sql.datetime.java8API.enabled.
       val nullable = Map("book_id" -> src.schema("book_id").nullable,
         "text" -> Seq("header", "body").exists(src.schema(_).nullable))
-      val rows = RowEncoder.encoderFor(StructType(lakeSchema.map(f =>
+      val rows = RowEncoder.encoderFor(StructType(LakeSchema.map(f =>
         f.copy(nullable = nullable.getOrElse(f.name, false)))), lenient = true)
       val at = java.sql.Timestamp.valueOf(ts)
-      publish(src.flatMap(r => Seq(
+      replace(Nil, src.flatMap(r => Seq(
           Row(r.get(0), "header", r.get(1), at, d, h),
           Row(r.get(0), "body", r.get(2), at, d, h)))(rows),
         s"$lakeDir/pdate=$d/phour=$h")
-      publish(src.select(col("book_id"), lit(d).as("date"), lit(h).as("hour"))
-        .coalesce(1), manifestDir)
+      replace(Nil, src.select(col("book_id"), lit(d).as("date"),
+        lit(h).as("hour")).coalesce(1), manifestDir)
     } finally snap.unpersist()
   }
 
-  /** Write `rows` into a fresh `{root}/_staging/<uuid>`, then rename its
-    * part files into `dest` (part-file names carry the write job's uuid,
-    * so they never collide there). Files without rows stay behind: Spark
+  /** Write `rows` into a fresh `{root}/_staging/<uuid>`, rename its part
+    * files into `dest` (part-file names carry the write job's uuid, so they
+    * never collide there), then delete the `folded` files. Returns the
+    * number of rows published. Files without rows stay behind: Spark
     * writes one schema-only file even for an empty write, and an empty
     * save must not create a partition directory. */
-  private def publish(rows: DataFrame, dest: String): Unit = {
+  private def replace(folded: Seq[FileStatus], rows: DataFrame,
+      dest: String): Long = {
     val staging = new Path(s"$root/_staging/${UUID.randomUUID()}")
     val fs = staging.getFileSystem(hadoopConf)
     try {
       rows.write.parquet(staging.toString)
       val target = new Path(dest)
-      val parts = visibleFiles(fs, staging).filter(holdsRows)
+      val parts = visibleFiles(staging).map(f => f -> rowCount(f))
+        .filter(_._2 > 0)
       if (parts.nonEmpty) fs.mkdirs(target)
-      parts.foreach { f =>
+      parts.foreach { case (f, _) =>
         if (!fs.rename(f.getPath, new Path(target, f.getPath.getName)))
           throw new IOException(s"could not publish ${f.getPath} to $target")
       }
+      folded.foreach { f =>
+        if (!fs.delete(f.getPath, false) && fs.exists(f.getPath))
+          throw new IOException(s"could not delete folded ${f.getPath}")
+      }
+      parts.map(_._2).sum
     } finally fs.delete(staging, true)
   }
 
   // Reads the footer only. The options come from the session's Hadoop
   // conf: the default ones build a fresh Configuration per file (~17 ms).
-  private def holdsRows(f: FileStatus): Boolean = {
+  private def rowCount(f: FileStatus): Long = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, hadoopConf),
       HadoopReadOptions.builder(hadoopConf).build())
-    try reader.getRecordCount > 0 finally reader.close()
+    try reader.getRecordCount finally reader.close()
   }
 
-  private def visibleFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
-    try fs.listStatus(dir).toSeq.filter(visible)
+  private def visibleFiles(dir: Path): Seq[FileStatus] =
+    try dir.getFileSystem(hadoopConf).listStatus(dir).toSeq.filter(visible)
     catch { case _: FileNotFoundException => Seq.empty }
 
   /** The manifest index: (book_id, date, hour), appended after each data
@@ -276,25 +303,32 @@ class SparkLakeStorage(spark: SparkSession, root: String) extends LakeStorage {
   def manifest: DataFrame = spark.read.schema(ManifestSchema).parquet(manifestDir)
 
   /** Recreate the manifest from lake ground truth (crash between data and
-    * manifest append, or adopting a pre-manifest lake). */
+    * manifest append, or adopting a pre-manifest lake): replace the
+    * manifest files listed now with the lake's body rows. Listed first, so
+    * the data of every folded file is in the read. */
   def rebuildManifest(): Unit = {
-    // Anchor.cut, not bare localCheckpoint: read-before-overwrite of the
-    // manifest location — reliable when a checkpoint dir is configured.
-    val snapshot = graft.operators.Anchor.cut(
-      lakeOrEmpty.filter(col("kind") === "body")
-        .select(col("book_id"), col("date"), col("hour")))
-    snapshot.write.mode("overwrite").parquet(manifestDir)
-    // the committed overwrite was the snapshot's last reader — release
-    // the anchor so reliable-checkpoint runs don't leak a manifest copy
-    // per rebuild (released on success only: on a failed overwrite the
-    // snapshot stays available for a retry)
-    graft.operators.Anchor.release(snapshot)
+    val folded = visibleFiles(new Path(manifestDir))
+    replace(folded, readOrEmpty(lakeDir, LakeSchema)
+      .filter(col("kind") === "body")
+      .select(col("book_id"), col("date"), col("hour")), manifestDir)
   }
 
-  private def manifestOrEmpty: DataFrame =
-    if (dirExists(manifestDir)) manifest
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ManifestSchema)
+  /** Rewrite hour partition (`date`, `hour`) into at most `numFiles`
+    * files: read exactly the files listed now and replace them. Returns
+    * the number of rows compacted. */
+  private[lake] def compactPartition(date: String, hour: String,
+      numFiles: Int): Long = {
+    val dir = s"$lakeDir/pdate=$date/phour=$hour"
+    val folded = visibleFiles(new Path(dir))
+    replace(folded, spark.read.schema(LakeSchema)
+      .parquet(folded.map(_.getPath.toString): _*).coalesce(numFiles), dir)
+  }
+
+  /** `dir` read with a fixed schema (no footer-inference job), or an empty
+    * frame of that schema while `dir` does not exist. */
+  private def readOrEmpty(dir: String, schema: StructType): DataFrame =
+    if (dirExists(dir)) spark.read.schema(schema).parquet(dir)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
   /** The index snapshot, brought up to date with a fresh listing of the
     * manifest (see the class doc). */
@@ -304,24 +338,26 @@ class SparkLakeStorage(spark: SparkSession, root: String) extends LakeStorage {
     else indexLock.synchronized {
       // list again under the lock: a fold that finished while this call
       // waited may already cover the files it listed
-      val listed = manifestFiles()
-      val cur = index
-      if (listed != cur.files) {
-        index =
+      var listed = manifestFiles()
+      while (listed != index.files) {
+        val cur = index
+        try index =
           if (cur.files.subsetOf(listed))
             ManifestIndex(listed,
               (cur.ids ++ readIds(listed -- cur.files)).sorted.distinct)
           else ManifestIndex(listed, readIds(listed).sorted.distinct)
+        catch {
+          // a replace deleted a listed file after renaming in the files
+          // that hold its rows: a fresh listing has those
+          case _: FileNotFoundException => listed = manifestFiles()
+        }
       }
       index
     }
   }
 
-  private def manifestFiles(): Set[String] = {
-    val dir = new Path(manifestDir)
-    visibleFiles(dir.getFileSystem(hadoopConf), dir)
-      .map(_.getPath.toString).toSet
-  }
+  private def manifestFiles(): Set[String] =
+    visibleFiles(new Path(manifestDir)).map(_.getPath.toString).toSet
 
   /** The `book_id`s of `files`, read on the driver. */
   private def readIds(files: Set[String]): Array[Long] = {
@@ -346,7 +382,7 @@ class SparkLakeStorage(spark: SparkSession, root: String) extends LakeStorage {
   // Manifest-backed: reads the tiny manifest snapshot, never the data
   // files — a listing over a 100 TB lake stays a metadata operation.
   override def listBooksDF: DataFrame =
-    manifestOrEmpty
+    readOrEmpty(manifestDir, ManifestSchema)
       .select(col("book_id")).distinct().orderBy(col("book_id"))
 
   override def listBooks(): Seq[Long] =
@@ -368,12 +404,6 @@ class SparkLakeStorage(spark: SparkSession, root: String) extends LakeStorage {
     val p = new Path(dir)
     p.getFileSystem(hadoopConf).exists(p)
   }
-
-  private def lakeOrEmpty: DataFrame =
-    if (dirExists(lakeDir)) lake
-    else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        lakeSchema)
 }
 
 /** In-memory adapter — realizes the reference README's envisioned

@@ -250,6 +250,41 @@ class LakeStorageSpec extends SparkSpec {
       assert(debris.isEmpty, s"staging debris: $debris")
     } finally exec.shutdown()
   }
+
+  test("a second storage sees every saved id throughout rebuildManifest") {
+    import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.DurationInt
+    val dir = Files.createTempDirectory("graft-rebuild-race-")
+      .toFile.getAbsolutePath
+    val storage = new SparkLakeStorage(spark, dir)
+    val ids = 1L to 20L
+    ids.grouped(5).foreach(g =>
+      storage.saveBooks(books(g.map(i => (i, s"h$i", s"b$i")): _*), ts))
+    val reader = new SparkLakeStorage(spark, dir)
+    assert(reader.listBooks() == ids)
+    val done = new AtomicBoolean(false)
+    val misses = new AtomicInteger(0)
+    val exec = java.util.concurrent.Executors.newSingleThreadExecutor()
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(exec)
+    try {
+      val probe = Future {
+        var calls = 0
+        while (!done.get) {
+          misses.addAndGet(ids.count(!reader.exists(_)))
+          if (reader.listBooks() != ids) misses.incrementAndGet()
+          calls += ids.size + 1
+        }
+        calls
+      }
+      try (1 to 3).foreach(_ => storage.rebuildManifest())
+      finally done.set(true)
+      val calls = Await.result(probe, 60.seconds)
+      assert(calls > 0)
+      assert(misses.get == 0, s"${misses.get} of $calls calls missed an id")
+      assert(reader.listBooks() == ids && storage.listBooks() == ids)
+    } finally exec.shutdown()
+  }
 }
 
 /** Manifest index: metadata-only exists/list + rebuild from ground truth. */
@@ -337,50 +372,28 @@ class ManifestSpec extends graft.SparkSpec {
   }
 
   test("with the manifest unchanged, exists/list run no Spark job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val root = Files.createTempDirectory("graft-manifest-jobs-")
       .toFile.getAbsolutePath
     val storage = new SparkLakeStorage(spark, root)
     save(storage, LocalDateTime.of(2026, 7, 1, 11, 0), 4L, 2L)
     assert(storage.exists(4L)) // folds the new manifest files in
-    // the listener bus is asynchronous: record every job start, then run
-    // a marked job and wait for it, so all earlier starts have arrived
-    val sc = spark.sparkContext
-    val started = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        started.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
-    }
-    def jobsUntilMarker(marker: String): Seq[String] = {
-      sc.setJobDescription(marker)
-      // an RDD action: exactly one job (a SQL count may run two)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setJobDescription(null)
-      Iterator.continually(started.poll(60, java.util.concurrent.TimeUnit.SECONDS))
-        .takeWhile(d => d != null && d != marker).toSeq
-    }
-    sc.addSparkListener(listener)
-    try {
-      jobsUntilMarker("before-probe")
+    val jobs = SparkJobs.started(spark) {
       for (_ <- 1 to 5) {
         assert(storage.exists(4L) && !storage.exists(3L))
         assert(storage.listBooks() == Seq(2L, 4L))
       }
-      val jobs = jobsUntilMarker("after-probe")
-      assert(jobs.isEmpty, s"exists/list ran ${jobs.size} Spark jobs")
-      // a manifest change by a second storage on the same root: the fold
-      // reads the new file on the driver
-      save(new SparkLakeStorage(spark, root),
-        LocalDateTime.of(2026, 7, 1, 12, 0), 3L, 9L)
-      jobsUntilMarker("after-save")
+    }
+    assert(jobs.isEmpty, s"exists/list ran ${jobs.size} Spark jobs")
+    // a manifest change by a second storage on the same root: the fold
+    // reads the new file on the driver
+    save(new SparkLakeStorage(spark, root),
+      LocalDateTime.of(2026, 7, 1, 12, 0), 3L, 9L)
+    val foldJobs = SparkJobs.started(spark) {
       assert(storage.exists(3L) && storage.exists(9L) && !storage.exists(5L))
       assert(storage.listBooks() == Seq(2L, 3L, 4L, 9L))
-      val foldJobs = jobsUntilMarker("after-fold")
-      assert(foldJobs.isEmpty,
-        s"exists/list after a save ran ${foldJobs.size} Spark jobs")
-    } finally sc.removeSparkListener(listener)
+    }
+    assert(foldJobs.isEmpty,
+      s"exists/list after a save ran ${foldJobs.size} Spark jobs")
   }
 }
 
