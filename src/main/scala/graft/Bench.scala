@@ -76,23 +76,12 @@ object Bench {
       if (focused) Nil
       else Seq("BENCH_QUERIES.json", s"BENCH_QUERIES_c$cpus.json"))
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit =
+    LedgerRunner.run("graft-bench")(sweep)
+
+  private def sweep(spark: SparkSession): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Optional comma-separated allowlist for focused iteration on a few
-    // queries; absent (the driver's invocation) = run everything.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val queries = only.fold(SparkEntry.queries)(names =>
-      SparkEntry.queries.filter { case (k, _) => names(k) })
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val queries = LedgerRunner.select(LedgerRunner.only)
     // ERROR-only logs: the bench's published surface is one JSON line,
     // and the driver's 2000-byte tail capture must hold it — WARN
     // noise (localCheckpoint reliability notes, AQE chatter) was
@@ -113,19 +102,17 @@ object Bench {
     // compile every query's generated code, so timed numbers reflect
     // steady state rather than which query happened to run first cold.
     queries.foreach { case (_, fn) =>
-      try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+      try LedgerRunner.noop(fn(spark, sfDir))
       catch { case _: Throwable => () }
     }
-    // noop sink: forces FULL evaluation of every output column (a bare
-    // count() would let Catalyst prune projection-only work to nothing).
     // Failures record -1 so the output distinguishes a broken query from
     // a fast one.
-    def timedSweep(): Seq[(String, Double)] = queries.toSeq.map {
+    def timedSweep(): Seq[(String, Double)] = queries.map {
       case (name, fn) =>
         val t0 = System.nanoTime()
         val elapsed =
           try {
-            fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+            LedgerRunner.noop(fn(spark, sfDir))
             (System.nanoTime() - t0) / 1e9
           } catch {
             case e: Throwable =>
@@ -146,8 +133,8 @@ object Bench {
     val results = passes.map { case (name, ps) => name -> minOfPasses(ps) }
     // basename only ("sf0.1"), not the full path
     val sfName = sfDir.split('/').filter(_.nonEmpty).lastOption.getOrElse(sfDir)
-    artifactPaths(sys.env.get("SPARK_GRAFT_BENCH_FULL"), only.isDefined,
-        cpus).foreach { path =>
+    artifactPaths(sys.env.get("SPARK_GRAFT_BENCH_FULL"),
+        LedgerRunner.only.isDefined, Graft.cpus.toString).foreach { path =>
       try {
         java.nio.file.Files.write(java.nio.file.Paths.get(path),
           (fullMapJson(passes, sfName) + "\n")
@@ -158,7 +145,5 @@ object Bench {
       }
     }
     println(renderLine(results, sfName))
-    graft.operators.Similarity.clearSharedGraphs(spark)
-    spark.stop()
   }
 }

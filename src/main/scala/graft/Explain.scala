@@ -12,19 +12,19 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val spark = Graft.session("graft-explain")
-    names.foreach { name =>
-      SparkEntry.queries.get(name) match {
-        case Some(fn) =>
-          println(s"\n========== $name ==========")
-          try println(fn(spark, sfDir).queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode))
-          catch { case e: Throwable =>
-            println(s"EXPLAIN FAILED: ${e.getMessage}")
-          }
-        case None => println(s"\n========== $name: UNKNOWN ==========")
+    LedgerRunner.run("graft-explain") { spark =>
+      names.foreach { name =>
+        SparkEntry.queries.get(name) match {
+          case Some(fn) =>
+            println(s"\n========== $name ==========")
+            try println(fn(spark, sfDir).queryExecution.explainString(
+              org.apache.spark.sql.execution.FormattedMode))
+            catch { case e: Throwable =>
+              println(s"EXPLAIN FAILED: ${e.getMessage}")
+            }
+          case None => println(s"\n========== $name: UNKNOWN ==========")
+        }
       }
     }
-    spark.stop()
   }
 }

@@ -117,7 +117,7 @@ object BlockBitsUtil {
   }
 }
 
-/** Column-API facade + SQL registration (same pattern as [[RollFns]]). */
+/** Column-API facade; [[GraftExtensions]] injects the SQL name. */
 object BlockFns {
 
   /** `graft_blockbits(payload, nBlocks)` as a Column. */
@@ -132,9 +132,4 @@ object BlockFns {
       case _ => throw new IllegalArgumentException(
         "graft_blockbits(payload, n) requires a literal integer block count")
     })
-
-  /** Register `graft_blockbits` for SQL texts on an existing session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      blockInfo._1, blockInfo._2, blockInfo._3)
 }

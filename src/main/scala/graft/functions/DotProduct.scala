@@ -114,5 +114,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(TokenFns.tokensInfo)
     ext.injectFunction(RollFns.rollInfo)
     ext.injectFunction(HadamardFns.hadamardInfo)
+    ext.injectFunction(BlockFns.blockInfo)
   }
 }

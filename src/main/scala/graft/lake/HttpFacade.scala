@@ -202,8 +202,10 @@ object IngestHttpServer {
   /** JSON string literal with full escaping. The reference's envelope is
     * produced by Jackson (Main.java:162-169); HttpFacadeSpec holds this
     * hand-rolled emitter to the same bar with a Jackson round-trip
-    * property over adversarial inputs. */
-  private[lake] def jstr(s: String): String = "\"" + s.flatMap {
+    * property over adversarial inputs. Verify writes oracle_sql.json
+    * with it, where one unescaped tab in a query's SQL would fail the
+    * whole file's parse. */
+  private[graft] def jstr(s: String): String = "\"" + s.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"

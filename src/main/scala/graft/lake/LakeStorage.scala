@@ -389,7 +389,7 @@ class SparkLakeStorage(spark: SparkSession, root: String) extends LakeStorage {
     ArraySeq.unsafeWrapArray(currentIndex().ids)
 
   override def lake: DataFrame =
-    spark.read.parquet(lakeDir).drop("pdate", "phour")
+    spark.read.schema(LakeSchema).parquet(lakeDir).drop("pdate", "phour")
 
   override def health: Map[String, String] =
     Map("status" -> "ok", "backend" -> "spark-parquet", "location" -> root)

@@ -9,8 +9,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * intermediates — the one place that decides HOW lineage is cut, so
   * the strategy is injectable per deployment instead of hard-coded at
   * every loop site (d13 label propagation, d17 postings, g04 PageRank,
-  * g08 walks, s23 MMR, t38 BPE merges) and at the lake's
-  * read-before-overwrite snapshots (compaction, manifest rebuild).
+  * g08 walks, s23 MMR, t38 BPE merges) and at the lake ingest's
+  * per-book status report (`IngestService.ingest`).
   *
   * Strategy:
   *   - If the session has a checkpoint directory configured

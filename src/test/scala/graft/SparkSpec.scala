@@ -19,16 +19,5 @@ object SparkSpec {
     * future parallel-execution switch from flaking them). */
   val localeLock: Object = new Object
 
-  lazy val shared: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val shared: SparkSession = Graft.session("graft-test", "local[4]", 4)
 }

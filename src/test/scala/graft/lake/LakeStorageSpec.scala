@@ -395,6 +395,21 @@ class ManifestSpec extends graft.SparkSpec {
     assert(foldJobs.isEmpty,
       s"exists/list after a save ran ${foldJobs.size} Spark jobs")
   }
+
+  test("building the lake frame runs no Spark job") {
+    val root = Files.createTempDirectory("graft-lake-jobs-")
+      .toFile.getAbsolutePath
+    val storage = new SparkLakeStorage(spark, root)
+    save(storage, LocalDateTime.of(2026, 7, 2, 8, 0), 1L, 2L)
+    save(storage, LocalDateTime.of(2026, 7, 2, 9, 0), 3L)
+    var lake: org.apache.spark.sql.DataFrame = null
+    val jobs = SparkJobs.started(spark) { lake = storage.lake }
+    // the fixed lake schema: no footer-inference job before an action
+    assert(jobs.isEmpty, s"building storage.lake ran ${jobs.size} Spark jobs")
+    assert(lake.select("book_id", "kind").collect().map(r =>
+      r.getLong(0) -> r.getString(1)).toSet ==
+      Set(1L, 2L, 3L).flatMap(i => Seq(i -> "header", i -> "body")))
+  }
 }
 
 /** The schema stored in a parquet file's footer. */
