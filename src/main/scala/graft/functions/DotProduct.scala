@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression,
@@ -95,11 +95,6 @@ object VectorOps {
     FunctionIdentifier("graft_dot"),
     new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
     (children: Seq[Expression]) => DotProduct(children(0), children(1)))
-
-  /** Register `graft_dot` for SQL texts on an existing session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      dotInfo._1, dotInfo._2, dotInfo._3)
 }
 
 /** `SparkSessionExtensions` hook: enable with

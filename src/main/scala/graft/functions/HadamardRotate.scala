@@ -133,9 +133,4 @@ object HadamardFns {
           "arguments: an array<float> column and two literal INT " +
           "block parameters")
     })
-
-  /** Register `graft_hadamard` for SQL texts on an existing session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      hadamardInfo._1, hadamardInfo._2, hadamardInfo._3)
 }

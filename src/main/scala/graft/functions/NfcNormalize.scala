@@ -81,9 +81,4 @@ object NfcFns {
       case _ => throw new IllegalArgumentException(
         "graft_nfc(text) takes exactly one argument")
     })
-
-  /** Register `graft_nfc` for SQL texts on an existing session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      nfcInfo._1, nfcInfo._2, nfcInfo._3)
 }

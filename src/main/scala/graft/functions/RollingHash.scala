@@ -133,9 +133,4 @@ object RollFns {
       case _ => throw new IllegalArgumentException(
         "graft_rollhash(text, w) requires a literal integer window")
     })
-
-  /** Register `graft_rollhash` for SQL texts on an existing session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      rollInfo._1, rollInfo._2, rollInfo._3)
 }

@@ -134,9 +134,4 @@ object TokenFns {
       case _ => throw new IllegalArgumentException(
         "graft_tokens(text) takes exactly one argument")
     })
-
-  /** Register `graft_tokens` for SQL texts on an existing session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      tokensInfo._1, tokensInfo._2, tokensInfo._3)
 }

@@ -102,9 +102,4 @@ object TextFns {
       case _ => throw new IllegalArgumentException(
         "graft_shingles(text, n) requires a literal integer width")
     })
-
-  /** Register `graft_shingles` for SQL texts on an existing session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      shinglesInfo._1, shinglesInfo._2, shinglesInfo._3)
 }

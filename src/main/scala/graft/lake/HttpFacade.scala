@@ -3,10 +3,9 @@ package graft.lake
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.time.LocalDateTime
+import java.util.concurrent.atomic.LongAdder
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-
-import graft.operators.Anchor
 
 /** The reference's HTTP contract (Main.java:47-169) over the library port
   * — the last reference-visible surface, so a client written against the
@@ -33,6 +32,16 @@ import graft.operators.Anchor
   *    positive integer". Ids are Long here (the port's widening).
   *  - any handler exception → 500 `{error:{code:"internal_error",
   *    message}}` (Main.java:186-189).
+  *  - `GET /metrics` (not in the reference) → one flat JSON object of
+  *    counters since the server started: requests per route
+  *    (`requests.<route>`), responses per status code
+  *    (`responses.<code>`), a cumulative latency histogram over fixed
+  *    bounds (`latency_ms.le_<bound>`, `latency_ms.le_inf` = all
+  *    requests) and the ingest statuses the service reported
+  *    (`ingest.<status>`). A request is counted before its response is
+  *    sent, so a client's later GET /metrics sees it; the response of
+  *    /metrics itself excludes its own request. The counters are
+  *    `LongAdder`s: counting takes no lock.
   *
   * Error envelope everywhere: `{"error":{"code":…,"message":…}}`
   * (Main.java:162-169).
@@ -46,20 +55,20 @@ import graft.operators.Anchor
   * ONE id through the batched [[IngestService.ingest]] pipeline, and
   * concurrent POSTs run their Spark jobs in parallel (no write gate; see
   * [[SparkLakeStorage]]'s publish protocol). On the parquet adapter a
-  * POST runs four Spark jobs: the payload and manifest writes, the
-  * report's checkpoint and the facade's read of it. The fetch does not
-  * shuffle, and once warm no code is compiled for a POST's id or time.
-  * The facade releases the report's anchor once it has read its row.
-  * Status and list answer from the parquet adapter's manifest index
-  * without a Spark job, also right after a save. Bulk ingest should still
-  * call the library with the full id list (one Spark job, fan-out = task
-  * parallelism), not loop over POSTs; the facade exists for client
-  * compatibility, not bulk throughput.
+  * POST runs one Spark job: the payload write, which also runs the fetch
+  * and the marker split. Its report is a local relation, so the facade's
+  * read of it runs no job. The fetch does not shuffle, and once warm no
+  * code is compiled for a POST's id or time. Status and list answer from
+  * the parquet adapter's manifest index without a Spark job, also right
+  * after a save. Bulk ingest should still call the library with the full
+  * id list (one Spark job, fan-out = task parallelism), not loop over
+  * POSTs; the facade exists for client compatibility, not bulk
+  * throughput.
   */
 class IngestHttpServer(service: IngestService, storage: LakeStorage,
     port: Int, clock: () => LocalDateTime = () => LocalDateTime.now()) {
 
-  import IngestHttpServer.{jstr, obj}
+  import IngestHttpServer.{Metrics, Response, jstr, obj}
 
   private val server = IngestHttpServer.bind(port)
   server.createContext("/", (ex: HttpExchange) => route(ex))
@@ -75,6 +84,8 @@ class IngestHttpServer(service: IngestService, storage: LakeStorage,
       t
     })
   server.setExecutor(pool)
+
+  private val metrics = new Metrics
 
   private def backend: String = storage.health.getOrElse("backend", "spark")
 
@@ -92,89 +103,90 @@ class IngestHttpServer(service: IngestService, storage: LakeStorage,
 
   private def route(ex: HttpExchange): Unit =
     try {
+      val t0 = System.nanoTime()
       val path = ex.getRequestURI.getPath.stripSuffix("/")
-      (ex.getRequestMethod, path) match {
-        case ("GET", "/health") => health(ex)
-        case ("GET", "/ingest/list") => list(ex)
+      val (name, handle) = (ex.getRequestMethod, path) match {
+        case ("GET", "/health") => ("health", () => health)
+        case ("GET", "/metrics") => ("metrics", () => 200 -> metrics.render)
+        case ("GET", "/ingest/list") => ("list", () => list)
         case ("GET", p) if p.startsWith("/ingest/status/") =>
-          withBookId(ex, p.stripPrefix("/ingest/status/"))(status(ex, _))
+          ("status", () => withBookId(p.stripPrefix("/ingest/status/"))(status))
         // the status/list sub-paths must NOT be captured as ingest ids:
         // the reference's router 404s a method+route mismatch (POST
         // /ingest/status/5 is no route in Main.java:47-55), it does not
         // try to ingest "status/5"
         case ("POST", p) if p.startsWith("/ingest/") &&
             !p.startsWith("/ingest/status") && p != "/ingest/list" =>
-          withBookId(ex, p.stripPrefix("/ingest/"))(ingest(ex, _))
+          ("ingest", () => withBookId(p.stripPrefix("/ingest/"))(ingest))
         case _ =>
-          error(ex, 404, "not_found", "Endpoint not found")
+          ("other", () => error(404, "not_found", "Endpoint not found"))
       }
-    } catch {
-      case e: Exception =>
-        error(ex, 500, "internal_error", String.valueOf(e.getMessage))
+      val (code, body) =
+        try handle()
+        catch {
+          case e: Exception =>
+            error(500, "internal_error", String.valueOf(e.getMessage))
+        }
+      metrics.request(name, code, System.nanoTime() - t0)
+      respond(ex, code, body)
     } finally ex.close()
 
-  private def health(ex: HttpExchange): Unit =
-    respond(ex, 200, obj(storage.health.toSeq.sortBy(_._1)
-      .map { case (k, v) => k -> jstr(v) }: _*))
+  private def health: Response =
+    200 -> obj(storage.health.toSeq.sortBy(_._1)
+      .map { case (k, v) => k -> jstr(v) }: _*)
 
-  private def ingest(ex: HttpExchange, bookId: Long): Unit = {
+  private def ingest(bookId: Long): Response = {
     val ts = clock()
     // The row is picked on the driver: a `book_id === bookId` filter would
     // inline the id into generated code and compile it on every POST.
-    val report = service.ingest(Seq(bookId), ts)
-    val st =
-      try report.collect().find(_.getAs[Long]("book_id") == bookId).get
-        .getAs[String]("status")
-      finally Anchor.release(report)
+    val st = service.ingest(Seq(bookId), ts).collect()
+      .find(_.getAs[Long]("book_id") == bookId).get.getAs[String]("status")
+    metrics.ingest(st)
     st match {
       case "downloaded" =>
-        respond(ex, 200, obj(
+        200 -> obj(
           "book_id" -> bookId.toString,
           "status" -> jstr("downloaded"),
           "path" -> jstr(storage.relativePathFor(bookId, ts)),
           "date" -> jstr(LakePaths.day(ts)),
           "hour" -> jstr(LakePaths.hour(ts)),
-          "backend" -> jstr(backend)))
+          "backend" -> jstr(backend))
       case "datalake_move_failed" =>
-        error(ex, 500, "datalake_move_failed",
-          "Failed to move files to datalake")
+        error(500, "datalake_move_failed", "Failed to move files to datalake")
       case _ => // download_failed | marker_split_failed | invalid_book_id
-        error(ex, 400, "download_failed", "Download failed or invalid book")
+        error(400, "download_failed", "Download failed or invalid book")
     }
   }
 
-  private def status(ex: HttpExchange, bookId: Long): Unit =
-    respond(ex, 200, obj(
+  private def status(bookId: Long): Response =
+    200 -> obj(
       "book_id" -> bookId.toString,
       "status" -> jstr(if (storage.exists(bookId)) "available"
         else "not_found"),
-      "backend" -> jstr(backend)))
+      "backend" -> jstr(backend))
 
-  private def list(ex: HttpExchange): Unit = {
+  private def list: Response = {
     val books = storage.listBooks()
-    respond(ex, 200, obj(
+    200 -> obj(
       "count" -> books.size.toString,
       "books" -> books.mkString("[", ",", "]"),
-      "backend" -> jstr(backend)))
+      "backend" -> jstr(backend))
   }
 
-  private def withBookId(ex: HttpExchange, raw: String)(
-      f: Long => Unit): Unit =
+  private def withBookId(raw: String)(f: Long => Response): Response =
     raw.toLongOption match {
       case None =>
-        error(ex, 400, "invalid_book_id", "book_id must be an integer")
+        error(400, "invalid_book_id", "book_id must be an integer")
       case Some(id) if id <= 0 =>
-        error(ex, 400, "invalid_book_id",
-          "book_id must be a positive integer")
+        error(400, "invalid_book_id", "book_id must be a positive integer")
       case Some(id) => f(id)
     }
 
   // ---- json (emitters live in the companion; spec property-tests them)
 
-  private def error(ex: HttpExchange, code: Int, errCode: String,
-      message: String): Unit =
-    respond(ex, code, obj("error" ->
-      obj("code" -> jstr(errCode), "message" -> jstr(message))))
+  private def error(code: Int, errCode: String, message: String): Response =
+    code -> obj("error" ->
+      obj("code" -> jstr(errCode), "message" -> jstr(message)))
 
   private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
     val bytes = body.getBytes(StandardCharsets.UTF_8)
@@ -198,6 +210,51 @@ object IngestHttpServer {
 
   private def bind(port: Int): HttpServer =
     HttpServer.create(new InetSocketAddress(port), 0)
+
+  /** A handler's status code and JSON body. */
+  private type Response = (Int, String)
+
+  private val Routes =
+    Seq("health", "metrics", "list", "status", "ingest", "other")
+  private val Codes = Seq("200", "400", "404", "500")
+  private val LatencyBoundsMs =
+    Seq(1L, 2L, 5L, 10L, 20L, 50L, 100L, 200L, 500L, 1000L, 2000L, 5000L)
+  private val Statuses = Seq("downloaded", "download_failed",
+    "marker_split_failed", "datalake_move_failed", "invalid_book_id")
+
+  /** The counters GET /metrics renders; see the class doc. */
+  private final class Metrics {
+    private def adders(keys: Seq[String]): Seq[(String, LongAdder)] =
+      keys.map(_ -> new LongAdder)
+    private val requests = adders(Routes)
+    private val responses = adders(Codes :+ "other")
+    // one per bound, then one above every bound; rendered cumulative
+    private val latency = Array.fill(LatencyBoundsMs.size + 1)(new LongAdder)
+    private val ingests = adders(Statuses)
+
+    private def find(counters: Seq[(String, LongAdder)], key: String) =
+      counters.collectFirst { case (k, a) if k == key => a }
+
+    def request(route: String, code: Int, nanos: Long): Unit = {
+      find(requests, route).foreach(_.increment())
+      find(responses, code.toString)
+        .getOrElse(responses.last._2).increment()
+      val bucket = LatencyBoundsMs.indexWhere(nanos <= _ * 1000000L)
+      latency(if (bucket < 0) LatencyBoundsMs.size else bucket).increment()
+    }
+
+    def ingest(status: String): Unit = find(ingests, status).foreach(_.increment())
+
+    def render: String = {
+      def fields(prefix: String, counters: Seq[(String, LongAdder)]) =
+        counters.map { case (k, a) => s"$prefix.$k" -> a.sum.toString }
+      val bounds = LatencyBoundsMs.map(b => s"le_$b") :+ "le_inf"
+      val cumulative = latency.map(_.sum).scanLeft(0L)(_ + _).tail
+      obj(fields("requests", requests) ++ fields("responses", responses) ++
+        bounds.zip(cumulative).map { case (b, n) => s"latency_ms.$b" -> n.toString } ++
+        fields("ingest", ingests): _*)
+    }
+  }
 
   /** JSON string literal with full escaping. The reference's envelope is
     * produced by Jackson (Main.java:162-169); HttpFacadeSpec holds this

@@ -1,22 +1,30 @@
 package graft.lake
 
 import java.io.{FileNotFoundException, IOException}
+import java.nio.file.NoSuchFileException
 import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
 import java.util.UUID
+import java.util.concurrent.locks.ReentrantLock
 
 import scala.collection.concurrent.TrieMap
 import scala.collection.immutable.ArraySeq
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.conf.HadoopParquetConfiguration
 import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.SimpleGroup
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.schema.MessageType
+import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.parquet.schema.Type.Repetition
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
@@ -105,20 +113,51 @@ trait LakeStorage {
   *
   * Publish protocol — the reference's stage-then-`ATOMIC_MOVE`
   * (IngestionService.java:62-71) at file granularity, and the only way a
-  * lake file is written or rewritten: saves, [[rebuildManifest]] and hour
-  * compaction ([[LakeMaintenance]]) all go through one `replace`. It
-  * writes its rows into a fresh `{root}/_staging/<uuid>`, renames the
-  * part files that hold rows into the destination directory, then
-  * deletes exactly the files it folded: the ones its caller listed before
-  * reading. A save folds nothing and makes two replaces, the payload rows
-  * into `datalake/pdate=d/phour=h/`, then the manifest rows into
-  * `manifest/`: data before manifest. A rebuild folds the `manifest/`
-  * files it listed, a compaction the hour's files it listed; a file a
-  * save renames in after that listing is never touched. Files become
-  * visible one rename at a time, as they do under FileOutputCommitter
-  * v1's job commit; a reader never sees a partial file. No two writes
-  * share a staging directory, so concurrent saves run their Spark jobs in
-  * parallel, in-process or not.
+  * lake file is written or rewritten: saves, [[rebuildManifest]], hour
+  * compaction ([[LakeMaintenance]]) and manifest checkpoints all write
+  * into a fresh `{root}/_staging/<uuid>`, rename the part files that hold
+  * rows into the destination directory, then delete exactly the files
+  * they folded: the ones their caller listed before reading. A save folds
+  * nothing. A rebuild folds the `manifest/` files it listed, a compaction
+  * the hour's files it listed; a file a save renames in after that
+  * listing is never touched. Files become visible one rename at a time,
+  * as they do under FileOutputCommitter v1's job commit; a reader never
+  * sees a partial file. No two writes share a staging directory, so
+  * concurrent saves run their Spark jobs in parallel, in-process or not.
+  *
+  * A save is one Spark job, the payload write, as Delta Lake splits its
+  * commits: the engine writes the data files, the driver the small log
+  * file. The payload rows are staged for `datalake/pdate=d/phour=h/`.
+  * The manifest rows (`book_id`, date, hour of each body row) are read
+  * from those staged part files while they are still in staging: once
+  * renamed into the hour, a compaction may fold and delete them. The
+  * driver reads them with parquet-hadoop, streaming the `book_id` and
+  * `kind` columns, and writes the save's one manifest file with
+  * `ParquetWriter`, whatever the save's size (a single Spark task would
+  * read the same files). Then the payload files are renamed in, then the
+  * manifest file: data before manifest. Since the manifest rows are read
+  * back from the payload files, the two agree even when the saved
+  * frame's source is not deterministic, without persisting it. The file
+  * has the parquet schema Spark would write: `date`/`hour` required,
+  * `book_id` required unless the saved frame's column is nullable.
+  *
+  * Manifest checkpoint — Delta's log checkpoint in miniature, over the
+  * small files only: after a save, if `manifest/` lists more than
+  * [[SparkLakeStorage.ManifestCheckpointFiles]] files smaller than
+  * [[SparkLakeStorage.CheckpointFileBytes]], the driver copies the rows
+  * of those small files into one file (`book_id`, `date`, `hour` all
+  * optional, as a rebuild writes them) and publishes it the same way,
+  * deleting exactly the files it read. A checkpoint never reads a larger
+  * file (a bulk save's, a rebuild's, a checkpoint's that outgrew the
+  * bound), so its cost follows the number of small files, not the size
+  * of the lake. A run of one-book saves thus leaves at most K+1 small
+  * files, plus one large file per 8,000 to 16,000 ids the checkpoints
+  * folded. One checkpoint runs at a time per storage; a save that finds
+  * one running skips it, and [[rebuildManifest]] waits for it. A failed
+  * checkpoint (say, a second storage's checkpoint deleted a file it
+  * listed) is dropped: its folded files go only after its file is
+  * renamed in, so the listing holds every row either way, and the next
+  * save tries again.
   *
   * Crash semantics: a crash before the renames leaves a
   * `_staging/<uuid>` that readers never read (they only read `datalake/`
@@ -131,24 +170,29 @@ trait LakeStorage {
   * are single-writer, as OPTIMIZE jobs are: two at once could both fold
   * the same files.
   *
-  * Each save publishes one manifest part file: its rows are three narrow
-  * columns, written by a single task.
-  *
   * Index contract — `exists` and `listBooks` answer from a driver-side
-  * snapshot of the manifest: the part files folded in so far and the
-  * sorted distinct ids they hold. Every call first lists `manifest/`
-  * (names starting with `_` or `.` skipped, as Spark's file index does)
-  * and folds in only the files the snapshot lacks, reading their
+  * snapshot of the manifest: the sorted distinct ids of each part file
+  * folded in so far, and of all of them. Every call first lists
+  * `manifest/` (names starting with `_` or `.` skipped, as Spark's file
+  * index does) and reads only the files the snapshot lacks, their
   * `book_id` column on the driver with parquet-hadoop, as Iceberg's
-  * planner reads its manifests: no Spark job. If a folded file is gone
-  * (manifest loss, a replace that folded it) the snapshot is rebuilt
-  * from the listing the same way. So every call sees every manifest
-  * commit made before it, from any writer, and no call runs a Spark job.
-  * A listed file deleted before it is read (by a replace that already
-  * renamed in the files holding its rows) sends the fold back to a fresh
-  * listing. One fold or rebuild runs at a time; a reader whose listing
-  * matches the snapshot never waits for it. Memory: 8 bytes per distinct
-  * id plus one path per manifest file.
+  * planner reads its manifests: no Spark job. A file that is gone
+  * (folded by a checkpoint or a rebuild, or lost) drops out with its
+  * ids, and the union is taken again in memory; no file is read twice.
+  * A listing is no snapshot: Hadoop names a directory's files, then
+  * reads each one's status, so a listing that a checkpoint overtakes
+  * misses both the file it renamed in (named too late) and the files it
+  * deleted (gone by their status read), and would drop their ids. So a
+  * listing counts only when the next one, begun after it ended, agrees:
+  * that one names the new file, and only a second fold finished within
+  * one listing could hide it again. A listed file deleted before or
+  * while it is read (by a rebuild or a checkpoint that already renamed
+  * in the file holding its rows) sends the fold back to a fresh listing.
+  * So every call sees every manifest commit made before it, from any
+  * writer, and no call runs a Spark job. One fold runs at a time; a
+  * reader whose listing matches the snapshot never waits for it.
+  * Memory: 8 bytes per id per manifest file that holds it, plus 8 per
+  * distinct id, plus one path per manifest file.
   */
 object SparkLakeStorage {
   /** Env-var names mirroring the reference's lake configuration surface
@@ -170,10 +214,34 @@ object SparkLakeStorage {
     new SparkLakeStorage(spark, full)
   }
 
+  /** A save that leaves more small manifest files than this checkpoints
+    * them into one file. */
+  private[lake] val ManifestCheckpointFiles = 16
+
+  /** A manifest file under this many bytes is small: a checkpoint may
+    * fold it. A manifest file takes 4 to 8 bytes per id (8 for random
+    * 63-bit ids, about 4.5 for Gutenberg-sized ones), so 8,000 to 16,000
+    * ids. */
+  private[lake] val CheckpointFileBytes = 64L * 1024
+
   private val ManifestSchema = StructType(Seq(
     StructField("book_id", LongType),
     StructField("date", StringType),
     StructField("hour", StringType)))
+
+  /** A manifest file's parquet schema, as Spark writes [[ManifestSchema]]
+    * with the given nullability of `book_id` and of `date`/`hour`. */
+  private def manifestType(id: Repetition, dateHour: Repetition): MessageType =
+    Types.buildMessage()
+      .primitive(PrimitiveTypeName.INT64, id).named("book_id")
+      .primitive(PrimitiveTypeName.BINARY, dateHour)
+        .as(LogicalTypeAnnotation.stringType()).named("date")
+      .primitive(PrimitiveTypeName.BINARY, dateHour)
+        .as(LogicalTypeAnnotation.stringType()).named("hour")
+      .named("spark_schema")
+
+  private val CheckpointType =
+    manifestType(Repetition.OPTIONAL, Repetition.OPTIONAL)
 
   /** The columns of every data file. `date`/`hour` equal the file's
     * `pdate`/`phour` directory labels. */
@@ -185,19 +253,59 @@ object SparkLakeStorage {
     StructField("date", StringType),
     StructField("hour", StringType)))
 
-  /** The manifest index's immutable snapshot: the manifest part files
-    * folded in and the sorted distinct ids they hold. */
-  private final case class ManifestIndex(files: Set[String], ids: Array[Long])
+  /** The manifest index's immutable snapshot: the sorted distinct ids of
+    * each manifest part file folded in, and of all of them. */
+  private final case class ManifestIndex(files: Map[String, Array[Long]],
+      ids: Array[Long])
 
-  /** Reads only `book_id`, projected from each file's own schema, so the
-    * files of both writers read: `saveBooks` writes the column `required`,
-    * `rebuildManifest` writes it `optional`. */
-  private object BookIdReadSupport extends GroupReadSupport {
+  /** Sorts `a` in place and returns its distinct values. */
+  private def sortedDistinct(a: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(a)
+    var n = 0
+    for (i <- a.indices) if (n == 0 || a(i) != a(n - 1)) {
+      a(n) = a(i)
+      n += 1
+    }
+    java.util.Arrays.copyOf(a, n)
+  }
+
+  /** The sorted distinct ids of `arrays` together, each sorted distinct:
+    * merged smallest first, so a large array is copied about once. */
+  private def union(arrays: Iterable[Array[Long]]): Array[Long] =
+    arrays.toSeq.sortBy(_.length).foldLeft(Array.emptyLongArray) { (a, b) =>
+      val out = new Array[Long](a.length + b.length)
+      var (i, j, n) = (0, 0, 0)
+      while (i < a.length || j < b.length) {
+        val x =
+          if (j == b.length || (i < a.length && a(i) <= b(j))) a(i) else b(j)
+        if (i < a.length && a(i) == x) i += 1
+        if (j < b.length && b(j) == x) j += 1
+        out(n) = x
+        n += 1
+      }
+      java.util.Arrays.copyOf(out, n)
+    }
+
+  /** Reads the columns `fields`, in that order, each projected from the
+    * file's own schema, so the files of every writer read: a save writes
+    * the manifest's columns `required`, a rebuild or a checkpoint
+    * `optional`. */
+  private final class Projection(fields: Seq[String]) extends GroupReadSupport {
     override def init(ctx: InitContext): ReadSupport.ReadContext = {
       val file = ctx.getFileSchema
       new ReadSupport.ReadContext(new MessageType(file.getName,
-        file.getType(file.getFieldIndex("book_id"))))
+        fields.map(f => file.getType(file.getFieldIndex(f))).asJava))
     }
+  }
+
+  /** Whether `e` reports a file that no longer exists. Hadoop's local
+    * filesystem reports a file deleted before it is opened with a
+    * FileNotFoundException, and one deleted after with NIO's
+    * NoSuchFileException, once parquet's vectored read opens its own
+    * channel. */
+  private def fileGone(e: Throwable): Boolean = e match {
+    case _: FileNotFoundException | _: NoSuchFileException => true
+    case _ => e.getCause != null && fileGone(e.getCause)
   }
 
   /** Spark's file index skips these names (`_SUCCESS`, `_temporary`,
@@ -210,74 +318,174 @@ object SparkLakeStorage {
 
 class SparkLakeStorage(spark: SparkSession, root: String) extends LakeStorage {
 
-  import SparkLakeStorage.{BookIdReadSupport, LakeSchema, ManifestIndex,
-    ManifestSchema, visible}
+  import SparkLakeStorage.{CheckpointFileBytes, CheckpointType, LakeSchema,
+    ManifestCheckpointFiles, ManifestIndex, ManifestSchema, Projection,
+    fileGone, manifestType, sortedDistinct, union, visible}
 
   private val lakeDir = s"$root/datalake"
   private val manifestDir = s"$root/manifest"
 
   private def hadoopConf = spark.sparkContext.hadoopConfiguration
 
-  @volatile private var index = ManifestIndex(Set.empty, Array.emptyLongArray)
+  @volatile private var index = ManifestIndex(Map.empty, Array.emptyLongArray)
   private val indexLock = new Object
+
+  // held by a checkpoint (skipped when busy) and by a rebuild (waits)
+  private val manifestFold = new ReentrantLock()
 
   override def saveBooks(books: DataFrame, ts: LocalDateTime): Unit = {
     val d = LakePaths.day(ts)
     val h = LakePaths.hour(ts)
-    // Persist: the data write and the manifest write both consume
-    // `books`; without a barrier the caller's upstream pipeline would run
-    // twice, and a non-deterministic source could make the manifest list
-    // books whose payload was never written.
-    val snap = books.persist()
-    try {
-      val src = snap.select(col("book_id").cast("long").as("book_id"),
-        col("header"), col("body"))
-      // A typed flatMap, not a projection over `lit(ts)`: Spark inlines
-      // timestamp literals into generated code, so every new `ts` would
-      // compile the write afresh. The file schema stays the one that
-      // projection wrote: only `book_id` and `text` may be null. The
-      // encoder is lenient so that it takes a java.sql.Timestamp also
-      // under spark.sql.datetime.java8API.enabled.
-      val nullable = Map("book_id" -> src.schema("book_id").nullable,
-        "text" -> Seq("header", "body").exists(src.schema(_).nullable))
-      val rows = RowEncoder.encoderFor(StructType(LakeSchema.map(f =>
-        f.copy(nullable = nullable.getOrElse(f.name, false)))), lenient = true)
-      val at = java.sql.Timestamp.valueOf(ts)
-      replace(Nil, src.flatMap(r => Seq(
+    val src = books.select(col("book_id").cast("long").as("book_id"),
+      col("header"), col("body"))
+    // A typed flatMap, not a projection over `lit(ts)`: Spark inlines
+    // timestamp literals into generated code, so every new `ts` would
+    // compile the write afresh. The file schema stays the one that
+    // projection wrote: only `book_id` and `text` may be null. The
+    // encoder is lenient so that it takes a java.sql.Timestamp also
+    // under spark.sql.datetime.java8API.enabled.
+    val idNullable = src.schema("book_id").nullable
+    val nullable = Map("book_id" -> idNullable,
+      "text" -> Seq("header", "body").exists(src.schema(_).nullable))
+    val rows = RowEncoder.encoderFor(StructType(LakeSchema.map(f =>
+      f.copy(nullable = nullable.getOrElse(f.name, false)))), lenient = true)
+    val at = java.sql.Timestamp.valueOf(ts)
+    val published = withStaging { data =>
+      src.flatMap(r => Seq(
           Row(r.get(0), "header", r.get(1), at, d, h),
-          Row(r.get(0), "body", r.get(2), at, d, h)))(rows),
-        s"$lakeDir/pdate=$d/phour=$h")
-      replace(Nil, src.select(col("book_id"), lit(d).as("date"),
-        lit(h).as("hour")).coalesce(1), manifestDir)
-    } finally snap.unpersist()
+          Row(r.get(0), "body", r.get(2), at, d, h)))(rows)
+        .write.parquet(data.toString)
+      val parts = stagedParts(data)
+      parts.nonEmpty && withStaging { manifest =>
+        val manifestPart = stageManifest(parts, idNullable, d, h, manifest)
+        publish(parts, s"$lakeDir/pdate=$d/phour=$h", Nil)
+        publish(Seq(manifestPart), manifestDir, Nil)
+        true
+      }
+    }
+    if (published) checkpointManifest()
   }
 
-  /** Write `rows` into a fresh `{root}/_staging/<uuid>`, rename its part
-    * files into `dest` (part-file names carry the write job's uuid, so they
-    * never collide there), then delete the `folded` files. Returns the
-    * number of rows published. Files without rows stay behind: Spark
-    * writes one schema-only file even for an empty write, and an empty
-    * save must not create a partition directory. */
+  /** Write the manifest rows of the staged payload `parts` (one per body
+    * row, of `date` `d` and `hour` `h`) into one file in staging
+    * directory `dir`, on the driver (see the class doc). */
+  private def stageManifest(parts: Seq[(FileStatus, Long)],
+      idNullable: Boolean, d: String, h: String,
+      dir: Path): (FileStatus, Long) = {
+    val schema = manifestType(
+      if (idNullable) Repetition.OPTIONAL else Repetition.REQUIRED,
+      Repetition.REQUIRED)
+    val (date, hour) = (Binary.fromString(d), Binary.fromString(h))
+    writeManifest(dir, schema) { put =>
+      readRows(parts.map(_._1.getPath), Seq("book_id", "kind")) { r =>
+        if (r.getString(1, 0) == "body")
+          put(manifestRow(schema, r, date, hour))
+      }
+    }
+  }
+
+  /** A manifest row of `schema`: the `book_id` of `r` (absent if null),
+    * `date` and `hour`. */
+  private def manifestRow(schema: MessageType, r: Group, date: Binary,
+      hour: Binary): Group = {
+    val g = new SimpleGroup(schema)
+    if (r.getFieldRepetitionCount(0) > 0) g.add(0, r.getLong(0, 0))
+    if (date != null) g.add(1, date)
+    if (hour != null) g.add(2, hour)
+    g
+  }
+
+  /** Fold the listed small manifest files into one once there are more
+    * than [[SparkLakeStorage.ManifestCheckpointFiles]] (see the class
+    * doc). */
+  private def checkpointManifest(): Unit =
+    if (manifestFold.tryLock()) try {
+      val folded = visibleFiles(new Path(manifestDir))
+        .filter(_.getLen < CheckpointFileBytes)
+      if (folded.size > ManifestCheckpointFiles) withStaging { dir =>
+        val part = writeManifest(dir, CheckpointType) { put =>
+          readRows(folded.map(_.getPath), Seq("book_id", "date", "hour")) { r =>
+            def str(i: Int) =
+              if (r.getFieldRepetitionCount(i) > 0) r.getBinary(i, 0) else null
+            put(manifestRow(CheckpointType, r, str(1), str(2)))
+          }
+        }
+        publish(Seq(part), manifestDir, folded)
+      }
+    } catch {
+      case scala.util.control.NonFatal(_) => // dropped; see the class doc
+    } finally manifestFold.unlock()
+
+  /** Run `body` on a fresh `{root}/_staging/<uuid>` path, then delete that
+    * directory. */
+  private def withStaging[T](body: Path => T): T = {
+    val dir = new Path(s"$root/_staging/${UUID.randomUUID()}")
+    try body(dir) finally dir.getFileSystem(hadoopConf).delete(dir, true)
+  }
+
+  /** The part files in staging directory `dir` that hold rows, with their
+    * row counts. Spark writes one schema-only file even for an empty
+    * write, and an empty save must not create a partition directory. */
+  private def stagedParts(dir: Path): Seq[(FileStatus, Long)] =
+    visibleFiles(dir).map(f => f -> rowCount(f)).filter(_._2 > 0)
+
+  /** Rename the staged `parts` into `dest` (part-file names carry a
+    * uuid, so they never collide there), then delete the `folded` files.
+    * Returns the number of rows published. */
+  private def publish(parts: Seq[(FileStatus, Long)], dest: String,
+      folded: Seq[FileStatus]): Long = {
+    val target = new Path(dest)
+    val fs = target.getFileSystem(hadoopConf)
+    if (parts.nonEmpty) fs.mkdirs(target)
+    parts.foreach { case (f, _) =>
+      if (!fs.rename(f.getPath, new Path(target, f.getPath.getName)))
+        throw new IOException(s"could not publish ${f.getPath} to $target")
+    }
+    folded.foreach { f =>
+      if (!fs.delete(f.getPath, false) && fs.exists(f.getPath))
+        throw new IOException(s"could not delete folded ${f.getPath}")
+    }
+    parts.map(_._2).sum
+  }
+
+  /** Write `rows` into staging with one Spark job, then publish them into
+    * `dest` in place of the `folded` files. */
   private def replace(folded: Seq[FileStatus], rows: DataFrame,
-      dest: String): Long = {
-    val staging = new Path(s"$root/_staging/${UUID.randomUUID()}")
-    val fs = staging.getFileSystem(hadoopConf)
-    try {
-      rows.write.parquet(staging.toString)
-      val target = new Path(dest)
-      val parts = visibleFiles(staging).map(f => f -> rowCount(f))
-        .filter(_._2 > 0)
-      if (parts.nonEmpty) fs.mkdirs(target)
-      parts.foreach { case (f, _) =>
-        if (!fs.rename(f.getPath, new Path(target, f.getPath.getName)))
-          throw new IOException(s"could not publish ${f.getPath} to $target")
-      }
-      folded.foreach { f =>
-        if (!fs.delete(f.getPath, false) && fs.exists(f.getPath))
-          throw new IOException(s"could not delete folded ${f.getPath}")
-      }
-      parts.map(_._2).sum
-    } finally fs.delete(staging, true)
+      dest: String): Long = withStaging { dir =>
+    rows.write.parquet(dir.toString)
+    publish(stagedParts(dir), dest, folded)
+  }
+
+  /** Write one parquet file of `schema` into `dir` on the driver, with
+    * the rows `emit` hands to it. Returns the file and its row count. */
+  private def writeManifest(dir: Path, schema: MessageType)(
+      emit: (Group => Unit) => Unit): (FileStatus, Long) = {
+    val file = new Path(dir, s"part-00000-${UUID.randomUUID()}-c000.snappy.parquet")
+    val writer = ExampleParquetWriter.builder(
+        HadoopOutputFile.fromPath(file, hadoopConf))
+      .withConf(hadoopConf)
+      .withType(schema)
+      .withCompressionCodec(CompressionCodecName.SNAPPY)
+      .build()
+    var n = 0L
+    try emit { g => writer.write(g); n += 1 } finally writer.close()
+    (file.getFileSystem(hadoopConf).getFileStatus(file), n)
+  }
+
+  /** Hands each row of `files` to `f`, read on the driver with only the
+    * columns `fields`. */
+  private def readRows(files: Seq[Path], fields: Seq[String])(
+      f: Group => Unit): Unit = {
+    val conf = new HadoopParquetConfiguration(hadoopConf)
+    val projection = new Projection(fields)
+    files.foreach { p =>
+      val reader = new ParquetReader.Builder[Group](
+          HadoopInputFile.fromPath(p, hadoopConf), conf) {
+        override def getReadSupport: ReadSupport[Group] = projection
+      }.build()
+      try Iterator.continually(reader.read()).takeWhile(_ != null).foreach(f)
+      finally reader.close()
+    }
   }
 
   // Reads the footer only. The options come from the session's Hadoop
@@ -307,10 +515,13 @@ class SparkLakeStorage(spark: SparkSession, root: String) extends LakeStorage {
     * manifest files listed now with the lake's body rows. Listed first, so
     * the data of every folded file is in the read. */
   def rebuildManifest(): Unit = {
-    val folded = visibleFiles(new Path(manifestDir))
-    replace(folded, readOrEmpty(lakeDir, LakeSchema)
-      .filter(col("kind") === "body")
-      .select(col("book_id"), col("date"), col("hour")), manifestDir)
+    manifestFold.lock()
+    try {
+      val folded = visibleFiles(new Path(manifestDir))
+      replace(folded, readOrEmpty(lakeDir, LakeSchema)
+        .filter(col("kind") === "body")
+        .select(col("book_id"), col("date"), col("hour")), manifestDir)
+    } finally manifestFold.unlock()
   }
 
   /** Rewrite hour partition (`date`, `hour`) into at most `numFiles`
@@ -334,44 +545,48 @@ class SparkLakeStorage(spark: SparkSession, root: String) extends LakeStorage {
     * manifest (see the class doc). */
   private def currentIndex(): ManifestIndex = {
     val seen = index
-    if (manifestFiles() == seen.files) seen
+    if (manifestFiles() == seen.files.keySet) seen
     else indexLock.synchronized {
       // list again under the lock: a fold that finished while this call
       // waited may already cover the files it listed
       var listed = manifestFiles()
-      while (listed != index.files) {
+      while (listed != index.files.keySet) {
         val cur = index
-        try index =
-          if (cur.files.subsetOf(listed))
-            ManifestIndex(listed,
-              (cur.ids ++ readIds(listed -- cur.files)).sorted.distinct)
-          else ManifestIndex(listed, readIds(listed).sorted.distinct)
-        catch {
+        try {
+          val added = (listed -- cur.files.keySet).toSeq
+            .map(f => f -> sortedDistinct(readIds(f)))
+          val kept = cur.files.filter { case (f, _) => listed(f) }
+          index = ManifestIndex(kept ++ added,
+            // a file gone may have held ids no other file holds
+            if (kept.size == cur.files.size) union(cur.ids +: added.map(_._2))
+            else union((kept ++ added).values))
+        } catch {
           // a replace deleted a listed file after renaming in the files
           // that hold its rows: a fresh listing has those
-          case _: FileNotFoundException => listed = manifestFiles()
+          case e: Exception if fileGone(e) => listed = manifestFiles()
         }
       }
       index
     }
   }
 
-  private def manifestFiles(): Set[String] =
-    visibleFiles(new Path(manifestDir)).map(_.getPath.toString).toSet
+  /** The manifest files, as two listings in a row agree on them (see the
+    * class doc). */
+  private def manifestFiles(): Set[String] = {
+    def list() = visibleFiles(new Path(manifestDir)).map(_.getPath.toString).toSet
+    var (prev, cur) = (list(), list())
+    while (cur != prev) {
+      prev = cur
+      cur = list()
+    }
+    cur
+  }
 
-  /** The `book_id`s of `files`, read on the driver. */
-  private def readIds(files: Set[String]): Array[Long] = {
+  /** The `book_id`s of manifest file `file`, read on the driver. */
+  private def readIds(file: String): Array[Long] = {
     val ids = Array.newBuilder[Long]
-    val conf = new HadoopParquetConfiguration(hadoopConf)
-    files.foreach { f =>
-      val reader = new ParquetReader.Builder[Group](
-          HadoopInputFile.fromPath(new Path(f), hadoopConf), conf) {
-        override def getReadSupport: ReadSupport[Group] = BookIdReadSupport
-      }.build()
-      try Iterator.continually(reader.read()).takeWhile(_ != null)
-        .filter(_.getFieldRepetitionCount(0) > 0)
-        .foreach(g => ids += g.getLong(0, 0))
-      finally reader.close()
+    readRows(Seq(new Path(file)), Seq("book_id")) { r =>
+      if (r.getFieldRepetitionCount(0) > 0) ids += r.getLong(0, 0)
     }
     ids.result()
   }

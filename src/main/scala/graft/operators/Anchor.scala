@@ -10,7 +10,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * the strategy is injectable per deployment instead of hard-coded at
   * every loop site (d13 label propagation, d17 postings, g04 PageRank,
   * g08 walks, s23 MMR, t38 BPE merges) and at the lake ingest's
-  * per-book status report (`IngestService.ingest`).
+  * per-book status report of a multi-id ingest (`IngestService.ingest`;
+  * a one-id ingest reports as a local relation and cuts nothing).
   *
   * Strategy:
   *   - If the session has a checkpoint directory configured

@@ -41,7 +41,6 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("registers as graft_dot for SQL texts") {
-    VectorOps.register(spark)
     df.createOrReplaceTempView("vecs")
     val v = spark.sql("SELECT graft_dot(a, b) FROM vecs WHERE id = 1")
       .head().getDouble(0)

@@ -33,7 +33,6 @@ class NfcNormalizeSpec extends SparkSpec {
   }
 
   test("SQL registration and whole-stage codegen path") {
-    NfcFns.register(spark)
     val got = spark.sql("SELECT graft_nfc('cafe\u0301') AS s")
     assert(got.collect().head.getString(0) == "caf\u00e9")
     // length drops from 5 code points to 4 after composition

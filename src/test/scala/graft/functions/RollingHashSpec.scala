@@ -91,7 +91,6 @@ class RollingHashSpec extends SparkSpec {
   }
 
   test("SQL registration serves graft_rollhash") {
-    graft.functions.RollFns.register(spark)
     val r = spark.sql(
       "SELECT graft_rollhash('a b c d e f', 5) AS h").collect().head
     assert(r.getSeq[Long](0).length == 2)

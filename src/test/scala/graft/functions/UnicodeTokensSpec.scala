@@ -47,7 +47,6 @@ class UnicodeTokensSpec extends SparkSpec {
     val got = Seq(Option("a b"), None).toDF("raw")
       .select(TokenFns.unicodeTokens(col("raw"))).collect().map(_.get(0))
     assert(got(1) == null)
-    TokenFns.register(spark)
     val viaSql = spark.sql("SELECT graft_tokens('ab, cd') AS t")
       .collect().head.getSeq[String](0)
     assert(viaSql == Seq("ab", ",", "cd"))

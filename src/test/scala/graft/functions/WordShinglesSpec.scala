@@ -52,7 +52,6 @@ class WordShinglesSpec extends SparkSpec {
   }
 
   test("registers as graft_shingles for SQL texts") {
-    TextFns.register(spark)
     import spark.implicits._
     Seq("a b c").toDF("text").createOrReplaceTempView("shingle_probe")
     val r = spark.sql(

@@ -306,6 +306,78 @@ class HttpFacadeSpec extends SparkSpec {
     } finally server.stop()
   }
 
+  test("a one-book POST on the parquet adapter runs one Spark job, " +
+      "service and facade together") {
+    val storage = new SparkLakeStorage(spark, "file:" +
+      java.nio.file.Files.createTempDirectory("graft-http-jobs").toString)
+    withServer(storage) { port =>
+      assert(post(port, "/ingest/1").code == 200) // warm
+      // a stored book, a failed download, a failed marker split: the
+      // observed counts of the payload write fix each status
+      for ((id, code) <- Seq(2L -> 200, 42L -> 400, 3L -> 400)) {
+        var r: Resp = null
+        val jobs = SparkJobs.started(spark) { r = post(port, s"/ingest/$id") }
+        assert(r.code == code, s"ingest $id: $r")
+        assert(jobs.size == 1, s"ingest $id ran ${jobs.size} jobs: $jobs")
+      }
+      assert(storage.listBooks() == Seq(1L, 2L))
+    }
+  }
+
+  test("GET /metrics counts requests per route, response codes, latency " +
+      "and ingest statuses as flat JSON") {
+    import scala.jdk.CollectionConverters._
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    withServer(new InMemoryLakeStorage(spark)) { port =>
+      def metrics(): Map[String, Long] = {
+        val r = get(port, "/metrics")
+        assert(r.code == 200, r.toString)
+        val node = mapper.readTree(r.body)
+        node.properties().asScala.toSeq.map { e =>
+          assert(e.getValue.isIntegralNumber, s"${e.getKey}: ${r.body}")
+          e.getKey -> e.getValue.longValue
+        }.toMap
+      }
+      val fresh = metrics()
+      val bounds = Seq(1, 2, 5, 10, 20, 50, 100, 200, 500, 1000, 2000, 5000)
+        .map(b => s"le_$b") :+ "le_inf"
+      val keys =
+        Seq("health", "metrics", "list", "status", "ingest", "other")
+          .map("requests." + _) ++
+        Seq("200", "400", "404", "500", "other").map("responses." + _) ++
+        bounds.map("latency_ms." + _) ++
+        Seq("downloaded", "download_failed", "marker_split_failed",
+          "datalake_move_failed", "invalid_book_id").map("ingest." + _)
+      assert(mapper.readTree(get(port, "/metrics").body).fieldNames()
+        .asScala.toSeq == keys)
+      assert(fresh == keys.map(_ -> 0L).toMap)
+
+      val sent = Seq(post(port, "/ingest/1"), post(port, "/ingest/42"),
+        post(port, "/ingest/3"), post(port, "/ingest/abc"),
+        get(port, "/ingest/status/1"), get(port, "/ingest/status/9"),
+        get(port, "/ingest/list"), get(port, "/health"), get(port, "/nope"),
+        post(port, "/metrics"), get(port, "/metrics/x"))
+      assert(sent.map(_.code) ==
+        Seq(200, 400, 400, 400, 200, 200, 200, 200, 404, 404, 404))
+      val m = metrics()
+      // the two earlier GET /metrics, not this one
+      assert(m("requests.metrics") == 2)
+      assert(m.filter(_._1.startsWith("requests.")) - "requests.metrics" ==
+        Map("requests.health" -> 1L, "requests.list" -> 1L,
+          "requests.status" -> 2L, "requests.ingest" -> 4L,
+          "requests.other" -> 3L))
+      assert(m.filter(_._1.startsWith("responses.")) == Map(
+        "responses.200" -> 7L, "responses.400" -> 3L, "responses.404" -> 3L,
+        "responses.500" -> 0L, "responses.other" -> 0L))
+      val hist = bounds.map(b => m(s"latency_ms.$b"))
+      assert(hist == hist.sorted && hist.last == 13L, hist)
+      assert(m.filter(_._1.startsWith("ingest.")) == Map(
+        "ingest.downloaded" -> 1L, "ingest.download_failed" -> 1L,
+        "ingest.marker_split_failed" -> 1L,
+        "ingest.datalake_move_failed" -> 0L, "ingest.invalid_book_id" -> 0L))
+    }
+  }
+
   test("PORT env semantics match the reference (Main.java:33,176-184)") {
     assert(IngestHttpServer.portFromEnv(Map.empty) == 7070)
     assert(IngestHttpServer.portFromEnv(Map("PORT" -> " 8088 ")) == 8088)

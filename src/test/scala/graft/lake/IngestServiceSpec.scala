@@ -40,6 +40,16 @@ object TaskRecordingFetcher extends DocumentFetcher {
   }
 }
 
+/** Fails the first fetch of each id, then serves [[NumberedFetcher]]'s
+  * book, counting the calls (local mode: the tasks share this JVM's
+  * object). */
+object FlakyFetcher extends DocumentFetcher {
+  val calls = new java.util.concurrent.ConcurrentHashMap[Long, Integer]()
+  override def fetch(id: Long): Option[String] =
+    if (calls.merge(id, 1, (a: Integer, b: Integer) => a + b) == 1) None
+    else NumberedFetcher.fetch(id)
+}
+
 class IngestServiceSpec extends SparkSpec {
 
   private val ts = LocalDateTime.of(2026, 5, 1, 12, 0, 0)
@@ -85,6 +95,63 @@ class IngestServiceSpec extends SparkSpec {
       3L -> "marker_split_failed",
       42L -> "download_failed"))
     assert(storage.listBooks().isEmpty)
+  }
+
+  test("a one-id ingest whose save fails before any job keeps each " +
+      "book's own failure status, and returns") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.DurationInt
+    val storage = new InMemoryLakeStorage(spark) {
+      override def saveBooks(books: org.apache.spark.sql.DataFrame,
+          at: LocalDateTime): Unit =
+        throw new RuntimeException("simulated datalake outage")
+    }
+    val service = new IngestService(spark, storage, FixtureFetcher)
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    // no job ran, so no observed counts ever arrive: waiting for them
+    // must not hang the call
+    val report = Await.result(Future(Seq(42L, 1L, 3L).flatMap(id =>
+      service.ingest(Seq(id), ts).collect()
+        .map(r => r.getLong(0) -> r.getString(1)))), 60.seconds)
+    assert(report == Seq(42L -> "download_failed",
+      1L -> "datalake_move_failed", 3L -> "marker_split_failed"))
+    assert(storage.listBooks().isEmpty)
+  }
+
+  test("a one-id ingest whose observed counts arrive late reports the " +
+      "fetch its save used") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd}
+    // the observation comes through the listener bus's shared queue,
+    // which a slow listener there holds back
+    val slow = new SparkListener {
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = Thread.sleep(500)
+    }
+    val storage = new SparkLakeStorage(spark, "file:" + java.nio.file.Files
+      .createTempDirectory("graft-late-observation").toString)
+    val service = new IngestService(spark, storage, FlakyFetcher)
+    spark.sparkContext.addSparkListener(slow)
+    val report =
+      try service.ingest(Seq(77L), ts).collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toSeq
+      finally spark.sparkContext.removeSparkListener(slow)
+    // the save's fetch failed: the book is not stored, and a second fetch
+    // (which would succeed) must not decide its status
+    assert(report == Seq(77L -> "download_failed"))
+    assert(storage.listBooks().isEmpty)
+    assert(FlakyFetcher.calls.get(77L) == 1)
+  }
+
+  test("a one-id ingest reports what a multi-id ingest reports, as a " +
+      "local relation") {
+    val service =
+      new IngestService(spark, new InMemoryLakeStorage(spark), FixtureFetcher)
+    val ids = Seq(-5L, 1L, 2L, 3L, 42L)
+    val many = service.ingest(ids, ts).collect().toSeq
+    val one = ids.map(id => service.ingest(Seq(id), ts))
+    assert(one.forall(_.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]))
+    assert(one.flatMap(_.collect()) == many)
+    assert(one.head.schema == service.ingest(ids, ts).schema)
   }
 
   test("status report covers the reference's full vocabulary " +

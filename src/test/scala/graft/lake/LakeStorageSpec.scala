@@ -396,6 +396,168 @@ class ManifestSpec extends graft.SparkSpec {
       s"exists/list after a save ran ${foldJobs.size} Spark jobs")
   }
 
+  test("a save of any size runs one Spark job and publishes one " +
+      "driver-written manifest file, of the same rows and parquet schema") {
+    import org.apache.parquet.schema.Type.Repetition
+    val ts = LocalDateTime.of(2026, 7, 3, 9, 0)
+    def saveInto(books: Int) = {
+      val root = Files.createTempDirectory("graft-manifest-one-")
+        .toFile.getAbsolutePath
+      val storage = new SparkLakeStorage(spark, root)
+      val jobs = SparkJobs.started(spark)(save(storage, ts, 1L to books: _*))
+      val files = new java.io.File(s"$root/manifest").list()
+        .filter(_.endsWith(".parquet"))
+      assert(files.length == 1, files.toSeq)
+      val rows = storage.manifest.collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq.sorted
+      (jobs, rows, ParquetFooter.schema(spark, s"$root/manifest/${files.head}"))
+    }
+    val (smallJobs, smallRows, smallSchema) = saveInto(1)
+    val (bigJobs, bigRows, bigSchema) = saveInto(5000)
+    // the payload write; the driver writes the manifest file
+    assert(smallJobs.size == 1, smallJobs)
+    assert(bigJobs.size == 1, bigJobs)
+    assert(smallRows == Seq((1L, "20260703", "09")))
+    assert(bigRows == (1L to 5000L).map((_, "20260703", "09")))
+    assert(bigSchema == smallSchema)
+    assert(Seq("book_id", "date", "hour").map(f =>
+      smallSchema.getType(smallSchema.getFieldIndex(f)).getRepetition) ==
+      Seq.fill(3)(Repetition.REQUIRED), smallSchema)
+  }
+
+  test("after 3K one-book saves manifest/ holds at most K+1 files, and a " +
+      "second storage reading throughout never misses an id") {
+    import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicLong}
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.DurationInt
+    val k = SparkLakeStorage.ManifestCheckpointFiles
+    val root = Files.createTempDirectory("graft-manifest-ckpt-")
+      .toFile.getAbsolutePath
+    val writer = new SparkLakeStorage(spark, root)
+    val reader = new SparkLakeStorage(spark, root)
+    val ts = LocalDateTime.of(2026, 7, 4, 10, 0)
+    def manifestFiles: Int = new java.io.File(s"$root/manifest").list()
+      .count(_.endsWith(".parquet"))
+    val acked = new AtomicLong(0L) // ids 1..acked are saved
+    val done = new AtomicBoolean(false)
+    val misses = new AtomicInteger(0)
+    val exec = java.util.concurrent.Executors.newSingleThreadExecutor()
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(exec)
+    try {
+      val probe = Future {
+        var calls = 0
+        while (!done.get) {
+          val n = acked.get
+          val listed = reader.listBooks().toSet
+          if (!(1L to n).forall(listed) || (n > 0 && !reader.exists(n)))
+            misses.incrementAndGet()
+          calls += 1
+        }
+        calls
+      }
+      var most = 0
+      try for (i <- 1L to 3L * k) {
+        save(writer, ts, i)
+        acked.set(i)
+        most = math.max(most, manifestFiles)
+      } finally done.set(true)
+      val calls = Await.result(probe, 60.seconds)
+      assert(calls > 0)
+      assert(misses.get == 0, s"${misses.get} of $calls calls missed an id")
+      assert(most <= k + 1, s"manifest/ held $most files")
+    } finally exec.shutdown()
+    val all = 1L to 3L * k
+    assert(writer.listBooks() == all && reader.listBooks() == all)
+    assert(new SparkLakeStorage(spark, root).listBooks() == all)
+  }
+
+  test("a checkpoint folds only the small manifest files, and a reader " +
+      "reads no manifest file twice") {
+    import scala.jdk.CollectionConverters._
+    spark.sparkContext.hadoopConfiguration.set("fs.vanishfs.impl",
+      classOf[VanishingTestFs].getName)
+    val k = SparkLakeStorage.ManifestCheckpointFiles
+    val dir = Files.createTempDirectory("graft-manifest-large-")
+      .toFile.getAbsolutePath
+    val root = s"vanishfs://$dir"
+    val writer = new SparkLakeStorage(spark, root)
+    val reader = new SparkLakeStorage(spark, root)
+    val ts = LocalDateTime.of(2026, 7, 6, 9, 0)
+    def manifestFiles = new java.io.File(s"$dir/manifest").listFiles()
+      .filter(_.getName.endsWith(".parquet")).toSeq
+    // ids that do not compress: their one manifest file is large
+    val rnd = new scala.util.Random(7)
+    val bulk = Seq.fill(20000)(rnd.nextLong() & Long.MaxValue)
+      .filter(_ > 1000L).distinct
+    save(writer, ts, bulk: _*)
+    val Seq(large) = manifestFiles
+    assert(large.length >= SparkLakeStorage.CheckpointFileBytes, large.length)
+    for (i <- 1L to k) save(writer, ts, i)
+    assert(manifestFiles.size == k + 1)
+    assert(reader.listBooks() == (bulk ++ (1L to k)).sorted)
+    // the (k+1)-th small file: the checkpoint folds the k+1 small files
+    save(writer, ts, k + 1L)
+    val after = manifestFiles
+    assert(after.size == 2 && after.contains(large), after)
+    VanishingTestFs.opened.clear()
+    val all = (bulk ++ (1L to k + 1)).sorted
+    assert(reader.listBooks() == all && reader.exists(k + 1L))
+    // the gone small files drop out; only the checkpoint's file is read
+    assert(VanishingTestFs.opened.asScala.toSet ==
+      after.filter(_ != large).map(_.getAbsolutePath).toSet)
+    assert(new SparkLakeStorage(spark, root).listBooks() == all)
+  }
+
+  test("a listing overtaken by a checkpoint loses no id, whichever " +
+      "listing of the call it is") {
+    spark.sparkContext.hadoopConfiguration.set("fs.vanishfs.impl",
+      classOf[VanishingTestFs].getName)
+    val k = SparkLakeStorage.ManifestCheckpointFiles
+    // run `hook` inside the n-th listing from now
+    def armAt(n: Int)(hook: () => Unit): Unit =
+      VanishingTestFs.onList.set(
+        if (n == 1) hook else () => armAt(n - 1)(hook))
+    for (n <- 1 to 3) {
+      val dir = Files.createTempDirectory("graft-manifest-overtaken-")
+        .toFile.getAbsolutePath
+      val root = s"vanishfs://$dir"
+      val writer = new SparkLakeStorage(spark, root)
+      val reader = new SparkLakeStorage(spark, root)
+      val ts = LocalDateTime.of(2026, 7, 7, 9, 0)
+      for (i <- 1L until k) save(writer, ts, i)
+      assert(reader.listBooks() == (1L until k))
+      // a file the reader has not read: its next call folds
+      save(writer, ts, k.toLong)
+      // that listing names the k files; then the (k+1)-th save checkpoints
+      // them into a file the listing did not name, and deletes them before
+      // the listing reads their status
+      armAt(n)(() => save(writer, ts, k + 1L))
+      assert(reader.listBooks() == (1L to k + 1L), s"listing $n")
+      assert(VanishingTestFs.onList.get == null, s"listing $n")
+      assert(new java.io.File(s"$dir/manifest").list()
+        .count(_.endsWith(".parquet")) == 1)
+    }
+  }
+
+  test("a manifest file deleted while the index reads it sends the fold " +
+      "back to a fresh listing, whichever exception reports the loss") {
+    spark.sparkContext.hadoopConfiguration.set("fs.vanishfs.impl",
+      classOf[VanishingTestFs].getName)
+    val dir = Files.createTempDirectory("graft-manifest-vanish-")
+      .toFile.getAbsolutePath
+    val root = s"vanishfs://$dir"
+    save(new SparkLakeStorage(spark, root),
+      LocalDateTime.of(2026, 7, 5, 9, 0), 1L)
+    val manifest = new java.io.File(s"$dir/manifest")
+    val Array(file) = manifest.listFiles().filter(_.getName.endsWith(".parquet"))
+    // a second file holds the same rows, as a checkpoint's file does
+    Files.copy(file.toPath, manifest.toPath.resolve("part-copy.parquet"))
+    VanishingTestFs.onOpen.add(file.getAbsolutePath)
+    val reader = new SparkLakeStorage(spark, root)
+    assert(reader.exists(1L) && reader.listBooks() == Seq(1L))
+    assert(!file.exists())
+  }
+
   test("building the lake frame runs no Spark job") {
     val root = Files.createTempDirectory("graft-lake-jobs-")
       .toFile.getAbsolutePath
@@ -431,6 +593,50 @@ object ParquetFooter {
   * Hadoop and Spark use in their own test suites. */
 class GraftTestFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("graftfs:///")
+}
+
+/** Local files under `vanishfs://`, where opening a path listed in
+  * [[VanishingTestFs.onOpen]] deletes it and fails as a read does when a
+  * file is deleted between its open and parquet's vectored read: with
+  * NIO's NoSuchFileException. Every path opened is added to
+  * [[VanishingTestFs.opened]]. A hook set in [[VanishingTestFs.onList]]
+  * runs once, inside the next listing, between naming the directory's
+  * files and reading their status, where the local filesystem's own
+  * listing can be overtaken too. */
+class VanishingTestFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("vanishfs:///")
+  override def open(f: org.apache.hadoop.fs.Path,
+      bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    val local = f.toUri.getPath
+    VanishingTestFs.opened.add(local)
+    if (VanishingTestFs.onOpen.remove(local)) {
+      java.nio.file.Files.delete(java.nio.file.Paths.get(local))
+      throw new java.nio.file.NoSuchFileException(local)
+    }
+    super.open(f, bufferSize)
+  }
+  override def listStatus(
+      f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    val hook = VanishingTestFs.onList.getAndSet(null)
+    val named = super.listStatus(f)
+    if (hook == null) named
+    else {
+      hook()
+      named.flatMap { s =>
+        try Some(getFileStatus(s.getPath))
+        catch { case _: java.io.FileNotFoundException => None }
+      }
+    }
+  }
+}
+
+object VanishingTestFs {
+  val onOpen: java.util.Set[String] =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  val opened: java.util.Set[String] =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  val onList =
+    new java.util.concurrent.atomic.AtomicReference[() => Unit](null)
 }
 
 /** The FileContext (AbstractFileSystem) face of [[GraftTestFs]], so the

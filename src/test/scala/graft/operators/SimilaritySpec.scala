@@ -1045,7 +1045,6 @@ class RangeSearchSpec extends graft.SparkSpec {
     assert(out == Map(1L -> false, 2L -> true, 3L -> true))
     // SQL registration rejects malformed calls with a named error, not
     // a raw IndexOutOfBounds/ClassCast from the function registry.
-    graft.functions.HadamardFns.register(spark)
     val e = intercept[Exception] {
       spark.sql("SELECT graft_hadamard(array(1.0f, 2.0f))").collect()
     }
