@@ -1,5 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import java.util.concurrent.{ConcurrentHashMap, TimeUnit}
+
+import scala.util.chaining._
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 object Bench {
 
@@ -50,14 +57,19 @@ object Bench {
     * is persisted (integer ms, full names; -1 = failed) alongside the min
     * the driver line reports, so jitter is visible in the artifact itself:
     * a pass-1/pass-2 spread is co-load, a min that moved is a real
-    * plan/code change. */
-  def fullMapJson(results: Seq[(String, Seq[Double])], sfName: String): String = {
+    * plan/code change. With `layers`, each query also carries one
+    * [[Layer]] record per pass, in pass order. */
+  def fullMapJson(results: Seq[(String, Seq[Double])], sfName: String,
+      layers: Map[String, Seq[Layer]] = Map.empty): String = {
     def ms(v: Double): Long = if (v >= 0) math.round(v * 1000) else -1L
     val qs = results
       .map { case (k, passes) =>
         val arr = passes.map(ms).mkString("[", ",", "]")
         "\"" + k + "\":{\"passes_ms\":" + arr +
-          ",\"min_ms\":" + ms(minOfPasses(passes)) + "}"
+          ",\"min_ms\":" + ms(minOfPasses(passes)) +
+          layers.get(k).fold("")(ls => ",\"layers\":" + ls.map(l =>
+            LayerFields.map(f => "\"" + f + "\":" + l(f)).mkString("{", ",", "}"))
+            .mkString("[", ",", "]")) + "}"
       }
       .mkString("{", ",", "}")
     s"""{"unit":"ms","sf":"$sfName","passes":2,"queries":$qs}"""
@@ -75,6 +87,111 @@ object Bench {
     explicit.map(Seq(_)).getOrElse(
       if (focused) Nil
       else Seq("BENCH_QUERIES.json", s"BENCH_QUERIES_c$cpus.json"))
+
+  /** One timed pass's `layers` record, keyed by [[LayerFields]]. */
+  type Layer = Map[String, Long]
+
+  /** A `layers` record's fields, in artifact order: the wall ms of the
+    * frame's build and of its noop write (-1 for a phase that threw), the
+    * jobs each phase started, then both phases' stages, tasks, task time
+    * (launch to finish), job time (submit to end), shuffle bytes, bytes
+    * spilled to disk and read from input, and the largest task's peak
+    * execution memory. */
+  val LayerFields: Seq[String] = Seq("build_ms", "action_ms", "build_jobs",
+    "action_jobs", "stages", "tasks", "task_ms", "job_wall_ms", "shuffle_read_bytes",
+    "shuffle_write_bytes", "spill_bytes", "input_bytes", "peak_exec_bytes")
+
+  /** Counts the Spark work of each timed pass. The pass's key and phase
+    * ride in the `graft.bench.layer` job property, which Spark copies
+    * from the submitting thread into every job the phase starts,
+    * broadcast and subquery jobs included; jobs without it (the warmup,
+    * any other caller) are not counted. Events arrive asynchronously:
+    * read a record after [[drain]]. */
+  private[graft] object Layers extends SparkListener {
+    private val Prop = "graft.bench.layer"
+    private val contexts = java.util.Collections.newSetFromMap(
+      new java.util.WeakHashMap[SparkContext, java.lang.Boolean]())
+    private val counts = new ConcurrentHashMap[(String, String), java.lang.Long]()
+    private val jobs = new ConcurrentHashMap[Int, (String, Long)]()
+    private val stages = new ConcurrentHashMap[Int, String]()
+
+    /** Listens on `spark`'s context from the first call on. */
+    def setup(spark: SparkSession): Unit = contexts.synchronized {
+      if (contexts.add(spark.sparkContext)) spark.sparkContext.addSparkListener(this)
+    }
+
+    private def add(key: String, kv: (String, Long)*): Unit = kv.foreach { case (k, v) =>
+      counts.merge((key, k), v, (a, b) => if (k.startsWith("peak")) math.max(a, b) else a + b)
+    }
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).flatMap(p => Option(p.getProperty(Prop))).foreach { p =>
+        val (key, phase) = p.splitAt(p.lastIndexOf('/'))
+        add(key, s"${phase.tail}_jobs" -> 1L)
+        jobs.put(e.jobId, (key, e.time))
+        // a stage that an earlier job ran and this one skips stays with
+        // the job whose tasks it ran
+        e.stageIds.foreach(stages.putIfAbsent(_, key))
+      }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = Option(jobs.remove(e.jobId))
+      .foreach { case (key, t0) => add(key, "job_wall_ms" -> (e.time - t0)) }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      Option(stages.get(e.stageInfo.stageId)).foreach(add(_, "stages" -> 1L))
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      Option(stages.get(e.stageId)).foreach { key =>
+        add(key, "tasks" -> 1L,
+          "task_ms" -> (e.taskInfo.finishTime - e.taskInfo.launchTime))
+        Option(e.taskMetrics).foreach(m => add(key,
+          "shuffle_read_bytes" -> m.shuffleReadMetrics.totalBytesRead,
+          "shuffle_write_bytes" -> m.shuffleWriteMetrics.bytesWritten,
+          "spill_bytes" -> m.diskBytesSpilled, "input_bytes" -> m.inputMetrics.bytesRead,
+          "peak_exec_bytes" -> m.peakExecutionMemory))
+      }
+
+    /** Runs `f` with its jobs counted as phase `name` of the pass `key`,
+      * and keeps its wall ms there if it returns. */
+    def phase[T](sc: SparkContext, key: String, name: String)(f: => T): T = {
+      val t0 = System.nanoTime()
+      sc.setLocalProperty(Prop, s"$key/$name")
+      try f.tap(_ =>
+        add(key, s"${name}_ms" -> math.round((System.nanoTime() - t0) / 1e6)))
+      finally sc.setLocalProperty(Prop, null)
+    }
+
+    /** Returns once every event posted before the call has reached this
+      * listener (a minute at most, should events be dropped): the bus
+      * delivers in order, and a marker job's end comes after them all. */
+    def drain(sc: SparkContext): Unit = {
+      val marker = s"drain-${java.util.UUID.randomUUID()}"
+      phase(sc, marker, "drain")(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + TimeUnit.MINUTES.toNanos(1)
+      while (!counts.containsKey((marker, "job_wall_ms")) &&
+        System.nanoTime() < deadline) Thread.sleep(5)
+    }
+
+    /** The record of the pass timed under `key`. */
+    def layer(key: String): Layer = LayerFields.map(f => f ->
+      Option(counts.get((key, f))).fold(
+        if (f == "build_ms" || f == "action_ms") -1L else 0L)(_.longValue)).toMap
+  }
+
+  /** One timed pass of one query, the unit of the sweep: the clock starts
+    * before the frame is built and stops after its noop write; -1 when
+    * either throws. Once [[Layers.setup]] has run on `spark`, its record
+    * is `Layers.layer(key)`; `key` must be new to [[Layers]]. */
+  private[graft] def timed(spark: SparkSession, name: String, key: String)(
+      build: => DataFrame): Double = {
+    val t0 = System.nanoTime()
+    try {
+      val df = Layers.phase(spark.sparkContext, key, "build")(build)
+      Layers.phase(spark.sparkContext, key, "action")(LedgerRunner.noop(df))
+      (System.nanoTime() - t0) / 1e9
+    } catch {
+      case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        -1.0
+    }
+  }
 
   def main(args: Array[String]): Unit =
     LedgerRunner.run("graft-bench")(sweep)
@@ -102,43 +219,32 @@ object Bench {
     // compile every query's generated code, so timed numbers reflect
     // steady state rather than which query happened to run first cold.
     queries.foreach { case (_, fn) =>
-      try LedgerRunner.noop(fn(spark, sfDir))
-      catch { case _: Throwable => () }
+      try LedgerRunner.noop(fn(spark, sfDir)) catch { case _: Throwable => () }
     }
     // Failures record -1 so the output distinguishes a broken query from
     // a fast one.
-    def timedSweep(): Seq[(String, Double)] = queries.map {
-      case (name, fn) =>
-        val t0 = System.nanoTime()
-        val elapsed =
-          try {
-            LedgerRunner.noop(fn(spark, sfDir))
-            (System.nanoTime() - t0) / 1e9
-          } catch {
-            case e: Throwable =>
-              System.err.println(s"[bench] $name failed: ${e.getMessage}")
-              -1.0
-          }
-        name -> elapsed
+    Layers.setup(spark)
+    def timedSweep(pass: Int): Seq[Double] = queries.map {
+      case (name, fn) => timed(spark, name, s"$name#$pass")(fn(spark, sfDir))
     }
     // TWO full timed sweeps (not back-to-back per query): a transient
     // co-load spike at any moment lands in pass 1 of some queries and
     // pass 2 of others, so the per-query min dodges it; per-query
     // double-timing would put both samples inside the same spike.
-    val pass1 = timedSweep()
-    val pass2 = timedSweep().toMap
-    val passes = pass1.map { case (name, p1) =>
-      name -> Seq(p1, pass2.getOrElse(name, -1.0))
-    }
+    val (pass1, pass2) = (timedSweep(1), timedSweep(2))
+    val passes = queries.map(_._1).zip(pass1.zip(pass2))
+      .map { case (name, (p1, p2)) => name -> Seq(p1, p2) }
     val results = passes.map { case (name, ps) => name -> minOfPasses(ps) }
     // basename only ("sf0.1"), not the full path
     val sfName = sfDir.split('/').filter(_.nonEmpty).lastOption.getOrElse(sfDir)
-    artifactPaths(sys.env.get("SPARK_GRAFT_BENCH_FULL"),
-        LedgerRunner.only.isDefined, Graft.cpus.toString).foreach { path =>
+    val paths = artifactPaths(sys.env.get("SPARK_GRAFT_BENCH_FULL"),
+      LedgerRunner.only.isDefined, Graft.cpus.toString)
+    if (paths.nonEmpty) Layers.drain(spark.sparkContext)
+    lazy val json = fullMapJson(passes, sfName, queries.map(_._1).map(name =>
+      name -> Seq(1, 2).map(pass => Layers.layer(s"$name#$pass"))).toMap)
+    paths.foreach { path =>
       try {
-        java.nio.file.Files.write(java.nio.file.Paths.get(path),
-          (fullMapJson(passes, sfName) + "\n")
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(path), json + "\n")
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] could not write $path: ${e.getMessage}")

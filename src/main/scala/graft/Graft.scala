@@ -21,7 +21,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     offset. Correctness tests must not rely on cross-zone equality.).
   *
   * The session starts at log level WARN; a caller whose output must stay
-  * quiet (Bench, JobProbe, perfbench) sets ERROR itself.
+  * quiet (Bench, perfbench) sets ERROR itself. No listener is installed
+  * here: Bench adds its own ([[Bench.Layers]]) to the session it times.
   */
 object Graft {
 
@@ -52,8 +53,8 @@ object Graft {
   }
 }
 
-/** How a harness (Bench, Verify, JobProbe, Explain) runs ledger queries:
-  * which ones, how a result is forced, and the session around them. */
+/** How a harness (Bench, Verify, Explain) runs ledger queries: which
+  * ones, how a result is forced, and the session around them. */
 object LedgerRunner {
 
   /** The `SPARK_GRAFT_ONLY` allowlist, for focused runs; absent, every

@@ -412,19 +412,33 @@ object Similarity {
     * would make near-zero projections flip sign across partitionings and
     * engines. Production ANN layers multi-table/multi-probe LSH on top;
     * the bucket string is also the storage partition key there. */
-  def signLshBuckets(embeddings: DataFrame, nBits: Int = 8): DataFrame = {
-    val comps = embeddings
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("i", "v")))
-    comps.join(broadcast(hyperplanes(embeddings.sparkSession, nBits)), "i")
-      .groupBy(col("vec_id"), col("j"))
-      .agg(sum(floor(col("v").cast("double") * 1000000).cast("long") *
-        col("s")).as("p"))
+  def signLshBuckets(embeddings: DataFrame, nBits: Int = 8): DataFrame =
+    signProjections(embeddings, nBits)
       .groupBy(col("vec_id"))
       .agg(array_join(transform(
         sort_array(collect_list(struct(col("j"), col("p")))),
         x => when(x.getField("p") > 0, "1").otherwise("0")), "")
         .as("bucket"))
-  }
+
+  /** `(vec_id, j, p)`: the exact integer projection of each vector onto
+    * each of `nBits` [[hyperplanes]], components quantized with
+    * `floor(v·1e6)` before the sum — the one projection stage behind
+    * the LSH buckets (s03) and the packed binary codes (s34/s35). */
+  private def signProjections(embeddings: DataFrame, nBits: Int): DataFrame =
+    embeddings
+      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("i", "v")))
+      .join(broadcast(hyperplanes(embeddings.sparkSession, nBits)), "i")
+      .groupBy(col("vec_id"), col("j"))
+      .agg(sum(floor(col("v").cast("double") * 1000000).cast("long") *
+        col("s")).as("p"))
+
+  /** `(vec_id, code)`: the `nBits` projection signs packed into one
+    * BIGINT, bit j set when projection j is positive. */
+  private def signCodes(embeddings: DataFrame, nBits: Int): DataFrame =
+    signProjections(embeddings, nBits)
+      .groupBy(col("vec_id"))
+      .agg(sum(when(col("p") > 0,
+        expr("CAST(power(2, j) AS BIGINT)")).otherwise(0L)).as("code"))
 
   /** Complete LSH-ANN pipeline: hash → same-bucket probe → exact-cosine
     * refine → per-query top-k. Few bits here (coarse buckets) keep
@@ -2316,17 +2330,7 @@ object Similarity {
   def hammingTopK(embeddings: DataFrame, nBits: Int = 16,
       nQueries: Int = 5, k: Int = 10): DataFrame = {
     require(nBits <= 52, s"codes pack via exact double pow2: $nBits")
-    val comps = embeddings
-      .select(col("vec_id"), posexplode(col("embedding"))
-        .as(Seq("i", "v")))
-    val codes = comps
-      .join(broadcast(hyperplanes(embeddings.sparkSession, nBits)), "i")
-      .groupBy(col("vec_id"), col("j"))
-      .agg(sum(floor(col("v").cast("double") * 1000000).cast("long") *
-        col("s")).as("p"))
-      .groupBy(col("vec_id"))
-      .agg(sum(when(col("p") > 0,
-        expr("CAST(power(2, j) AS BIGINT)")).otherwise(0L)).as("code"))
+    val codes = signCodes(embeddings, nBits)
     val queries = codes.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("code").as("qcode"))
     val scored = codes
@@ -2354,18 +2358,7 @@ object Similarity {
       k: Int = 10): DataFrame = {
     val maxBits = bitsConfigs.max
     require(maxBits <= 52, s"codes pack via exact double pow2: $maxBits")
-    val comps = embeddings
-      .select(col("vec_id"), posexplode(col("embedding"))
-        .as(Seq("i", "v")))
-    val codes = comps
-      .join(broadcast(hyperplanes(embeddings.sparkSession, maxBits)),
-        "i")
-      .groupBy(col("vec_id"), col("j"))
-      .agg(sum(floor(col("v").cast("double") * 1000000).cast("long") *
-        col("s")).as("p"))
-      .groupBy(col("vec_id"))
-      .agg(sum(when(col("p") > 0,
-        expr("CAST(power(2, j) AS BIGINT)")).otherwise(0L)).as("code"))
+    val codes = signCodes(embeddings, maxBits)
     val configs = embeddings.sparkSession
       .range(bitsConfigs.length.toLong)
       .select(element_at(

@@ -55,6 +55,28 @@ class EntrySpec extends SparkSpec {
     assert(Bench.minOfPasses(Seq(-1.0, -1.0)) == -1.0)
   }
 
+  test("bench artifact carries one layers record per pass, a failed one too") {
+    // the record's fields and their order are the artifact's schema;
+    // a pass whose build threw reads -1 for both phases' wall ms
+    val ok = Bench.LayerFields.zipWithIndex
+      .map { case (f, i) => f -> (i + 1).toLong }.toMap
+    val failed = Bench.Layers.layer("never-timed#1")
+    val json = Bench.fullMapJson(Seq("q01_x" -> Seq(1.234, -1.0),
+      "q02_y" -> Seq(0.5, 0.4)), "sf0.1", Map("q01_x" -> Seq(ok, failed)))
+    assert(json.contains(""""q01_x":{"passes_ms":[1234,-1],"min_ms":1234,""" +
+      """"layers":[{"build_ms":1,"action_ms":2,"build_jobs":3,""" +
+      """"action_jobs":4,"stages":5,"tasks":6,"task_ms":7,"job_wall_ms":8,""" +
+      """"shuffle_read_bytes":9,"shuffle_write_bytes":10,"spill_bytes":11,""" +
+      """"input_bytes":12,"peak_exec_bytes":13},""" +
+      """{"build_ms":-1,"action_ms":-1,"build_jobs":0,"action_jobs":0,""" +
+      """"stages":0,"tasks":0,"task_ms":0,"job_wall_ms":0,""" +
+      """"shuffle_read_bytes":0,"shuffle_write_bytes":0,"spill_bytes":0,""" +
+      """"input_bytes":0,"peak_exec_bytes":0}]}"""), json)
+    // a query without records keeps the layers-free shape
+    assert(json.contains(""""q02_y":{"passes_ms":[500,400],"min_ms":400}"""),
+      json)
+  }
+
   test("a focused bench run writes no default per-query artifact") {
     // SPARK_GRAFT_ONLY runs carry a partial map: writing it to the
     // default or core-suffixed file would clobber the committed

@@ -114,13 +114,42 @@ class PlanAuditSpec extends SparkSpec {
     "t51_unigram_score", // t50's model + 1-row corpus-totals crosses
     "c02_chunk_maxp") // b01's ONE-row corpus-stats cross, chunk units
 
+  /** What the two whole-ledger audits see in one entry's plan. A funnel is
+    * one single-partition exchange: the node name of a non-aggregate child,
+    * or, for an aggregate child, whether every mode is partial plus the
+    * modes. */
+  private case class Finding(name: String, cartesian: Boolean,
+      nestedLoop: Boolean, funnels: Seq[Either[String, (Boolean, String)]])
+
+  /** Both audits' findings, from one build of every ledger entry. Only
+    * verdicts are kept, so no entry's frame (or its anchors) outlives its
+    * own walk. */
+  private lazy val ledgerFindings: Seq[Finding] =
+    SparkEntry.queries.toSeq.map { case (name, fn) =>
+      val executed = fn(spark, sf).queryExecution.executedPlan
+      val plan = executed.toString
+      val funnels = physicalPlan(executed).collectWithSubqueries {
+        case e: ShuffleExchangeExec
+            if e.outputPartitioning == SinglePartition => unwrap(e.child)
+      }.map {
+        case agg: BaseAggregateExec => Right((
+          agg.aggregateExpressions.nonEmpty &&
+            agg.aggregateExpressions.forall(ae =>
+              ae.mode == Partial || ae.mode == PartialMerge),
+          agg.aggregateExpressions.map(_.mode).distinct.toString))
+        case other => Left(other.nodeName)
+      }
+      Finding(name, plan.contains("CartesianProduct"),
+        plan.contains("BroadcastNestedLoopJoin"), funnels)
+    }
+
   test("no cartesian products; nested-loop joins only where intended") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val plan = fn(spark, sf).queryExecution.executedPlan.toString
-      assert(!plan.contains("CartesianProduct"),
+    ledgerFindings.foreach { f =>
+      val name = f.name
+      assert(!f.cartesian,
         s"$name plans a cartesian product")
       if (!intentionalNestedLoop(name)) {
-        assert(!plan.contains("BroadcastNestedLoopJoin"),
+        assert(!f.nestedLoop,
           s"$name plans an unintended nested-loop join")
       }
     }
@@ -157,25 +186,16 @@ class PlanAuditSpec extends SparkSpec {
     // shuffle exchange whose output partitioning is SinglePartition —
     // including inside scalar-subquery plans — and assert its unwrapped
     // child is an aggregate running in Partial/PartialMerge mode.
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val plan = physicalPlan(
-        fn(spark, sf).queryExecution.executedPlan)
-      val funnels = plan.collectWithSubqueries {
-        case e: ShuffleExchangeExec
-            if e.outputPartitioning == SinglePartition => e
-      }
-      funnels.foreach { e =>
-        unwrap(e.child) match {
-          case agg: BaseAggregateExec =>
-            assert(agg.aggregateExpressions.nonEmpty &&
-              agg.aggregateExpressions.forall(ae =>
-                ae.mode == Partial || ae.mode == PartialMerge),
-              s"$name funnels a non-partial aggregate into one partition " +
-                s"(modes: ${agg.aggregateExpressions.map(_.mode).distinct})")
-          case other =>
-            fail(s"$name plans a non-aggregate single-partition exchange " +
-              s"(child: ${other.nodeName})")
-        }
+    ledgerFindings.foreach { f =>
+      val name = f.name
+      f.funnels.foreach {
+        case Right((partial, modes)) =>
+          assert(partial,
+            s"$name funnels a non-partial aggregate into one partition " +
+              s"(modes: $modes)")
+        case Left(child) =>
+          fail(s"$name plans a non-aggregate single-partition exchange " +
+            s"(child: $child)")
       }
     }
   }
