@@ -52,18 +52,18 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * response's body waits about 40 ms for the client's delayed ACK.
   *
   * Scale note: the facade is a control-plane veneer — each POST drives
-  * ONE id through the batched [[IngestService.ingest]] pipeline, and
-  * concurrent POSTs run their Spark jobs in parallel (no write gate; see
-  * [[SparkLakeStorage]]'s publish protocol). On the parquet adapter a
-  * POST runs one Spark job: the payload write, which also runs the fetch
-  * and the marker split. Its report is a local relation, so the facade's
-  * read of it runs no job. The fetch does not shuffle, and once warm no
-  * code is compiled for a POST's id or time. Status and list answer from
-  * the parquet adapter's manifest index without a Spark job, also right
-  * after a save. Bulk ingest should still call the library with the full
-  * id list (one Spark job, fan-out = task parallelism), not loop over
-  * POSTs; the facade exists for client compatibility, not bulk
-  * throughput.
+  * ONE id through [[IngestService.ingest]], whose one-id path is the
+  * reference's per-request one: the driver fetches the book, splits it
+  * as a local relation and, on the parquet adapter, writes its two rows
+  * itself. A POST runs no Spark job, and its report is a local relation
+  * that the facade reads without one; concurrent POSTs write in parallel
+  * (no write gate; see [[SparkLakeStorage]]'s publish protocol), and once
+  * warm no code is compiled for a POST's id or time. Status and list
+  * answer from the parquet adapter's manifest index without a Spark job,
+  * also right after a save. Bulk ingest should still call the library
+  * with the full id list (fetched in tasks, one Spark write, fan-out =
+  * task parallelism), not loop over POSTs; the facade exists for client
+  * compatibility, not bulk throughput.
   */
 class IngestHttpServer(service: IngestService, storage: LakeStorage,
     port: Int, clock: () => LocalDateTime = () => LocalDateTime.now()) {

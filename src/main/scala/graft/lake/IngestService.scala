@@ -2,11 +2,7 @@ package graft.lake
 
 import java.time.LocalDateTime
 
-import scala.concurrent.Await
-import scala.concurrent.duration.DurationInt
-import scala.util.Try
-
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
@@ -59,30 +55,23 @@ object GutenbergFetcher extends DocumentFetcher {
   * (Main.java:147-160): non-positive ids are rejected up front.
   *
   * The report takes one of two forms:
-  *  - One id (the HTTP POST): the fetch and the split run inside the
-  *    storage's write. `Dataset.observe` counts that write's
-  *    `download_failed` and `marker_split_failed` rows, and the counts
-  *    alone fix the id's status, so the report is a one-row local
-  *    relation: reading it runs no Spark job, and on the parquet adapter
-  *    the whole ingest is that one write. The counts are read only after
-  *    `saveBooks` returns. A save that returned ran its job, so they are
-  *    waited for, up to a minute: they come through Spark's listener bus,
-  *    late on a busy one, and the status must report the fetch that the
-  *    write used. A save that threw may have failed before its job and
-  *    never delivers them, so they are only peeked at. Without counts the
-  *    status comes from one more job over the split, which fetches again;
-  *    after a failed save every status it can give is a failure. A book
-  *    that failed to download or split keeps that status also when the
-  *    save failed.
-  *  - More ids: the split is persisted, so the write and the report
-  *    share one fetch, and the report is cut from it distributed
-  *    ([[graft.operators.Anchor.cut]]): a billion-id ingest reports
-  *    without a driver collect.
+  *  - One id (the HTTP POST): the reference's per-request path, with no
+  *    Spark job. The driver fetches the document and splits it as a
+  *    one-row local relation; the optimizer folds that projection into a
+  *    local relation (`ConvertToLocalRelation`), so collecting the status
+  *    runs no job, and the save gets the rows the driver already holds
+  *    (the parquet adapter writes them on the driver). One fetch serves
+  *    the status and the save, and a book that failed to download or
+  *    split is not saved. The report is a one-row local relation too.
+  *  - More ids: the fetch runs in tasks and the split is persisted, so the
+  *    write and the report share one fetch, and the report is cut from it
+  *    distributed ([[graft.operators.Anchor.cut]]): a billion-id ingest
+  *    reports without a driver collect.
   */
 class IngestService(spark: SparkSession, storage: LakeStorage,
     fetcher: DocumentFetcher) {
 
-  import IngestService.{ObservationWait, ReportSchema, failure, status}
+  import IngestService.{DocSchema, ReportSchema, failure, status}
 
   /** Ingest `ids` at timestamp `ts`; returns a status report
     * (book_id, status ∈ invalid_book_id | download_failed |
@@ -94,27 +83,11 @@ class IngestService(spark: SparkSession, storage: LakeStorage,
     if (ids.size == 1) ingestOne(ids.head, ts) else ingestMany(ids, ts)
 
   private def ingestOne(id: Long, ts: LocalDateTime): DataFrame = {
-    val counts = Observation()
-    // The fallback job below runs this observed plan too: a job that
-    // ends completes the observation, which Spark holds until then.
-    val split = MarkerSplit.withSplit(fetched(Seq(id))).observe(counts,
-      count_if(failure === "download_failed").as("download_failed"),
-      count_if(failure === "marker_split_failed").as("marker_split_failed"))
-    val moved = save(split, ts)
-    // A save that returned ran a job over the observed plan, so its counts
-    // come and are waited for; one that threw may have run none, and is
-    // only peeked at. A failed job delivers an empty row.
-    val observed =
-      if (moved) Try(Await.result(counts.future, ObservationWait)).toOption
-      else counts.future.value.flatMap(_.toOption)
-    val st =
-      if (id <= 0) "invalid_book_id"
-      else observed.filter(_.length > 0) match {
-        case None => split.select(status(moved)).head().getString(0)
-        case Some(c) => Seq("download_failed", "marker_split_failed")
-          .find(c.getAs[Long](_) != 0L)
-          .getOrElse(if (moved) "downloaded" else "datalake_move_failed")
-      }
+    val doc = spark.createDataFrame(java.util.List.of(
+      Row(id, if (id > 0) fetcher.fetch(id).orNull else null)), DocSchema)
+    val split = MarkerSplit.withSplit(doc)
+    val st = Option(split.select(failure).head().getString(0))
+      .getOrElse(if (save(split, ts)) "downloaded" else "datalake_move_failed")
     spark.createDataFrame(java.util.List.of(Row(id, st)), ReportSchema)
   }
 
@@ -157,9 +130,10 @@ class IngestService(spark: SparkSession, storage: LakeStorage,
 }
 
 object IngestService {
-  /** How long a one-id ingest whose save returned waits for the observed
-    * counts, which Spark's listener bus delivers after the save's job. */
-  private val ObservationWait = 1.minute
+  /** A fetched document, as `fetched` types it. */
+  private val DocSchema = StructType(Seq(
+    StructField("book_id", LongType, nullable = false),
+    StructField("text", StringType)))
 
   private val ReportSchema = StructType(Seq(
     StructField("book_id", LongType, nullable = false),

@@ -12,6 +12,8 @@ import scala.collection.immutable.ArraySeq
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.conf.HadoopParquetConfiguration
 import org.apache.parquet.example.data.Group
@@ -26,9 +28,14 @@ import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.parquet.schema.Type.Repetition
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Pure path/partition derivation — the reference's layout contract
   * (/root/reference .../S3DatalakeStorage.java:142-150, formatters :21-22).
@@ -125,20 +132,30 @@ trait LakeStorage {
   * sees a partial file. No two writes share a staging directory, so
   * concurrent saves run their Spark jobs in parallel, in-process or not.
   *
-  * A save is one Spark job, the payload write, as Delta Lake splits its
-  * commits: the engine writes the data files, the driver the small log
-  * file. The payload rows are staged for `datalake/pdate=d/phour=h/`.
-  * The manifest rows (`book_id`, date, hour of each body row) are read
-  * from those staged part files while they are still in staging: once
-  * renamed into the hour, a compaction may fold and delete them. The
-  * driver reads them with parquet-hadoop, streaming the `book_id` and
-  * `kind` columns, and writes the save's one manifest file with
-  * `ParquetWriter`, whatever the save's size (a single Spark task would
-  * read the same files). Then the payload files are renamed in, then the
-  * manifest file: data before manifest. Since the manifest rows are read
-  * back from the payload files, the two agree even when the saved
-  * frame's source is not deterministic, without persisting it. The file
-  * has the parquet schema Spark would write: `date`/`hour` required,
+  * The payload writer follows where the saved rows are. A frame whose
+  * optimized plan is a local relation (a `createDataFrame` or `toDF` of
+  * driver rows, and projections or filters of one, which the optimizer
+  * folds into it) already holds its rows on the driver: the driver writes
+  * them as the save's one part file, with the parquet writer a Spark task
+  * uses, so the file schema, footer metadata and codec are those a Spark
+  * write gives. A one-book POST saves such a frame, and a Spark job would
+  * only add scheduling, write planning and a committer to a 2-row file.
+  * Any other frame (the bulk ingest, a streaming micro-batch, the l02/l03
+  * lake) is computed by tasks and saved by one Spark job, the payload
+  * write. Either way the payload rows are staged for
+  * `datalake/pdate=d/phour=h/`, and the rest of the save is the driver's,
+  * as Delta Lake splits its commits: the engine writes the data files,
+  * the driver the small log file. The manifest rows (`book_id`, date,
+  * hour of each body row) are read from the staged part files while they
+  * are still in staging: once renamed into the hour, a compaction may fold
+  * and delete them. The driver reads them with parquet-hadoop, streaming
+  * the `book_id` and `kind` columns, and writes the save's one manifest
+  * file with `ParquetWriter`, whatever the save's size (a single Spark
+  * task would read the same files). Then the payload files are renamed
+  * in, then the manifest file: data before manifest. Since the manifest
+  * rows are read back from the payload files, the two agree even when the
+  * saved frame's source is not deterministic, without persisting it. The
+  * file has the parquet schema Spark would write: `date`/`hour` required,
   * `book_id` required unless the saved frame's column is nullable.
   *
   * Manifest checkpoint — Delta's log checkpoint in miniature, over the
@@ -338,23 +355,37 @@ class SparkLakeStorage(spark: SparkSession, root: String) extends LakeStorage {
     val h = LakePaths.hour(ts)
     val src = books.select(col("book_id").cast("long").as("book_id"),
       col("header"), col("body"))
-    // A typed flatMap, not a projection over `lit(ts)`: Spark inlines
-    // timestamp literals into generated code, so every new `ts` would
-    // compile the write afresh. The file schema stays the one that
-    // projection wrote: only `book_id` and `text` may be null. The
-    // encoder is lenient so that it takes a java.sql.Timestamp also
-    // under spark.sql.datetime.java8API.enabled.
+    // The file schema: only `book_id` and `text` may be null.
     val idNullable = src.schema("book_id").nullable
     val nullable = Map("book_id" -> idNullable,
       "text" -> Seq("header", "body").exists(src.schema(_).nullable))
-    val rows = RowEncoder.encoderFor(StructType(LakeSchema.map(f =>
-      f.copy(nullable = nullable.getOrElse(f.name, false)))), lenient = true)
+    val schema = StructType(LakeSchema.map(f =>
+      f.copy(nullable = nullable.getOrElse(f.name, false))))
     val at = java.sql.Timestamp.valueOf(ts)
     val published = withStaging { data =>
-      src.flatMap(r => Seq(
-          Row(r.get(0), "header", r.get(1), at, d, h),
-          Row(r.get(0), "body", r.get(2), at, d, h)))(rows)
-        .write.parquet(data.toString)
+      src.queryExecution.optimizedPlan match {
+        case local: LocalRelation if !local.isStreaming =>
+          val Seq(header, body, date, hour) =
+            Seq("header", "body", d, h).map(UTF8String.fromString)
+          val micros = DateTimeUtils.fromJavaTimestamp(at)
+          writeLocal(data, schema, local.data.iterator.flatMap { r =>
+            val id = if (r.isNullAt(0)) null else r.getLong(0)
+            Iterator(
+              InternalRow(id, header, r.getUTF8String(1), micros, date, hour),
+              InternalRow(id, body, r.getUTF8String(2), micros, date, hour))
+          })
+        case _ =>
+          // A typed flatMap, not a projection over `lit(ts)`: Spark inlines
+          // timestamp literals into generated code, so every new `ts` would
+          // compile the write afresh. The encoder is lenient so that it
+          // takes a java.sql.Timestamp also under
+          // spark.sql.datetime.java8API.enabled.
+          src.flatMap(r => Seq(
+              Row(r.get(0), "header", r.get(1), at, d, h),
+              Row(r.get(0), "body", r.get(2), at, d, h)))(
+              RowEncoder.encoderFor(schema, lenient = true))
+            .write.parquet(data.toString)
+      }
       val parts = stagedParts(data)
       parts.nonEmpty && withStaging { manifest =>
         val manifestPart = stageManifest(parts, idNullable, d, h, manifest)
@@ -364,6 +395,20 @@ class SparkLakeStorage(spark: SparkSession, root: String) extends LakeStorage {
       }
     }
     if (published) checkpointManifest()
+  }
+
+  /** Write `rows` of `schema` as one part file in staging directory `dir`
+    * on the driver, with the parquet writer a Spark task would use: the
+    * same file schema, footer metadata and codec. */
+  private def writeLocal(dir: Path, schema: StructType,
+      rows: Iterator[InternalRow]): Unit = {
+    val job = Job.getInstance(hadoopConf)
+    val files = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+    val task = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    val file = new Path(dir, s"part-00000-${UUID.randomUUID()}-c000" +
+      files.getFileExtension(task))
+    val writer = files.newInstance(file.toString, schema, task)
+    try rows.foreach(writer.write) finally writer.close()
   }
 
   /** Write the manifest rows of the staged payload `parts` (one per body

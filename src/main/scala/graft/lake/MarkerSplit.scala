@@ -62,19 +62,18 @@ object MarkerSplit {
       greatest(best, lastIndexOf(text, m)))
 
   /** Adds `split_ok`, `header`, `body` (null when rejected) derived from
-    * `textCol`. One narrow projection — no shuffle, codegen-friendly. */
+    * `textCol`. Narrow projections only — no shuffle, codegen-friendly.
+    * Three selects (the positions, the verdict, the slices), not one
+    * `withColumn` per column: each step re-analyses the whole plan, and on
+    * a one-row local relation that analysis is most of the split's cost. */
   def withSplit(df: DataFrame, textCol: String = "text"): DataFrame = {
     val t = col(textCol)
-    df.withColumn("_s", startPos(t))
-      .withColumn("_e", endPos(t))
-      .withColumn("split_ok",
-        col("_s") >= 0 && col("_e") >= 0 && col("_e") > col("_s"))
-      .withColumn("header",
-        when(col("split_ok"),
-          trim(t.substr(lit(1), col("_s")), TrimChars)))
-      .withColumn("body",
-        when(col("split_ok"),
-          trim(t.substr(col("_s") + 1, col("_e") - col("_s")), TrimChars)))
-      .drop("_s", "_e")
+    val (s, e) = (col("_s"), col("_e"))
+    val ok = col("split_ok")
+    df.select(col("*"), startPos(t).as("_s"), endPos(t).as("_e"))
+      .select(col("*"), (s >= 0 && e >= 0 && e > s).as("split_ok"))
+      .select(df.columns.toSeq.map(df.col) ++ Seq(ok,
+        when(ok, trim(t.substr(lit(1), s), TrimChars)).as("header"),
+        when(ok, trim(t.substr(s + 1, e - s), TrimChars)).as("body")): _*)
   }
 }

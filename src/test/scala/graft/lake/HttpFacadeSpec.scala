@@ -306,19 +306,19 @@ class HttpFacadeSpec extends SparkSpec {
     } finally server.stop()
   }
 
-  test("a one-book POST on the parquet adapter runs one Spark job, " +
+  test("a one-book POST on the parquet adapter runs no Spark job, " +
       "service and facade together") {
     val storage = new SparkLakeStorage(spark, "file:" +
       java.nio.file.Files.createTempDirectory("graft-http-jobs").toString)
     withServer(storage) { port =>
       assert(post(port, "/ingest/1").code == 200) // warm
       // a stored book, a failed download, a failed marker split: the
-      // observed counts of the payload write fix each status
+      // driver fetches, splits and writes each book it holds
       for ((id, code) <- Seq(2L -> 200, 42L -> 400, 3L -> 400)) {
         var r: Resp = null
         val jobs = SparkJobs.started(spark) { r = post(port, s"/ingest/$id") }
         assert(r.code == code, s"ingest $id: $r")
-        assert(jobs.size == 1, s"ingest $id ran ${jobs.size} jobs: $jobs")
+        assert(jobs.isEmpty, s"ingest $id ran ${jobs.size} jobs: $jobs")
       }
       assert(storage.listBooks() == Seq(1L, 2L))
     }

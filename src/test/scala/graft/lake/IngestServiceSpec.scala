@@ -108,8 +108,6 @@ class IngestServiceSpec extends SparkSpec {
     }
     val service = new IngestService(spark, storage, FixtureFetcher)
     implicit val ec: ExecutionContext = ExecutionContext.global
-    // no job ran, so no observed counts ever arrive: waiting for them
-    // must not hang the call
     val report = Await.result(Future(Seq(42L, 1L, 3L).flatMap(id =>
       service.ingest(Seq(id), ts).collect()
         .map(r => r.getLong(0) -> r.getString(1)))), 60.seconds)
@@ -118,27 +116,31 @@ class IngestServiceSpec extends SparkSpec {
     assert(storage.listBooks().isEmpty)
   }
 
-  test("a one-id ingest whose observed counts arrive late reports the " +
-      "fetch its save used") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd}
-    // the observation comes through the listener bus's shared queue,
-    // which a slow listener there holds back
-    val slow = new SparkListener {
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = Thread.sleep(500)
-    }
+  test("a one-id ingest runs no Spark job and fetches once: the status " +
+      "and the save use the same fetch") {
     val storage = new SparkLakeStorage(spark, "file:" + java.nio.file.Files
-      .createTempDirectory("graft-late-observation").toString)
+      .createTempDirectory("graft-one-fetch").toString)
     val service = new IngestService(spark, storage, FlakyFetcher)
-    spark.sparkContext.addSparkListener(slow)
-    val report =
-      try service.ingest(Seq(77L), ts).collect()
+    var report = Seq.empty[(Long, String)]
+    val jobs = SparkJobs.started(spark) {
+      report = service.ingest(Seq(77L), ts).collect()
         .map(r => r.getLong(0) -> r.getString(1)).toSeq
-      finally spark.sparkContext.removeSparkListener(slow)
-    // the save's fetch failed: the book is not stored, and a second fetch
-    // (which would succeed) must not decide its status
+    }
+    assert(jobs.isEmpty, s"a one-id ingest ran ${jobs.size} jobs: $jobs")
+    // the fetch failed: the book is not stored, and a second fetch (which
+    // would succeed) must not decide its status
     assert(report == Seq(77L -> "download_failed"))
     assert(storage.listBooks().isEmpty)
     assert(FlakyFetcher.calls.get(77L) == 1)
+    // the next ingest of the id fetches it once more, and stores it
+    val stored = SparkJobs.started(spark) {
+      report = service.ingest(Seq(77L), ts).collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toSeq
+    }
+    assert(stored.isEmpty, s"a one-id ingest ran ${stored.size} jobs: $stored")
+    assert(report == Seq(77L -> "downloaded"))
+    assert(storage.listBooks() == Seq(77L))
+    assert(FlakyFetcher.calls.get(77L) == 2)
   }
 
   test("a one-id ingest reports what a multi-id ingest reports, as a " +

@@ -149,18 +149,25 @@ class LakeMaintenanceSpec extends SparkSpec {
     val storage = new SparkLakeStorage(spark, root)
     val ts = LocalDateTime.of(2026, 4, 4, 6, 0)
     saveOne(storage, 1L, ts)
-    // the payload write; the driver writes the manifest file
-    val saveJobs = SparkJobs.started(spark)(saveOne(storage, 2L, ts))
+    // rows from tasks: the payload write; the driver writes the manifest
+    val saveJobs = SparkJobs.started(spark) {
+      import spark.implicits._
+      storage.saveBooks(spark.sparkContext.parallelize(Seq((2L, "h2", "b2")), 2)
+        .toDF("book_id", "header", "body"), ts)
+    }
     assert(saveJobs.size == 1, saveJobs)
+    // rows the driver holds: it writes the payload file too
+    val localJobs = SparkJobs.started(spark)(saveOne(storage, 3L, ts))
+    assert(localJobs.isEmpty, localJobs)
     var rows = 0L
     val compactJobs = SparkJobs.started(spark) {
       rows = LakeMaintenance.compactPartition(spark, root, "20260404", "06")
     }
     assert(compactJobs.size == 1, compactJobs)
-    assert(rows == 4)
+    assert(rows == 6)
     val rebuildJobs = SparkJobs.started(spark)(storage.rebuildManifest())
     assert(rebuildJobs.size == 1, rebuildJobs)
-    assert(storage.listBooks() == Seq(1L, 2L))
+    assert(storage.listBooks() == Seq(1L, 2L, 3L))
     // an hour with no files: nothing to fold, no directory made
     assert(LakeMaintenance.compactPartition(spark, root, "20260404", "07") == 0)
     assert(!new java.io.File(s"$root/datalake/pdate=20260404/phour=07").exists())

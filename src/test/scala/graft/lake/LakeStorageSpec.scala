@@ -18,6 +18,12 @@ class LakeStorageSpec extends SparkSpec {
     rows.toSeq.toDF("book_id", "header", "body")
   }
 
+  /** The frame `books` makes, with rows that come from tasks. */
+  private def distributed(rows: (Long, String, String)*) = {
+    import spark.implicits._
+    spark.sparkContext.parallelize(rows, 1).toDF("book_id", "header", "body")
+  }
+
   private def eachAdapter(f: LakeStorage => Unit): Unit = {
     val dir = Files.createTempDirectory("graft-test-lake-").toFile.getAbsolutePath
     f(new SparkLakeStorage(spark, dir))
@@ -214,14 +220,94 @@ class LakeStorageSpec extends SparkSpec {
   }
 
   test("an empty save publishes no file and no partition directory") {
-    val dir = Files.createTempDirectory("graft-empty-save-")
+    // rows the driver holds, and rows from tasks
+    for (empty <- Seq(books((1L, "h", "b")), distributed((1L, "h", "b")))
+        .map(_.filter(col("book_id") < 0))) {
+      val dir = Files.createTempDirectory("graft-empty-save-")
+        .toFile.getAbsolutePath
+      val storage = new SparkLakeStorage(spark, dir)
+      storage.saveBooks(empty, ts)
+      assert(!new java.io.File(s"$dir/datalake/pdate=20260307").exists())
+      assert(Option(new java.io.File(s"$dir/manifest").list()).toSeq.flatten
+        .forall(n => !n.endsWith(".parquet")))
+      assert(!storage.exists(1L) && storage.listBooks().isEmpty)
+    }
+  }
+
+  /** The payload file of a save of `frame` into a fresh lake, and the lake. */
+  private def savedPayload(frame: org.apache.spark.sql.DataFrame,
+      at: LocalDateTime): (java.io.File, SparkLakeStorage) = {
+    val dir = Files.createTempDirectory("graft-payload-").toFile.getAbsolutePath
+    val storage = new SparkLakeStorage(spark, dir)
+    storage.saveBooks(frame, at)
+    val Seq(file) = new java.io.File(s"$dir/datalake").listFiles().toSeq
+      .flatMap(_.listFiles()).flatMap(_.listFiles())
+      .filter(_.getName.endsWith(".parquet"))
+    (file, storage)
+  }
+
+  test("a driver-written payload file is the file Spark writes: parquet " +
+      "schema, Spark row metadata and rows") {
+    import spark.implicits._
+    // micros in the timestamp, a null header, and both nullabilities of
+    // `book_id`
+    val at = LocalDateTime.of(2026, 3, 7, 9, 5, 7, 123456000)
+    val rows = Seq((3L, "h3", "b3"), (1L, null, "b1"))
+    val nullableIds = rows.map { case (i, hd, b) => (java.lang.Long.valueOf(i), hd, b) }
+    val inputs = Seq(
+      books(rows: _*) -> distributed(rows: _*),
+      nullableIds.toDF("book_id", "header", "body") ->
+        spark.sparkContext.parallelize(nullableIds, 1).toDF("book_id", "header", "body"))
+    for ((local, fromTasks) <- inputs) {
+      assert(local.queryExecution.optimizedPlan.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+      assert(local.schema == fromTasks.schema)
+      val (driverFile, driverLake) = savedPayload(local, at)
+      val (sparkFile, sparkLake) = savedPayload(fromTasks, at)
+      def footer(f: java.io.File) = {
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.getPath),
+            spark.sparkContext.hadoopConfiguration))
+        try {
+          val meta = reader.getFooter.getFileMetaData
+          (meta.getSchema,
+            meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+        } finally reader.close()
+      }
+      val (driverSchema, driverRowMeta) = footer(driverFile)
+      assert(driverRowMeta != null)
+      assert(footer(driverFile) == footer(sparkFile),
+        s"$driverSchema $driverRowMeta")
+      def read(lake: SparkLakeStorage) =
+        lake.lake.orderBy("book_id", "kind").collect().map(_.toSeq).toSeq
+      assert(read(driverLake) == read(sparkLake))
+      assert(driverLake.lake.select("ts").distinct().collect()
+        .map(_.getTimestamp(0)).toSeq == Seq(java.sql.Timestamp.valueOf(at)))
+    }
+  }
+
+  test("an hour holding driver- and Spark-written payload files keeps its " +
+      "rows and ids through compactPartition and rebuildManifest") {
+    val dir = Files.createTempDirectory("graft-mixed-hour-")
       .toFile.getAbsolutePath
     val storage = new SparkLakeStorage(spark, dir)
-    storage.saveBooks(books((1L, "h", "b")).filter(col("book_id") < 0), ts)
-    assert(!new java.io.File(s"$dir/datalake/pdate=20260307").exists())
-    assert(Option(new java.io.File(s"$dir/manifest").list()).toSeq.flatten
-      .forall(n => !n.endsWith(".parquet")))
-    assert(!storage.exists(1L) && storage.listBooks().isEmpty)
+    storage.saveBooks(books((1L, "h1", "b1"), (2L, "h2", "b2")), ts)
+    storage.saveBooks(distributed((3L, "h3", "b3"), (4L, null, "b4")), ts)
+    def rows = storage.lake.orderBy("book_id", "kind").collect().map(_.toSeq).toSeq
+    def manifestIds = storage.manifest.select("book_id").collect()
+      .map(_.getLong(0)).toSeq.sorted
+    val before = rows
+    assert(before.size == 8)
+    assert(LakeMaintenance.compactPartition(spark, dir, "20260307", "09") == 8)
+    assert(new java.io.File(s"$dir/datalake/pdate=20260307/phour=09").list()
+      .count(_.endsWith(".parquet")) == 1)
+    assert(rows == before)
+    assert(storage.listBooks() == Seq(1L, 2L, 3L, 4L))
+    storage.rebuildManifest()
+    assert(rows == before)
+    assert(manifestIds == Seq(1L, 2L, 3L, 4L))
+    assert(storage.listBooks() == Seq(1L, 2L, 3L, 4L))
   }
 
   test("concurrent saves into one hour each land exactly once, no " +
@@ -324,6 +410,13 @@ class ManifestSpec extends graft.SparkSpec {
       .toDF("book_id", "header", "body"), ts)
   }
 
+  /** The books `save` saves, as a frame whose rows come from tasks. */
+  private def parallelized(ids: Seq[Long]) = {
+    import spark.implicits._
+    spark.sparkContext.parallelize(ids.map(i => (i, s"h$i", s"b$i")), 2)
+      .toDF("book_id", "header", "body")
+  }
+
   test("a second storage on the same root sees the first one's saves " +
       "at once") {
     val root = Files.createTempDirectory("graft-manifest-two-")
@@ -400,11 +493,15 @@ class ManifestSpec extends graft.SparkSpec {
       "driver-written manifest file, of the same rows and parquet schema") {
     import org.apache.parquet.schema.Type.Repetition
     val ts = LocalDateTime.of(2026, 7, 3, 9, 0)
-    def saveInto(books: Int) = {
+    // `distributed`: the rows come from tasks, not from the driver
+    def saveInto(books: Int, distributed: Boolean) = {
       val root = Files.createTempDirectory("graft-manifest-one-")
         .toFile.getAbsolutePath
       val storage = new SparkLakeStorage(spark, root)
-      val jobs = SparkJobs.started(spark)(save(storage, ts, 1L to books: _*))
+      val jobs = SparkJobs.started(spark) {
+        if (distributed) storage.saveBooks(parallelized(1L to books), ts)
+        else save(storage, ts, 1L to books: _*)
+      }
       val files = new java.io.File(s"$root/manifest").list()
         .filter(_.endsWith(".parquet"))
       assert(files.length == 1, files.toSeq)
@@ -412,14 +509,21 @@ class ManifestSpec extends graft.SparkSpec {
         .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq.sorted
       (jobs, rows, ParquetFooter.schema(spark, s"$root/manifest/${files.head}"))
     }
-    val (smallJobs, smallRows, smallSchema) = saveInto(1)
-    val (bigJobs, bigRows, bigSchema) = saveInto(5000)
+    val (smallJobs, smallRows, smallSchema) = saveInto(1, distributed = true)
+    val (bigJobs, bigRows, bigSchema) = saveInto(5000, distributed = true)
     // the payload write; the driver writes the manifest file
     assert(smallJobs.size == 1, smallJobs)
     assert(bigJobs.size == 1, bigJobs)
     assert(smallRows == Seq((1L, "20260703", "09")))
     assert(bigRows == (1L to 5000L).map((_, "20260703", "09")))
     assert(bigSchema == smallSchema)
+    // rows the driver holds: the driver writes the payload too
+    for (books <- Seq(1, 5000)) {
+      val (localJobs, localRows, localSchema) = saveInto(books, distributed = false)
+      assert(localJobs.isEmpty, localJobs)
+      assert(localRows == (1L to books.toLong).map((_, "20260703", "09")))
+      assert(localSchema == smallSchema)
+    }
     assert(Seq("book_id", "date", "hour").map(f =>
       smallSchema.getType(smallSchema.getFieldIndex(f)).getRepetition) ==
       Seq.fill(3)(Repetition.REQUIRED), smallSchema)

@@ -72,4 +72,61 @@ class MarkerSplitSpec extends SparkSpec {
     assert(r.getString(1) == The)
     assert(r.getString(2) == "body")
   }
+
+  /** The split as one `withColumn` per column: the reference for the
+    * plan of [[MarkerSplit.withSplit]]. */
+  private def stepwiseSplit(df: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.functions._
+    val t = col("text")
+    df.withColumn("_s", MarkerSplit.startPos(t))
+      .withColumn("_e", MarkerSplit.endPos(t))
+      .withColumn("split_ok",
+        col("_s") >= 0 && col("_e") >= 0 && col("_e") > col("_s"))
+      .withColumn("header", when(col("split_ok"),
+        trim(t.substr(lit(1), col("_s")), " \t\n\r")))
+      .withColumn("body", when(col("split_ok"),
+        trim(t.substr(col("_s") + 1, col("_e") - col("_s")), " \t\n\r")))
+      .drop("_s", "_e")
+  }
+
+  /** The optimized plans of `split` and of the save's selection from it,
+    * expression ids and plan ids blanked. */
+  private def plans(split: org.apache.spark.sql.DataFrame): Seq[String] = {
+    import org.apache.spark.sql.functions.col
+    Seq(split, split.filter(col("split_ok"))
+        .select(col("book_id"), col("header"), col("body")))
+      .map(_.queryExecution.optimizedPlan.toString
+        .replaceAll("#\\d+L?", "").replaceAll("plan_id=\\d+", ""))
+  }
+
+  test("the split optimizes to the plan of one withColumn per column, on " +
+      "the bulk ingest's input and on a stream's micro-batch") {
+    import spark.implicits._
+    // the bulk ingest's input: documents fetched in tasks
+    val (start, end) = (The, EndThe) // locals: the suite does not serialize
+    val fetched = spark.createDataset(spark.sparkContext.parallelize(1L to 4L, 2))
+      .mapPartitions(_.map(id => (id, s"$start ***\nbook $id\n$end")))
+      .toDF("book_id", "text")
+    assert(plans(MarkerSplit.withSplit(fetched)) == plans(stepwiseSplit(fetched)))
+    assert(plans(MarkerSplit.withSplit(fetched)).head.contains("AS split_ok"))
+    // a micro-batch, as StreamingIngest's foreachBatch receives it
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val input = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, String)]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Seq[String], Seq[String])]()
+    val q = input.toDF().toDF("book_id", "text").writeStream
+      .option("checkpointLocation", java.nio.file.Files
+        .createTempDirectory("graft-split-plan-").toString)
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        seen.add(plans(MarkerSplit.withSplit(batch)) -> plans(stepwiseSplit(batch)))
+        ()
+      }
+      .start()
+    try {
+      input.addData((5L, s"$The ***\nfive\n$EndThe"), (6L, "no markers"))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(!seen.isEmpty)
+    seen.forEach { case (compact, stepwise) => assert(compact == stepwise) }
+  }
 }
