@@ -75,13 +75,15 @@ object LedgerRunner {
   def noop(df: DataFrame): Unit =
     df.write.mode("overwrite").format("noop").save()
 
-  /** Run `body` on a fresh [[Graft.session]], then drop the shared
-    * similarity graphs and stop the session. */
+  /** Run `body` on a fresh [[Graft.session]], then release the
+    * session's artifacts ([[graft.operators.ModelArtifacts.release]]:
+    * stored index tables, demo lakes and stores, format copies and
+    * layouts are deleted, shared graphs unpinned) and stop the session. */
   def run(appName: String)(body: SparkSession => Unit): Unit = {
     val spark = Graft.session(appName)
     try body(spark)
     finally {
-      graft.operators.Similarity.clearSharedGraphs(spark)
+      graft.operators.ModelArtifacts.release(spark)
       spark.stop()
     }
   }

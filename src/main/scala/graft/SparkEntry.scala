@@ -23,12 +23,11 @@ object SparkEntry {
   // BPE-consuming queries (t43/t46/t47/t48) — a real pipeline trains
   // once and every downstream stage reads the artifact; re-training 8
   // driver-argmax rounds per query would quadruple the priced cost for
-  // no information.
-  private val mergeCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[(String, String)]]
+  // no information. Keyed by the fixture dir: building the documents
+  // frame just to key a hit would cost a footer read.
   private def trainedMerges(s: SparkSession,
       d: String): Seq[(String, String)] =
-    mergeCache.getOrElseUpdate((s, d),
+    graft.operators.ModelArtifacts.memo(s, "bpe-merges", d)(
       T.bpeTrain(Tables.documents(s, d), nMerges = 8).collect()
         .sortBy(_.getInt(0))
         .map(r => (r.getString(1), r.getString(2))).toSeq)
@@ -38,11 +37,8 @@ object SparkEntry {
   // bounded vocab collects) run once; every later pass reads the
   // trained model frame, which stays lazy only over its anchored
   // word-frequency table.
-  private val unigramCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), org.apache.spark.sql.DataFrame]
-  private def trainedUnigram(s: SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
-    unigramCache.getOrElseUpdate((s, d),
+  private def trainedUnigram(s: SparkSession, d: String): DataFrame =
+    graft.operators.ModelArtifacts.memo(s, "unigram-model", d)(
       T.unigramTrain(Tables.documents(s, d)))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -1,9 +1,9 @@
 package graft.lake
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.operators.ModelArtifacts
 
 /** Min/max file skipping — the data-skipping layer every table format
   * (Delta stats, Iceberg manifests) puts between the query and the scan:
@@ -69,30 +69,15 @@ object FileSkipping {
     (files, total, scan.filter(col(keyCol) >= lo && col(keyCol) <= hi))
   }
 
-  // One clustered write per (session, source) — l10 probes a stable
+  // One clustered write per (session, input) — l10 probes a stable
   // layout; same caching rationale as LakeQueries' lake/snapshot caches.
-  private val dirCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-
   private[lake] def clusteredOrdersDir(spark: SparkSession,
-      orders: DataFrame): String = {
-    val files = orders.inputFiles
-    val key =
-      if (files.nonEmpty) files.sorted.mkString(",")
-      else "plan:" + orders.queryExecution.analyzed.toString
-    dirCache.getOrElseUpdate((spark, key), {
-      val dirPath = Files.createTempDirectory("graft-skip-")
-      sys.addShutdownHook {
-        import java.util.Comparator
-        Files.walk(dirPath).sorted(Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(p => Files.deleteIfExists(p))
-      }
-      val dir = dirPath.toFile.getAbsolutePath
+      orders: DataFrame): String =
+    ModelArtifacts.stored("skip", orders, "") { dir =>
       writeClustered(orders.select("o_orderkey", "o_totalprice"),
         "o_orderkey", numFiles = 16, dir)
       dir
-    })
-  }
+    }
 
   /** l10: orders range-clustered on o_orderkey into 16 files, then a
     * narrow key-range query served through the manifest — the oracle is

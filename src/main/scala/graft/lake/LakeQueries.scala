@@ -1,10 +1,12 @@
 package graft.lake
 
-import java.nio.file.Files
 import java.time.LocalDateTime
 
+import org.apache.hadoop.fs.FileUtil
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.operators.ModelArtifacts
 
 /** Oracle-checkable query forms of the lake adapter's three entry points
   * (SURVEY §3 E1/E2/E3), driven off the `documents` fixture so the DuckDB
@@ -43,19 +45,15 @@ object LakeQueries {
       .select(col("doc_id"), col("split_ok"), col("header"), col("body"))
       .orderBy(col("doc_id"))
 
-  // One materialized lake per (session, source files): l02 and l03 probe
-  // the SAME lake, so don't pay the partitioned write twice per run. The
-  // key is the input's file set (distinct corpora never collide — a row
-  // COUNT key would, and counting would also cost a job per call).
-  private val lakeCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String),
-      SparkLakeStorage]
-
+  // One materialized lake per (session, corpus): l02 and l03 probe the
+  // SAME lake, so don't pay the partitioned write twice per run. Every
+  // demo store below is a session artifact keyed by the input's plan
+  // ([[ModelArtifacts.planKey]]: distinct corpora, in-memory ones
+  // included, never collide — a row COUNT key would, and counting would
+  // also cost a job per call).
   private def freshLake(spark: SparkSession,
-      documents: DataFrame): SparkLakeStorage = {
-    val key = documents.inputFiles.sorted.mkString(",")
-    lakeCache.getOrElseUpdate((spark, key), {
-      val dir = Files.createTempDirectory("graft-lake-").toFile.getAbsolutePath
+      documents: DataFrame): SparkLakeStorage =
+    ModelArtifacts.stored("lake", documents, "") { dir =>
       val storage = new SparkLakeStorage(spark, dir)
       storage.saveBooks(
         documents.select(col("doc_id").as("book_id"),
@@ -63,8 +61,7 @@ object LakeQueries {
           col("text").as("body")),
         FixedTs)
       storage
-    })
-  }
+    }
 
   /** E3 round-trip: save every fixture document into a fresh partitioned
     * parquet lake, read it back, list distinct body ids ascending with
@@ -92,13 +89,6 @@ object LakeQueries {
       .orderBy(col("book_id"))
   }
 
-  // One committed snapshot store per (session, source files) — same
-  // caching rationale as the lake above: l07 must not re-commit versions
-  // on every bench/verify invocation.
-  private val snapCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String),
-      SnapshotStore]
-
   /** l07: the l04 CDC merge executed THROUGH the snapshot commit path —
     * v0 = base snapshot, v1 = the change feed folded in by
     * [[SnapshotStore.applyChanges]]; the query reads the PUBLISHED v1
@@ -107,34 +97,19 @@ object LakeQueries {
   def snapshotMerge(spark: SparkSession, orders: DataFrame): DataFrame =
     committedStore(spark, orders).read().orderBy("o_orderkey")
 
-  /** The shared two-version demo store behind l07 and l11: v0 = base
-    * snapshot of orders, v1 = the l04 change feed committed through
-    * [[SnapshotStore.applyChanges]]. */
+  /** The shared two-version demo store behind l07 and l11 (committed
+    * once per session — l07 must not re-commit versions on every
+    * bench/verify invocation): v0 = base snapshot of orders, v1 = the
+    * l04 change feed committed through [[SnapshotStore.applyChanges]]. */
   private def committedStore(spark: SparkSession,
-      orders: DataFrame): SnapshotStore = {
-    // inputFiles is empty for non-file-backed DataFrames; keying on "" would
-    // collide two different in-memory inputs in one session, so fall back to
-    // the analyzed-plan string (a per-input identity) in that case.
-    val files = orders.inputFiles
-    val key =
-      if (files.nonEmpty) files.sorted.mkString(",")
-      else "plan:" + orders.queryExecution.analyzed.toString
-    snapCache.getOrElseUpdate((spark, key), {
-      val dirPath = Files.createTempDirectory("graft-snap-")
-      // deleteOnExit is a no-op on non-empty dirs; clean recursively.
-      sys.addShutdownHook {
-        import java.util.Comparator
-        Files.walk(dirPath).sorted(Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(p => Files.deleteIfExists(p))
-      }
-      val dir = dirPath.toFile.getAbsolutePath
+      orders: DataFrame): SnapshotStore =
+    ModelArtifacts.stored("snap", orders, "") { dir =>
       val s = new SnapshotStore(spark, dir)
       val base = Merge.demoBase(orders)
       s.commit(base)
       s.applyChanges(Merge.demoChangeFeed(base), Seq("o_orderkey"))
       s
-    })
-  }
+    }
 
   /** l11: [[SnapshotStore.diff]] between the two committed versions of
     * the l07 store — the CDC-READ loop closed: l04/l07 APPLY a change
@@ -168,29 +143,15 @@ object LakeQueries {
       .orderBy(col("version"))
   }
 
-  // One vacuum-demo store per (session, source files): v0 full commit,
+  // One vacuum-demo store per (session, input): v0 full commit,
   // v1 a full REWRITE (prices +1 — makes v0 pure history), v2 a
   // merge-on-read DELETE of the %10==3 keys on top of v1. Under
   // keepLast=1 the window holds v2 alone, v1 survives as v2's
   // marker-chain base (live data), v0 expires.
-  private val vacCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String),
-      SnapshotStore]
-
   private def vacuumDemoStore(spark: SparkSession,
-      orders: DataFrame): SnapshotStore = {
-    val files = orders.inputFiles
-    val key =
-      if (files.nonEmpty) files.sorted.mkString(",")
-      else "plan:" + orders.queryExecution.analyzed.toString
-    vacCache.getOrElseUpdate((spark, key), {
-      val dirPath = Files.createTempDirectory("graft-vac-")
-      sys.addShutdownHook {
-        import java.util.Comparator
-        Files.walk(dirPath).sorted(Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(p => Files.deleteIfExists(p))
-      }
-      val s = new SnapshotStore(spark, dirPath.toFile.getAbsolutePath)
+      orders: DataFrame): SnapshotStore =
+    ModelArtifacts.stored("vac", orders, "") { dir =>
+      val s = new SnapshotStore(spark, dir)
       val base = orders.select(col("o_orderkey"), col("o_orderstatus"),
         col("o_totalprice"))
       s.commit(base)
@@ -199,8 +160,7 @@ object LakeQueries {
       s.deleteByKeys(base.filter(col("o_orderkey") % 10 === 3)
         .select(col("o_orderkey")))
       s
-    })
-  }
+    }
 
   /** l18: the VACUUM DRY-RUN report over the three-version demo store
     * ([[SnapshotStore.vacuumPlan]] at keepLast=1) with each version's
@@ -232,29 +192,15 @@ object LakeQueries {
       .orderBy(col("version"))
   }
 
-  // One merge-on-read demo store per (session, source files): v0 = the
+  // One merge-on-read demo store per (session, input): v0 = the
   // full orders projection, v1 = a key-only DELETE version (no base
   // rewrite), v2 = an APPEND version restoring half the deleted keys.
   // l13 reads the final chain — the oracle reproduces the same set
   // algebra straight from the orders fixture.
-  private val morCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String),
-      SnapshotStore]
-
   private def morStore(spark: SparkSession,
-      orders: DataFrame): SnapshotStore = {
-    val files = orders.inputFiles
-    val key =
-      if (files.nonEmpty) files.sorted.mkString(",")
-      else "plan:" + orders.queryExecution.analyzed.toString
-    morCache.getOrElseUpdate((spark, key), {
-      val dirPath = Files.createTempDirectory("graft-mor-")
-      sys.addShutdownHook {
-        import java.util.Comparator
-        Files.walk(dirPath).sorted(Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(p => Files.deleteIfExists(p))
-      }
-      val s = new SnapshotStore(spark, dirPath.toFile.getAbsolutePath)
+      orders: DataFrame): SnapshotStore =
+    ModelArtifacts.stored("mor", orders, "") { dir =>
+      val s = new SnapshotStore(spark, dir)
       val base = orders.select(col("o_orderkey"), col("o_orderstatus"),
         col("o_totalprice"))
       s.commit(base)
@@ -267,8 +213,7 @@ object LakeQueries {
         .select(col("o_orderkey"), col("o_orderstatus"),
           (col("o_totalprice") + lit(5.0)).as("o_totalprice")))
       s
-    })
-  }
+    }
 
   /** l13: merge-on-read delete + append chain read back through
     * [[SnapshotStore.read]] — v1 subtracts keys without rewriting v0,
@@ -279,13 +224,9 @@ object LakeQueries {
   def morChainRead(spark: SparkSession, orders: DataFrame): DataFrame =
     morStore(spark, orders).read().orderBy(col("o_orderkey"))
 
-  // One replace-where demo lake per (session, source files): the base
+  // One replace-where demo lake per (session, input): the base
   // table partitioned by priority, then the URGENT partition replaced
   // via DYNAMIC partition overwrite.
-  private val rwCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String),
-      String]
-
   /** l15: DYNAMIC PARTITION OVERWRITE (Delta's `replaceWhere`, Hive's
     * `INSERT OVERWRITE ... PARTITION`) — the partition-scoped rewrite
     * every backfill/correction job runs: the lake holds `orders`
@@ -304,21 +245,7 @@ object LakeQueries {
     * replaceWhere commit (the README interop table's mapping). */
   def replaceWhereRead(spark: SparkSession,
       orders: DataFrame): DataFrame = {
-    val files = orders.inputFiles
-    val key =
-      if (files.nonEmpty) files.sorted.mkString(",")
-      else "plan:" + orders.queryExecution.analyzed.toString
-    val dir = rwCache.getOrElseUpdate((spark, key), {
-      val dirPath = Files.createTempDirectory("graft-rw-")
-      sys.addShutdownHook {
-        import java.util.Comparator
-        Files.walk(dirPath)
-          .sorted(Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(p => Files.deleteIfExists(p))
-      }
-      // parquet refuses an existing path and createTempDirectory made
-      // one — the lake lives in a subdirectory
-      val d = dirPath.toFile.getAbsolutePath + "/lake"
+    val dir = ModelArtifacts.stored("rw", orders, "") { d =>
       val base = orders.select(col("o_orderkey"), col("o_totalprice"),
         col("o_orderpriority"))
       base.write.partitionBy("o_orderpriority").parquet(d)
@@ -330,19 +257,12 @@ object LakeQueries {
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("o_orderpriority").parquet(d)
       d
-    })
+    }
     spark.read.parquet(dir)
       .select(col("o_orderkey"), col("o_orderpriority"),
         col("o_totalprice"))
       .orderBy(col("o_orderkey"))
   }
-
-  // One WAP-exercised store per (session, input) — the stage/audit/
-  // publish loop must not re-run on every bench/verify invocation.
-  // Value = the store plus the audit ledger recorded AT publish time.
-  private val wapCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String),
-      (SnapshotStore, Seq[(String, Long, Long, Long, Boolean)])]
 
   /** l16: WRITE–AUDIT–PUBLISH (the Iceberg/Netflix WAP governance
     * pattern; Delta calls it a staged commit): a candidate delta is
@@ -378,10 +298,6 @@ object LakeQueries {
     * [[SnapshotStore]]'s O(delta) MOR append, never a table rewrite;
     * the reject path deletes only its own staging files. */
   def wapRead(spark: SparkSession, orders: DataFrame): DataFrame = {
-    val files = orders.inputFiles
-    val key =
-      if (files.nonEmpty) files.sorted.mkString(",")
-      else "plan:" + orders.queryExecution.analyzed.toString
     val base = orders.filter(col("o_orderkey") % 3 === 0)
       .select(col("o_orderkey"), col("o_totalprice"))
     val delta1 = orders.filter(col("o_orderkey") % 3 === 1)
@@ -392,15 +308,10 @@ object LakeQueries {
           col("o_totalprice") * lit(-1))
           .otherwise(col("o_totalprice")).as("o_totalprice"))
       .unionByName(base.filter(col("o_orderkey") % 7 === 0))
-    val (store, ledger) = wapCache.getOrElseUpdate((spark, key), {
-      val dirPath = Files.createTempDirectory("graft-wap-")
-      sys.addShutdownHook {
-        import java.util.Comparator
-        Files.walk(dirPath)
-          .sorted(Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(p => Files.deleteIfExists(p))
-      }
-      val root = dirPath.toFile.getAbsolutePath
+    // One WAP-exercised store per (session, input) — the stage/audit/
+    // publish loop must not re-run on every bench/verify invocation.
+    // Value = the store plus the audit ledger recorded AT publish time.
+    val (store, ledger) = ModelArtifacts.stored("wap", orders, "") { root =>
       val s = new SnapshotStore(spark, root + "/table")
       s.commit(base)
       def wapOne(deltaId: String, delta: DataFrame)
@@ -419,18 +330,13 @@ object LakeQueries {
         val ok = nBad == 0L && nDup == 0L
         // PUBLISH or ABORT
         if (ok) s.appendRows(staged)
-        else {
-          import java.util.Comparator
-          val sp = java.nio.file.Paths.get(stagingDir)
-          Files.walk(sp).sorted(Comparator.reverseOrder[java.nio.file.Path]())
-            .forEach(p => Files.deleteIfExists(p))
-        }
+        else FileUtil.fullyDelete(new java.io.File(stagingDir))
         (deltaId, nRows, nBad, nDup, ok)
       }
       val led = Seq(wapOne("delta1_clean", delta1),
         wapOne("delta2_dirty", delta2))
       (s, led)
-    })
+    }
     val published = store.read()
       .agg(count(lit(1)).as("published_rows"),
         sum(col("o_orderkey")).as("published_key_sum"))
@@ -440,12 +346,6 @@ object LakeQueries {
       .crossJoin(broadcast(published))
       .orderBy(col("delta_id"))
   }
-
-  // One branched store per (session, input) — main and its "fix" branch
-  // diverge from one shared immutable v0.
-  private val brCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String),
-      SnapshotStore]
 
   /** l17: ZERO-COPY BRANCHING ([[SnapshotStore.branch]] — Iceberg
     * branches / Nessie refs in miniature): main commits v0; branch
@@ -470,22 +370,12 @@ object LakeQueries {
     * branch edits cost O(delta) (MOR); reads are the l13 chain shapes.
     * Retention interplay documented at [[SnapshotStore.branch]]. */
   def branchRead(spark: SparkSession, orders: DataFrame): DataFrame = {
-    val files = orders.inputFiles
-    val key =
-      if (files.nonEmpty) files.sorted.mkString(",")
-      else "plan:" + orders.queryExecution.analyzed.toString
     val base = orders.filter(col("o_orderkey") % 3 === 0)
       .select(col("o_orderkey"), col("o_totalprice"))
-    val store = brCache.getOrElseUpdate((spark, key), {
-      val dirPath = Files.createTempDirectory("graft-branch-")
-      sys.addShutdownHook {
-        import java.util.Comparator
-        Files.walk(dirPath)
-          .sorted(Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(p => Files.deleteIfExists(p))
-      }
-      val s = new SnapshotStore(spark,
-        dirPath.toFile.getAbsolutePath + "/table")
+    // One branched store per (session, input) — main and its "fix"
+    // branch diverge from one shared immutable v0.
+    val store = ModelArtifacts.stored("branch", orders, "") { dir =>
+      val s = new SnapshotStore(spark, dir + "/table")
       s.commit(base) // main v0
       val br = s.branch("fix", 0L) // zero-copy fork
       val fixKeys = base.filter(col("o_orderkey") % 7 === 0)
@@ -497,7 +387,7 @@ object LakeQueries {
         .filter(col("o_orderkey") % 3 === 1 && col("o_orderkey") % 5 === 0)
         .select(col("o_orderkey"), col("o_totalprice")))
       s
-    })
+    }
     def rollup(ref: String, df: DataFrame): DataFrame =
       df.agg(count(lit(1)).as("n_rows"),
         sum(col("o_orderkey")).as("key_sum"),

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.types.StructType
 
 /** Session-lifetime store of PRECOMPUTED derived index tables — PQ code
   * columns and coarse-cell assignments written as real cell-partitioned
@@ -20,45 +19,43 @@ import org.apache.spark.sql.types.StructType
   * The table is PARTITIONED BY the coarse cell, which is the entire
   * point of IVF at rest: a probe for a handful of cells becomes a
   * partition-pruned scan that never lists, opens, or reads any other
-  * cell's files. The fixture store is a temp directory; the layout and
-  * the pruned plan are exactly what an object-store lake path gets.
+  * cell's files. The fixture store is a directory of the session's
+  * artifact root; the layout and the pruned plan are exactly what an
+  * object-store lake path gets.
   *
   * Identity/staleness contract is [[ModelArtifacts.planKey]]'s: keyed
   * by (kind, hyperparameters, corpus identity), built once per key per
-  * session. Entries are temp-dir parquet, reclaimed by the OS after the
-  * session; a real deployment writes them beside the index and owns
-  * their lifecycle with the lake's snapshot machinery. */
+  * session. Entries are [[ModelArtifacts]] entries: their directories
+  * are deleted when the session's artifacts are released ([[clear]],
+  * [[ModelArtifacts.release]]) or the JVM exits; a real deployment
+  * writes them beside the index and owns their lifecycle with the
+  * lake's snapshot machinery. */
 object IndexStore {
 
-  private val stored =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]()
+  private val Kind = "index"
 
   /** The stored table for (kind, params, corpus), building + writing it
     * via `build` once per key per session, READING it thereafter. The
     * read re-applies the build frame's schema so partition columns keep
     * their original types (directory-name inference would narrow a long
     * cell id to int, and a cast on the partition attribute is one more
-    * thing between the probe filter and the pruner). `build` runs under
-    * the store lock — two concurrent misses on one key must not write
-    * twice. */
+    * thing between the probe filter and the pruner). Two concurrent
+    * misses on one key write once. */
   def storedTable(kind: String, input: DataFrame, params: String,
       partitionCols: Seq[String])(build: => DataFrame): DataFrame = {
-    val key = ModelArtifacts.planKey(kind, input, params) +
-      "|pby=" + partitionCols.mkString(",")
-    val (path, schema) = stored.computeIfAbsent(key, _ => {
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft-index-$kind-").toString
+    val (path, schema) = ModelArtifacts.stored(Kind, input,
+        s"$kind|$params|pby=${partitionCols.mkString(",")}") { dir =>
       val df = build
-      df.write.partitionBy(partitionCols: _*).mode("overwrite").parquet(dir)
+      df.write.partitionBy(partitionCols: _*).parquet(dir)
       (dir, df.schema)
-    })
+    }
     input.sparkSession.read.schema(schema).parquet(path)
   }
 
   /** Number of resident stored tables (spec hook). */
-  def size: Int = stored.size()
+  def size: Int = ModelArtifacts.size(Kind)
 
-  /** Forget every stored table (tests; deliberate rebuild). The parquet
-    * itself is temp-dir data the OS reclaims. */
-  def clear(): Unit = stored.clear()
+  /** Drop every stored table and delete its directory (tests;
+    * deliberate rebuild). */
+  def clear(): Unit = ModelArtifacts.releaseWhere((_, kind) => kind == Kind)
 }

@@ -1,10 +1,17 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import java.nio.file.{Files, Path}
 
-/** Session-lifetime cache of TINY trained model artifacts — coarse IVF
-  * centroids, PQ codebooks — keyed by the canonicalized plan of the
-  * training input plus the hyperparameters.
+import org.apache.hadoop.fs.FileUtil
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import scala.jdk.CollectionConverters._
+
+/** The session artifact store: every derived artifact a ledger entry
+  * builds once per session and reads thereafter — trained model frames
+  * (coarse IVF centroids, PQ codebooks), stored index tables
+  * ([[IndexStore]]), the shared kNN graphs, trained tokenizers, the lake
+  * layer's demo lakes and snapshot stores, and the text-format copies.
   *
   * This is the local stand-in for the model/artifact store every real
   * ANN deployment has: at 100 TB the quantizers are trained once,
@@ -14,59 +21,128 @@ import org.apache.spark.sql.DataFrame
   * form, and the measured "serve cost" is mostly training — the exact
   * conflation the serving tier exists to remove.
   *
-  * Bounded two ways: each entry is a K- or m·k-row local DataFrame (a
-  * few KB), and the store itself is a [[MaxEntries]]-capped
-  * access-order LRU — a session sweeping an unbounded hyperparameter
-  * grid recycles the least-recently-served artifact instead of growing
-  * monotonically.
+  * An entry is built once per (session, kind, key): concurrent misses
+  * on one key build once, and a build runs outside the map's lock, so
+  * a build may look up other entries (a stored beam graph trains its
+  * centroids here) and a slow build never delays another key. An entry
+  * may own a directory under its session's root, and may hold an
+  * anchored frame; releasing it deletes the one and `Anchor.release`s
+  * the other. A build that throws leaves no directory and is retried
+  * by the next lookup.
   *
-  * Staleness contract: the key is the INPUT PLAN (for file sources it
-  * embeds the concrete file listing), not a data snapshot — the same
-  * contract as any model store keyed by training-set identity. A
-  * corpus rewritten in place mid-session re-derives only when its
-  * resolved plan changes; retraining on a live session is `clear()`.
+  * Bounded: model frames are K- or m·k-row local frames (a few KB), and
+  * at most [[MaxEntries]] of them stay resident, least-recently-used
+  * evicted first. Entries that own a directory or an anchor are never
+  * evicted: a live plan may still read them.
   *
-  * Scoped to the JVM's active session use: entries hold DataFrames of
-  * collected LOCAL rows, so they carry no executor-side state beyond
-  * the owning session. Test rigs and the driver's Verify/Bench mains
-  * run one session per JVM. */
+  * Staleness contract: a frame-derived key is the INPUT PLAN
+  * ([[planKey]]; for file sources it embeds the concrete file listing),
+  * not a data snapshot — the same contract as any model store keyed by
+  * training-set identity. A corpus rewritten in place mid-session
+  * re-derives only when its resolved plan changes; retraining on a live
+  * session is `clear()`.
+  *
+  * Scope: a session's entries live until [[release]] (which
+  * [[graft.LedgerRunner.run]] performs before stopping the session) or
+  * the JVM exits, whose shutdown hook deletes every session root still
+  * on disk. */
 object ModelArtifacts {
 
-  /** Upper bound on resident artifacts. Each entry is a K- or m·k-row
-    * local frame (a few KB), so the cap bounds the cache at well under a
+  /** Upper bound on resident model frames. Each is a K- or m·k-row
+    * local frame (a few KB), so the cap bounds them at well under a
     * megabyte while still covering any realistic hyperparameter sweep; a
     * long-lived multi-tenant session sweeping past it evicts
     * least-recently-USED entries (access-order LRU), which for a sweep
     * is the config least likely to be served again. */
   private val MaxEntries = 64
 
-  private val cache =
-    new java.util.LinkedHashMap[String, DataFrame](16, 0.75f,
-      /* accessOrder = */ true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, DataFrame]): Boolean =
-        this.size() > MaxEntries
+  /** The kind of the entries [[cached]] makes, the only evictable one. */
+  private val Model = "model"
+
+  private final class Entry(spark: SparkSession, val kind: String) {
+    @volatile var value: Option[Any] = None
+    @volatile var dir: Option[Path] = None
+
+    /** A fresh, not yet created path under the session root, owned by
+      * this entry until it is released. */
+    def newDir(): String = {
+      val d = roots.computeIfAbsent(spark,
+        _ => Files.createTempDirectory("graft-session-"))
+        .resolve(s"$kind-${dirIds.incrementAndGet()}")
+      dir = Some(d)
+      d.toString
     }
 
-  /** The cached artifact for (kind, params, input-plan), training it via
-    * `train` exactly once per key per session. `train` must produce a
-    * LOCAL (already-materialized) model frame — see
-    * [[Clustering.trainedCentroidsLocal]] / [[Similarity.pqCodebookLocal]].
+    def get(build: Entry => Any): Any = synchronized {
+      value.getOrElse {
+        val v = try build(this)
+          catch { case t: Throwable => dropDir(); throw t }
+        value = Some(v)
+        v
+      }
+    }
+
+    def release(): Unit = synchronized {
+      dropDir()
+      // a no-op on frames that are not anchors (Anchor.release's contract)
+      value.foreach { case df: DataFrame => Anchor.release(df); case _ => }
+      value = None
+    }
+
+    private def dropDir(): Unit = {
+      dir.foreach(d => FileUtil.fullyDelete(d.toFile))
+      dir = None
+    }
+  }
+
+  private type Id = (SparkSession, String, String)
+
+  private val entries = new java.util.LinkedHashMap[Id, Entry](16, 0.75f,
+    /* accessOrder = */ true)
+  private val roots =
+    new java.util.concurrent.ConcurrentHashMap[SparkSession, Path]()
+  private val dirIds = new java.util.concurrent.atomic.AtomicLong()
+
+  sys.addShutdownHook(roots.values.forEach(d => FileUtil.fullyDelete(d.toFile)))
+
+  /** The entry for (spark, kind, key), built by `build` once. The map
+    * lock covers only the probe and the insert of the entry's holder;
+    * the build runs under the holder's own lock. */
+  private def lookup[A](spark: SparkSession, kind: String, key: String)(
+      build: Entry => A): A = {
+    val id = (spark, kind, key)
+    val e = entries.synchronized {
+      val hit = entries.get(id)
+      if (hit != null) hit
+      else {
+        val fresh = new Entry(spark, kind)
+        entries.put(id, fresh)
+        evictModels()
+        fresh
+      }
+    }
+    e.get(build).asInstanceOf[A]
+  }
+
+  /** Drop the least-recently-used model frames past [[MaxEntries]]
+    * (called under the map lock; iteration is eldest first). */
+  private def evictModels(): Unit = {
+    val models = entries.keySet.iterator.asScala.filter(_._2 == Model).toList
+    models.take(models.size - MaxEntries).foreach(id => entries.remove(id))
+  }
+
+  /** The full identity key for (kind, params, input plan).
     *
-    * Key construction: the canonicalized plan STRING is stable across
-    * re-reads of the same path (object equality would not be — each
-    * `spark.read` builds a fresh FileIndex, and a cache that missed on
-    * every sweep would be no cache at all) but it is NOT sufficient
-    * alone: a parquet relation canonicalizes to just
-    * `Relation [none#..] parquet` — NO path — so two same-typed file
-    * corpora would collide, and LocalRelation leaves print WITHOUT
-    * their rows. Both identity sources enter the key explicitly: the
-    * sorted resolved file listing (`inputFiles`) distinguishes file
-    * corpora, the per-leaf row-data hash distinguishes in-memory ones. */
-  /** The full identity key for (kind, params, input plan) — shared with
-    * [[IndexStore]], which caches DERIVED STORED TABLES (PQ code
-    * columns) under the same training-set-identity contract as the
-    * in-memory model artifacts. */
+    * The canonicalized plan STRING is stable across re-reads of the
+    * same path (object equality would not be — each `spark.read` builds
+    * a fresh FileIndex, and a cache that missed on every sweep would be
+    * no cache at all) but it is NOT sufficient alone: a parquet relation
+    * canonicalizes to just `Relation [none#..] parquet` — NO path — so
+    * two same-typed file corpora would collide, and LocalRelation leaves
+    * print WITHOUT their rows. Both identity sources enter the key
+    * explicitly: the sorted resolved file listing (`inputFiles`)
+    * distinguishes file corpora, the per-leaf row-data hash
+    * distinguishes in-memory ones. */
   private[graft] def planKey(kind: String, input: DataFrame,
       params: String): String = {
     val analyzed = input.queryExecution.analyzed
@@ -80,24 +156,60 @@ object ModelArtifacts {
       analyzed.canonicalized.toString
   }
 
+  /** The cached model artifact for (kind, params, input plan), training
+    * it via `train` exactly once per key per session. `train` must
+    * produce a LOCAL (already-materialized) model frame — see
+    * [[Clustering.trainedCentroidsLocal]] / [[Similarity.pqCodebookLocal]]. */
   def cached(kind: String, input: DataFrame, params: String)(
-      train: => DataFrame): DataFrame = {
-    val key = planKey(kind, input, params)
-    // LinkedHashMap's access-order bookkeeping mutates on get(), so every
-    // touch synchronizes; artifact trains are seconds, lookups are a map
-    // probe — the lock is not a contention point. Training happens under
-    // the lock deliberately: two concurrent misses on one key must not
-    // train twice (same computeIfAbsent contract as before the LRU).
-    cache.synchronized {
-      val hit = cache.get(key)
-      if (hit != null) hit
-      else { val v = train; cache.put(key, v); v }
+      train: => DataFrame): DataFrame =
+    lookup(input.sparkSession, Model, planKey(kind, input, params))(_ => train)
+
+  /** The session's artifact for (kind, key) with an explicit key, built
+    * once. */
+  private[graft] def memo[A](spark: SparkSession, kind: String, key: String)(
+      build: => A): A =
+    lookup(spark, kind, key)(_ => build)
+
+  /** The session's on-disk artifact for (kind, params, input plan):
+    * `build` gets a fresh path under the session root (not yet created)
+    * to write into, and the files stay until the entry is released. */
+  private[graft] def stored[A](kind: String, input: DataFrame,
+      params: String)(build: String => A): A =
+    lookup(input.sparkSession, kind, planKey(kind, input, params))(
+      e => build(e.newDir()))
+
+  /** Release the entries `which` selects by (session, kind): their
+    * directories are deleted and their anchors released; the next
+    * lookup rebuilds. */
+  private[graft] def releaseWhere(
+      which: (SparkSession, String) => Boolean): Unit = {
+    val gone = entries.synchronized {
+      val ids = entries.keySet.asScala.filter(id => which(id._1, id._2)).toList
+      ids.map(id => entries.remove(id))
     }
+    gone.foreach(_.release())
   }
 
-  /** Number of resident artifacts (spec hook for the eviction bound). */
-  def size: Int = cache.synchronized(cache.size())
+  /** Release every artifact of `spark` and delete its root directory:
+    * the teardown before the session stops. */
+  def release(spark: SparkSession): Unit = {
+    releaseWhere((s, _) => s eq spark)
+    Option(roots.remove(spark)).foreach(d => FileUtil.fullyDelete(d.toFile))
+  }
 
-  /** Drop every cached artifact (tests; deliberate retrain). */
-  def clear(): Unit = cache.synchronized(cache.clear())
+  /** The directories resident entries own (spec hook). */
+  private[graft] def dirs: Seq[String] =
+    entries.synchronized(entries.values.asScala.toList)
+      .flatMap(_.dir.map(_.toString))
+
+  /** Number of built, resident entries of `kind`. */
+  private[graft] def size(kind: String): Int =
+    entries.synchronized(
+      entries.values.asScala.count(e => e.kind == kind && e.value.isDefined))
+
+  /** Number of resident model artifacts (spec hook for the eviction bound). */
+  def size: Int = size(Model)
+
+  /** Drop every cached model artifact (tests; deliberate retrain). */
+  def clear(): Unit = releaseWhere((_, kind) => kind == Model)
 }

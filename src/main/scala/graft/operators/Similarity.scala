@@ -765,13 +765,12 @@ object Similarity {
   // rebuilding the cell-blocked self-join five times per round prices
   // the same product five times for no information. s21 itself stays
   // the live BUILD query — its cost IS the build.
-  private val knnGraphCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, Int), DataFrame]
+  private val SharedGraph = "knn-graph"
 
   /** [[knnGraph]] as a session-cached MATERIALIZED artifact (eager
     * [[graft.operators.Anchor.cut]] — k·N rows, the graph table).
     *
-    * The cache key is the CANONICALIZED analyzed plan: canonicalization
+    * The key is [[ModelArtifacts.planKey]]: canonicalization
     * normalizes expression IDs, so two independent `Tables.embeddings`
     * reads of the same corpus still hit one entry, while a semantically
     * different frame that happens to scan the same files (a scaled /
@@ -781,28 +780,22 @@ object Similarity {
     * layer never rewrites in place (snapshot versions are append-only),
     * and [[clearSharedGraphs]] is the explicit invalidation hook. */
   def knnGraphShared(embeddings: DataFrame, k: Int = 5,
-      nCells: Int = 32): DataFrame = {
-    val spark = embeddings.sparkSession
-    val key = embeddings.queryExecution.analyzed.canonicalized.toString
-    knnGraphCache.getOrElseUpdate((spark, key, k, nCells),
-      graft.operators.Anchor.cut(knnGraph(embeddings, k, nCells)))
-  }
+      nCells: Int = 32): DataFrame =
+    ModelArtifacts.memo(embeddings.sparkSession, SharedGraph,
+        ModelArtifacts.planKey(SharedGraph, embeddings, s"k=$k,cells=$nCells")) {
+      graft.operators.Anchor.cut(knnGraph(embeddings, k, nCells))
+    }
 
   /** Evict this session's shared-graph artifacts: each cached frame is
     * an eager anchor whose blocks (or reliable-checkpoint files) stay
-    * pinned until released, and the TrieMap's strong session reference
-    * would otherwise keep a stopped session from being collected. Call
-    * from test teardown or before `spark.stop()`; no-session overload
-    * clears everything (JVM-exit hygiene). */
+    * pinned until released. Releases only the graphs; call from test
+    * teardown or before `spark.stop()`; the no-session overload clears
+    * every session's. */
   def clearSharedGraphs(spark: SparkSession): Unit =
-    knnGraphCache.keys.filter(_._1 eq spark).foreach { k =>
-      knnGraphCache.remove(k).foreach(graft.operators.Anchor.release)
-    }
+    ModelArtifacts.releaseWhere((s, kind) => (s eq spark) && kind == SharedGraph)
 
   def clearSharedGraphs(): Unit =
-    knnGraphCache.keys.foreach { k =>
-      knnGraphCache.remove(k).foreach(graft.operators.Anchor.release)
-    }
+    ModelArtifacts.releaseWhere((_, kind) => kind == SharedGraph)
 
   /** s43: GRAPH-TRAVERSAL ANN — beam search over the materialized
     * [[knnGraphShared]] artifact, the third serving paradigm beside
