@@ -12,6 +12,16 @@ import graft.operators.{Dedup => D, Relational => R, Sampling => Sm,
   * double, integer epoch differences, regexp flags) so the driver's
   * hash-compare is bit-stable across engines. Column names are aliased
   * identically on both sides; every query is deterministically ordered.
+  *
+  * Oracle fragments: SQL that several oracles share is written once, as
+  * a constant named for the Spark helper it mirrors (`ShingleCtes` for
+  * `Dedup.shinglePostings`, `KMediansAssign` for `Clustering.assign`,
+  * ...; a `def` when the copies differ by a table, a width or a CTE
+  * prefix) and interpolated where the copies stood, so a change to the
+  * helper edits one SQL twin. A strict `val` that interpolates a
+  * fragment declared below it renders the text `null` (the fragment is
+  * still unset while the val initializes): declare each fragment above
+  * its users, or make it `lazy`. EntrySpec fails on such a `null`.
   */
 object SparkEntry {
 
@@ -856,18 +866,172 @@ object SparkEntry {
        |  CAST(COUNT(*) AS BIGINT) AS n_paths
        |FROM reach GROUP BY src, dst ORDER BY src, dst""".stripMargin
 
+  /** [[graft.operators.Dedup.shinglePostings]]'s word-trigram sets in
+    * SQL: `t` tokenizes `src` on whitespace runs, `s` holds each doc's
+    * distinct trigrams `sh` (a doc under 3 tokens is one shingle). */
+  private def ShingleCtes(src: String): String =
+    s"""t AS (SELECT doc_id,
+       |  string_split_regex(trim(text), '\\s+') AS toks FROM $src),
+       |s AS (SELECT doc_id, list_distinct(
+       |  CASE WHEN len(toks) >= 3 THEN
+       |    list_transform(range(0, len(toks)-2),
+       |      i -> array_to_string(toks[i+1:i+3], ' '))
+       |  ELSE [array_to_string(toks, ' ')] END) AS sh FROM t)""".stripMargin
+
+  /** [[graft.operators.Dedup.withMinhash]] in SQL: [[ShingleCtes]]
+    * over `src`, then `g` holds each doc's 12 md5-minhash values `sig`. */
+  private def MinhashCtes(src: String): String =
+    ShingleCtes(src) + ",\n" +
+      """g AS (SELECT doc_id, list_transform(range(0, 12), j ->
+        |  list_min(list_transform(sh, x ->
+        |    md5(concat(CAST(j AS VARCHAR), ':', x))))) AS sig FROM s)""".stripMargin
+
+  /** [[graft.operators.Similarity.hyperplanes]] and `signCodes` in SQL:
+    * `c2` explodes each embedding to (vec_id, i, v), `planes` draws the
+    * ±1 sign of plane j at dim i from md5, and `proj` holds each
+    * vector's micros-quantized projection `pr` on planes 0 until
+    * `bits` (the sign bit is `pr > 0`). */
+  private def SignLshCtes(bits: Int): String =
+    s"""c1 AS (SELECT vec_id, embedding,
+       |  unnest(range(0, len(embedding))) AS i FROM embeddings),
+       |c2 AS (SELECT vec_id, CAST(i AS INT) AS i, embedding[i+1] AS v
+       |  FROM c1),
+       |planes AS (SELECT a.i, b.j,
+       |  CASE WHEN (strpos('0123456789abcdef',
+       |    substr(md5(a.i || ':' || b.j), 1, 1)) - 1) % 2 = 1
+       |  THEN 1 ELSE -1 END AS s
+       |  FROM (SELECT unnest(range(0, 4096)) AS i) a
+       |  CROSS JOIN (SELECT unnest(range(0, $bits)) AS j) b),
+       |proj AS (SELECT c2.vec_id, p.j,
+       |  SUM(CAST(floor(CAST(v AS DOUBLE) * 1000000) AS BIGINT) * p.s)
+       |    AS pr
+       |  FROM c2 JOIN planes p ON c2.i = p.i GROUP BY 1, 2)""".stripMargin
+
+  /** [[graft.operators.TextAnalysis.qualityFeatures]] in SQL: the four
+    * feature columns n_tok, punct, stop and diversity over a relation
+    * with `text` and its whitespace tokens `toks`. */
+  private val QualityFeatures: String =
+    """CAST(len(toks) AS DOUBLE) AS n_tok,
+      |  CAST(length(regexp_replace(text, '[^.!?,;:]', '', 'g')) AS DOUBLE)
+      |    / CAST(length(text) AS DOUBLE) AS punct,
+      |  CAST(len(list_filter(toks, t -> list_contains(
+      |    ['the','a','and','of','to','in','is','it'], lower(t)))) AS DOUBLE)
+      |    / CAST(len(toks) AS DOUBLE) AS stop,
+      |  CAST(len(list_distinct(toks)) AS DOUBLE)
+      |    / CAST(len(toks) AS DOUBLE) AS diversity""".stripMargin
+
+  /** [[graft.operators.Ranking.bm25Scores]]'s per-(doc, term) weight in
+    * SQL (k1 = 1.2, b = 0.75, idf with the +0.5 smoothing) over `tf`
+    * (tf, dl), `dfq` (df) and `st` (sum_dl and the unit count `n`). */
+  private def Bm25Weight(n: String): String =
+    s"""((CAST(st.$n AS DOUBLE) - CAST(dfq.df AS DOUBLE)
+       |      + CAST(0.5 AS DOUBLE))
+       |    / (CAST(dfq.df AS DOUBLE) + CAST(0.5 AS DOUBLE)))
+       |  * (CAST(tf.tf AS DOUBLE) * CAST(2.2 AS DOUBLE))
+       |  / (CAST(tf.tf AS DOUBLE) + CAST(1.2 AS DOUBLE)
+       |     * (CAST(1.0 AS DOUBLE) - CAST(0.75 AS DOUBLE)
+       |        + CAST(0.75 AS DOUBLE) * CAST(tf.dl AS DOUBLE)
+       |          / (CAST(st.sum_dl AS DOUBLE)
+       |             / CAST(st.$n AS DOUBLE))))""".stripMargin
+
+  /** [[SignLshCtes]] at `bits` planes in `signCodes`' bucket form:
+    * `buckets` holds each vector's sign bits as a '0'/'1' string (plane
+    * 0 first), and `n` joins it to the embedding and its squared norm. */
+  private def SignLshBuckets(bits: Int): String =
+    SignLshCtes(bits) + ",\n" +
+      """buckets AS (SELECT vec_id,
+        |  string_agg(CASE WHEN pr > 0 THEN '1' ELSE '0' END,
+        |    '' ORDER BY j) AS bucket
+        | FROM proj GROUP BY vec_id),
+        |n AS (SELECT e.vec_id, b.bucket, e.embedding,
+        |  list_reduce(list_transform(range(1, len(e.embedding)+1), i ->
+        |    CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)),
+        |    (a, b2) -> a + b2) AS norm2
+        | FROM embeddings e JOIN buckets b ON e.vec_id = b.vec_id)""".stripMargin
+
+  /** [[graft.operators.Similarity]]'s exactPairs in SQL, b-prefixed to
+    * sit beside an approximate chain: over `bn` (vec_id, embedding,
+    * norm2), `bq` takes the 5 queries and `br` ranks every other
+    * vector per query by (cosine desc, id asc). */
+  private val ExactPairsCtes: String =
+    """bq AS (SELECT vec_id AS query_id, embedding AS query_emb,
+      |  norm2 AS qnorm2 FROM bn WHERE vec_id < 5),
+      |bscored AS (SELECT q.query_id, c.vec_id AS neighbor_id,
+      |  list_reduce(list_transform(range(1, len(c.embedding)+1), i ->
+      |    CAST(c.embedding[i] AS DOUBLE) * CAST(q.query_emb[i] AS DOUBLE)),
+      |    (x, y) -> x + y) / (sqrt(c.norm2) * sqrt(q.qnorm2)) AS cosine
+      | FROM bn c CROSS JOIN bq q WHERE c.vec_id <> q.query_id),
+      |br AS (SELECT query_id, neighbor_id,
+      |  row_number() OVER (PARTITION BY query_id
+      |    ORDER BY cosine DESC, neighbor_id ASC) AS rank
+      | FROM bscored)""".stripMargin
+
+  /** [[graft.operators.Dedup.embeddingNearDups]] feeding
+    * [[graft.operators.Dedup.dedupClusters]] in SQL, for a `WITH
+    * RECURSIVE`: same-label pairs with cosine >= 0.35 become symmetric
+    * `edges`, and `reach` is their reflexive transitive closure. */
+  private val DedupClustersCtes: String =
+    """n AS (SELECT vec_id, label, embedding,
+      |  list_reduce(list_transform(range(1, len(embedding)+1), i ->
+      |    CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)),
+      |    (a, b) -> a + b) AS norm2 FROM embeddings),
+      |p AS (SELECT a.vec_id AS vec_id_a, b.vec_id AS vec_id_b,
+      |  list_reduce(list_transform(range(1, len(a.embedding)+1), i ->
+      |    CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)),
+      |    (x, y) -> x + y) / (sqrt(a.norm2) * sqrt(b.norm2)) AS cosine
+      | FROM n a JOIN n b ON a.label = b.label AND a.vec_id < b.vec_id),
+      |pairs AS (SELECT vec_id_a, vec_id_b FROM p WHERE cosine >= 0.35),
+      |edges AS (SELECT vec_id_a AS u, vec_id_b AS v FROM pairs
+      |  UNION SELECT vec_id_b, vec_id_a FROM pairs),
+      |reach AS (
+      |  SELECT u, u AS v FROM (SELECT DISTINCT u FROM edges)
+      |  UNION
+      |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u)""".stripMargin
+
+  /** [[graft.operators.CoOccurrence.covisitationEdges]] in SQL: each
+    * user's top-4 event types `cap`, per-item user counts `iu`, the
+    * user total `tot`, and the co-visited pairs `pr` (item_a < item_b). */
+  private val CovisitationCtes: String =
+    """pu AS (SELECT user_id, event_type, COUNT(*) AS c
+      |  FROM events GROUP BY user_id, event_type),
+      |cap AS (SELECT user_id, event_type FROM (
+      |  SELECT user_id, event_type, row_number() OVER (
+      |    PARTITION BY user_id ORDER BY c DESC, event_type) AS rn
+      |  FROM pu) WHERE rn <= 4),
+      |iu AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS nu
+      |  FROM cap GROUP BY event_type),
+      |tot AS (SELECT CAST(COUNT(DISTINCT user_id) AS BIGINT) AS u
+      |  FROM cap),
+      |pr AS (SELECT a.event_type AS item_a, b.event_type AS item_b,
+      |    CAST(COUNT(*) AS BIGINT) AS n_users
+      |  FROM cap a JOIN cap b ON a.user_id = b.user_id
+      |    AND a.event_type < b.event_type
+      |  GROUP BY a.event_type, b.event_type)""".stripMargin
+
+  /** [[graft.operators.TextAnalysis.rollingFingerprints]] in SQL: `h`
+    * holds each token's polynomial hash, `w` the hash of every 5-token
+    * window (a doc under 5 tokens is one window). */
+  private val RollingFingerprintCtes: String =
+    """t AS (SELECT doc_id,
+      |  string_split_regex(trim(text), '\s+') AS toks FROM documents),
+      |h AS (SELECT doc_id, list_transform(toks, s ->
+      |    list_reduce(list_prepend(CAST(0 AS BIGINT),
+      |      list_transform(range(1, length(s)+1),
+      |        i -> CAST(unicode(substr(s, i, 1)) AS BIGINT))),
+      |      (a, b) -> (a * 31 + b) % 2147483647)) AS th FROM t),
+      |w AS (SELECT doc_id, CASE WHEN len(th) >= 5 THEN
+      |      list_transform(range(0, len(th)-4), i ->
+      |        list_reduce(list_prepend(CAST(0 AS BIGINT), th[i+1:i+5]),
+      |          (a, b) -> (a * 257 + b) % 2147483647))
+      |    ELSE [list_reduce(list_prepend(CAST(0 AS BIGINT), th),
+      |          (a, b) -> (a * 257 + b) % 2147483647)] END AS wh
+      |  FROM h)""".stripMargin
+
   private val QualityScoreOracle: String =
-    """WITH t AS (SELECT doc_id, text,
-        |  string_split_regex(trim(text), '\s+') AS toks FROM documents),
+    s"""WITH t AS (SELECT doc_id, text,
+        |  string_split_regex(trim(text), '\\s+') AS toks FROM documents),
         |c AS (SELECT doc_id,
-        |  CAST(len(toks) AS DOUBLE) AS n_tok,
-        |  CAST(length(regexp_replace(text, '[^.!?,;:]', '', 'g')) AS DOUBLE)
-        |    / CAST(length(text) AS DOUBLE) AS punct,
-        |  CAST(len(list_filter(toks, t -> list_contains(
-        |    ['the','a','and','of','to','in','is','it'], lower(t)))) AS DOUBLE)
-        |    / CAST(len(toks) AS DOUBLE) AS stop,
-        |  CAST(len(list_distinct(toks)) AS DOUBLE)
-        |    / CAST(len(toks) AS DOUBLE) AS diversity
+        |  $QualityFeatures
         | FROM t)
         |SELECT doc_id,
         | CAST(n_tok AS BIGINT) AS n_tokens,
@@ -967,10 +1131,79 @@ object SparkEntry {
   //   dsum(c,s)  ≡ CAST(SUM(CAST(c AS DECIMAL(18,s))) AS DOUBLE)
   //   davg(c,s)  ≡ dsum(c,s)/COUNT(c)
 
+  /** [[graft.operators.Clustering.assign]] in SQL: `name` keeps each
+    * vector of `vs` (the vector relation aliased `v`, or just `v`) with
+    * its nearest centroid of `cs` (squared L2 by
+    * the norm expansion, ties toward the lower cluster_id); `keep`
+    * widens it to the nearest two for s47's multi-assign build. `cols`
+    * are the kept columns: cluster_id comes from the centroid side,
+    * every other one from the vector side. */
+  private def KMediansAssign(name: String, cols: String, vs: String,
+      cs: String, keep: String = "rn = 1"): String = {
+    val inner = cols.split(", ").filter(_ != "dist2")
+      .map(c => if (c == "cluster_id") "c.cluster_id" else s"v.$c")
+    s"""$name AS (SELECT $cols FROM (
+       |  SELECT $cols,
+       |    row_number() OVER (PARTITION BY vec_id
+       |      ORDER BY dist2 ASC, cluster_id ASC) AS rn
+       |  FROM (SELECT ${inner.mkString(", ")},
+       |    v.vnorm2 + c.cnorm2 - 2.0 * list_reduce(
+       |      list_transform(range(1, len(v.emb)+1), i ->
+       |        CAST(v.emb[i] AS DOUBLE) * CAST(c.cemb[i] AS DOUBLE)),
+       |      (x, y) -> x + y) AS dist2
+       |    FROM $vs CROSS JOIN $cs c)) WHERE $keep)""".stripMargin
+  }
+
+  /** [[graft.operators.Clustering.medianCentroids]] in SQL: one
+    * component-wise lower-median round over the assignment `src`,
+    * grouped by `key` (cluster_id, or `sub, code` for a PQ codebook),
+    * ending in `${p}c1` with the new centroids' squared norms. Every
+    * CTE name carries the prefix `p`. */
+  private def MedianCentroids(p: String, key: String, emb: String,
+      src: String): String =
+    s"""${p}ex1 AS (SELECT $key, vec_id, u.dim AS dim, u.val AS val
+       |  FROM (SELECT $key, vec_id,
+       |    unnest(list_transform(range(1, len($emb)+1),
+       |      i -> {'dim': i, 'val': $emb[i]})) AS u FROM $src)),
+       |${p}med1 AS (SELECT $key, dim, val FROM (
+       |  SELECT $key, dim, val,
+       |    row_number() OVER (PARTITION BY $key, dim
+       |      ORDER BY val ASC, vec_id ASC) AS rn,
+       |    COUNT(*) OVER (PARTITION BY $key, dim) AS n
+       |  FROM ${p}ex1) WHERE rn = (n + 1) // 2),
+       |${p}c1a AS (SELECT $key, list(val ORDER BY dim) AS cemb
+       |  FROM ${p}med1 GROUP BY $key),
+       |${p}c1 AS (SELECT $key, cemb,
+       |  list_reduce(list_transform(range(1, len(cemb)+1), i ->
+       |    CAST(cemb[i] AS DOUBLE) * CAST(cemb[i] AS DOUBLE)),
+       |    (a, b) -> a + b) AS cnorm2 FROM ${p}c1a)""".stripMargin
+
+  /** The k-medians training chain WITHOUT the leading `WITH`
+    * ([[graft.operators.Clustering.kmediansAssignFull]]), every CTE
+    * name prefixed `p`: vectors `v` with squared norms, seed centroids
+    * `c0` (vec_id < k), assignment `a1` (columns `a1Cols`), one
+    * [[MedianCentroids]] round to `c1`, final assignment `a2` (columns
+    * `a2Cols`). */
+  private def KMediansCtes(p: String, k: Int, a1Cols: String,
+      a2Cols: String): String =
+    s"""${p}v AS (SELECT vec_id, embedding AS emb,
+       |  list_reduce(list_transform(range(1, len(embedding)+1), i ->
+       |    CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)),
+       |    (a, b) -> a + b) AS vnorm2 FROM embeddings),
+       |${p}c0 AS (SELECT vec_id AS cluster_id, embedding AS cemb,
+       |  list_reduce(list_transform(range(1, len(embedding)+1), i ->
+       |    CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)),
+       |    (a, b) -> a + b) AS cnorm2 FROM embeddings WHERE vec_id < $k),
+       |""".stripMargin + {
+      val vs = if (p.isEmpty) "v" else s"${p}v v"
+      KMediansAssign(s"${p}a1", a1Cols, vs, s"${p}c0") + ",\n" +
+        MedianCentroids(p, "cluster_id", "emb", s"${p}a1") + ",\n" +
+        KMediansAssign(s"${p}a2", a2Cols, vs, s"${p}c1")
+    }
+
   /** Shared k-medians training CTEs (seed → assign → median update →
     * final assignment `a2`): k01 selects a2 directly, k02 aggregates
-    * inertia over it. (s08 keeps its own inline copy — its a2 carries
-    * extra columns.) */
+    * inertia over it. */
   private val KMediansA2: String = kMediansA2At(8)
 
   /** [[KMediansA2]] parameterized by the seed/cluster count K — k08
@@ -978,50 +1211,57 @@ object SparkEntry {
     * switches to the two-level pruned assignment (the oracle stays the
     * BRUTE form: assignPruned is spec-proven bitwise-equal to it). */
   private def kMediansA2At(k: Int): String =
-    s"""WITH v AS (SELECT vec_id, embedding AS emb,
-      |  list_reduce(list_transform(range(1, len(embedding)+1), i ->
-      |    CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)),
-      |    (a, b) -> a + b) AS vnorm2 FROM embeddings),
-      |c0 AS (SELECT vec_id AS cluster_id, embedding AS cemb,
-      |  list_reduce(list_transform(range(1, len(embedding)+1), i ->
-      |    CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)),
-      |    (a, b) -> a + b) AS cnorm2 FROM embeddings WHERE vec_id < $k),
-      |a1 AS (SELECT vec_id, emb, vnorm2, cluster_id, dist2 FROM (
-      |  SELECT vec_id, emb, vnorm2, cluster_id, dist2,
-      |    row_number() OVER (PARTITION BY vec_id
-      |      ORDER BY dist2 ASC, cluster_id ASC) AS rn
-      |  FROM (SELECT v.vec_id, v.emb, v.vnorm2, c.cluster_id,
-      |    v.vnorm2 + c.cnorm2 - 2.0 * list_reduce(
-      |      list_transform(range(1, len(v.emb)+1), i ->
-      |        CAST(v.emb[i] AS DOUBLE) * CAST(c.cemb[i] AS DOUBLE)),
-      |      (x, y) -> x + y) AS dist2
-      |    FROM v CROSS JOIN c0 c)) WHERE rn = 1),
-      |ex1 AS (SELECT cluster_id, vec_id, u.dim AS dim, u.val AS val
-      |  FROM (SELECT cluster_id, vec_id,
-      |    unnest(list_transform(range(1, len(emb)+1),
-      |      i -> {'dim': i, 'val': emb[i]})) AS u FROM a1)),
-      |med1 AS (SELECT cluster_id, dim, val FROM (
-      |  SELECT cluster_id, dim, val,
-      |    row_number() OVER (PARTITION BY cluster_id, dim
-      |      ORDER BY val ASC, vec_id ASC) AS rn,
-      |    COUNT(*) OVER (PARTITION BY cluster_id, dim) AS n
-      |  FROM ex1) WHERE rn = (n + 1) // 2),
-      |c1a AS (SELECT cluster_id, list(val ORDER BY dim) AS cemb
-      |  FROM med1 GROUP BY cluster_id),
-      |c1 AS (SELECT cluster_id, cemb,
-      |  list_reduce(list_transform(range(1, len(cemb)+1), i ->
-      |    CAST(cemb[i] AS DOUBLE) * CAST(cemb[i] AS DOUBLE)),
-      |    (a, b) -> a + b) AS cnorm2 FROM c1a),
-      |a2 AS (SELECT vec_id, cluster_id, dist2 FROM (
-      |  SELECT vec_id, cluster_id, dist2,
-      |    row_number() OVER (PARTITION BY vec_id
-      |      ORDER BY dist2 ASC, cluster_id ASC) AS rn
-      |  FROM (SELECT v.vec_id, c.cluster_id,
-      |    v.vnorm2 + c.cnorm2 - 2.0 * list_reduce(
-      |      list_transform(range(1, len(v.emb)+1), i ->
-      |        CAST(v.emb[i] AS DOUBLE) * CAST(c.cemb[i] AS DOUBLE)),
-      |      (x, y) -> x + y) AS dist2
-      |    FROM v CROSS JOIN c1 c)) WHERE rn = 1)""".stripMargin
+    "WITH " + KMediansCtes("", k, "vec_id, emb, vnorm2, cluster_id, dist2",
+      "vec_id, cluster_id, dist2")
+
+  /** [[graft.operators.Similarity.pqEncode]]'s training in SQL, WITHOUT
+    * the leading `WITH`: subspace rows `sn` (4 × 16 dims, squared
+    * norms; pqSubvectors), seed codewords `seed` (vec_id < 8), one
+    * [[PqAssign]] + [[MedianCentroids]] round to the codebook `c1`,
+    * the codes `codes`, then the 5-query LUT `q`/`lut` (pqLut). The
+    * trained CTE names carry the prefix `p`. */
+  private def PqCtes(p: String, seed: String): String =
+    s"""sn AS (SELECT vec_id, u.sub AS sub, u.semb AS semb,
+       |    list_reduce(list_transform(range(1, len(u.semb)+1), i ->
+       |      CAST(u.semb[i] AS DOUBLE) * CAST(u.semb[i] AS DOUBLE)),
+       |      (a, b) -> a + b) AS snorm2
+       |  FROM (SELECT vec_id, unnest(list_transform(range(0, 4), s ->
+       |    {'sub': s, 'semb': embedding[s*16+1 : s*16+16]})) AS u
+       |   FROM embeddings)),
+       |$seed AS (SELECT sub, vec_id AS code, semb AS cemb,
+       |    snorm2 AS cnorm2 FROM sn WHERE vec_id < 8),
+       |""".stripMargin +
+      PqAssign(s"${p}a1", "vec_id, sub, code, semb", "sn", seed) + ",\n" +
+      MedianCentroids(p, "sub, code", "semb", s"${p}a1") + ",\n" +
+      PqAssign(s"${p}codes", "vec_id, sub, code", "sn", s"${p}c1") + ",\n" +
+      s"""q AS (SELECT vec_id AS query_id, sub, semb AS qsemb
+         |  FROM sn WHERE vec_id < 5),
+         |lut AS (SELECT q.query_id, c.sub, c.code,
+         |  CAST(floor(list_reduce(list_transform(range(1, len(c.cemb)+1),
+         |    i -> CAST(q.qsemb[i] AS DOUBLE) * CAST(c.cemb[i] AS DOUBLE)),
+         |    (x, y) -> x + y) * 1000000.0) AS BIGINT) AS pdot_fp
+         |  FROM q JOIN ${p}c1 c ON q.sub = c.sub)""".stripMargin
+
+  /** [[graft.operators.Similarity]]'s pqAssign in SQL: `name` keeps
+    * each (vector, subspace) row of `vs` with its nearest codeword of
+    * `cs` in the same subspace (squared L2, ties toward the lower
+    * code). `cols` are the kept columns: code comes from the codebook
+    * side, every other one from the vector side. */
+  private def PqAssign(name: String, cols: String, vs: String,
+      cs: String): String = {
+    val inner = cols.split(", ")
+      .map(c => if (c == "code") "c.code" else s"v.$c")
+    s"""$name AS (SELECT $cols FROM (
+       |  SELECT $cols,
+       |    row_number() OVER (PARTITION BY vec_id, sub
+       |      ORDER BY dist2 ASC, code ASC) AS rn
+       |  FROM (SELECT ${inner.mkString(", ")},
+       |    v.snorm2 + c.cnorm2 - 2.0 * list_reduce(
+       |      list_transform(range(1, len(v.semb)+1), i ->
+       |        CAST(v.semb[i] AS DOUBLE) * CAST(c.cemb[i] AS DOUBLE)),
+       |      (x, y) -> x + y) AS dist2
+       |    FROM $vs v JOIN $cs c ON v.sub = c.sub)) WHERE rn = 1)""".stripMargin
+  }
 
   /** d18's deterministic messy-URL synthesis as a CTE (`u`) — the SQL
     * mirror of [[graft.operators.Dedup.syntheticUrl]], shared by the
@@ -1059,22 +1299,7 @@ object SparkEntry {
     * shared by d07 (label propagation) and d20 (star contraction):
     * both algorithms must land on the SAME fixed point. */
   private val MinLabelCcOracle: String =
-    """WITH RECURSIVE n AS (SELECT vec_id, label, embedding,
-      |  list_reduce(list_transform(range(1, len(embedding)+1), i ->
-      |    CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)),
-      |    (a, b) -> a + b) AS norm2 FROM embeddings),
-      |p AS (SELECT a.vec_id AS vec_id_a, b.vec_id AS vec_id_b,
-      |  list_reduce(list_transform(range(1, len(a.embedding)+1), i ->
-      |    CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)),
-      |    (x, y) -> x + y) / (sqrt(a.norm2) * sqrt(b.norm2)) AS cosine
-      | FROM n a JOIN n b ON a.label = b.label AND a.vec_id < b.vec_id),
-      |pairs AS (SELECT vec_id_a, vec_id_b FROM p WHERE cosine >= 0.35),
-      |edges AS (SELECT vec_id_a AS u, vec_id_b AS v FROM pairs
-      |  UNION SELECT vec_id_b, vec_id_a FROM pairs),
-      |reach AS (
-      |  SELECT u, u AS v FROM (SELECT DISTINCT u FROM edges)
-      |  UNION
-      |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u)
+    s"""WITH RECURSIVE $DedupClustersCtes
       |SELECT u AS vec_id, min(v) AS cluster_id,
       | (u = min(v)) AS is_canonical
       |FROM reach GROUP BY u ORDER BY u""".stripMargin
@@ -1105,6 +1330,20 @@ object SparkEntry {
     s"WITH $BruteCtes\n" +
     """SELECT query_id, neighbor_id, cosine, rank FROM r
       |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin
+
+  /** [[graft.operators.Similarity]]'s tierRecall tail in SQL: `ex`
+    * pairs each tier of `tiers` with the s01 exact top-10, and the
+    * final SELECT counts each (tier, query)'s hits in `ap` (tier,
+    * query_id, neighbor_id) as recall@10. */
+  private val TierRecallTail: String =
+    s"""ex AS (SELECT t.tier, b.query_id, b.neighbor_id
+       |  FROM ($BruteTopKOracle) b CROSS JOIN tiers t)
+       |SELECT e.tier, e.query_id, count(a.neighbor_id) AS n_hits,
+       |  CAST(count(a.neighbor_id) AS DOUBLE) / 10.0 AS recall
+       |FROM ex e LEFT JOIN ap a ON e.tier = a.tier
+       |  AND e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
+       |GROUP BY e.tier, e.query_id
+       |ORDER BY e.tier, e.query_id""".stripMargin
 
   /** s41: BruteCtes' n/q frames, raw-dot scoring (no norm division in
     * the ranking), rank by (dot DESC, id ASC); the reduction witness
@@ -1222,59 +1461,8 @@ object SparkEntry {
     * quantized to integer micros BEFORE the sum (order-free). Also a
     * recall-eval side of s13. */
   private val PqAdcOracle: String =
-    """WITH sn AS (SELECT vec_id, u.sub AS sub, u.semb AS semb,
-      |    list_reduce(list_transform(range(1, len(u.semb)+1), i ->
-      |      CAST(u.semb[i] AS DOUBLE) * CAST(u.semb[i] AS DOUBLE)),
-      |      (a, b) -> a + b) AS snorm2
-      |  FROM (SELECT vec_id, unnest(list_transform(range(0, 4), s ->
-      |    {'sub': s, 'semb': embedding[s*16+1 : s*16+16]})) AS u
-      |   FROM embeddings)),
-      |c0 AS (SELECT sub, vec_id AS code, semb AS cemb,
-      |    snorm2 AS cnorm2 FROM sn WHERE vec_id < 8),
-      |a1 AS (SELECT vec_id, sub, code, semb FROM (
-      |  SELECT vec_id, sub, code, semb,
-      |    row_number() OVER (PARTITION BY vec_id, sub
-      |      ORDER BY dist2 ASC, code ASC) AS rn
-      |  FROM (SELECT v.vec_id, v.sub, c.code, v.semb,
-      |    v.snorm2 + c.cnorm2 - 2.0 * list_reduce(
-      |      list_transform(range(1, len(v.semb)+1), i ->
-      |        CAST(v.semb[i] AS DOUBLE) * CAST(c.cemb[i] AS DOUBLE)),
-      |      (x, y) -> x + y) AS dist2
-      |    FROM sn v JOIN c0 c ON v.sub = c.sub)) WHERE rn = 1),
-      |ex1 AS (SELECT sub, code, vec_id, u.dim AS dim, u.val AS val
-      |  FROM (SELECT sub, code, vec_id,
-      |    unnest(list_transform(range(1, len(semb)+1),
-      |      i -> {'dim': i, 'val': semb[i]})) AS u FROM a1)),
-      |med1 AS (SELECT sub, code, dim, val FROM (
-      |  SELECT sub, code, dim, val,
-      |    row_number() OVER (PARTITION BY sub, code, dim
-      |      ORDER BY val ASC, vec_id ASC) AS rn,
-      |    COUNT(*) OVER (PARTITION BY sub, code, dim) AS n
-      |  FROM ex1) WHERE rn = (n + 1) // 2),
-      |c1a AS (SELECT sub, code, list(val ORDER BY dim) AS cemb
-      |  FROM med1 GROUP BY sub, code),
-      |c1 AS (SELECT sub, code, cemb,
-      |  list_reduce(list_transform(range(1, len(cemb)+1), i ->
-      |    CAST(cemb[i] AS DOUBLE) * CAST(cemb[i] AS DOUBLE)),
-      |    (a, b) -> a + b) AS cnorm2 FROM c1a),
-      |codes AS (SELECT vec_id, sub, code FROM (
-      |  SELECT vec_id, sub, code,
-      |    row_number() OVER (PARTITION BY vec_id, sub
-      |      ORDER BY dist2 ASC, code ASC) AS rn
-      |  FROM (SELECT v.vec_id, v.sub, c.code,
-      |    v.snorm2 + c.cnorm2 - 2.0 * list_reduce(
-      |      list_transform(range(1, len(v.semb)+1), i ->
-      |        CAST(v.semb[i] AS DOUBLE) * CAST(c.cemb[i] AS DOUBLE)),
-      |      (x, y) -> x + y) AS dist2
-      |    FROM sn v JOIN c1 c ON v.sub = c.sub)) WHERE rn = 1),
-      |q AS (SELECT vec_id AS query_id, sub, semb AS qsemb
-      |  FROM sn WHERE vec_id < 5),
-      |lut AS (SELECT q.query_id, c.sub, c.code,
-      |  CAST(floor(list_reduce(list_transform(range(1, len(c.cemb)+1),
-      |    i -> CAST(q.qsemb[i] AS DOUBLE) * CAST(c.cemb[i] AS DOUBLE)),
-      |    (x, y) -> x + y) * 1000000.0) AS BIGINT) AS pdot_fp
-      |  FROM q JOIN c1 c ON q.sub = c.sub),
-      |adc AS (SELECT l.query_id, co.vec_id AS neighbor_id,
+    "WITH " + PqCtes("", "c0") + ",\n" +
+    """adc AS (SELECT l.query_id, co.vec_id AS neighbor_id,
       |  CAST(SUM(l.pdot_fp) AS BIGINT) AS adc_fp
       |  FROM codes co JOIN lut l ON co.sub = l.sub AND co.code = l.code
       |  WHERE co.vec_id <> l.query_id GROUP BY 1, 2),
@@ -1291,102 +1479,8 @@ object SparkEntry {
     * by [[IvfPqOracle]] (own-cell ADC suffix) and s16's nprobe curve
     * (cell-ranked probe suffix). */
   private val IvfPqCtes: String =
-    """cv AS (SELECT vec_id, embedding AS emb,
-      |  list_reduce(list_transform(range(1, len(embedding)+1), i ->
-      |    CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)),
-      |    (a, b) -> a + b) AS vnorm2 FROM embeddings),
-      |cc0 AS (SELECT vec_id AS cluster_id, embedding AS cemb,
-      |  list_reduce(list_transform(range(1, len(embedding)+1), i ->
-      |    CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)),
-      |    (a, b) -> a + b) AS cnorm2 FROM embeddings WHERE vec_id < 8),
-      |ca1 AS (SELECT vec_id, emb, vnorm2, cluster_id FROM (
-      |  SELECT vec_id, emb, vnorm2, cluster_id,
-      |    row_number() OVER (PARTITION BY vec_id
-      |      ORDER BY dist2 ASC, cluster_id ASC) AS rn
-      |  FROM (SELECT v.vec_id, v.emb, v.vnorm2, c.cluster_id,
-      |    v.vnorm2 + c.cnorm2 - 2.0 * list_reduce(
-      |      list_transform(range(1, len(v.emb)+1), i ->
-      |        CAST(v.emb[i] AS DOUBLE) * CAST(c.cemb[i] AS DOUBLE)),
-      |      (x, y) -> x + y) AS dist2
-      |    FROM cv v CROSS JOIN cc0 c)) WHERE rn = 1),
-      |cex1 AS (SELECT cluster_id, vec_id, u.dim AS dim, u.val AS val
-      |  FROM (SELECT cluster_id, vec_id,
-      |    unnest(list_transform(range(1, len(emb)+1),
-      |      i -> {'dim': i, 'val': emb[i]})) AS u FROM ca1)),
-      |cmed1 AS (SELECT cluster_id, dim, val FROM (
-      |  SELECT cluster_id, dim, val,
-      |    row_number() OVER (PARTITION BY cluster_id, dim
-      |      ORDER BY val ASC, vec_id ASC) AS rn,
-      |    COUNT(*) OVER (PARTITION BY cluster_id, dim) AS n
-      |  FROM cex1) WHERE rn = (n + 1) // 2),
-      |cc1a AS (SELECT cluster_id, list(val ORDER BY dim) AS cemb
-      |  FROM cmed1 GROUP BY cluster_id),
-      |cc1 AS (SELECT cluster_id, cemb,
-      |  list_reduce(list_transform(range(1, len(cemb)+1), i ->
-      |    CAST(cemb[i] AS DOUBLE) * CAST(cemb[i] AS DOUBLE)),
-      |    (a, b) -> a + b) AS cnorm2 FROM cc1a),
-      |ca2 AS (SELECT vec_id, cluster_id FROM (
-      |  SELECT vec_id, cluster_id,
-      |    row_number() OVER (PARTITION BY vec_id
-      |      ORDER BY dist2 ASC, cluster_id ASC) AS rn
-      |  FROM (SELECT v.vec_id, c.cluster_id,
-      |    v.vnorm2 + c.cnorm2 - 2.0 * list_reduce(
-      |      list_transform(range(1, len(v.emb)+1), i ->
-      |        CAST(v.emb[i] AS DOUBLE) * CAST(c.cemb[i] AS DOUBLE)),
-      |      (x, y) -> x + y) AS dist2
-      |    FROM cv v CROSS JOIN cc1 c)) WHERE rn = 1),
-      |sn AS (SELECT vec_id, u.sub AS sub, u.semb AS semb,
-      |    list_reduce(list_transform(range(1, len(u.semb)+1), i ->
-      |      CAST(u.semb[i] AS DOUBLE) * CAST(u.semb[i] AS DOUBLE)),
-      |      (a, b) -> a + b) AS snorm2
-      |  FROM (SELECT vec_id, unnest(list_transform(range(0, 4), s ->
-      |    {'sub': s, 'semb': embedding[s*16+1 : s*16+16]})) AS u
-      |   FROM embeddings)),
-      |p0 AS (SELECT sub, vec_id AS code, semb AS cemb,
-      |    snorm2 AS cnorm2 FROM sn WHERE vec_id < 8),
-      |pa1 AS (SELECT vec_id, sub, code, semb FROM (
-      |  SELECT vec_id, sub, code, semb,
-      |    row_number() OVER (PARTITION BY vec_id, sub
-      |      ORDER BY dist2 ASC, code ASC) AS rn
-      |  FROM (SELECT v.vec_id, v.sub, c.code, v.semb,
-      |    v.snorm2 + c.cnorm2 - 2.0 * list_reduce(
-      |      list_transform(range(1, len(v.semb)+1), i ->
-      |        CAST(v.semb[i] AS DOUBLE) * CAST(c.cemb[i] AS DOUBLE)),
-      |      (x, y) -> x + y) AS dist2
-      |    FROM sn v JOIN p0 c ON v.sub = c.sub)) WHERE rn = 1),
-      |pex1 AS (SELECT sub, code, vec_id, u.dim AS dim, u.val AS val
-      |  FROM (SELECT sub, code, vec_id,
-      |    unnest(list_transform(range(1, len(semb)+1),
-      |      i -> {'dim': i, 'val': semb[i]})) AS u FROM pa1)),
-      |pmed1 AS (SELECT sub, code, dim, val FROM (
-      |  SELECT sub, code, dim, val,
-      |    row_number() OVER (PARTITION BY sub, code, dim
-      |      ORDER BY val ASC, vec_id ASC) AS rn,
-      |    COUNT(*) OVER (PARTITION BY sub, code, dim) AS n
-      |  FROM pex1) WHERE rn = (n + 1) // 2),
-      |pc1a AS (SELECT sub, code, list(val ORDER BY dim) AS cemb
-      |  FROM pmed1 GROUP BY sub, code),
-      |pc1 AS (SELECT sub, code, cemb,
-      |  list_reduce(list_transform(range(1, len(cemb)+1), i ->
-      |    CAST(cemb[i] AS DOUBLE) * CAST(cemb[i] AS DOUBLE)),
-      |    (a, b) -> a + b) AS cnorm2 FROM pc1a),
-      |pcodes AS (SELECT vec_id, sub, code FROM (
-      |  SELECT vec_id, sub, code,
-      |    row_number() OVER (PARTITION BY vec_id, sub
-      |      ORDER BY dist2 ASC, code ASC) AS rn
-      |  FROM (SELECT v.vec_id, v.sub, c.code,
-      |    v.snorm2 + c.cnorm2 - 2.0 * list_reduce(
-      |      list_transform(range(1, len(v.semb)+1), i ->
-      |        CAST(v.semb[i] AS DOUBLE) * CAST(c.cemb[i] AS DOUBLE)),
-      |      (x, y) -> x + y) AS dist2
-      |    FROM sn v JOIN pc1 c ON v.sub = c.sub)) WHERE rn = 1),
-      |q AS (SELECT vec_id AS query_id, sub, semb AS qsemb
-      |  FROM sn WHERE vec_id < 5),
-      |lut AS (SELECT q.query_id, c.sub, c.code,
-      |  CAST(floor(list_reduce(list_transform(range(1, len(c.cemb)+1),
-      |    i -> CAST(q.qsemb[i] AS DOUBLE) * CAST(c.cemb[i] AS DOUBLE)),
-      |    (x, y) -> x + y) * 1000000.0) AS BIGINT) AS pdot_fp
-      |  FROM q JOIN pc1 c ON q.sub = c.sub)""".stripMargin
+    KMediansCtes("c", 8, "vec_id, emb, vnorm2, cluster_id",
+      "vec_id, cluster_id") + ",\n" + PqCtes("p", "p0")
 
   /** s12's IVF-PQ top-10: [[IvfPqCtes]] + ADC scoring restricted to
     * each query's own coarse cell. Shared verbatim by s15 (the serving
@@ -1556,14 +1650,7 @@ object SparkEntry {
       |  UNION ALL
       |  SELECT 'ivfpq_residual' AS tier, query_id, neighbor_id
       |    FROM ($IvfPqResidualOracle) sx),
-      |ex AS (SELECT t.tier, b.query_id, b.neighbor_id
-      |  FROM ($BruteTopKOracle) b CROSS JOIN tiers t)
-      |SELECT e.tier, e.query_id, count(a.neighbor_id) AS n_hits,
-      |  CAST(count(a.neighbor_id) AS DOUBLE) / 10.0 AS recall
-      |FROM ex e LEFT JOIN ap a ON e.tier = a.tier
-      |  AND e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-      |GROUP BY e.tier, e.query_id
-      |ORDER BY e.tier, e.query_id""".stripMargin
+      |$TierRecallTail""".stripMargin
 
   /** s08's trained-IVF CTE chain, WITHOUT the leading `WITH`: seed
     * centroids c0 (vec_id < 8), one component-wise lower-median
@@ -1573,50 +1660,8 @@ object SparkEntry {
     * and s14's nprobe recall curve (which ranks cells against the same
     * trained c1). */
   private val IvfTrainCtes: String =
-    """v AS (SELECT vec_id, embedding AS emb,
-      |  list_reduce(list_transform(range(1, len(embedding)+1), i ->
-      |    CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)),
-      |    (a, b) -> a + b) AS vnorm2 FROM embeddings),
-      |c0 AS (SELECT vec_id AS cluster_id, embedding AS cemb,
-      |  list_reduce(list_transform(range(1, len(embedding)+1), i ->
-      |    CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)),
-      |    (a, b) -> a + b) AS cnorm2 FROM embeddings WHERE vec_id < 8),
-      |a1 AS (SELECT vec_id, emb, vnorm2, cluster_id, dist2 FROM (
-      |  SELECT vec_id, emb, vnorm2, cluster_id, dist2,
-      |    row_number() OVER (PARTITION BY vec_id
-      |      ORDER BY dist2 ASC, cluster_id ASC) AS rn
-      |  FROM (SELECT v.vec_id, v.emb, v.vnorm2, c.cluster_id,
-      |    v.vnorm2 + c.cnorm2 - 2.0 * list_reduce(
-      |      list_transform(range(1, len(v.emb)+1), i ->
-      |        CAST(v.emb[i] AS DOUBLE) * CAST(c.cemb[i] AS DOUBLE)),
-      |      (x, y) -> x + y) AS dist2
-      |    FROM v CROSS JOIN c0 c)) WHERE rn = 1),
-      |ex1 AS (SELECT cluster_id, vec_id, u.dim AS dim, u.val AS val
-      |  FROM (SELECT cluster_id, vec_id,
-      |    unnest(list_transform(range(1, len(emb)+1),
-      |      i -> {'dim': i, 'val': emb[i]})) AS u FROM a1)),
-      |med1 AS (SELECT cluster_id, dim, val FROM (
-      |  SELECT cluster_id, dim, val,
-      |    row_number() OVER (PARTITION BY cluster_id, dim
-      |      ORDER BY val ASC, vec_id ASC) AS rn,
-      |    COUNT(*) OVER (PARTITION BY cluster_id, dim) AS n
-      |  FROM ex1) WHERE rn = (n + 1) // 2),
-      |c1a AS (SELECT cluster_id, list(val ORDER BY dim) AS cemb
-      |  FROM med1 GROUP BY cluster_id),
-      |c1 AS (SELECT cluster_id, cemb,
-      |  list_reduce(list_transform(range(1, len(cemb)+1), i ->
-      |    CAST(cemb[i] AS DOUBLE) * CAST(cemb[i] AS DOUBLE)),
-      |    (a, b) -> a + b) AS cnorm2 FROM c1a),
-      |a2 AS (SELECT vec_id, emb, vnorm2, cluster_id FROM (
-      |  SELECT vec_id, emb, vnorm2, cluster_id,
-      |    row_number() OVER (PARTITION BY vec_id
-      |      ORDER BY dist2 ASC, cluster_id ASC) AS rn
-      |  FROM (SELECT v.vec_id, v.emb, v.vnorm2, c.cluster_id,
-      |    v.vnorm2 + c.cnorm2 - 2.0 * list_reduce(
-      |      list_transform(range(1, len(v.emb)+1), i ->
-      |        CAST(v.emb[i] AS DOUBLE) * CAST(c.cemb[i] AS DOUBLE)),
-      |      (x, y) -> x + y) AS dist2
-      |    FROM v CROSS JOIN c1 c)) WHERE rn = 1)""".stripMargin
+    KMediansCtes("", 8, "vec_id, emb, vnorm2, cluster_id, dist2",
+      "vec_id, emb, vnorm2, cluster_id")
 
   /** `.replace` with a drift guard: requires the anchor text to be
     * present FIRST, so an edit to a shared CTE chain fails loudly at
@@ -1666,18 +1711,9 @@ object SparkEntry {
     * engines). The unused single-assign `a2` CTE stays in the chain —
     * never referenced, never evaluated. */
   private val KnnGraphMultiOracle: String =
-    s"WITH $KnnGraphCtes,\n" +
-    """a2m AS (SELECT vec_id, emb, vnorm2, cluster_id FROM (
-      |  SELECT vec_id, emb, vnorm2, cluster_id,
-      |    row_number() OVER (PARTITION BY vec_id
-      |      ORDER BY dist2 ASC, cluster_id ASC) AS rn
-      |  FROM (SELECT v.vec_id, v.emb, v.vnorm2, c.cluster_id,
-      |    v.vnorm2 + c.cnorm2 - 2.0 * list_reduce(
-      |      list_transform(range(1, len(v.emb)+1), i ->
-      |        CAST(v.emb[i] AS DOUBLE) * CAST(c.cemb[i] AS DOUBLE)),
-      |      (x, y) -> x + y) AS dist2
-      |    FROM v CROSS JOIN c1 c)) WHERE rn <= 2),
-      |scm AS (SELECT DISTINCT a.vec_id, b.vec_id AS neighbor_id,
+    s"WITH $KnnGraphCtes,\n" + KMediansAssign("a2m",
+      "vec_id, emb, vnorm2, cluster_id", "v", "c1", "rn <= 2") + ",\n" +
+    """scm AS (SELECT DISTINCT a.vec_id, b.vec_id AS neighbor_id,
       |  list_reduce(list_transform(range(1, len(a.emb)+1), i ->
       |    CAST(a.emb[i] AS DOUBLE) * CAST(b.emb[i] AS DOUBLE)),
       |    (x, y) -> x + y) / (sqrt(a.vnorm2) * sqrt(b.vnorm2)) AS cosine
@@ -1888,14 +1924,7 @@ object SparkEntry {
       |  UNION ALL
       |  SELECT 'ivfpq' AS tier, query_id, neighbor_id
       |    FROM ($IvfPqOracle) ix),
-      |ex AS (SELECT t.tier, b.query_id, b.neighbor_id
-      |  FROM ($BruteTopKOracle) b CROSS JOIN tiers t)
-      |SELECT e.tier, e.query_id, count(a.neighbor_id) AS n_hits,
-      |  CAST(count(a.neighbor_id) AS DOUBLE) / 10.0 AS recall
-      |FROM ex e LEFT JOIN ap a ON e.tier = a.tier
-      |  AND e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-      |GROUP BY e.tier, e.query_id
-      |ORDER BY e.tier, e.query_id""".stripMargin
+      |$TierRecallTail""".stripMargin
 
   /** s14: recall@10 of the trained-IVF probe per n_probe (1..2) —
     * [[IvfTrainCtes]] trains/assigns, pr ranks every trained cell per
@@ -2145,124 +2174,21 @@ object SparkEntry {
     * pcodes) and the query/LUT/ADC suffix run over the full corpus:
     * the frozen-model append semantics, base-trained quantizers coding
     * vectors they never saw. */
-  private val IvfPqAppendOracle: String =
-    """WITH cv AS (SELECT vec_id, embedding AS emb,
-      |  list_reduce(list_transform(range(1, len(embedding)+1), i ->
-      |    CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)),
-      |    (a, b) -> a + b) AS vnorm2 FROM embeddings),
-      |cb AS (SELECT vec_id, emb, vnorm2 FROM cv WHERE vec_id % 5 <> 0),
-      |cc0 AS (SELECT vec_id AS cluster_id, embedding AS cemb,
-      |  list_reduce(list_transform(range(1, len(embedding)+1), i ->
-      |    CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)),
-      |    (a, b) -> a + b) AS cnorm2 FROM embeddings
-      |  WHERE vec_id < 8 AND vec_id % 5 <> 0),
-      |ca1 AS (SELECT vec_id, emb, vnorm2, cluster_id FROM (
-      |  SELECT vec_id, emb, vnorm2, cluster_id,
-      |    row_number() OVER (PARTITION BY vec_id
-      |      ORDER BY dist2 ASC, cluster_id ASC) AS rn
-      |  FROM (SELECT v.vec_id, v.emb, v.vnorm2, c.cluster_id,
-      |    v.vnorm2 + c.cnorm2 - 2.0 * list_reduce(
-      |      list_transform(range(1, len(v.emb)+1), i ->
-      |        CAST(v.emb[i] AS DOUBLE) * CAST(c.cemb[i] AS DOUBLE)),
-      |      (x, y) -> x + y) AS dist2
-      |    FROM cb v CROSS JOIN cc0 c)) WHERE rn = 1),
-      |cex1 AS (SELECT cluster_id, vec_id, u.dim AS dim, u.val AS val
-      |  FROM (SELECT cluster_id, vec_id,
-      |    unnest(list_transform(range(1, len(emb)+1),
-      |      i -> {'dim': i, 'val': emb[i]})) AS u FROM ca1)),
-      |cmed1 AS (SELECT cluster_id, dim, val FROM (
-      |  SELECT cluster_id, dim, val,
-      |    row_number() OVER (PARTITION BY cluster_id, dim
-      |      ORDER BY val ASC, vec_id ASC) AS rn,
-      |    COUNT(*) OVER (PARTITION BY cluster_id, dim) AS n
-      |  FROM cex1) WHERE rn = (n + 1) // 2),
-      |cc1a AS (SELECT cluster_id, list(val ORDER BY dim) AS cemb
-      |  FROM cmed1 GROUP BY cluster_id),
-      |cc1 AS (SELECT cluster_id, cemb,
-      |  list_reduce(list_transform(range(1, len(cemb)+1), i ->
-      |    CAST(cemb[i] AS DOUBLE) * CAST(cemb[i] AS DOUBLE)),
-      |    (a, b) -> a + b) AS cnorm2 FROM cc1a),
-      |ca2 AS (SELECT vec_id, cluster_id FROM (
-      |  SELECT vec_id, cluster_id,
-      |    row_number() OVER (PARTITION BY vec_id
-      |      ORDER BY dist2 ASC, cluster_id ASC) AS rn
-      |  FROM (SELECT v.vec_id, c.cluster_id,
-      |    v.vnorm2 + c.cnorm2 - 2.0 * list_reduce(
-      |      list_transform(range(1, len(v.emb)+1), i ->
-      |        CAST(v.emb[i] AS DOUBLE) * CAST(c.cemb[i] AS DOUBLE)),
-      |      (x, y) -> x + y) AS dist2
-      |    FROM cv v CROSS JOIN cc1 c)) WHERE rn = 1),
-      |sn AS (SELECT vec_id, u.sub AS sub, u.semb AS semb,
-      |    list_reduce(list_transform(range(1, len(u.semb)+1), i ->
-      |      CAST(u.semb[i] AS DOUBLE) * CAST(u.semb[i] AS DOUBLE)),
-      |      (a, b) -> a + b) AS snorm2
-      |  FROM (SELECT vec_id, unnest(list_transform(range(0, 4), s ->
-      |    {'sub': s, 'semb': embedding[s*16+1 : s*16+16]})) AS u
-      |   FROM embeddings)),
-      |snb AS (SELECT vec_id, sub, semb, snorm2 FROM sn
-      |  WHERE vec_id % 5 <> 0),
-      |p0 AS (SELECT sub, vec_id AS code, semb AS cemb,
-      |    snorm2 AS cnorm2 FROM sn
-      |  WHERE vec_id < 8 AND vec_id % 5 <> 0),
-      |pa1 AS (SELECT vec_id, sub, code, semb FROM (
-      |  SELECT vec_id, sub, code, semb,
-      |    row_number() OVER (PARTITION BY vec_id, sub
-      |      ORDER BY dist2 ASC, code ASC) AS rn
-      |  FROM (SELECT v.vec_id, v.sub, c.code, v.semb,
-      |    v.snorm2 + c.cnorm2 - 2.0 * list_reduce(
-      |      list_transform(range(1, len(v.semb)+1), i ->
-      |        CAST(v.semb[i] AS DOUBLE) * CAST(c.cemb[i] AS DOUBLE)),
-      |      (x, y) -> x + y) AS dist2
-      |    FROM snb v JOIN p0 c ON v.sub = c.sub)) WHERE rn = 1),
-      |pex1 AS (SELECT sub, code, vec_id, u.dim AS dim, u.val AS val
-      |  FROM (SELECT sub, code, vec_id,
-      |    unnest(list_transform(range(1, len(semb)+1),
-      |      i -> {'dim': i, 'val': semb[i]})) AS u FROM pa1)),
-      |pmed1 AS (SELECT sub, code, dim, val FROM (
-      |  SELECT sub, code, dim, val,
-      |    row_number() OVER (PARTITION BY sub, code, dim
-      |      ORDER BY val ASC, vec_id ASC) AS rn,
-      |    COUNT(*) OVER (PARTITION BY sub, code, dim) AS n
-      |  FROM pex1) WHERE rn = (n + 1) // 2),
-      |pc1a AS (SELECT sub, code, list(val ORDER BY dim) AS cemb
-      |  FROM pmed1 GROUP BY sub, code),
-      |pc1 AS (SELECT sub, code, cemb,
-      |  list_reduce(list_transform(range(1, len(cemb)+1), i ->
-      |    CAST(cemb[i] AS DOUBLE) * CAST(cemb[i] AS DOUBLE)),
-      |    (a, b) -> a + b) AS cnorm2 FROM pc1a),
-      |pcodes AS (SELECT vec_id, sub, code FROM (
-      |  SELECT vec_id, sub, code,
-      |    row_number() OVER (PARTITION BY vec_id, sub
-      |      ORDER BY dist2 ASC, code ASC) AS rn
-      |  FROM (SELECT v.vec_id, v.sub, c.code,
-      |    v.snorm2 + c.cnorm2 - 2.0 * list_reduce(
-      |      list_transform(range(1, len(v.semb)+1), i ->
-      |        CAST(v.semb[i] AS DOUBLE) * CAST(c.cemb[i] AS DOUBLE)),
-      |      (x, y) -> x + y) AS dist2
-      |    FROM sn v JOIN pc1 c ON v.sub = c.sub)) WHERE rn = 1),
-      |q AS (SELECT vec_id AS query_id, sub, semb AS qsemb
-      |  FROM sn WHERE vec_id < 5),
-      |lut AS (SELECT q.query_id, c.sub, c.code,
-      |  CAST(floor(list_reduce(list_transform(range(1, len(c.cemb)+1),
-      |    i -> CAST(q.qsemb[i] AS DOUBLE) * CAST(c.cemb[i] AS DOUBLE)),
-      |    (x, y) -> x + y) * 1000000.0) AS BIGINT) AS pdot_fp
-      |  FROM q JOIN pc1 c ON q.sub = c.sub),
-      |qc AS (SELECT vec_id AS query_id, cluster_id AS qcell
-      |  FROM ca2 WHERE vec_id < 5),
-      |adc AS (SELECT l.query_id, qc.qcell, co.vec_id AS neighbor_id,
-      |  CAST(SUM(l.pdot_fp) AS BIGINT) AS adc_fp
-      |  FROM pcodes co
-      |  JOIN ca2 ce ON co.vec_id = ce.vec_id
-      |  JOIN lut l ON co.sub = l.sub AND co.code = l.code
-      |  JOIN qc ON l.query_id = qc.query_id
-      |  WHERE ce.cluster_id = qc.qcell AND co.vec_id <> l.query_id
-      |  GROUP BY 1, 2, 3),
-      |r AS (SELECT query_id, qcell, neighbor_id, adc_fp,
-      |  CAST(row_number() OVER (PARTITION BY query_id
-      |    ORDER BY adc_fp DESC, neighbor_id ASC) AS BIGINT) AS rank
-      |  FROM adc)
-      |SELECT query_id, qcell AS cell, neighbor_id, adc_fp, rank FROM r
-      |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin
+  private val IvfPqAppendOracle: String = {
+    val chain = Seq(
+      "cc0 AS (" -> ("cb AS (SELECT vec_id, emb, vnorm2 FROM cv" +
+        " WHERE vec_id % 5 <> 0),\ncc0 AS ("),
+      "FROM embeddings WHERE vec_id < 8)" ->
+        "FROM embeddings\n  WHERE vec_id < 8 AND vec_id % 5 <> 0)",
+      "FROM cv v CROSS JOIN cc0 c" -> "FROM cb v CROSS JOIN cc0 c",
+      "p0 AS (" -> ("snb AS (SELECT vec_id, sub, semb, snorm2 FROM sn\n" +
+        "  WHERE vec_id % 5 <> 0),\np0 AS ("),
+      "FROM sn WHERE vec_id < 8)" ->
+        "FROM sn\n  WHERE vec_id < 8 AND vec_id % 5 <> 0)",
+      "FROM sn v JOIN p0 c" -> "FROM snb v JOIN p0 c"
+    ).foldLeft(IvfPqCtes) { case (t, (a, r)) => replaceAnchored(t, a, r) }
+    s"WITH $chain,\n" + IvfPqAdcSuffix
+  }
 
   /** Shared by l04 (relational merge) and l07 (merge through the
     * snapshot commit path): both must equal this exact-SQL form. */
@@ -2470,14 +2396,7 @@ object SparkEntry {
       |  UNION ALL
       |  SELECT 'pq_opq' AS tier, query_id, neighbor_id
       |    FROM ($OpqPqOracle) ox),
-      |ex AS (SELECT t.tier, b.query_id, b.neighbor_id
-      |  FROM ($BruteTopKOracle) b CROSS JOIN tiers t)
-      |SELECT e.tier, e.query_id, count(a.neighbor_id) AS n_hits,
-      |  CAST(count(a.neighbor_id) AS DOUBLE) / 10.0 AS recall
-      |FROM ex e LEFT JOIN ap a ON e.tier = a.tier
-      |  AND e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-      |GROUP BY e.tier, e.query_id
-      |ORDER BY e.tier, e.query_id""".stripMargin
+      |$TierRecallTail""".stripMargin
 
   /** s38: [[OpqRecallOracle]]'s shape with the third tier — all three
     * serving chains nested as derived tables (the s13 precedent). */
@@ -2494,14 +2413,7 @@ object SparkEntry {
       |  UNION ALL
       |  SELECT 'pq_opqrot' AS tier, query_id, neighbor_id
       |    FROM ($RotPqOracle) rx),
-      |ex AS (SELECT t.tier, b.query_id, b.neighbor_id
-      |  FROM ($BruteTopKOracle) b CROSS JOIN tiers t)
-      |SELECT e.tier, e.query_id, count(a.neighbor_id) AS n_hits,
-      |  CAST(count(a.neighbor_id) AS DOUBLE) / 10.0 AS recall
-      |FROM ex e LEFT JOIN ap a ON e.tier = a.tier
-      |  AND e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-      |GROUP BY e.tier, e.query_id
-      |ORDER BY e.tier, e.query_id""".stripMargin
+      |$TierRecallTail""".stripMargin
 
   /** s39: [[RotationRecallOracle]] re-pointed wholesale at the
     * anisotropic view — one text surgery (`FROM embeddings` →
@@ -2540,7 +2452,7 @@ object SparkEntry {
     * incrementally (stored indexes + delta frames); equal output IS
     * the correctness statement. */
   private lazy val IncrementalBuildOracle: String =
-    """WITH uni AS MATERIALIZED (
+    s"""WITH uni AS MATERIALIZED (
       |  SELECT doc_id, text, lang,
       |    CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END AS batch
       |  FROM documents
@@ -2565,15 +2477,15 @@ object SparkEntry {
       |    CAST(doc_id // 5 AS VARCHAR) END AS url FROM uni),
       |cn AS (SELECT doc_id, text, lang, batch,
       |  regexp_replace(lower(regexp_extract(url,
-      |    '^[a-zA-Z]+://([^/?#]+)', 1)), '^www\.', '') ||
+      |    '^[a-zA-Z]+://([^/?#]+)', 1)), '^www\\.', '') ||
       |  regexp_replace(regexp_extract(url,
-      |    '^[a-zA-Z]+://[^/?#]+([^?#]*)', 1), '/$', '') ||
+      |    '^[a-zA-Z]+://[^/?#]+([^?#]*)', 1), '/$$', '') ||
       |  CASE WHEN array_to_string(list_sort(list_filter(
-      |      string_split(regexp_extract(url, '^[^?#]*\?([^#]*)', 1),
+      |      string_split(regexp_extract(url, '^[^?#]*\\?([^#]*)', 1),
       |        '&'), x -> x <> '' AND NOT starts_with(x, 'utm_'))),
       |      '&') <> ''
       |    THEN '?' || array_to_string(list_sort(list_filter(
-      |      string_split(regexp_extract(url, '^[^?#]*\?([^#]*)', 1),
+      |      string_split(regexp_extract(url, '^[^?#]*\\?([^#]*)', 1),
       |        '&'), x -> x <> '' AND NOT starts_with(x, 'utm_'))), '&')
       |    ELSE '' END AS canon_url FROM u),
       |uk AS (SELECT doc_id, text, lang, batch FROM (
@@ -2581,18 +2493,9 @@ object SparkEntry {
       |    ORDER BY batch, doc_id) AS rn FROM cn) WHERE rn = 1),
       |dk AS MATERIALIZED (SELECT doc_id, text, lang, batch FROM (
       |  SELECT *, row_number() OVER (
-      |    PARTITION BY md5(regexp_replace(trim(text), '\s+', ' ', 'g'))
+      |    PARTITION BY md5(regexp_replace(trim(text), '\\s+', ' ', 'g'))
       |    ORDER BY batch, doc_id) AS rn FROM uk) WHERE rn = 1),
-      |t AS (SELECT doc_id,
-      |  string_split_regex(trim(text), '\s+') AS toks FROM uni),
-      |s AS (SELECT doc_id, list_distinct(
-      |  CASE WHEN len(toks) >= 3 THEN
-      |    list_transform(range(0, len(toks)-2),
-      |      i -> array_to_string(toks[i+1:i+3], ' '))
-      |  ELSE [array_to_string(toks, ' ')] END) AS sh FROM t),
-      |g AS (SELECT doc_id, list_transform(range(0, 12), j ->
-      |  list_min(list_transform(sh, x ->
-      |    md5(concat(CAST(j AS VARCHAR), ':', x))))) AS sig FROM s),
+      |${MinhashCtes("uni")},
       |b AS (SELECT doc_id, list_transform(range(0, 4), k ->
       |  md5(array_to_string(sig[k*3+1:k*3+3], '|'))) AS bands FROM g),
       |e AS MATERIALIZED (SELECT doc_id, k AS band, bands[k+1] AS digest
@@ -2605,7 +2508,7 @@ object SparkEntry {
       |pool AS (SELECT dk.* FROM dk WHERE dk.doc_id % 10 <> 0
       |  AND dk.doc_id NOT IN (SELECT doc_id FROM contam)),
       |tq AS (SELECT doc_id, lang, batch,
-      |  string_split_regex(trim(text), '\s+') AS toks, text FROM pool),
+      |  string_split_regex(trim(text), '\\s+') AS toks, text FROM pool),
       |q AS (SELECT doc_id, lang, batch,
       |  CAST(len(toks) AS BIGINT) AS n_tokens,
       |  least(1.0, CAST(len(toks) AS DOUBLE)/64.0)*0.4 +
@@ -2873,20 +2776,7 @@ object SparkEntry {
   /** s34: s03's plane/projection CTEs at 16 bits, packed to a BIGINT,
     * xor+bit_count ranking with the (distance asc, id asc) order. */
   private val HammingOracle: String =
-    """WITH c1 AS (SELECT vec_id, embedding,
-      |  unnest(range(0, len(embedding))) AS i FROM embeddings),
-      |c2 AS (SELECT vec_id, CAST(i AS INT) AS i, embedding[i+1] AS v
-      |  FROM c1),
-      |planes AS (SELECT a.i, b.j,
-      |  CASE WHEN (strpos('0123456789abcdef',
-      |    substr(md5(a.i || ':' || b.j), 1, 1)) - 1) % 2 = 1
-      |  THEN 1 ELSE -1 END AS s
-      |  FROM (SELECT unnest(range(0, 4096)) AS i) a
-      |  CROSS JOIN (SELECT unnest(range(0, 16)) AS j) b),
-      |proj AS (SELECT c2.vec_id, p.j,
-      |  SUM(CAST(floor(CAST(v AS DOUBLE) * 1000000) AS BIGINT) * p.s)
-      |    AS pr
-      |  FROM c2 JOIN planes p ON c2.i = p.i GROUP BY 1, 2),
+    s"""WITH ${SignLshCtes(16)},
       |codes AS (SELECT vec_id,
       |  CAST(SUM(CASE WHEN pr > 0
       |    THEN CAST(power(2, j) AS BIGINT) ELSE 0 END) AS BIGINT)
@@ -2905,8 +2795,8 @@ object SparkEntry {
       |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin
 
   private val Bm25Oracle: String =
-    """WITH d AS (SELECT doc_id,
-      |  string_split_regex(trim(text), '\s+') AS toks FROM documents),
+    s"""WITH d AS (SELECT doc_id,
+      |  string_split_regex(trim(text), '\\s+') AS toks FROM documents),
       |dd AS (SELECT doc_id, len(toks) AS dl, toks FROM d),
       |st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
       |  CAST(SUM(dl) AS BIGINT) AS sum_dl FROM dd),
@@ -2917,15 +2807,7 @@ object SparkEntry {
       |dfq AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df
       |  FROM tf GROUP BY term),
       |sc AS (SELECT tf.doc_id, tf.term,
-      |  ((CAST(st.n_docs AS DOUBLE) - CAST(dfq.df AS DOUBLE)
-      |      + CAST(0.5 AS DOUBLE))
-      |    / (CAST(dfq.df AS DOUBLE) + CAST(0.5 AS DOUBLE)))
-      |  * (CAST(tf.tf AS DOUBLE) * CAST(2.2 AS DOUBLE))
-      |  / (CAST(tf.tf AS DOUBLE) + CAST(1.2 AS DOUBLE)
-      |     * (CAST(1.0 AS DOUBLE) - CAST(0.75 AS DOUBLE)
-      |        + CAST(0.75 AS DOUBLE) * CAST(tf.dl AS DOUBLE)
-      |          / (CAST(st.sum_dl AS DOUBLE)
-      |             / CAST(st.n_docs AS DOUBLE)))) AS score_t
+      |  ${Bm25Weight("n_docs")} AS score_t
       |  FROM tf JOIN dfq USING (term) CROSS JOIN st)
       |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_terms,
       | COALESCE(SUM(CASE WHEN term = 'vector' THEN score_t END),
@@ -3008,15 +2890,7 @@ object SparkEntry {
        |dfq AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df
        |  FROM tf GROUP BY term),
        |sc AS (SELECT tf.doc_id, tf.term, allt.w *
-       |  (((CAST(st.n_docs AS DOUBLE) - CAST(dfq.df AS DOUBLE)
-       |      + CAST(0.5 AS DOUBLE))
-       |    / (CAST(dfq.df AS DOUBLE) + CAST(0.5 AS DOUBLE)))
-       |  * (CAST(tf.tf AS DOUBLE) * CAST(2.2 AS DOUBLE))
-       |  / (CAST(tf.tf AS DOUBLE) + CAST(1.2 AS DOUBLE)
-       |     * (CAST(1.0 AS DOUBLE) - CAST(0.75 AS DOUBLE)
-       |        + CAST(0.75 AS DOUBLE) * CAST(tf.dl AS DOUBLE)
-       |          / (CAST(st.sum_dl AS DOUBLE)
-       |             / CAST(st.n_docs AS DOUBLE))))) AS w_t
+       |  (${Bm25Weight("n_docs")}) AS w_t
        |  FROM tf JOIN dfq USING (term) JOIN allt USING (term)
        |  CROSS JOIN st)
        |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_terms,
@@ -3037,8 +2911,8 @@ object SparkEntry {
     * candidates, top-10 rank, and the judged frame `j (term, rank,
     * rel)` — [[graft.operators.Ranking]]'s judgedRanking in SQL. */
   private val RetrievalJudgedCtes: String =
-    """d AS (SELECT doc_id,
-      |  string_split_regex(trim(text), '\s+') AS toks FROM documents),
+    s"""d AS (SELECT doc_id,
+      |  string_split_regex(trim(text), '\\s+') AS toks FROM documents),
       |dd AS (SELECT doc_id, len(toks) AS dl, toks FROM d),
       |st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
       |  CAST(SUM(dl) AS BIGINT) AS sum_dl FROM dd),
@@ -3054,15 +2928,7 @@ object SparkEntry {
       |dfq AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df
       |  FROM tf GROUP BY term),
       |sc AS (SELECT tf.doc_id, tf.term,
-      |  ((CAST(st.n_docs AS DOUBLE) - CAST(dfq.df AS DOUBLE)
-      |      + CAST(0.5 AS DOUBLE))
-      |    / (CAST(dfq.df AS DOUBLE) + CAST(0.5 AS DOUBLE)))
-      |  * (CAST(tf.tf AS DOUBLE) * CAST(2.2 AS DOUBLE))
-      |  / (CAST(tf.tf AS DOUBLE) + CAST(1.2 AS DOUBLE)
-      |     * (CAST(1.0 AS DOUBLE) - CAST(0.75 AS DOUBLE)
-      |        + CAST(0.75 AS DOUBLE) * CAST(tf.dl AS DOUBLE)
-      |          / (CAST(st.sum_dl AS DOUBLE)
-      |             / CAST(st.n_docs AS DOUBLE)))) AS score_t
+      |  ${Bm25Weight("n_docs")} AS score_t
       |  FROM tf JOIN dfq USING (term) CROSS JOIN st),
       |rk AS (SELECT term, doc_id,
       |  CAST(row_number() OVER (PARTITION BY term
@@ -3362,20 +3228,7 @@ object SparkEntry {
     * `code % 2^n` masks of the same codes; rank per (n_bits, query);
     * truth = the s01 chain. */
   private lazy val HammingRecallOracle: String =
-    s"""WITH c1 AS (SELECT vec_id, embedding,
-      |  unnest(range(0, len(embedding))) AS i FROM embeddings),
-      |c2 AS (SELECT vec_id, CAST(i AS INT) AS i, embedding[i+1] AS v
-      |  FROM c1),
-      |planes AS (SELECT a.i, b.j,
-      |  CASE WHEN (strpos('0123456789abcdef',
-      |    substr(md5(a.i || ':' || b.j), 1, 1)) - 1) % 2 = 1
-      |  THEN 1 ELSE -1 END AS s
-      |  FROM (SELECT unnest(range(0, 4096)) AS i) a
-      |  CROSS JOIN (SELECT unnest(range(0, 24)) AS j) b),
-      |proj AS (SELECT c2.vec_id, p.j,
-      |  SUM(CAST(floor(CAST(v AS DOUBLE) * 1000000) AS BIGINT) * p.s)
-      |    AS pr
-      |  FROM c2 JOIN planes p ON c2.i = p.i GROUP BY 1, 2),
+    s"""WITH ${SignLshCtes(24)},
       |codes AS (SELECT vec_id,
       |  CAST(SUM(CASE WHEN pr > 0
       |    THEN CAST(power(2, j) AS BIGINT) ELSE 0 END) AS BIGINT)
@@ -3947,17 +3800,10 @@ object SparkEntry {
         |  ELSE '19999999' END
         |ORDER BY doc_id""".stripMargin,
     "p03_token_budget_mix" ->
-      """WITH t AS (SELECT doc_id, lang, text,
-        |  string_split_regex(trim(text), '\s+') AS toks FROM documents),
+      s"""WITH t AS (SELECT doc_id, lang, text,
+        |  string_split_regex(trim(text), '\\s+') AS toks FROM documents),
         |c AS (SELECT doc_id, lang,
-        |  CAST(len(toks) AS DOUBLE) AS n_tok,
-        |  CAST(length(regexp_replace(text, '[^.!?,;:]', '', 'g')) AS DOUBLE)
-        |    / CAST(length(text) AS DOUBLE) AS punct,
-        |  CAST(len(list_filter(toks, t -> list_contains(
-        |    ['the','a','and','of','to','in','is','it'], lower(t)))) AS DOUBLE)
-        |    / CAST(len(toks) AS DOUBLE) AS stop,
-        |  CAST(len(list_distinct(toks)) AS DOUBLE)
-        |    / CAST(len(toks) AS DOUBLE) AS diversity
+        |  $QualityFeatures
         | FROM t),
         |q AS (SELECT doc_id, lang, CAST(n_tok AS BIGINT) AS n_tokens,
         |  least(1.0, n_tok/64.0)*0.4 + (1.0-punct)*0.2 + stop*0.2
@@ -3994,30 +3840,23 @@ object SparkEntry {
         | n_tokens, cum_before
         |FROM c ORDER BY shard, cum_before""".stripMargin,
     "p01_data_prep_pipeline" ->
-      """WITH doubled AS (
+      s"""WITH doubled AS (
         |  SELECT doc_id, text, lang FROM documents
         |  UNION ALL SELECT doc_id + 1000000, text, lang FROM documents),
         |tq AS (SELECT doc_id, text, lang,
-        |  string_split_regex(trim(text), '\s+') AS toks FROM doubled),
+        |  string_split_regex(trim(text), '\\s+') AS toks FROM doubled),
         |c AS (SELECT doc_id, text, lang,
-        |  CAST(len(toks) AS DOUBLE) AS n_tok,
-        |  CAST(length(regexp_replace(text, '[^.!?,;:]', '', 'g')) AS DOUBLE)
-        |    / CAST(length(text) AS DOUBLE) AS punct,
-        |  CAST(len(list_filter(toks, t -> list_contains(
-        |    ['the','a','and','of','to','in','is','it'], lower(t)))) AS DOUBLE)
-        |    / CAST(len(toks) AS DOUBLE) AS stop,
-        |  CAST(len(list_distinct(toks)) AS DOUBLE)
-        |    / CAST(len(toks) AS DOUBLE) AS diversity
+        |  $QualityFeatures
         | FROM tq),
         |kept AS (SELECT doc_id, text, lang FROM c
         |  WHERE least(1.0, n_tok/64.0)*0.4 + (1.0-punct)*0.2 + stop*0.2
         |    + diversity*0.2 >= 0.5),
         |d AS (SELECT
-        |  md5(regexp_replace(trim(text), '\s+', ' ', 'g')) AS content_md5,
+        |  md5(regexp_replace(trim(text), '\\s+', ' ', 'g')) AS content_md5,
         |  min(doc_id) AS doc_id, min(lang) AS lang, min(text) AS text
         | FROM kept GROUP BY 1)
         |SELECT lang, count(*) AS n_docs,
-        | CAST(SUM(len(string_split_regex(trim(text), '\s+'))) AS BIGINT) AS total_tokens
+        | CAST(SUM(len(string_split_regex(trim(text), '\\s+'))) AS BIGINT) AS total_tokens
         |FROM d GROUP BY lang ORDER BY lang""".stripMargin,
     "t06_redact_pii" ->
       """WITH w AS (SELECT doc_id,
@@ -4034,13 +3873,7 @@ object SparkEntry {
         |   '\+?[0-9]{1,3}-[0-9]{3}-[0-9]{4}', '<PHONE>', 'g') AS clean_text
         |FROM w ORDER BY doc_id""".stripMargin,
     "p02_decontamination" ->
-      """WITH t AS (SELECT doc_id,
-        |  string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |s AS (SELECT doc_id, list_distinct(
-        |  CASE WHEN len(toks) >= 3 THEN
-        |    list_transform(range(0, len(toks)-2),
-        |      i -> array_to_string(toks[i+1:i+3], ' '))
-        |  ELSE [array_to_string(toks, ' ')] END) AS sh FROM t),
+      s"""WITH ${ShingleCtes("documents")},
         |bench AS (SELECT DISTINCT unnest(sh) AS shingle FROM s
         |  WHERE doc_id % 100 = 0),
         |train AS (SELECT doc_id, unnest(sh) AS shingle FROM s
@@ -4058,21 +3891,14 @@ object SparkEntry {
     // 3-gram postings vs the benchmark split, then the per-lang
     // quality-ranked running token budget
     "p04_pretrain_corpus" ->
-      """WITH doubled AS (
+      s"""WITH doubled AS (
         |  SELECT doc_id, text, lang FROM documents
         |  UNION ALL SELECT doc_id + 1000000, text, lang FROM documents),
         |tq AS (SELECT doc_id, text, lang,
-        |  string_split_regex(trim(text), '\s+') AS toks FROM doubled),
+        |  string_split_regex(trim(text), '\\s+') AS toks FROM doubled),
         |c AS (SELECT doc_id, text, lang,
         |  CAST(len(toks) AS BIGINT) AS n_tokens,
-        |  CAST(len(toks) AS DOUBLE) AS n_tok,
-        |  CAST(length(regexp_replace(text, '[^.!?,;:]', '', 'g')) AS DOUBLE)
-        |    / CAST(length(text) AS DOUBLE) AS punct,
-        |  CAST(len(list_filter(toks, t -> list_contains(
-        |    ['the','a','and','of','to','in','is','it'], lower(t)))) AS DOUBLE)
-        |    / CAST(len(toks) AS DOUBLE) AS stop,
-        |  CAST(len(list_distinct(toks)) AS DOUBLE)
-        |    / CAST(len(toks) AS DOUBLE) AS diversity
+        |  $QualityFeatures
         | FROM tq),
         |kept AS (SELECT doc_id, text, lang, n_tokens,
         |  least(1.0, n_tok/64.0)*0.4 + (1.0-punct)*0.2 + stop*0.2
@@ -4081,18 +3907,18 @@ object SparkEntry {
         | WHERE least(1.0, n_tok/64.0)*0.4 + (1.0-punct)*0.2 + stop*0.2
         |    + diversity*0.2 >= 0.5),
         |d AS (SELECT
-        |  md5(regexp_replace(trim(text), '\s+', ' ', 'g')) AS content_md5,
+        |  md5(regexp_replace(trim(text), '\\s+', ' ', 'g')) AS content_md5,
         |  min(doc_id) AS doc_id, min(lang) AS lang, min(text) AS text,
         |  min(n_tokens) AS n_tokens, min(quality) AS quality
         | FROM kept GROUP BY 1),
         |ds AS (SELECT doc_id, list_distinct(
-        |  CASE WHEN len(string_split_regex(trim(text), '\s+')) >= 3 THEN
+        |  CASE WHEN len(string_split_regex(trim(text), '\\s+')) >= 3 THEN
         |    list_transform(
-        |      range(0, len(string_split_regex(trim(text), '\s+'))-2),
+        |      range(0, len(string_split_regex(trim(text), '\\s+'))-2),
         |      i -> array_to_string(
-        |        string_split_regex(trim(text), '\s+')[i+1:i+3], ' '))
+        |        string_split_regex(trim(text), '\\s+')[i+1:i+3], ' '))
         |  ELSE [array_to_string(
-        |    string_split_regex(trim(text), '\s+'), ' ')] END) AS sh
+        |    string_split_regex(trim(text), '\\s+'), ' ')] END) AS sh
         | FROM doubled),
         |bench AS (SELECT DISTINCT unnest(sh) AS shingle FROM ds
         |  WHERE doc_id % 100 = 0),
@@ -4164,16 +3990,7 @@ object SparkEntry {
     // d04's band CTEs feed d07's recursive-CTE connected components:
     // the full MinHash -> LSH -> CC pipeline replayed exactly
     "d13_lsh_clusters" ->
-      """WITH RECURSIVE t AS (SELECT doc_id,
-        |  string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |s AS (SELECT doc_id, list_distinct(
-        |  CASE WHEN len(toks) >= 3 THEN
-        |    list_transform(range(0, len(toks)-2),
-        |      i -> array_to_string(toks[i+1:i+3], ' '))
-        |  ELSE [array_to_string(toks, ' ')] END) AS sh FROM t),
-        |g AS (SELECT doc_id, list_transform(range(0, 12), j ->
-        |  list_min(list_transform(sh, x ->
-        |    md5(concat(CAST(j AS VARCHAR), ':', x))))) AS sig FROM s),
+      s"""WITH RECURSIVE ${MinhashCtes("documents")},
         |b AS (SELECT doc_id, list_transform(range(0, 4), k ->
         |  md5(array_to_string(sig[k*3+1:k*3+3], '|'))) AS bands FROM g),
         |e AS (SELECT doc_id, k AS band, bands[k+1] AS digest
@@ -4194,17 +4011,11 @@ object SparkEntry {
     // containment = inter/|A| (asymmetric, directed): same shingle
     // recipe as d02, denominator is the LEFT side's shingle count
     "d12_containment" ->
-      """WITH corpus AS (
+      s"""WITH corpus AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL
         |  SELECT doc_id + 1000000, substr(text, 1, 200) FROM documents),
-        |t AS (SELECT doc_id,
-        |  string_split_regex(trim(text), '\s+') AS toks FROM corpus),
-        |s AS (SELECT doc_id, list_distinct(
-        |  CASE WHEN len(toks) >= 3 THEN
-        |    list_transform(range(0, len(toks)-2),
-        |      i -> array_to_string(toks[i+1:i+3], ' '))
-        |  ELSE [array_to_string(toks, ' ')] END) AS sh FROM t),
+        |${ShingleCtes("corpus")},
         |e AS (SELECT doc_id, unnest(sh) AS shingle FROM s),
         |sz AS (SELECT doc_id, len(sh) AS n_sh FROM s),
         |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -4223,17 +4034,11 @@ object SparkEntry {
     // shinglePostings + the sizes-from-capped-postings order in
     // containmentPairs exactly
     "d14_containment_capped" ->
-      """WITH corpus AS (
+      s"""WITH corpus AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL
         |  SELECT doc_id + 1000000, substr(text, 1, 200) FROM documents),
-        |t AS (SELECT doc_id,
-        |  string_split_regex(trim(text), '\s+') AS toks FROM corpus),
-        |s AS (SELECT doc_id, list_distinct(
-        |  CASE WHEN len(toks) >= 3 THEN
-        |    list_transform(range(0, len(toks)-2),
-        |      i -> array_to_string(toks[i+1:i+3], ' '))
-        |  ELSE [array_to_string(toks, ' ')] END) AS sh FROM t),
+        |${ShingleCtes("corpus")},
         |e0 AS (SELECT doc_id, unnest(sh) AS shingle FROM s),
         |hot AS (SELECT shingle FROM e0 GROUP BY shingle
         |  HAVING count(*) > 10),
@@ -4251,13 +4056,7 @@ object SparkEntry {
         |SELECT doc_a, doc_b, containment FROM c
         |WHERE containment >= 0.9 ORDER BY doc_a, doc_b""".stripMargin,
     "d02_jaccard_pairs" ->
-      """WITH t AS (SELECT doc_id,
-        |  string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |s AS (SELECT doc_id, list_distinct(
-        |  CASE WHEN len(toks) >= 3 THEN
-        |    list_transform(range(0, len(toks)-2),
-        |      i -> array_to_string(toks[i+1:i+3], ' '))
-        |  ELSE [array_to_string(toks, ' ')] END) AS sh FROM t),
+      s"""WITH ${ShingleCtes("documents")},
         |e AS (SELECT doc_id, unnest(sh) AS shingle FROM s),
         |sz AS (SELECT doc_id, len(sh) AS n_sh FROM s),
         |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
@@ -4271,32 +4070,14 @@ object SparkEntry {
         |SELECT doc_a, doc_b, jaccard FROM j WHERE jaccard >= 0.5
         |ORDER BY doc_a, doc_b""".stripMargin,
     "d03_minhash_signatures" ->
-      """WITH t AS (SELECT doc_id,
-        |  string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |s AS (SELECT doc_id, list_distinct(
-        |  CASE WHEN len(toks) >= 3 THEN
-        |    list_transform(range(0, len(toks)-2),
-        |      i -> array_to_string(toks[i+1:i+3], ' '))
-        |  ELSE [array_to_string(toks, ' ')] END) AS sh FROM t),
-        |g AS (SELECT doc_id, list_transform(range(0, 12), j ->
-        |  list_min(list_transform(sh, x ->
-        |    md5(concat(CAST(j AS VARCHAR), ':', x))))) AS sig FROM s),
+      s"""WITH ${MinhashCtes("documents")},
         |b AS (SELECT doc_id, sig, list_transform(range(0, 4), k ->
         |  md5(array_to_string(sig[k*3+1:k*3+3], '|'))) AS bands FROM g)
         |SELECT doc_id, array_to_string(sig, '|') AS signature,
         | array_to_string(bands, '|') AS band_digests
         |FROM b ORDER BY doc_id""".stripMargin,
     "d04_lsh_candidates" ->
-      """WITH t AS (SELECT doc_id,
-        |  string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |s AS (SELECT doc_id, list_distinct(
-        |  CASE WHEN len(toks) >= 3 THEN
-        |    list_transform(range(0, len(toks)-2),
-        |      i -> array_to_string(toks[i+1:i+3], ' '))
-        |  ELSE [array_to_string(toks, ' ')] END) AS sh FROM t),
-        |g AS (SELECT doc_id, list_transform(range(0, 12), j ->
-        |  list_min(list_transform(sh, x ->
-        |    md5(concat(CAST(j AS VARCHAR), ':', x))))) AS sig FROM s),
+      s"""WITH ${MinhashCtes("documents")},
         |b AS (SELECT doc_id, list_transform(range(0, 4), k ->
         |  md5(array_to_string(sig[k*3+1:k*3+3], '|'))) AS bands FROM g),
         |e AS (SELECT doc_id, k AS band, bands[k+1] AS digest
@@ -4386,47 +4167,12 @@ object SparkEntry {
         |SELECT query_id, label, neighbor_id, cosine, rank FROM r
         |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
     "s03_lsh_buckets" ->
-      """WITH c1 AS (SELECT vec_id, embedding,
-        |  unnest(range(0, len(embedding))) AS i FROM embeddings),
-        |c2 AS (SELECT vec_id, CAST(i AS INT) AS i, embedding[i+1] AS v
-        |  FROM c1),
-        |planes AS (SELECT a.i, b.j,
-        |  CASE WHEN (strpos('0123456789abcdef',
-        |    substr(md5(a.i || ':' || b.j), 1, 1)) - 1) % 2 = 1
-        |  THEN 1 ELSE -1 END AS s
-        |  FROM (SELECT unnest(range(0, 4096)) AS i) a
-        |  CROSS JOIN (SELECT unnest(range(0, 8)) AS j) b),
-        |proj AS (SELECT c2.vec_id, p.j,
-        |  SUM(CAST(floor(CAST(v AS DOUBLE) * 1000000) AS BIGINT) * p.s)
-        |    AS pr
-        |  FROM c2 JOIN planes p ON c2.i = p.i GROUP BY 1, 2)
+      s"""WITH ${SignLshCtes(8)}
         |SELECT vec_id, string_agg(CASE WHEN pr > 0 THEN '1' ELSE '0' END,
         |  '' ORDER BY j) AS bucket
         |FROM proj GROUP BY vec_id ORDER BY vec_id""".stripMargin,
     "s04_lsh_ann_topk" ->
-      """WITH c1 AS (SELECT vec_id, embedding,
-        |  unnest(range(0, len(embedding))) AS i FROM embeddings),
-        |c2 AS (SELECT vec_id, CAST(i AS INT) AS i, embedding[i+1] AS v
-        |  FROM c1),
-        |planes AS (SELECT a.i, b.j,
-        |  CASE WHEN (strpos('0123456789abcdef',
-        |    substr(md5(a.i || ':' || b.j), 1, 1)) - 1) % 2 = 1
-        |  THEN 1 ELSE -1 END AS s
-        |  FROM (SELECT unnest(range(0, 4096)) AS i) a
-        |  CROSS JOIN (SELECT unnest(range(0, 4)) AS j) b),
-        |proj AS (SELECT c2.vec_id, p.j,
-        |  SUM(CAST(floor(CAST(v AS DOUBLE) * 1000000) AS BIGINT) * p.s)
-        |    AS pr
-        |  FROM c2 JOIN planes p ON c2.i = p.i GROUP BY 1, 2),
-        |buckets AS (SELECT vec_id,
-        |  string_agg(CASE WHEN pr > 0 THEN '1' ELSE '0' END,
-        |    '' ORDER BY j) AS bucket
-        | FROM proj GROUP BY vec_id),
-        |n AS (SELECT e.vec_id, b.bucket, e.embedding,
-        |  list_reduce(list_transform(range(1, len(e.embedding)+1), i ->
-        |    CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)),
-        |    (a, b2) -> a + b2) AS norm2
-        | FROM embeddings e JOIN buckets b ON e.vec_id = b.vec_id),
+      s"""WITH ${SignLshBuckets(4)},
         |q AS (SELECT vec_id AS query_id, bucket AS query_bucket,
         |  embedding AS query_emb, norm2 AS qnorm2 FROM n WHERE vec_id < 5),
         |scored AS (SELECT q.query_id, c.bucket, c.vec_id AS neighbor_id,
@@ -4445,45 +4191,13 @@ object SparkEntry {
     // s04 oracle pipelines composed (brute-force CTEs renamed b*), joined
     // on (query_id, neighbor_id), hits counted per query
     "s05_ann_recall" ->
-      """WITH bn AS (SELECT vec_id, label, embedding,
+      s"""WITH bn AS (SELECT vec_id, label, embedding,
         |  list_reduce(list_transform(range(1, len(embedding)+1), i ->
         |    CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)),
         |    (a, b) -> a + b) AS norm2 FROM embeddings),
-        |bq AS (SELECT vec_id AS query_id, embedding AS query_emb,
-        |  norm2 AS qnorm2 FROM bn WHERE vec_id < 5),
-        |bscored AS (SELECT q.query_id, c.vec_id AS neighbor_id,
-        |  list_reduce(list_transform(range(1, len(c.embedding)+1), i ->
-        |    CAST(c.embedding[i] AS DOUBLE) * CAST(q.query_emb[i] AS DOUBLE)),
-        |    (x, y) -> x + y) / (sqrt(c.norm2) * sqrt(q.qnorm2)) AS cosine
-        | FROM bn c CROSS JOIN bq q WHERE c.vec_id <> q.query_id),
-        |br AS (SELECT query_id, neighbor_id,
-        |  row_number() OVER (PARTITION BY query_id
-        |    ORDER BY cosine DESC, neighbor_id ASC) AS rank
-        | FROM bscored),
+        |$ExactPairsCtes,
         |ex AS (SELECT query_id, neighbor_id FROM br WHERE rank <= 5),
-        |c1 AS (SELECT vec_id, embedding,
-        |  unnest(range(0, len(embedding))) AS i FROM embeddings),
-        |c2 AS (SELECT vec_id, CAST(i AS INT) AS i, embedding[i+1] AS v
-        |  FROM c1),
-        |planes AS (SELECT a.i, b.j,
-        |  CASE WHEN (strpos('0123456789abcdef',
-        |    substr(md5(a.i || ':' || b.j), 1, 1)) - 1) % 2 = 1
-        |  THEN 1 ELSE -1 END AS s
-        |  FROM (SELECT unnest(range(0, 4096)) AS i) a
-        |  CROSS JOIN (SELECT unnest(range(0, 4)) AS j) b),
-        |proj AS (SELECT c2.vec_id, p.j,
-        |  SUM(CAST(floor(CAST(v AS DOUBLE) * 1000000) AS BIGINT) * p.s)
-        |    AS pr
-        |  FROM c2 JOIN planes p ON c2.i = p.i GROUP BY 1, 2),
-        |buckets AS (SELECT vec_id,
-        |  string_agg(CASE WHEN pr > 0 THEN '1' ELSE '0' END,
-        |    '' ORDER BY j) AS bucket
-        | FROM proj GROUP BY vec_id),
-        |n AS (SELECT e.vec_id, b.bucket, e.embedding,
-        |  list_reduce(list_transform(range(1, len(e.embedding)+1), i ->
-        |    CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)),
-        |    (a, b2) -> a + b2) AS norm2
-        | FROM embeddings e JOIN buckets b ON e.vec_id = b.vec_id),
+        |${SignLshBuckets(4)},
         |q AS (SELECT vec_id AS query_id, bucket AS query_bucket,
         |  embedding AS query_emb, norm2 AS qnorm2 FROM n WHERE vec_id < 5),
         |scored AS (SELECT q.query_id, c.vec_id AS neighbor_id,
@@ -4509,29 +4223,7 @@ object SparkEntry {
     // min(cosine) over identical exact doubles, then rank + recall vs
     // the s01 exact top-5 (brute-force CTEs renamed b*)
     "s07_recall_multi_table" ->
-      """WITH c1 AS (SELECT vec_id, embedding,
-        |  unnest(range(0, len(embedding))) AS i FROM embeddings),
-        |c2 AS (SELECT vec_id, CAST(i AS INT) AS i, embedding[i+1] AS v
-        |  FROM c1),
-        |planes AS (SELECT a.i, b.j,
-        |  CASE WHEN (strpos('0123456789abcdef',
-        |    substr(md5(a.i || ':' || b.j), 1, 1)) - 1) % 2 = 1
-        |  THEN 1 ELSE -1 END AS s
-        |  FROM (SELECT unnest(range(0, 4096)) AS i) a
-        |  CROSS JOIN (SELECT unnest(range(0, 8)) AS j) b),
-        |proj AS (SELECT c2.vec_id, p.j,
-        |  SUM(CAST(floor(CAST(v AS DOUBLE) * 1000000) AS BIGINT) * p.s)
-        |    AS pr
-        |  FROM c2 JOIN planes p ON c2.i = p.i GROUP BY 1, 2),
-        |buckets AS (SELECT vec_id,
-        |  string_agg(CASE WHEN pr > 0 THEN '1' ELSE '0' END,
-        |    '' ORDER BY j) AS bucket
-        | FROM proj GROUP BY vec_id),
-        |n AS (SELECT e.vec_id, b.bucket, e.embedding,
-        |  list_reduce(list_transform(range(1, len(e.embedding)+1), i ->
-        |    CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)),
-        |    (a, b2) -> a + b2) AS norm2
-        | FROM embeddings e JOIN buckets b ON e.vec_id = b.vec_id),
+      s"""WITH ${SignLshBuckets(8)},
         |sl AS (SELECT vec_id, embedding, norm2, bucket,
         |  unnest(range(0, 2)) AS t FROM n),
         |sl2 AS (SELECT vec_id, embedding, norm2, t,
@@ -4559,17 +4251,7 @@ object SparkEntry {
         |  list_reduce(list_transform(range(1, len(embedding)+1), i ->
         |    CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)),
         |    (a, b) -> a + b) AS norm2 FROM embeddings),
-        |bq AS (SELECT vec_id AS query_id, embedding AS query_emb,
-        |  norm2 AS qnorm2 FROM bn WHERE vec_id < 5),
-        |bscored AS (SELECT q.query_id, c.vec_id AS neighbor_id,
-        |  list_reduce(list_transform(range(1, len(c.embedding)+1), i ->
-        |    CAST(c.embedding[i] AS DOUBLE) * CAST(q.query_emb[i] AS DOUBLE)),
-        |    (x, y) -> x + y) / (sqrt(c.norm2) * sqrt(q.qnorm2)) AS cosine
-        | FROM bn c CROSS JOIN bq q WHERE c.vec_id <> q.query_id),
-        |br AS (SELECT query_id, neighbor_id,
-        |  row_number() OVER (PARTITION BY query_id
-        |    ORDER BY cosine DESC, neighbor_id ASC) AS rank
-        | FROM bscored),
+        |$ExactPairsCtes,
         |ex AS (SELECT cf.n_tables, b.query_id, b.neighbor_id
         | FROM br b CROSS JOIN cf WHERE b.rank <= 5)
         |SELECT e.n_tables, e.query_id, count(a.hit) AS n_hits,
@@ -4582,29 +4264,7 @@ object SparkEntry {
     // radius 1 adds every Hamming-1 bucket (flip bit p of the 4-bit
     // query bucket); candidate superset -> monotone recall
     "s09_recall_multiprobe" ->
-      """WITH c1 AS (SELECT vec_id, embedding,
-        |  unnest(range(0, len(embedding))) AS i FROM embeddings),
-        |c2 AS (SELECT vec_id, CAST(i AS INT) AS i, embedding[i+1] AS v
-        |  FROM c1),
-        |planes AS (SELECT a.i, b.j,
-        |  CASE WHEN (strpos('0123456789abcdef',
-        |    substr(md5(a.i || ':' || b.j), 1, 1)) - 1) % 2 = 1
-        |  THEN 1 ELSE -1 END AS s
-        |  FROM (SELECT unnest(range(0, 4096)) AS i) a
-        |  CROSS JOIN (SELECT unnest(range(0, 4)) AS j) b),
-        |proj AS (SELECT c2.vec_id, p.j,
-        |  SUM(CAST(floor(CAST(v AS DOUBLE) * 1000000) AS BIGINT) * p.s)
-        |    AS pr
-        |  FROM c2 JOIN planes p ON c2.i = p.i GROUP BY 1, 2),
-        |buckets AS (SELECT vec_id,
-        |  string_agg(CASE WHEN pr > 0 THEN '1' ELSE '0' END,
-        |    '' ORDER BY j) AS bucket
-        | FROM proj GROUP BY vec_id),
-        |n AS (SELECT e.vec_id, b.bucket, e.embedding,
-        |  list_reduce(list_transform(range(1, len(e.embedding)+1), i ->
-        |    CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)),
-        |    (a, b2) -> a + b2) AS norm2
-        | FROM embeddings e JOIN buckets b ON e.vec_id = b.vec_id),
+      s"""WITH ${SignLshBuckets(4)},
         |q AS (SELECT vec_id AS query_id, bucket AS qb,
         |  embedding AS query_emb, norm2 AS qnorm2 FROM n WHERE vec_id < 5),
         |pr2 AS (SELECT query_id, query_emb, qnorm2, p,
@@ -4634,17 +4294,7 @@ object SparkEntry {
         |  list_reduce(list_transform(range(1, len(embedding)+1), i ->
         |    CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)),
         |    (a, b) -> a + b) AS norm2 FROM embeddings),
-        |bq AS (SELECT vec_id AS query_id, embedding AS query_emb,
-        |  norm2 AS qnorm2 FROM bn WHERE vec_id < 5),
-        |bscored AS (SELECT q.query_id, c.vec_id AS neighbor_id,
-        |  list_reduce(list_transform(range(1, len(c.embedding)+1), i ->
-        |    CAST(c.embedding[i] AS DOUBLE) * CAST(q.query_emb[i] AS DOUBLE)),
-        |    (x, y) -> x + y) / (sqrt(c.norm2) * sqrt(q.qnorm2)) AS cosine
-        | FROM bn c CROSS JOIN bq q WHERE c.vec_id <> q.query_id),
-        |br AS (SELECT query_id, neighbor_id,
-        |  row_number() OVER (PARTITION BY query_id
-        |    ORDER BY cosine DESC, neighbor_id ASC) AS rank
-        | FROM bscored),
+        |$ExactPairsCtes,
         |ex AS (SELECT rd.radius, b.query_id, b.neighbor_id
         | FROM br b CROSS JOIN rd WHERE b.rank <= 5)
         |SELECT e.radius, e.query_id, count(a.hit) AS n_hits,
@@ -5381,22 +5031,7 @@ object SparkEntry {
     // longest member (max n_chars, tie lowest doc_id) — all-integer
     // decision, no float comparison
     "d10_canonical_keep" ->
-      """WITH RECURSIVE n AS (SELECT vec_id, label, embedding,
-        |  list_reduce(list_transform(range(1, len(embedding)+1), i ->
-        |    CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)),
-        |    (a, b) -> a + b) AS norm2 FROM embeddings),
-        |p AS (SELECT a.vec_id AS vec_id_a, b.vec_id AS vec_id_b,
-        |  list_reduce(list_transform(range(1, len(a.embedding)+1), i ->
-        |    CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)),
-        |    (x, y) -> x + y) / (sqrt(a.norm2) * sqrt(b.norm2)) AS cosine
-        | FROM n a JOIN n b ON a.label = b.label AND a.vec_id < b.vec_id),
-        |pairs AS (SELECT vec_id_a, vec_id_b FROM p WHERE cosine >= 0.35),
-        |edges AS (SELECT vec_id_a AS u, vec_id_b AS v FROM pairs
-        |  UNION SELECT vec_id_b, vec_id_a FROM pairs),
-        |reach AS (
-        |  SELECT u, u AS v FROM (SELECT DISTINCT u FROM edges)
-        |  UNION
-        |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
+      s"""WITH RECURSIVE $DedupClustersCtes,
         |cl AS (SELECT u AS vec_id, min(v) AS cluster_id
         |  FROM reach GROUP BY u),
         |dc AS (SELECT d.doc_id, d.n_chars,
@@ -5634,21 +5269,7 @@ object SparkEntry {
     // per-user top-4 items by count (event_type tie-break), then the
     // capped self-join; lift = one double division of exact longs
     "g01_covisitation" ->
-      """WITH pu AS (SELECT user_id, event_type, COUNT(*) AS c
-        |  FROM events GROUP BY user_id, event_type),
-        |cap AS (SELECT user_id, event_type FROM (
-        |  SELECT user_id, event_type, row_number() OVER (
-        |    PARTITION BY user_id ORDER BY c DESC, event_type) AS rn
-        |  FROM pu) WHERE rn <= 4),
-        |iu AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS nu
-        |  FROM cap GROUP BY event_type),
-        |tot AS (SELECT CAST(COUNT(DISTINCT user_id) AS BIGINT) AS u
-        |  FROM cap),
-        |pr AS (SELECT a.event_type AS item_a, b.event_type AS item_b,
-        |    CAST(COUNT(*) AS BIGINT) AS n_users
-        |  FROM cap a JOIN cap b ON a.user_id = b.user_id
-        |    AND a.event_type < b.event_type
-        |  GROUP BY a.event_type, b.event_type)
+      s"""WITH $CovisitationCtes
         |SELECT item_a, item_b, n_users, na.nu AS n_a, nb.nu AS n_b,
         |  CAST(n_users * u AS DOUBLE)
         |    / CAST(na.nu * nb.nu AS DOUBLE) AS lift
@@ -5736,21 +5357,7 @@ object SparkEntry {
     // (lift desc, support desc, neighbor) — both engines rank the same
     // bitwise-identical lift doubles
     "g02_item_neighbors" ->
-      """WITH pu AS (SELECT user_id, event_type, COUNT(*) AS c
-        |  FROM events GROUP BY user_id, event_type),
-        |cap AS (SELECT user_id, event_type FROM (
-        |  SELECT user_id, event_type, row_number() OVER (
-        |    PARTITION BY user_id ORDER BY c DESC, event_type) AS rn
-        |  FROM pu) WHERE rn <= 4),
-        |iu AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS nu
-        |  FROM cap GROUP BY event_type),
-        |tot AS (SELECT CAST(COUNT(DISTINCT user_id) AS BIGINT) AS u
-        |  FROM cap),
-        |pr AS (SELECT a.event_type AS item_a, b.event_type AS item_b,
-        |    CAST(COUNT(*) AS BIGINT) AS n_users
-        |  FROM cap a JOIN cap b ON a.user_id = b.user_id
-        |    AND a.event_type < b.event_type
-        |  GROUP BY a.event_type, b.event_type),
+      s"""WITH $CovisitationCtes,
         |e AS (SELECT item_a, item_b, n_users,
         |  CAST(n_users * u AS DOUBLE)
         |    / CAST(na.nu * nb.nu AS DOUBLE) AS lift
@@ -6025,13 +5632,7 @@ object SparkEntry {
     // p02's contamination CTEs feed the quarantine arm; the rest is
     // t21's hash-range CASE
     "t25_safe_split" ->
-      """WITH t AS (SELECT doc_id,
-        |  string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |s AS (SELECT doc_id, list_distinct(
-        |  CASE WHEN len(toks) >= 3 THEN
-        |    list_transform(range(0, len(toks)-2),
-        |      i -> array_to_string(toks[i+1:i+3], ' '))
-        |  ELSE [array_to_string(toks, ' ')] END) AS sh FROM t),
+      s"""WITH ${ShingleCtes("documents")},
         |bench AS (SELECT DISTINCT unnest(sh) AS shingle FROM s
         |  WHERE doc_id % 100 = 0),
         |train AS (SELECT doc_id, unnest(sh) AS shingle FROM s
@@ -6101,13 +5702,7 @@ object SparkEntry {
     // exact pairs (d02's CTEs) joined to signature agreement (d03's
     // CTEs): the estimator calibration table
     "d11_minhash_eval" ->
-      """WITH t AS (SELECT doc_id,
-        |  string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |s AS (SELECT doc_id, list_distinct(
-        |  CASE WHEN len(toks) >= 3 THEN
-        |    list_transform(range(0, len(toks)-2),
-        |      i -> array_to_string(toks[i+1:i+3], ' '))
-        |  ELSE [array_to_string(toks, ' ')] END) AS sh FROM t),
+      s"""WITH ${ShingleCtes("documents")},
         |e AS (SELECT doc_id, unnest(sh) AS shingle FROM s),
         |sz AS (SELECT doc_id, len(sh) AS n_sh FROM s),
         |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -6308,33 +5903,14 @@ object SparkEntry {
     // list_prepend(0) supplies the fold's init (DuckDB list_reduce
     // seeds from the first element)
     "t30_rolling_fingerprints" ->
-      """WITH t AS (SELECT doc_id,
-        |  string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |h AS (SELECT doc_id, list_transform(toks, s ->
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(range(1, length(s)+1),
-        |        i -> CAST(unicode(substr(s, i, 1)) AS BIGINT))),
-        |      (a, b) -> (a * 31 + b) % 2147483647)) AS th FROM t),
-        |w AS (SELECT doc_id, CASE WHEN len(th) >= 5 THEN
-        |      list_transform(range(0, len(th)-4), i ->
-        |        list_reduce(list_prepend(CAST(0 AS BIGINT), th[i+1:i+5]),
-        |          (a, b) -> (a * 257 + b) % 2147483647))
-        |    ELSE [list_reduce(list_prepend(CAST(0 AS BIGINT), th),
-        |          (a, b) -> (a * 257 + b) % 2147483647)] END AS wh
-        |  FROM h)
+      s"""WITH $RollingFingerprintCtes
         |SELECT doc_id, CAST(len(wh) AS BIGINT) AS n_windows,
         |  list_min(wh) AS min_hash, wh[1] AS first_hash
         |FROM w ORDER BY doc_id""".stripMargin,
     // boilerplate share = fraction of a doc's distinct shingles with
     // corpus df >= 2; d02's shingle recipe, no self-join
     "t29_novelty_profile" ->
-      """WITH t AS (SELECT doc_id,
-        |  string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |s AS (SELECT doc_id, list_distinct(
-        |  CASE WHEN len(toks) >= 3 THEN
-        |    list_transform(range(0, len(toks)-2),
-        |      i -> array_to_string(toks[i+1:i+3], ' '))
-        |  ELSE [array_to_string(toks, ' ')] END) AS sh FROM t),
+      s"""WITH ${ShingleCtes("documents")},
         |e AS (SELECT doc_id, unnest(sh) AS shingle FROM s),
         |d AS (SELECT shingle, CAST(COUNT(*) AS BIGINT) AS df
         |  FROM e GROUP BY 1),
@@ -6446,16 +6022,7 @@ object SparkEntry {
     // d04's signature/band CTE chain, split train/bench on the p02
     // predicate, bipartite band-collision join
     "p05_fuzzy_decontam" ->
-      """WITH t AS (SELECT doc_id,
-        |  string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |s AS (SELECT doc_id, list_distinct(
-        |  CASE WHEN len(toks) >= 3 THEN
-        |    list_transform(range(0, len(toks)-2),
-        |      i -> array_to_string(toks[i+1:i+3], ' '))
-        |  ELSE [array_to_string(toks, ' ')] END) AS sh FROM t),
-        |g AS (SELECT doc_id, list_transform(range(0, 12), j ->
-        |  list_min(list_transform(sh, x ->
-        |    md5(concat(CAST(j AS VARCHAR), ':', x))))) AS sig FROM s),
+      s"""WITH ${MinhashCtes("documents")},
         |b AS (SELECT doc_id, list_transform(range(0, 4), k ->
         |  md5(array_to_string(sig[k*3+1:k*3+3], '|'))) AS bands FROM g),
         |e AS (SELECT doc_id, k AS band, bands[k+1] AS digest
@@ -6509,20 +6076,7 @@ object SparkEntry {
     // t30's token/window fingerprint CTEs verbatim, distinct postings,
     // the 1000-cap mirrored, a<b pair counts + TRUE pre-cap sizes
     "d16_substring_dups" ->
-      """WITH t AS (SELECT doc_id,
-        |  string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |h AS (SELECT doc_id, list_transform(toks, s ->
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(range(1, length(s)+1),
-        |        i -> CAST(unicode(substr(s, i, 1)) AS BIGINT))),
-        |      (a, b) -> (a * 31 + b) % 2147483647)) AS th FROM t),
-        |w AS (SELECT doc_id, CASE WHEN len(th) >= 5 THEN
-        |      list_transform(range(0, len(th)-4), i ->
-        |        list_reduce(list_prepend(CAST(0 AS BIGINT), th[i+1:i+5]),
-        |          (a, b) -> (a * 257 + b) % 2147483647))
-        |    ELSE [list_reduce(list_prepend(CAST(0 AS BIGINT), th),
-        |          (a, b) -> (a * 257 + b) % 2147483647)] END AS wh
-        |  FROM h),
+      s"""WITH $RollingFingerprintCtes,
         |e AS (SELECT DISTINCT doc_id, unnest(wh) AS wh FROM w),
         |hot AS (SELECT wh FROM (SELECT wh, COUNT(*) AS df FROM e
         |  GROUP BY wh) WHERE df > 1000),
@@ -6575,13 +6129,7 @@ object SparkEntry {
     // t25's safe-split CTEs restricted to the test slice, then t34's
     // per-lang exact-N suffix over the survivors
     "p06_eval_set" ->
-      """WITH t AS (SELECT doc_id,
-        |  string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |s AS (SELECT doc_id, list_distinct(
-        |  CASE WHEN len(toks) >= 3 THEN
-        |    list_transform(range(0, len(toks)-2),
-        |      i -> array_to_string(toks[i+1:i+3], ' '))
-        |  ELSE [array_to_string(toks, ' ')] END) AS sh FROM t),
+      s"""WITH ${ShingleCtes("documents")},
         |bench AS (SELECT DISTINCT unnest(sh) AS shingle FROM s
         |  WHERE doc_id % 100 = 0),
         |train AS (SELECT doc_id, unnest(sh) AS shingle FROM s
@@ -6752,13 +6300,7 @@ object SparkEntry {
     // d17: df-ascending rank, prefix postings, length filter, then
     // candidate-restricted exact verification — d02's shingle CTEs
     "d17_ppjoin_pairs" ->
-      """WITH t AS (SELECT doc_id,
-        |  string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |s AS (SELECT doc_id, list_distinct(
-        |  CASE WHEN len(toks) >= 3 THEN
-        |    list_transform(range(0, len(toks)-2),
-        |      i -> array_to_string(toks[i+1:i+3], ' '))
-        |  ELSE [array_to_string(toks, ' ')] END) AS sh FROM t),
+      s"""WITH ${ShingleCtes("documents")},
         |e AS (SELECT doc_id, unnest(sh) AS shingle FROM s),
         |sz AS (SELECT doc_id, CAST(len(sh) AS BIGINT) AS n_sh FROM s),
         |df AS (SELECT shingle, CAST(COUNT(*) AS BIGINT) AS df
@@ -7035,13 +6577,7 @@ object SparkEntry {
     // production cap); leak face vs distinct train shingles, breadth
     // face via the bipartite postings join
     "t40_contamination_report" ->
-      """WITH t AS (SELECT doc_id,
-        |  string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |s AS (SELECT doc_id, list_distinct(
-        |  CASE WHEN len(toks) >= 3 THEN
-        |    list_transform(range(0, len(toks)-2),
-        |      i -> array_to_string(toks[i+1:i+3], ' '))
-        |  ELSE [array_to_string(toks, ' ')] END) AS sh FROM t),
+      s"""WITH ${ShingleCtes("documents")},
         |e AS (SELECT doc_id, unnest(sh) AS shingle FROM s),
         |df AS (SELECT shingle, COUNT(*) AS df FROM e GROUP BY shingle),
         |p AS (SELECT e.doc_id, e.shingle FROM e
@@ -7402,15 +6938,7 @@ object SparkEntry {
         |dfq AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df
         |  FROM tf GROUP BY term),
         |sc AS (SELECT tf.doc_id, tf.chunk_idx, tf.term,
-        |  ((CAST(st.n_units AS DOUBLE) - CAST(dfq.df AS DOUBLE)
-        |      + CAST(0.5 AS DOUBLE))
-        |    / (CAST(dfq.df AS DOUBLE) + CAST(0.5 AS DOUBLE)))
-        |  * (CAST(tf.tf AS DOUBLE) * CAST(2.2 AS DOUBLE))
-        |  / (CAST(tf.tf AS DOUBLE) + CAST(1.2 AS DOUBLE)
-        |     * (CAST(1.0 AS DOUBLE) - CAST(0.75 AS DOUBLE)
-        |        + CAST(0.75 AS DOUBLE) * CAST(tf.dl AS DOUBLE)
-        |          / (CAST(st.sum_dl AS DOUBLE)
-        |             / CAST(st.n_units AS DOUBLE)))) AS score_t
+        |  ${Bm25Weight("n_units")} AS score_t
         |  FROM tf JOIN dfq USING (term) CROSS JOIN st),
         |cscore AS (SELECT doc_id, chunk_idx,
         |  COALESCE(SUM(CASE WHEN term = 'vector' THEN score_t END),
@@ -7667,16 +7195,7 @@ object SparkEntry {
     // distinct pairs attributed to unordered source pairs; diagonal
     // rows count the involved-doc UNION on both sides
     "p15_source_overlap" ->
-      """WITH t AS (SELECT doc_id,
-        |  string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |s AS (SELECT doc_id, list_distinct(
-        |  CASE WHEN len(toks) >= 3 THEN
-        |    list_transform(range(0, len(toks)-2),
-        |      i -> array_to_string(toks[i+1:i+3], ' '))
-        |  ELSE [array_to_string(toks, ' ')] END) AS sh FROM t),
-        |g AS (SELECT doc_id, list_transform(range(0, 12), j ->
-        |  list_min(list_transform(sh, x ->
-        |    md5(concat(CAST(j AS VARCHAR), ':', x))))) AS sig FROM s),
+      s"""WITH ${MinhashCtes("documents")},
         |b AS (SELECT doc_id, list_transform(range(0, 4), k ->
         |  md5(array_to_string(sig[k*3+1:k*3+3], '|'))) AS bands FROM g),
         |e AS (SELECT doc_id, k AS band, bands[k+1] AS digest

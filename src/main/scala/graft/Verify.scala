@@ -20,6 +20,11 @@ object Verify {
     LedgerRunner.run("graft-verify") { spark =>
       spark.sparkContext.setCheckpointDir(ckptDir.toString)
       new java.io.File(outDir).mkdirs()
+      // The oracle file goes first, so a run that fails or is killed
+      // part-way still leaves every oracle for check_oracle.py.
+      val json = SparkEntry.oracleSql
+        .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}")
+      Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
       // check_oracle.py prints MISSING for the queries a focused run
       // (SPARK_GRAFT_ONLY) skips, so such a run reads per-query lines,
       // not the trailing N/N summary.
@@ -30,9 +35,6 @@ object Verify {
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
       }
-      val json = SparkEntry.oracleSql
-        .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}")
-      Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     }
     FileUtil.fullyDelete(ckptDir.toFile)
   }

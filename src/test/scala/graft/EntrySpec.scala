@@ -17,6 +17,17 @@ class EntrySpec extends SparkSpec {
     assert(orphaned.isEmpty, s"oracles without query: $orphaned")
   }
 
+  test("no oracle renders a null fragment") {
+    // A strict val that interpolates a fragment declared below it reads
+    // the fragment before its initializer ran and renders the text
+    // "null"; no DuckDB oracle spells a bare lower-case null token
+    // (is_null, nullif( and IS NULL do not match).
+    val bad = SparkEntry.oracleSql.collect {
+      case (name, sql) if "\\bnull\\b".r.findFirstIn(sql).isDefined => name
+    }
+    assert(bad.isEmpty, s"oracles holding a null token: ${bad.toSeq.sorted}")
+  }
+
   test("bench short ids (prefix before first '_') are unique") {
     // Bench.scala emits timings under these prefixes to stay inside the
     // driver's 2000-byte tail capture; a collision silently falls back to

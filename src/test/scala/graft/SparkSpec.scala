@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import org.apache.hadoop.fs.FileUtil
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -8,7 +12,20 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.shared
 
-  override def afterAll(): Unit = () // shared session; JVM exit cleans up
+  private val tempDirs = new ConcurrentLinkedQueue[Path]()
+
+  /** A fresh directory under java.io.tmpdir, deleted with its contents
+    * when the suite ends. */
+  protected def tempDir(prefix: String): Path = {
+    val dir = Files.createTempDirectory(prefix)
+    tempDirs.add(dir)
+    dir
+  }
+
+  // the shared session keeps running for the next suite; only this
+  // suite's temp dirs go
+  override def afterAll(): Unit =
+    tempDirs.forEach(dir => FileUtil.fullyDelete(dir.toFile): Unit)
 }
 
 object SparkSpec {

@@ -25,9 +25,8 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("planner drives the executor: bins become files, content unchanged") {
-    import java.nio.file.Files
     import java.time.LocalDateTime
-    val root = Files.createTempDirectory("graft-planexec-")
+    val root = tempDir("graft-planexec-")
       .toFile.getAbsolutePath
     val storage = new SparkLakeStorage(spark, root)
     val h6 = LocalDateTime.of(2026, 5, 2, 6, 0)
@@ -66,15 +65,14 @@ class CompactionSpec extends SparkSpec {
     // the lifecycle a real lake lives: streaming ingest drips small
     // files into one hour partition, the maintenance pass compacts them
     // per plan, and readers + the port API see identical data throughout
-    import java.nio.file.Files
     import java.time.LocalDateTime
     implicit val sqlCtx = spark.sqlContext
     val The = MarkerSplit.StartMarkers(0)
     val EndThe = MarkerSplit.EndMarkers(0)
-    val root = Files.createTempDirectory("graft-stream-compact-")
+    val root = tempDir("graft-stream-compact-")
       .toFile.getAbsolutePath
     val storage = new SparkLakeStorage(spark, root)
-    val ckpt = Files.createTempDirectory("graft-ckpt-")
+    val ckpt = tempDir("graft-ckpt-")
       .toFile.getAbsolutePath
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)]

@@ -44,8 +44,7 @@ class HttpFacadeSpec extends SparkSpec {
   private def adapters: Seq[(String, () => LakeStorage)] = Seq(
     "memory" -> (() => new InMemoryLakeStorage(spark)),
     "spark-parquet" -> { () =>
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-http-lake").toString
+      val dir = tempDir("graft-http-lake").toString
       new SparkLakeStorage(spark, s"file:$dir")
     })
 
@@ -284,7 +283,7 @@ class HttpFacadeSpec extends SparkSpec {
       "and time") {
     import org.apache.spark.metrics.source.CodegenMetrics
     val storage = new SparkLakeStorage(spark, "file:" +
-      java.nio.file.Files.createTempDirectory("graft-http-codegen").toString)
+      tempDir("graft-http-codegen").toString)
     val service = new IngestService(spark, storage, NumberedFetcher)
     val now = new java.util.concurrent.atomic.AtomicReference(ts)
     val server = new IngestHttpServer(service, storage, 0, () => now.get)
@@ -309,7 +308,7 @@ class HttpFacadeSpec extends SparkSpec {
   test("a one-book POST on the parquet adapter runs no Spark job, " +
       "service and facade together") {
     val storage = new SparkLakeStorage(spark, "file:" +
-      java.nio.file.Files.createTempDirectory("graft-http-jobs").toString)
+      tempDir("graft-http-jobs").toString)
     withServer(storage) { port =>
       assert(post(port, "/ingest/1").code == 200) // warm
       // a stored book, a failed download, a failed marker split: the

@@ -118,8 +118,8 @@ class IngestServiceSpec extends SparkSpec {
 
   test("a one-id ingest runs no Spark job and fetches once: the status " +
       "and the save use the same fetch") {
-    val storage = new SparkLakeStorage(spark, "file:" + java.nio.file.Files
-      .createTempDirectory("graft-one-fetch").toString)
+    val storage = new SparkLakeStorage(spark,
+      "file:" + tempDir("graft-one-fetch").toString)
     val service = new IngestService(spark, storage, FlakyFetcher)
     var report = Seq.empty[(Long, String)]
     val jobs = SparkJobs.started(spark) {

@@ -11,7 +11,7 @@ class LakeMaintenanceSpec extends SparkSpec {
 
   test("compactPartition merges files, preserves rows, isolates partitions") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-compact-").toFile.getAbsolutePath
+    val root = tempDir("graft-compact-").toFile.getAbsolutePath
     val storage = new SparkLakeStorage(spark, root)
     val ts1 = LocalDateTime.of(2026, 4, 1, 6, 0)
     val ts2 = LocalDateTime.of(2026, 4, 1, 7, 0) // sibling hour
@@ -47,7 +47,7 @@ class LakeMaintenanceSpec extends SparkSpec {
   test("compactPartition and rebuildManifest release their reliable " +
       "snapshot anchors after the overwrite commits") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-compact-rel-")
+    val root = tempDir("graft-compact-rel-")
       .toFile.getAbsolutePath
     val storage = new SparkLakeStorage(spark, root)
     val ts = LocalDateTime.of(2026, 4, 2, 6, 0)
@@ -55,7 +55,7 @@ class LakeMaintenanceSpec extends SparkSpec {
       storage.saveBooks(
         Seq((i.toLong, s"h$i", s"b$i")).toDF("book_id", "header", "body"), ts)
     }
-    val ckpt = Files.createTempDirectory("graft-ckpt-lake")
+    val ckpt = tempDir("graft-ckpt-lake")
     spark.sparkContext.setCheckpointDir(ckpt.toString)
     def rddDirs: Seq[String] = {
       import scala.jdk.CollectionConverters._
@@ -93,7 +93,7 @@ class LakeMaintenanceSpec extends SparkSpec {
     import scala.concurrent.duration.DurationInt
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
-    val root = Files.createTempDirectory("graft-compact-race-")
+    val root = tempDir("graft-compact-race-")
       .toFile.getAbsolutePath
     val storage = new SparkLakeStorage(spark, root)
     val ts = LocalDateTime.of(2026, 4, 3, 6, 0)
@@ -144,7 +144,7 @@ class LakeMaintenanceSpec extends SparkSpec {
 
   test("a compaction and a manifest rebuild each run one Spark job, and " +
       "so does a save") {
-    val root = Files.createTempDirectory("graft-compact-jobs-")
+    val root = tempDir("graft-compact-jobs-")
       .toFile.getAbsolutePath
     val storage = new SparkLakeStorage(spark, root)
     val ts = LocalDateTime.of(2026, 4, 4, 6, 0)

@@ -25,7 +25,7 @@ class LakeStorageSpec extends SparkSpec {
   }
 
   private def eachAdapter(f: LakeStorage => Unit): Unit = {
-    val dir = Files.createTempDirectory("graft-test-lake-").toFile.getAbsolutePath
+    val dir = tempDir("graft-test-lake-").toFile.getAbsolutePath
     f(new SparkLakeStorage(spark, dir))
     f(new InMemoryLakeStorage(spark))
   }
@@ -79,7 +79,7 @@ class LakeStorageSpec extends SparkSpec {
     val root = sys.env.get("GRAFT_LAKE_TEST_ROOT").getOrElse {
       spark.sparkContext.hadoopConfiguration.set("fs.graftfs.impl",
         classOf[GraftTestFs].getName)
-      val dir = Files.createTempDirectory("graft-rawfs-")
+      val dir = tempDir("graft-rawfs-")
         .toFile.getAbsolutePath
       // prove the scheme resolves to the registered non-default impl
       val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -114,7 +114,7 @@ class LakeStorageSpec extends SparkSpec {
 
   test("fromEnv configures the lake root like the reference's env surface " +
     "(Main.java:29-36)") {
-    val dir = Files.createTempDirectory("graft-env-lake-").toFile.getAbsolutePath
+    val dir = tempDir("graft-env-lake-").toFile.getAbsolutePath
     val storage = SparkLakeStorage.fromEnv(spark, Map(
       SparkLakeStorage.RootEnv -> dir,
       SparkLakeStorage.PrefixEnv -> "tenant-a"))
@@ -128,7 +128,7 @@ class LakeStorageSpec extends SparkSpec {
 
   test("lake root may be a filesystem URI, not just a local path " +
     "(scheme-agnostic Hadoop FS access)") {
-    val dir = Files.createTempDirectory("graft-uri-lake-").toFile.getAbsolutePath
+    val dir = tempDir("graft-uri-lake-").toFile.getAbsolutePath
     val storage = new SparkLakeStorage(spark, s"file:$dir")
     assert(!storage.exists(1L) && storage.listBooks().isEmpty)
     storage.saveBooks(books((6L, "h6", "b6")), ts)
@@ -136,7 +136,7 @@ class LakeStorageSpec extends SparkSpec {
   }
 
   test("parquet lake stores header+body rows with partition columns") {
-    val dir = Files.createTempDirectory("graft-test-lake-").toFile.getAbsolutePath
+    val dir = tempDir("graft-test-lake-").toFile.getAbsolutePath
     val storage = new SparkLakeStorage(spark, dir)
     storage.saveBooks(books((11L, "the header", "the body")), ts)
     val lake = storage.lake
@@ -170,7 +170,7 @@ class LakeStorageSpec extends SparkSpec {
 
   test("a save under the java8 datetime API stores the same timestamp") {
     val key = "spark.sql.datetime.java8API.enabled"
-    val dir = Files.createTempDirectory("graft-java8-lake-")
+    val dir = tempDir("graft-java8-lake-")
       .toFile.getAbsolutePath
     val storage = new SparkLakeStorage(spark, dir)
     spark.conf.set(key, "true")
@@ -182,7 +182,7 @@ class LakeStorageSpec extends SparkSpec {
 
   test("a date/hour predicate prunes partitions at the scan, not a filter") {
     import java.time.LocalDateTime
-    val dir = Files.createTempDirectory("graft-prune-lake-")
+    val dir = tempDir("graft-prune-lake-")
       .toFile.getAbsolutePath
     val storage = new SparkLakeStorage(spark, dir)
     // two partitions: hours 09 and 10
@@ -205,7 +205,7 @@ class LakeStorageSpec extends SparkSpec {
   }
 
   test("a save of a multi-partition frame publishes one manifest file") {
-    val dir = Files.createTempDirectory("graft-one-manifest-")
+    val dir = tempDir("graft-one-manifest-")
       .toFile.getAbsolutePath
     val storage = new SparkLakeStorage(spark, dir)
     val ids = 1L to 40L
@@ -223,7 +223,7 @@ class LakeStorageSpec extends SparkSpec {
     // rows the driver holds, and rows from tasks
     for (empty <- Seq(books((1L, "h", "b")), distributed((1L, "h", "b")))
         .map(_.filter(col("book_id") < 0))) {
-      val dir = Files.createTempDirectory("graft-empty-save-")
+      val dir = tempDir("graft-empty-save-")
         .toFile.getAbsolutePath
       val storage = new SparkLakeStorage(spark, dir)
       storage.saveBooks(empty, ts)
@@ -237,7 +237,7 @@ class LakeStorageSpec extends SparkSpec {
   /** The payload file of a save of `frame` into a fresh lake, and the lake. */
   private def savedPayload(frame: org.apache.spark.sql.DataFrame,
       at: LocalDateTime): (java.io.File, SparkLakeStorage) = {
-    val dir = Files.createTempDirectory("graft-payload-").toFile.getAbsolutePath
+    val dir = tempDir("graft-payload-").toFile.getAbsolutePath
     val storage = new SparkLakeStorage(spark, dir)
     storage.saveBooks(frame, at)
     val Seq(file) = new java.io.File(s"$dir/datalake").listFiles().toSeq
@@ -289,7 +289,7 @@ class LakeStorageSpec extends SparkSpec {
 
   test("an hour holding driver- and Spark-written payload files keeps its " +
       "rows and ids through compactPartition and rebuildManifest") {
-    val dir = Files.createTempDirectory("graft-mixed-hour-")
+    val dir = tempDir("graft-mixed-hour-")
       .toFile.getAbsolutePath
     val storage = new SparkLakeStorage(spark, dir)
     storage.saveBooks(books((1L, "h1", "b1"), (2L, "h2", "b2")), ts)
@@ -314,7 +314,7 @@ class LakeStorageSpec extends SparkSpec {
       "staging debris") {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.DurationInt
-    val dir = Files.createTempDirectory("graft-concurrent-lake-")
+    val dir = tempDir("graft-concurrent-lake-")
       .toFile.getAbsolutePath
     val storage = new SparkLakeStorage(spark, dir)
     val exec = java.util.concurrent.Executors.newFixedThreadPool(8)
@@ -341,7 +341,7 @@ class LakeStorageSpec extends SparkSpec {
     import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.DurationInt
-    val dir = Files.createTempDirectory("graft-rebuild-race-")
+    val dir = tempDir("graft-rebuild-race-")
       .toFile.getAbsolutePath
     val storage = new SparkLakeStorage(spark, dir)
     val ids = 1L to 20L
@@ -380,7 +380,7 @@ class ManifestSpec extends graft.SparkSpec {
 
   test("exists/list answer from the manifest; rebuild recovers from loss") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-manifest-")
+    val root = tempDir("graft-manifest-")
       .toFile.getAbsolutePath
     val storage = new SparkLakeStorage(spark, root)
     val ts = LocalDateTime.of(2026, 7, 1, 11, 0)
@@ -419,7 +419,7 @@ class ManifestSpec extends graft.SparkSpec {
 
   test("a second storage on the same root sees the first one's saves " +
       "at once") {
-    val root = Files.createTempDirectory("graft-manifest-two-")
+    val root = tempDir("graft-manifest-two-")
       .toFile.getAbsolutePath
     val writer = new SparkLakeStorage(spark, root)
     val reader = new SparkLakeStorage(spark, root)
@@ -436,7 +436,7 @@ class ManifestSpec extends graft.SparkSpec {
 
   test("exists/list are exact right after rebuildManifest replaces the " +
       "manifest files") {
-    val root = Files.createTempDirectory("graft-manifest-rebuild-")
+    val root = tempDir("graft-manifest-rebuild-")
       .toFile.getAbsolutePath
     val storage = new SparkLakeStorage(spark, root)
     val ts = LocalDateTime.of(2026, 7, 1, 11, 0)
@@ -465,7 +465,7 @@ class ManifestSpec extends graft.SparkSpec {
   }
 
   test("with the manifest unchanged, exists/list run no Spark job") {
-    val root = Files.createTempDirectory("graft-manifest-jobs-")
+    val root = tempDir("graft-manifest-jobs-")
       .toFile.getAbsolutePath
     val storage = new SparkLakeStorage(spark, root)
     save(storage, LocalDateTime.of(2026, 7, 1, 11, 0), 4L, 2L)
@@ -495,7 +495,7 @@ class ManifestSpec extends graft.SparkSpec {
     val ts = LocalDateTime.of(2026, 7, 3, 9, 0)
     // `distributed`: the rows come from tasks, not from the driver
     def saveInto(books: Int, distributed: Boolean) = {
-      val root = Files.createTempDirectory("graft-manifest-one-")
+      val root = tempDir("graft-manifest-one-")
         .toFile.getAbsolutePath
       val storage = new SparkLakeStorage(spark, root)
       val jobs = SparkJobs.started(spark) {
@@ -535,7 +535,7 @@ class ManifestSpec extends graft.SparkSpec {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.DurationInt
     val k = SparkLakeStorage.ManifestCheckpointFiles
-    val root = Files.createTempDirectory("graft-manifest-ckpt-")
+    val root = tempDir("graft-manifest-ckpt-")
       .toFile.getAbsolutePath
     val writer = new SparkLakeStorage(spark, root)
     val reader = new SparkLakeStorage(spark, root)
@@ -581,7 +581,7 @@ class ManifestSpec extends graft.SparkSpec {
     spark.sparkContext.hadoopConfiguration.set("fs.vanishfs.impl",
       classOf[VanishingTestFs].getName)
     val k = SparkLakeStorage.ManifestCheckpointFiles
-    val dir = Files.createTempDirectory("graft-manifest-large-")
+    val dir = tempDir("graft-manifest-large-")
       .toFile.getAbsolutePath
     val root = s"vanishfs://$dir"
     val writer = new SparkLakeStorage(spark, root)
@@ -622,7 +622,7 @@ class ManifestSpec extends graft.SparkSpec {
       VanishingTestFs.onList.set(
         if (n == 1) hook else () => armAt(n - 1)(hook))
     for (n <- 1 to 3) {
-      val dir = Files.createTempDirectory("graft-manifest-overtaken-")
+      val dir = tempDir("graft-manifest-overtaken-")
         .toFile.getAbsolutePath
       val root = s"vanishfs://$dir"
       val writer = new SparkLakeStorage(spark, root)
@@ -647,7 +647,7 @@ class ManifestSpec extends graft.SparkSpec {
       "back to a fresh listing, whichever exception reports the loss") {
     spark.sparkContext.hadoopConfiguration.set("fs.vanishfs.impl",
       classOf[VanishingTestFs].getName)
-    val dir = Files.createTempDirectory("graft-manifest-vanish-")
+    val dir = tempDir("graft-manifest-vanish-")
       .toFile.getAbsolutePath
     val root = s"vanishfs://$dir"
     save(new SparkLakeStorage(spark, root),
@@ -663,7 +663,7 @@ class ManifestSpec extends graft.SparkSpec {
   }
 
   test("building the lake frame runs no Spark job") {
-    val root = Files.createTempDirectory("graft-lake-jobs-")
+    val root = tempDir("graft-lake-jobs-")
       .toFile.getAbsolutePath
     val storage = new SparkLakeStorage(spark, root)
     save(storage, LocalDateTime.of(2026, 7, 2, 8, 0), 1L, 2L)

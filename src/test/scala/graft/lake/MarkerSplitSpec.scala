@@ -115,8 +115,7 @@ class MarkerSplitSpec extends SparkSpec {
       .MemoryStream[(Long, String)]
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Seq[String], Seq[String])]()
     val q = input.toDF().toDF("book_id", "text").writeStream
-      .option("checkpointLocation", java.nio.file.Files
-        .createTempDirectory("graft-split-plan-").toString)
+      .option("checkpointLocation", tempDir("graft-split-plan-").toString)
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         seen.add(plans(MarkerSplit.withSplit(batch)) -> plans(stepwiseSplit(batch)))
         ()

@@ -25,7 +25,7 @@ class ReplaceWhereSpec extends graft.SparkSpec {
 
   test("dynamic overwrite replaces ONLY the written partition's files") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-rw-spec-")
+    val dir = tempDir("graft-rw-spec-")
     val lake = dir.resolve("lake")
     val base = Seq(
       (1L, 10.0, "1-URGENT"), (2L, 20.0, "2-HIGH"),

@@ -1,7 +1,5 @@
 package graft.lake
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -13,7 +11,7 @@ class SnapshotStoreSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshStore() = new SnapshotStore(spark,
-    Files.createTempDirectory("graft-snap-").toFile.getAbsolutePath)
+    tempDir("graft-snap-").toFile.getAbsolutePath)
 
   test("commit/read round-trip; versions increment; time travel") {
     val store = freshStore()
@@ -77,7 +75,7 @@ class SnapshotStoreSpec extends SparkSpec {
     hc.set("fs.graftfs.impl", classOf[GraftTestFs].getName)
     hc.set("fs.AbstractFileSystem.graftfs.impl",
       classOf[GraftTestAbstractFs].getName)
-    val dir = Files.createTempDirectory("graft-snapfs-")
+    val dir = tempDir("graft-snapfs-")
       .toFile.getAbsolutePath
     val store = new SnapshotStore(spark, s"graftfs://$dir")
     assert(store.commit(Seq((1L, "a")).toDF("k", "v")) == 0L)
@@ -334,7 +332,7 @@ class SnapshotStoreSpec extends SparkSpec {
   test("branch (l17): zero-copy fork, isolated evolution both ways, " +
       "abandon = delete one directory") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-br-")
+    val root = tempDir("graft-br-")
       .toFile.getAbsolutePath + "/t"
     val store = new SnapshotStore(spark, root)
     store.commit(Seq((1L, 10.0), (7L, 70.0), (14L, 140.0))
